@@ -1,14 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.{ArrayIntersectSize, JavaStringHash, LshSignature, MinHashBands, SimHash64, WinnowSelect}
-import graft.operators.SimilarityJoin
+import graft.functions._
+import graft.operators._
 
 /** SparkSessionExtensions entry point: installs graft's engine functions
   * and table functions into every session built with
@@ -17,14 +17,13 @@ import graft.operators.SimilarityJoin
   * per-session registration — the packaged-library form of the
   * extension mechanism.
   *
-  * SQL surface:
-  *   - `java_hash(str)` / `intersect_size(a, b)` — scalar expressions.
-  *   - `SELECT * FROM similarity_join('table', 'idCol', 'textCol', tau)` —
-  *     the set-similarity self-join (SURVEY J12) as a table-valued
-  *     function: all pairs with Jaccard ≥ tau over whitespace tokens,
-  *     columns (x_id, y_id, inter, uni, jacc). The builder is fully lazy
-  *     (prefix-filter plan, no eager action), so the TVF composes like any
-  *     relation.
+  * SQL surface: one declarative table, [[GraftExtensions.scalars]] and
+  * [[GraftExtensions.tableFunctions]] — e.g. `java_hash(str)` as a scalar
+  * expression and `SELECT * FROM similarity_join('table', 'idCol',
+  * 'textCol', tau)`, the set-similarity self-join (SURVEY J12): all pairs
+  * with Jaccard ≥ tau over whitespace tokens, columns (x_id, y_id, inter,
+  * uni, jacc). Table-function builders are lazy unless their entry says
+  * otherwise, so a TVF composes like any relation.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -32,2878 +31,665 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer tier: plain-Spark `size(array_intersect(a, b))` fuses to
     // the intersect_size kernel (semantics-gated; see the rule's scaladoc)
     ext.injectOptimizerRule(_ => graft.plans.IntersectSizeRewrite)
-    ext.injectFunction((
-      FunctionIdentifier("java_hash"),
-      new ExpressionInfo(
-        classOf[JavaStringHash].getName,
-        null,
-        "java_hash",
-        "java_hash(str) - Java String.hashCode of `str` (reference-compatible signature keys).",
-        ""),
-      exprs => JavaStringHash(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("luhn_check"),
-      new ExpressionInfo(
-        classOf[graft.functions.LuhnCheck].getName,
-        null,
-        "luhn_check",
-        "luhn_check(str) - true iff str (spaces/hyphens allowed) is a 13-19-digit run passing the Luhn checksum (ISO/IEC 7812).",
-        ""),
-      exprs => graft.functions.LuhnCheck(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(
-        classOf[graft.functions.NfcNormalize].getName,
-        null,
-        "nfc_normalize",
-        "nfc_normalize(str) - Unicode NFC canonical composition (UAX #15); no-op fast path for already-normalized input.",
-        ""),
-      exprs => graft.functions.NfcNormalize(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("intersect_size"),
-      new ExpressionInfo(
-        classOf[ArrayIntersectSize].getName,
-        null,
-        "intersect_size",
-        "intersect_size(a, b) - distinct-element intersection count of two string arrays (similarity-join verify kernel).",
-        ""),
-      exprs => ArrayIntersectSize(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(
-        classOf[graft.functions.CosineSimilarity].getName,
-        null,
-        "cosine_sim",
-        "cosine_sim(a, b) - fused single-pass cosine similarity of two float arrays (ANN/semantic-dedup verify kernel).",
-        ""),
-      exprs => graft.functions.CosineSimilarity(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(
-        classOf[SimHash64].getName,
-        null,
-        "simhash64",
-        "simhash64(toks) - 64-bit SimHash fingerprint of a string array (MD5 token hash, engine-portable).",
-        ""),
-      exprs => SimHash64(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("lsh_signature"),
-      new ExpressionInfo(
-        classOf[LshSignature].getName,
-        null,
-        "lsh_signature",
-        "lsh_signature(emb, tables, bits) - all random-hyperplane LSH bucket ids of a float-array embedding.",
-        ""),
-      exprs => LshSignature.builder(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("winnow_select"),
-      new ExpressionInfo(
-        classOf[WinnowSelect].getName,
-        null,
-        "winnow_select",
-        "winnow_select(words, k, w) - distinct winnowed (w-window-min) k-shingle MD5 fingerprints of a word array.",
-        ""),
-      exprs => WinnowSelect.builder(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_bands"),
-      new ExpressionInfo(
-        classOf[MinHashBands].getName,
-        null,
-        "minhash_bands",
-        "minhash_bands(toks, bands, rowsPerBand) - banded MinHash signatures of a string array.",
-        ""),
-      exprs => MinHashBands.builder(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("similarity_join"),
-      new ExpressionInfo(
-        classOf[SimilarityJoin.type].getName,
-        null,
-        "similarity_join",
-        "similarity_join(table, idCol, textCol, tau) - all pairs of rows with token-set Jaccard >= tau; 7-arg form (probeTable, probeId, probeText, indexTable, indexId, indexText, tau) joins two tables.",
-        ""),
-      exprs => GraftExtensions.similarityJoinPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("containment_join"),
-      new ExpressionInfo(
-        classOf[SimilarityJoin.type].getName,
-        null,
-        "containment_join",
-        "containment_join(table, idCol, textCol, gamma) - ordered pairs (x, y) with |x∩y| >= ceil(gamma*|x|) over token sets; 7-arg form (probeTable, probeId, probeText, indexTable, indexId, indexText, gamma) probes one table against another.",
-        ""),
-      exprs => GraftExtensions.containmentJoinPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("asof_join"),
-      new ExpressionInfo(
-        classOf[graft.operators.AsOfJoin.type].getName,
-        null,
-        "asof_join",
-        "asof_join(left, right, key, timeCol, tiebreak) - each left row joined to the LATEST right row of the same key at or before its time (left outer; ties to greatest tiebreak).",
-        ""),
-      exprs => GraftExtensions.asofJoinPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("minhash_dedup"),
-      new ExpressionInfo(
-        classOf[graft.operators.Dedup.type].getName,
-        null,
-        "minhash_dedup",
-        "minhash_dedup(table, idCol, textCol, tau) - every record labeled with its duplicate-cluster representative (MinHash/LSH candidates, exact-Jaccard verify, connected components).",
-        ""),
-      exprs => GraftExtensions.minhashDedupPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("semantic_dedup"),
-      new ExpressionInfo(
-        classOf[graft.operators.SimilaritySearch.type].getName,
-        null,
-        "semantic_dedup",
-        "semantic_dedup(table, idCol, embCol, tau, nCells) - SemDeDup over embeddings: (vid, dup_of) with dup_of = min same-IVF-cell id at cosine >= tau (-1 = kept).",
-        ""),
-      exprs => GraftExtensions.semanticDedupPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("subsequence_match"),
-      new ExpressionInfo(
-        classOf[graft.operators.SubsequenceMatch.type].getName,
-        null,
-        "subsequence_match",
-        "subsequence_match(series, query, mode, eps, band, alpha, beta) - KV-match subsequence search of the (idx, v) query table in the (idx, v) series table; mode in ed/dtw/normed/normdtw; returns (start, d2).",
-        ""),
-      exprs => GraftExtensions.subsequenceMatchPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("decontaminate"),
-      new ExpressionInfo(
-        classOf[graft.operators.Decontamination.type].getName,
-        null,
-        "decontaminate",
-        "decontaminate(corpusTable, idCol, textCol, evalTable, evalId, evalText, n) - corpus docs sharing any word n-gram with the (broadcast) eval set: (id, n_hit_grams, n_eval_docs).",
-        ""),
-      exprs => GraftExtensions.decontaminatePlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("dsir_topk"),
-      new ExpressionInfo(
-        classOf[graft.operators.ImportanceResampling.type].getName,
-        null,
-        "dsir_topk",
-        "dsir_topk(table, idCol, textCol, targetBoolCol, n, nBuckets, scale, k) - DSIR importance resampling: top-k non-target docs by hashed-n-gram integer likelihood ratio toward the target rows. Returns (id, score, n_grams, rk).",
-        ""),
-      exprs => GraftExtensions.dsirTopKPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("pagerank"),
-      new ExpressionInfo(
-        classOf[graft.operators.PageRank.type].getName,
-        null,
-        "pagerank",
-        "pagerank(nodesTable, idCol, edgesTable, aCol, bCol, iters) - exact-integer damped PageRank (scale 10^12). Returns (id, rank).",
-        ""),
-      exprs => GraftExtensions.pagerankPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("interval_overlap"),
-      new ExpressionInfo(
-        classOf[graft.operators.IntervalJoin.type].getName,
-        null,
-        "interval_overlap",
-        "interval_overlap(leftTable, rightTable, keyCol, lStart, lEnd, rStart, rEnd, bucketWidth) - same-key rows whose [start,end] intervals intersect (bucketed equi-join, exact verify).",
-        ""),
-      exprs => GraftExtensions.intervalOverlapPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("itemset_pairs"),
-      new ExpressionInfo(
-        classOf[graft.operators.Itemsets.type].getName,
-        null,
-        "itemset_pairs",
-        "itemset_pairs(table, basketCol, itemCol, minSupport) - frequent co-occurring item pairs with lift (A-Priori pruned).",
-        ""),
-      exprs => GraftExtensions.itemsetPairsPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("triangles"),
-      new ExpressionInfo(
-        classOf[graft.operators.Triangles.type].getName,
-        null,
-        "triangles",
-        "triangles(edgesTable, aCol, bCol) - exact triangle enumeration of the undirected edge set as (x, y, z), x < y < z.",
-        ""),
-      exprs => GraftExtensions.trianglesPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("clustering_coefficient"),
-      new ExpressionInfo(
-        classOf[graft.operators.Triangles.type].getName,
-        null,
-        "clustering_coefficient",
-        "clustering_coefficient(edgesTable, aCol, bCol) - per-node local clustering coefficient in basis points: (id, degree, n_triangles, cc_bp).",
-        ""),
-      exprs => GraftExtensions.clusteringCoefficientPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("rrf_fusion"),
-      new ExpressionInfo(
-        classOf[graft.operators.Fusion.type].getName,
-        null,
-        "rrf_fusion",
-        "rrf_fusion(tablesCsv, idCol, rankCol, kConst, scale, topK) - reciprocal-rank fusion of ranked lists: top-k ids by summed scale div (kConst + rank).",
-        ""),
-      exprs => GraftExtensions.rrfFusionPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("repeated_spans"),
-      new ExpressionInfo(
-        classOf[graft.operators.SubstringDedup.type].getName,
-        null,
-        "repeated_spans",
-        "repeated_spans(table, idCol, textCol, k, minCount) - maximal token spans covered by k-token shingles repeating >= minCount times corpus-wide.",
-        ""),
-      exprs => GraftExtensions.repeatedSpansPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("span_removal"),
-      new ExpressionInfo(
-        classOf[graft.operators.SubstringDedup.type].getName,
-        null,
-        "span_removal",
-        "span_removal(table, idCol, textCol, k, minCount) - excise every non-canonical occurrence of each repeated span; (doc_id, clean_text).",
-        ""),
-      exprs => GraftExtensions.spanRemovalPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("lm_buckets"),
-      new ExpressionInfo(
-        classOf[graft.operators.LmScore.type].getName,
-        null,
-        "lm_buckets",
-        "lm_buckets(table, idCol, textCol, minCount) - CCNet-style head/middle/tail familiarity buckets under the corpus's own bigram LM (exact basis points).",
-        ""),
-      exprs => GraftExtensions.lmBucketsPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("bpe_train"),
-      new ExpressionInfo(
-        classOf[graft.operators.BpeTrain.type].getName,
-        null,
-        "bpe_train",
-        "bpe_train(table, textCol, nMerges) - learned BPE merge table (step, lhs, rhs, pair_cnt, corpus_symbols) from distributed pair counting.",
-        ""),
-      exprs => GraftExtensions.bpeTrainPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("bpe_encode"),
-      new ExpressionInfo(
-        classOf[graft.operators.BpeTrain.type].getName,
-        null,
-        "bpe_encode",
-        "bpe_encode(table, idCol, textCol, nMerges) - per-row BPE symbol counts (id, n_words, n_bpe) after training nMerges merges on the same table.",
-        ""),
-      exprs => GraftExtensions.bpeEncodePlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("corpus_overlap"),
-      new ExpressionInfo(
-        classOf[graft.operators.CorpusOverlap.type].getName,
-        null,
-        "corpus_overlap",
-        "corpus_overlap(table, groupCol, textCol, k) - cross-group distinct-k-shingle overlap matrix with Jaccard/containment basis points.",
-        ""),
-      exprs => GraftExtensions.corpusOverlapPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("label_propagation"),
-      new ExpressionInfo(
-        classOf[graft.operators.LabelPropagation.type].getName,
-        null,
-        "label_propagation",
-        "label_propagation(nodesTable, idCol, edgesTable, aCol, bCol, iters) - synchronous plurality label propagation communities (deterministic min-label tie-break).",
-        ""),
-      exprs => GraftExtensions.labelPropagationPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("mixture_plan"),
-      new ExpressionInfo(
-        classOf[graft.operators.Sampling.type].getName,
-        null,
-        "mixture_plan",
-        "mixture_plan(table, strataCol, totalN) - temperature (alpha=1/2) mixture quotas: exact isqrt weights, floor quotas capped at stratum size.",
-        ""),
-      exprs => GraftExtensions.mixturePlanPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("temperature_sample"),
-      new ExpressionInfo(
-        classOf[graft.operators.Sampling.type].getName,
-        null,
-        "temperature_sample",
-        "temperature_sample(table, strataCol, idCol, totalN) - materialize the mixture_plan quotas by MD5-prefix selection per stratum.",
-        ""),
-      exprs => GraftExtensions.temperatureSamplePlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("distinctive_terms"),
-      new ExpressionInfo(
-        classOf[graft.operators.Keyness.type].getName,
-        null,
-        "distinctive_terms",
-        "distinctive_terms(table, groupCol, textCol, minCount, k) - top-k tokens per group by exact integer lift (keyness).",
-        ""),
-      exprs => GraftExtensions.distinctiveTermsPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("exact_auc"),
-      new ExpressionInfo(
-        classOf[graft.operators.ModelEval.type].getName,
-        null,
-        "exact_auc",
-        "exact_auc(table, scoreCol, labelCol) - exact Mann-Whitney AUC of an integer score vs a 0/1 label (histogram + recursive prefix, never pairs).",
-        ""),
-      exprs => GraftExtensions.exactAucPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("calibration_buckets"),
-      new ExpressionInfo(
-        classOf[graft.operators.ModelEval.type].getName,
-        null,
-        "calibration_buckets",
-        "calibration_buckets(table, scoreCol, labelCol, nBuckets) - equi-width score bands with exact basis-point positive rates.",
-        ""),
-      exprs => GraftExtensions.calibrationBucketsPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("kcore"),
-      new ExpressionInfo(
-        classOf[graft.operators.KCore.type].getName,
-        null,
-        "kcore",
-        "kcore(nodesTable, idCol, edgesTable, aCol, bCol, k, rounds) - survivors of `rounds` synchronous k-peels with their final degree.",
-        ""),
-      exprs => GraftExtensions.kcorePlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("personalized_pagerank"),
-      new ExpressionInfo(
-        classOf[graft.operators.PageRank.type].getName,
-        null,
-        "personalized_pagerank",
-        "personalized_pagerank(nodesTable, idCol, edgesTable, aCol, bCol, sourcesTable, srcIdCol, iters) - exact-integer PPR with restart mass on the source set.",
-        ""),
-      exprs => GraftExtensions.personalizedPagerankPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("bfs_hops"),
-      new ExpressionInfo(
-        classOf[graft.operators.Reachability.type].getName,
-        null,
-        "bfs_hops",
-        "bfs_hops(nodesTable, idCol, edgesTable, aCol, bCol, sourceId, rounds) - bounded-hop BFS distances from a source; -1 beyond the horizon.",
-        ""),
-      exprs => GraftExtensions.bfsHopsPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("quantize_int8"),
-      new ExpressionInfo(
-        classOf[graft.operators.SimilaritySearch.type].getName,
-        null,
-        "quantize_int8",
-        "quantize_int8(table, idCol, embCol) - symmetric int8 embedding quantization: (id, scale, codes array<int>), bit-exact cross-engine.",
-        ""),
-      exprs => GraftExtensions.quantizeInt8Plan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("quantized_ann"),
-      new ExpressionInfo(
-        classOf[graft.operators.SimilaritySearch.type].getName,
-        null,
-        "quantized_ann",
-        "quantized_ann(table, idCol, embCol, maxQueryId, k) - top-k cosine over int8-quantized vectors (queries = id < maxQueryId), integer numerators.",
-        ""),
-      exprs => GraftExtensions.quantizedAnnPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("adaptive_salted_join"),
-      new ExpressionInfo(
-        classOf[graft.operators.Salting.type].getName,
-        null,
-        "adaptive_salted_join",
-        "adaptive_salted_join(probeTable, buildTable, key, threshold, maxSalts) - inner equi-join with per-key skew salting from the probe's measured key histogram.",
-        ""),
-      exprs => GraftExtensions.adaptiveSaltedJoinPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("edit_distance_join"),
-      new ExpressionInfo(
-        classOf[graft.operators.EditDistanceJoin.type].getName,
-        null,
-        "edit_distance_join",
-        "edit_distance_join(table, wordCol, k) - pairs of distinct values within Levenshtein distance k (FastSS deletion neighborhoods).",
-        ""),
-      exprs => GraftExtensions.editDistanceJoinPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("retention_cohorts"),
-      new ExpressionInfo(
-        classOf[graft.operators.Cohorts.type].getName,
-        null,
-        "retention_cohorts",
-        "retention_cohorts(table, userCol, tsCol, granularity, offsetDays) - (cohort, offset, n_users, cohort_size, retention_bp) retention triangle from raw events.",
-        ""),
-      exprs => GraftExtensions.retentionPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("funnel"),
-      new ExpressionInfo(
-        classOf[graft.operators.Funnel.type].getName,
-        null,
-        "funnel",
-        "funnel(table, userCol, tsUsCol, typeCol, stepsCsv, windowUs) - earliest ordered completion of the comma-separated steps per user within windowUs of step 1.",
-        ""),
-      exprs => GraftExtensions.funnelPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("scd2_history"),
-      new ExpressionInfo(
-        classOf[graft.operators.Scd.type].getName,
-        null,
-        "scd2_history",
-        "scd2_history(table, keyCol, tsUsCol, tiebreakCol, attrsCsv) - type-2 validity intervals per effective change of the comma-separated attributes (-1 = open).",
-        ""),
-      exprs => GraftExtensions.scd2Plan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("mad_outliers"),
-      new ExpressionInfo(
-        classOf[graft.operators.Anomaly.type].getName,
-        null,
-        "mad_outliers",
-        "mad_outliers(table, groupCol, valueCol, k) - rows with |value - group median| > k * group MAD (exact integer decisions).",
-        ""),
-      exprs => GraftExtensions.madOutliersPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("collocations"),
-      new ExpressionInfo(
-        classOf[graft.operators.Collocations.type].getName,
-        null,
-        "collocations",
-        "collocations(table, idCol, textCol, minCount, k) - top-k word bigrams by PMI lift with min-support filtering.",
-        ""),
-      exprs => GraftExtensions.collocationsPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("hll_registers"),
-      new ExpressionInfo(
-        classOf[graft.operators.Hll.type].getName,
-        null,
-        "hll_registers",
-        "hll_registers(table, itemCol, p, groupColOrEmpty) - HLL distinct-count registers (bucket, maxrank), optionally per group.",
-        ""),
-      exprs => GraftExtensions.hllRegistersPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("connected_components"),
-      new ExpressionInfo(
-        classOf[graft.operators.Dedup.type].getName,
-        null,
-        "connected_components",
-        "connected_components(nodesTable, idCol, edgesTable, aCol, bCol) - label every node with the minimum id reachable through the undirected edge set. Returns (id, rep).",
-        ""),
-      exprs => GraftExtensions.connectedComponentsPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("decontaminate_bloom"),
-      new ExpressionInfo(
-        classOf[graft.operators.Decontamination.type].getName,
-        null,
-        "decontaminate_bloom",
-        "decontaminate_bloom(corpusTable, idCol, textCol, evalTable, evalId, evalText, n, fpp) - same result as decontaminate, with a Bloom bitset pruning the corpus grams ahead of a shuffle verify join (the eval-set-too-big-to-broadcast regime).",
-        ""),
-      exprs => GraftExtensions.decontaminateBloomPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("cms_heavy_hitters"),
-      new ExpressionInfo(
-        classOf[graft.operators.CountMin.type].getName,
-        null,
-        "cms_heavy_hitters",
-        "cms_heavy_hitters(table, itemCol, depth, width, threshold) - count-min-sketch heavy hitters over item occurrences, survivors exact-verified. Returns (item, est, exact).",
-        ""),
-      exprs => GraftExtensions.cmsHeavyHittersPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("ann_topk"),
-      new ExpressionInfo(
-        classOf[graft.operators.SimilaritySearch.type].getName,
-        null,
-        "ann_topk",
-        "ann_topk(queryTable, qId, qEmb, corpusTable, nId, nEmb, k, method) - per-query cosine top-k over an embedding corpus; method in brute/lsh/ivf. Returns (q_id, n_id, rank, sim).",
-        ""),
-      exprs => GraftExtensions.annTopKPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("range_join"),
-      new ExpressionInfo(
-        classOf[graft.operators.RangeJoin.type].getName,
-        null,
-        "range_join",
-        "range_join(left, right, key, lTime, rTime, lower, upper) - pairs of same-key rows with rTime - lTime in [lower, upper] (long domain).",
-        ""),
-      exprs => GraftExtensions.rangeJoinPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("redact_pii"),
-      new ExpressionInfo(
-        classOf[graft.operators.TextAnalysis.type].getName,
-        null,
-        "redact_pii",
-        "redact_pii(table, idCol, textCol) - count + mask the default PII battery (email, phone, IPv4) in sequence: (id, n_email, n_phone, n_ip, clean_text).",
-        ""),
-      exprs => GraftExtensions.redactPiiPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("keyword_topk"),
-      new ExpressionInfo(
-        classOf[graft.operators.KeywordSearch.type].getName,
-        null,
-        "keyword_topk",
-        "keyword_topk(table, idCol, textCol, termsCsv, k) - k best docs by the integer-exact relevance sum tf*(N-df) over the comma-separated terms: (id, n_hit, score).",
-        ""),
-      exprs => GraftExtensions.keywordTopKPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("weighted_sample"),
-      new ExpressionInfo(
-        classOf[graft.operators.Sampling.type].getName,
-        null,
-        "weighted_sample",
-        "weighted_sample(table, idCol, strataCol, ratesCsv, defaultRate) - deterministic per-stratum downsampling by MD5-uniform; ratesCsv like 'src0:0.9,src1:0.6'.",
-        ""),
-      exprs => GraftExtensions.weightedSamplePlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("pack_sequences"),
-      new ExpressionInfo(
-        classOf[graft.operators.Packing.type].getName,
-        null,
-        "pack_sequences",
-        "pack_sequences(table, idCol, textCol, budget, nStreams) - concat-and-chunk sequence packing into budget-token context windows over id-sharded streams: (id, stream, n_tokens, tok_start, first_pack, last_pack).",
-        ""),
-      exprs => GraftExtensions.packSequencesPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("block_dedup"),
-      new ExpressionInfo(
-        classOf[graft.operators.BlockDedup.type].getName,
-        null,
-        "block_dedup",
-        "block_dedup(table, idCol, textCol, blockWords) - remove every repeated blockWords-token block except its globally first occurrence: (id, n_blocks, n_kept, dedup_text).",
-        ""),
-      exprs => GraftExtensions.blockDedupPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("decontaminate_fuzzy"),
-      new ExpressionInfo(
-        classOf[graft.operators.Decontamination.type].getName,
-        null,
-        "decontaminate_fuzzy",
-        "decontaminate_fuzzy(corpusTable, idCol, textCol, evalTable, evalId, evalText, tau) - (corpus doc, eval doc) pairs with token-set Jaccard >= tau via broadcast MinHash candidates + exact verify: (id, eval_id, inter, uni).",
-        ""),
-      exprs => GraftExtensions.decontaminateFuzzyPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("exact_quantiles"),
-      new ExpressionInfo(
-        classOf[graft.operators.Quantiles.type].getName,
-        null,
-        "exact_quantiles",
-        "exact_quantiles(table, groupCol, valueCol, qsCsv) - exact percentile_disc quantiles per group, histogram-first; qsCsv like 'p50:1/2,p90:9/10': (group, n, <one column per quantile>).",
-        ""),
-      exprs => GraftExtensions.exactQuantilesPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("hybrid_dedup"),
-      new ExpressionInfo(
-        classOf[graft.operators.Dedup.type].getName,
-        null,
-        "hybrid_dedup",
-        "hybrid_dedup(docsTable, idCol, textCol, embTable, embId, embCol, tauText, tauSem) - duplicate clusters over the union of token-Jaccard and same-IVF-cell cosine evidence: (sid, rep).",
-        ""),
-      exprs => GraftExtensions.hybridDedupPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("kmeans_assign"),
-      new ExpressionInfo(
-        classOf[graft.operators.Clustering.type].getName,
-        null,
-        "kmeans_assign",
-        "kmeans_assign(table, idCol, embCol, k, iters) - Lloyd k-means over an embedding column on the exact integer grid: (vid, cell, cell_n).",
-        ""),
-      exprs => GraftExtensions.kmeansAssignPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("kanon_suppress"),
-      new ExpressionInfo(
-        classOf[graft.operators.KAnonymity.type].getName,
-        null,
-        "kanon_suppress",
-        "kanon_suppress(table, qiCsv, k) - k-anonymity release: quasi-identifier combinations covering < k rows are suppressed to NULL; every row ships its anonymity-set size as qi_n.",
-        ""),
-      exprs => GraftExtensions.kanonSuppressPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("ldiverse_suppress"),
-      new ExpressionInfo(
-        classOf[graft.operators.KAnonymity.type].getName,
-        null,
-        "ldiverse_suppress",
-        "ldiverse_suppress(table, qiCsv, sensCol, k, l) - distinct-l-diversity release: QI combos need >= k rows AND >= l distinct sensitive values; rows ship qi_n and qi_nsens.",
-        ""),
-      exprs => GraftExtensions.ldiverseSuppressPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("semantic_decon"),
-      new ExpressionInfo(
-        classOf[graft.operators.Decontamination.type].getName,
-        null,
-        "semantic_decon",
-        "semantic_decon(corpusTable, idCol, embCol, evalTable, evalId, evalEmb, tau, nCells) - embedding-cosine decontamination; nCells = 0 broadcasts the eval set (exact), nCells > 0 uses the IVF-cell scale path: (id, n_eval_hits, eval_id).",
-        ""),
-      exprs => GraftExtensions.semanticDeconPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("tokenizer_fertility"),
-      new ExpressionInfo(
-        classOf[graft.operators.BpeTrain.type].getName,
-        null,
-        "tokenizer_fertility",
-        "tokenizer_fertility(table, idCol, textCol, strataCol, nMerges) - trains nMerges BPE merges on the corpus and reports per-stratum tokens/word + chars/token in exact basis points: (strata, n_docs, n_words, n_bpe, n_chars, fertility_bp, chars_per_tok_bp).",
-        ""),
-      exprs => GraftExtensions.tokenizerFertilityPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("lsh_recall"),
-      new ExpressionInfo(
-        classOf[graft.operators.Dedup.type].getName,
-        null,
-        "lsh_recall",
-        "lsh_recall(table, idCol, textCol, tau, bands, rowsPerBand, bandBp) - MinHash-LSH recall certificate vs the exact segment join, per Jaccard band: (jacc_band_bp, n_true, n_found, recall_bp).",
-        ""),
-      exprs => GraftExtensions.lshRecallPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("crosslm_buckets"),
-      new ExpressionInfo(
-        classOf[graft.operators.LmScore.type].getName,
-        null,
-        "crosslm_buckets",
-        "crosslm_buckets(table, idCol, textCol, refTable, refTextCol, minCount) - head/middle/tail partition under a bigram LM trained on the REFERENCE table (CCNet shape): (id, n_bigrams, n_oov, score_bp, bucket).",
-        ""),
-      exprs => GraftExtensions.crosslmBucketsPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("hard_negatives"),
-      new ExpressionInfo(
-        classOf[graft.operators.SimilaritySearch.type].getName,
-        null,
-        "hard_negatives",
-        "hard_negatives(queryTable, qId, qEmb, corpusTable, nId, nEmb, k, tauDup) - per-anchor top-k most-similar corpus vectors below the duplicate threshold: (q_id, n_id, rank, sim).",
-        ""),
-      exprs => GraftExtensions.hardNegativesPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("epoch_order"),
-      new ExpressionInfo(
-        classOf[graft.operators.Packing.type].getName,
-        null,
-        "epoch_order",
-        "epoch_order(table, idCol, nShards, epoch) - deterministic per-epoch reader shard/order layout from md5(id || ':' || epoch): (id, epoch, shard, pos).",
-        ""),
-      exprs => GraftExtensions.epochOrderPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("phash_pairs"),
-      new ExpressionInfo(
-        classOf[graft.operators.Multimodal.type].getName,
-        null,
-        "phash_pairs",
-        "phash_pairs(mediaTable, idCol, payloadCol, maxHamming) - near-duplicate media pairs by 64-bit perceptual-hash fingerprints (md5 block-parity stub) via the block-pigeonhole join: (x_id, y_id, hamming).",
-        ""),
-      exprs => GraftExtensions.phashPairsPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("cdc_fingerprint"),
-      new ExpressionInfo(
-        classOf[graft.operators.Multimodal.type].getName,
-        null,
-        "cdc_fingerprint",
-        "cdc_fingerprint(mediaTable, idCol, payloadCol, w) - content-defined-chunking fingerprint (length-robust: insert/delete flips O(1) bits via boundary realignment): (media_id, fp).",
-        ""),
-      exprs => GraftExtensions.cdcFingerprintPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("iqr_outliers"),
-      new ExpressionInfo(
-        classOf[graft.operators.Anomaly.type].getName,
-        null,
-        "iqr_outliers",
-        "iqr_outliers(table, groupCol, valueCol, kNum, kDen) - Tukey boxplot fences per group (exact percentile_disc quartiles, pure-integer decisions): rows outside Q1 - k*IQR / Q3 + k*IQR.",
-        ""),
-      exprs => GraftExtensions.iqrOutliersPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("phrase_count"),
-      new ExpressionInfo(
-        classOf[graft.operators.KeywordSearch.type].getName,
-        null,
-        "phrase_count",
-        "phrase_count(table, idCol, textCol, 'space separated phrase') - exact-phrase occurrences per document (overlapping counted): (id, n_occ, first_pos).",
-        ""),
-      exprs => GraftExtensions.phraseCountPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("event_pattern"),
-      new ExpressionInfo(
-        classOf[graft.operators.EventPattern.type].getName,
-        null,
-        "event_pattern",
-        "event_pattern(table, keyCol, tsCol, idCol, typeCol, symbolsSpec, pattern) - MATCH_RECOGNIZE-lite: regex over per-key event-symbol sequences; symbolsSpec like 'view:v,click:c'. Output (key, seq, n_events, n_matches, first_match).",
-        ""),
-      exprs => GraftExtensions.eventPatternPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("kn_familiarity"),
-      new ExpressionInfo(
-        classOf[graft.operators.LmScore.type].getName,
-        null,
-        "kn_familiarity",
-        "kn_familiarity(docsTable, idCol, textCol, trainTable, trainTextCol) - interpolated Kneser-Ney (d=3/4) bigram familiarity in exact fixed point: (id, n_bigrams, n_backoff, score_bp).",
-        ""),
-      exprs => GraftExtensions.knFamiliarityPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("multi_touch"),
-      new ExpressionInfo(
-        classOf[graft.operators.Attribution.type].getName,
-        null,
-        "multi_touch",
-        "multi_touch(table, userCol, tsUsCol, idCol, typeCol, touchTypesCsv, convType, windowUs, model) - multi-touch attribution ('linear' | 'u') in exact basis points; each touch credits the next conversion within the window.",
-        ""),
-      exprs => GraftExtensions.multiTouchPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("fs_link"),
-      new ExpressionInfo(
-        classOf[graft.operators.RecordLinkage.type].getName,
-        null,
-        "fs_link",
-        "fs_link(aTable, bTable, idA, idB, labeledTable, candidatesTable, attrsCsv, thetaNum) - Fellegi-Sunter record linkage: exact integer m/u likelihood-ratio scores over candidate pairs; labeled/candidates tables carry (x_id, y_id).",
-        ""),
-      exprs => GraftExtensions.fsLinkPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("fs_link_em"),
-      new ExpressionInfo(
-        classOf[graft.operators.RecordLinkage.type].getName,
-        null,
-        "fs_link_em",
-        "fs_link_em(aTable, bTable, idA, idB, candidatesTable, attrsCsv, thetaNum, iters) - unsupervised Fellegi-Sunter: m/u fitted by fixed-point-integer EM over the candidate agreement-pattern histogram (no labeled sample), then exact likelihood-ratio scores.",
-        ""),
-      exprs => GraftExtensions.fsLinkEmPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("leakage_safe_split"),
-      new ExpressionInfo(
-        classOf[graft.operators.Sampling.type].getName,
-        null,
-        "leakage_safe_split",
-        "leakage_safe_split(table, idCol, clustersTable, clusterIdCol, repCol, 'train:0.8|val:0.1|test:0.1') - split keyed on the dup-cluster representative: near-duplicates never straddle splits.",
-        ""),
-      exprs => GraftExtensions.leakageSafeSplitPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("chi_drift"),
-      new ExpressionInfo(
-        classOf[graft.operators.Drift.type].getName,
-        null,
-        "chi_drift",
-        "chi_drift(refTable, curTable, bucketCol) - per-bucket distribution drift between two snapshots: chi-square-shaped divergence on exact basis-point shares (integer math; the engine-portable PSI stand-in).",
-        ""),
-      exprs => GraftExtensions.chiDriftPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("k_centers"),
-      new ExpressionInfo(
-        classOf[graft.operators.Coreset.type].getName,
-        null,
-        "k_centers",
-        "k_centers(table, idCol, embCol, k) - diversity-maximizing coreset: greedy k-center (farthest-point traversal) over an embedding column; (rank, id, d2) in selection order, d2 = squared distance to the nearest prior center.",
-        ""),
-      exprs => GraftExtensions.kCentersPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("pps_sample"),
-      new ExpressionInfo(
-        classOf[graft.operators.Sampling.type].getName,
-        null,
-        "pps_sample",
-        "pps_sample(table, idCol, weightCol, k) - PPS systematic sampling: k draws with inclusion probability exactly proportional to the integer weight; (idCol, weight, n_hits), sum(n_hits) = k.",
-        ""),
-      exprs => GraftExtensions.ppsSamplePlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("constraint_checks"),
-      new ExpressionInfo(
-        classOf[graft.operators.Constraints.type].getName,
-        null,
-        "constraint_checks",
-        "constraint_checks(table, spec) - Deequ-shaped data-quality suite; spec is ';'-separated checks: complete:col:bp | in_range:col:lo:hi:bp | in_set:col:v1|v2:bp | regex:col:re:bp (no ':' in re) | row_count:lo:hi | unique:col:bp | fk:col:refTable:refCol. Output (check, target, metric_bp, threshold_bp, pass).",
-        ""),
-      exprs => GraftExtensions.constraintChecksPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("cdc_apply"),
-      new ExpressionInfo(
-        classOf[graft.operators.Cdc.type].getName,
-        null,
-        "cdc_apply",
-        "cdc_apply(baseTable, changesTable, keyCol, seqCol, opCol, valueColsCsv) - lakehouse MERGE: apply a keyed upsert/delete changelog (max-seq winner per key) to a base snapshot: (keyCol, valueCols...).",
-        ""),
-      exprs => GraftExtensions.cdcApplyPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("cdc_changelog"),
-      new ExpressionInfo(
-        classOf[graft.operators.Cdc.type].getName,
-        null,
-        "cdc_changelog",
-        "cdc_changelog(oldTable, newTable, keyCol, valueColsCsv) - minimal changelog between two snapshots: (keyCol, op, valueCols...) with op in {upsert, delete}; unchanged keys absent.",
-        ""),
-      exprs => GraftExtensions.cdcChangelogPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("ivf_upsert"),
-      new ExpressionInfo(
-        classOf[graft.operators.SimilaritySearch.type].getName,
-        null,
-        "ivf_upsert",
-        "ivf_upsert(centroidsTable, addsTable, idCol, embCol) - assign an increment to an existing IVF index's frozen centroids (the no-rebuild index maintenance path): (n_id, n_emb, cell).",
-        ""),
-      exprs => GraftExtensions.ivfUpsertPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("mean_pool"),
-      new ExpressionInfo(
-        classOf[graft.operators.SimilaritySearch.type].getName,
-        null,
-        "mean_pool",
-        "mean_pool(table, gidCol, embCol, scaleBits) - order-invariant chunk-to-document embedding mean on the 2^scaleBits fixed-point grid: (gid, dim, n_chunks, pooled_q).",
-        ""),
-      exprs => GraftExtensions.meanPoolPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("sign_project"),
-      new ExpressionInfo(
-        classOf[graft.operators.SimilaritySearch.type].getName,
-        null,
-        "sign_project",
-        "sign_project(table, idCol, embCol, dim, outDims, scaleBits) - Johnson-Lindenstrauss Rademacher projection to outDims integer coordinates on the 2^scaleBits grid: (id, proj).",
-        ""),
-      exprs => GraftExtensions.signProjectPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("decayed_topk"),
-      new ExpressionInfo(
-        classOf[graft.operators.Decay.type].getName,
-        null,
-        "decayed_topk",
-        "decayed_topk(table, keyCol, tsSecCol, asOfSec, genSecs, horizon, k) - k hottest keys by exact-integer exponential time decay (weight 2^(horizon-age) per genSecs generation): (key, n_window, decayed, rank).",
-        ""),
-      exprs => GraftExtensions.decayedTopKPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("cohen_kappa"),
-      new ExpressionInfo(
-        classOf[graft.operators.ModelEval.type].getName,
-        null,
-        "cohen_kappa",
-        "cohen_kappa(table, raterACol, raterBCol) - chance-corrected inter-annotator agreement in exact basis points: one row (n, n_agree, po_bp, pe_bp, kappa_bp).",
-        ""),
-      exprs => GraftExtensions.cohenKappaPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("fd_profile"),
-      new ExpressionInfo(
-        classOf[graft.operators.Profiling.type].getName,
-        null,
-        "fd_profile",
-        "fd_profile(table, colsCsv) - functional-dependency audit over every ordered column pair: (a, b, n_lhs, n_pairs, holds, violations). One scan, no per-pair rescans.",
-        ""),
-      exprs => GraftExtensions.fdProfilePlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("ind_profile"),
-      new ExpressionInfo(
-        classOf[graft.operators.Profiling.type].getName,
-        null,
-        "ind_profile",
-        "ind_profile(sourcesCsv) - inclusion-dependency (FK) discovery over 'table:column' sources: (a, b, n_lhs_values, n_missing, holds). Single value-grouped pass, no per-pair EXCEPT joins.",
-        ""),
-      exprs => GraftExtensions.indProfilePlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("pq_adc"),
-      new ExpressionInfo(
-        classOf[graft.operators.Pq.type].getName,
-        null,
-        "pq_adc",
-        "pq_adc(queries, qIdCol, qEmbCol, corpus, idCol, embCol, dim, m, ks, iters, k) - product-quantization ADC top-k: integer-centroid codebooks trained inline, (q_id, n_id, rank, d2).",
-        ""),
-      exprs => GraftExtensions.pqAdcPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("pareto_front"),
-      new ExpressionInfo(
-        classOf[graft.operators.Skyline.type].getName,
-        null,
-        "pareto_front",
-        "pareto_front(table, idCol, dimsCsv) - distributed skyline: rows no other row dominates on ALL (maximizing) dims; two-phase bucket-local fronts, no n-squared theta-join.",
-        ""),
-      exprs => GraftExtensions.paretoFrontPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("percentile_ranks"),
-      new ExpressionInfo(
-        classOf[graft.operators.Quantiles.type].getName,
-        null,
-        "percentile_ranks",
-        "percentile_ranks(table, groupCol, valueCol) - per-group cume_dist of every distinct value in exact basis points, via histogram + recursive prefix sum: (group, value, n_rows, cum_le, pct_bp).",
-        ""),
-      exprs => GraftExtensions.percentileRanksPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("golden_record"),
-      new ExpressionInfo(
-        classOf[graft.operators.Survivorship.type].getName,
-        null,
-        "golden_record",
-        "golden_record(table, clusterCol, idCol, longestCsv, maxCsv, modeCsv) - per-cluster survivorship merge under deterministic rules (longest / max / count-desc-value-asc mode); empty CSVs allowed.",
-        ""),
-      exprs => GraftExtensions.goldenRecordPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("rfm"),
-      new ExpressionInfo(
-        classOf[graft.operators.Cohorts.type].getName,
-        null,
-        "rfm",
-        "rfm(table, userCol, tsSecCol, centsCol, asOfSec) - recency/frequency/monetary per user with exact population quintiles: (user, r_days, f, m_cents, r_q, f_q, m_q).",
-        ""),
-      exprs => GraftExtensions.rfmPlan(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("wordpiece_encode"),
-      new ExpressionInfo(
-        classOf[graft.functions.WordPieceEncode].getName,
-        null,
-        "wordpiece_encode",
-        "wordpiece_encode(words, starts, continuations) - greedy longest-match WordPiece sub-word segmentation of a word array (BERT [UNK] contract; vocab as literal arrays).",
-        ""),
-      exprs => graft.functions.WordPieceEncode.builder(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("chunk_overlap"),
-      new ExpressionInfo(
-        classOf[graft.operators.Chunking.type].getName,
-        null,
-        "chunk_overlap",
-        "chunk_overlap(table, idCol, textCol, width, stride) - overlapping width-token chunks stepping by stride per document: (id, chunk, tok_start, tok_end, n_chunk_tokens, chunk_text).",
-        ""),
-      exprs => GraftExtensions.chunkOverlapPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("snapshot_diff"),
-      new ExpressionInfo(
-        classOf[graft.operators.SnapshotDiff.type].getName,
-        null,
-        "snapshot_diff",
-        "snapshot_diff(oldTable, newTable, idCol, contentCol) - CDC classification per id: (id, status in added|removed|changed|unchanged) via digest-first full-outer join.",
-        ""),
-      exprs => GraftExtensions.snapshotDiffPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("training_order"),
-      new ExpressionInfo(
-        classOf[graft.operators.Packing.type].getName,
-        null,
-        "training_order",
-        "training_order(table, idCol, nShards) - deterministic MD5-ordered loader layout: (id, shard, pos).",
-        ""),
-      exprs => GraftExtensions.trainingOrderPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("rank_eval"),
-      new ExpressionInfo(
-        classOf[graft.operators.RankEval.type].getName,
-        null,
-        "rank_eval",
-        "rank_eval(runTable, qrelsTable, qCol, dCol, rankCol, k) - trec_eval-shaped per-query retrieval metrics at cutoff k: (q, n_rel, n_rel_ret, first_rel_rank, rr_ppm, recall_bp, precision_bp, hit).",
-        ""),
-      exprs => GraftExtensions.rankEvalPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("frequent_lines"),
-      new ExpressionInfo(
-        classOf[graft.operators.Boilerplate.type].getName,
-        null,
-        "frequent_lines",
-        "frequent_lines(table, idCol, textCol, sourceCol, delim, minDocs) - C4-style template inventory: lines appearing in >= minDocs distinct docs of the same source: (source, line, n_docs).",
-        ""),
-      exprs => GraftExtensions.frequentLinesPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("boilerplate_clean"),
-      new ExpressionInfo(
-        classOf[graft.operators.Boilerplate.type].getName,
-        null,
-        "boilerplate_clean",
-        "boilerplate_clean(table, idCol, textCol, sourceCol, delim, minDocs) - remove frequent-line boilerplate and reassemble docs: (id, n_lines, n_removed, text_clean).",
-        ""),
-      exprs => GraftExtensions.boilerplateCleanPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("preference_pairs"),
-      new ExpressionInfo(
-        classOf[graft.operators.PreferencePairs.type].getName,
-        null,
-        "preference_pairs",
-        "preference_pairs(table, groupCol, idCol, scoreCol, minMargin) - best-vs-worst candidate per group with deterministic ties, margin-floored: (g, n_candidates, chosen_id, chosen_score, rejected_id, rejected_score, margin).",
-        ""),
-      exprs => GraftExtensions.preferencePairsPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("theilsen_trend"),
-      new ExpressionInfo(
-        classOf[graft.operators.TheilSen.type].getName,
-        null,
-        "theilsen_trend",
-        "theilsen_trend(table, keyCol, xCol, yCol) - Theil-Sen median slope per key over integer points, exact rational ordering: (k, n_points, n_pairs, slope_num, slope_den, slope_ppm).",
-        ""),
-      exprs => GraftExtensions.theilSenPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("sketch_quantiles"),
-      new ExpressionInfo(
-        classOf[graft.operators.QuantileSketch.type].getName,
-        null,
-        "sketch_quantiles",
-        "sketch_quantiles(table, groupCol, idCol, valueCol, k, 'num:den,...') - quantile estimates from the deterministic mergeable bottom-k-by-md5 sample: (group, q_num, q_den, n_sample, est).",
-        ""),
-      exprs => GraftExtensions.sketchQuantilesPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("coec"),
-      new ExpressionInfo(
-        classOf[graft.operators.ClickModels.type].getName,
-        null,
-        "coec",
-        "coec(table, itemCol, positionCol, clickedCol) - clicks over expected clicks: position-bias-corrected CTR per item in exact basis points: (item, n_imp, n_clicks, expected_ppm, coec_bp).",
-        ""),
-      exprs => GraftExtensions.coecPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("dictionary_match"),
-      new ExpressionInfo(
-        classOf[graft.operators.KeywordSearch.type].getName,
-        null,
-        "dictionary_match",
-        "dictionary_match(docsTable, idCol, textCol, dictTable, phraseIdCol, phraseCol) - gazetteer tagging: every dictionary phrase vs every doc in one pass, rarest-token anchors + exact slice verify: (id, phrase_id, n_occ, first_pos).",
-        ""),
-      exprs => GraftExtensions.dictionaryMatchPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("forget_audit"),
-      new ExpressionInfo(
-        classOf[graft.operators.Forget.type].getName,
-        null,
-        "forget_audit",
-        "forget_audit(subjectsTable, subjectCol, 'name1:table1:key1,name2:table2:key2') - GDPR deletion-cascade audit: per table (table, n_before, n_removed, n_after) in one pass each.",
-        ""),
-      exprs => GraftExtensions.forgetAuditPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("interval_union"),
-      new ExpressionInfo(
-        classOf[graft.operators.Intervals.type].getName,
-        null,
-        "interval_union",
-        "interval_union(table, keyCol, startCol, endCol) - gaps-and-islands interval-union measure per key: (k, n_intervals, n_islands, covered, max_gap).",
-        ""),
-      exprs => GraftExtensions.intervalUnionPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("markov_transitions"),
-      new ExpressionInfo(
-        classOf[graft.operators.Transitions.type].getName,
-        null,
-        "markov_transitions",
-        "markov_transitions(table, keyCol, tsCol, tiebreakCol, stateCol) - first-order transition table over keyed event sequences: (state, next, n, p_bp).",
-        ""),
-      exprs => GraftExtensions.markovTransitionsPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("priority_sample"),
-      new ExpressionInfo(
-        classOf[graft.operators.PrioritySample.type].getName,
-        null,
-        "priority_sample",
-        "priority_sample(table, groupCol, idCol, wCol, k) - Duffield-Lund-Thorup priority sample per group with unbiased subset-sum estimates: (group, id, w, est_ppm).",
-        ""),
-      exprs => GraftExtensions.prioritySamplePlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("ams_f2"),
-      new ExpressionInfo(
-        classOf[graft.operators.AmsSketch.type].getName,
-        null,
-        "ams_f2",
-        "ams_f2(table, keyCol, s) - AMS tug-of-war sketch counters for the second frequency moment / self-join size: (r, counter).",
-        ""),
-      exprs => GraftExtensions.amsF2Plan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("link_prediction"),
-      new ExpressionInfo(
-        classOf[graft.operators.LinkPrediction.type].getName,
-        null,
-        "link_prediction",
-        "link_prediction(table, minCommon, maxCenterDegree) - neighborhood-overlap link prediction over undirected edges (a, b): (x, y, n_common, jaccard_bp, ra_ppm) for non-adjacent pairs.",
-        ""),
-      exprs => GraftExtensions.linkPredictionPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("kaplan_meier"),
-      new ExpressionInfo(
-        classOf[graft.operators.Survival.type].getName,
-        null,
-        "kaplan_meier",
-        "kaplan_meier(table, groupCol, durationCol, eventCol) - Kaplan-Meier survival curve per group in exact ppm: (g, t, n_risk, n_events, s_ppm).",
-        ""),
-      exprs => GraftExtensions.kaplanMeierPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("cuped"),
-      new ExpressionInfo(
-        classOf[graft.operators.Cuped.type].getName,
-        null,
-        "cuped",
-        "cuped(table, armCol, xCol, yCol) - CUPED variance reduction from sufficient statistics: (arm, n, theta_ppm, mean_y_ppm, mean_ycup_ppm, varred_bp).",
-        ""),
-      exprs => GraftExtensions.cupedPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("gini_stump"),
-      new ExpressionInfo(
-        classOf[graft.operators.GiniStump.type].getName,
-        null,
-        "gini_stump",
-        "gini_stump(table, featureCol, labelCol) - exact CART decision-stump split scan: (v, n_left, pos_left, gini_ppm) per candidate threshold.",
-        ""),
-      exprs => GraftExtensions.giniStumpPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("mann_whitney"),
-      new ExpressionInfo(
-        classOf[graft.operators.MannWhitney.type].getName,
-        null,
-        "mann_whitney",
-        "mann_whitney(table, sampleCol, valueCol, aLabel, bLabel) - exact tie-corrected Mann-Whitney U rank-sum test: (n_a, n_b, u2_a, u2_b, cles_ppm, var12s).",
-        ""),
-      exprs => GraftExtensions.mannWhitneyPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("cusum"),
-      new ExpressionInfo(
-        classOf[graft.operators.ChangePoint.type].getName,
-        null,
-        "cusum",
-        "cusum(table, bucketCol, valueCol, ref, h) - one-sided CUSUM change-point statistic per bucket via distributed prefix scans: (t, x, cusum, alarm).",
-        ""),
-      exprs => GraftExtensions.cusumPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("trimmed_mean"),
-      new ExpressionInfo(
-        classOf[graft.operators.RobustMean.type].getName,
-        null,
-        "trimmed_mean",
-        "trimmed_mean(table, groupCol, valueCol, trimBp) - exact trimmed/winsorized/plain means per group in ppm: (g, n, cut, trimmed_mean_ppm, winsor_mean_ppm, mean_ppm).",
-        ""),
-      exprs => GraftExtensions.trimmedMeanPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("ams_join_size"),
-      new ExpressionInfo(
-        classOf[graft.operators.AmsSketch.type].getName,
-        null,
-        "ams_join_size",
-        "ams_join_size(tableA, keyA, tableB, keyB, s) - AGMS equi-join size estimate from two tug-of-war sketches: (s, join_size_est).",
-        ""),
-      exprs => GraftExtensions.amsJoinSizePlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("seq_patterns"),
-      new ExpressionInfo(
-        classOf[graft.operators.SeqPatterns.type].getName,
-        null,
-        "seq_patterns",
-        "seq_patterns(table, keyCol, tsCol, tiebreakCol, stateCol, minSupport) - sequential trigram mining with Markov-surprise: (a, b, c, n, users, surprise_bp).",
-        ""),
-      exprs => GraftExtensions.seqPatternsPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("weighted_quantiles"),
-      new ExpressionInfo(
-        classOf[graft.operators.Quantiles.type].getName,
-        null,
-        "weighted_quantiles",
-        "weighted_quantiles(table, groupCol, valueCol, weightCol) - exact weighted p25/p50/p75/p95 per group from the weight-summed value grain: (group, w_total, p25, p50, p75, p95).",
-        ""),
-      exprs => GraftExtensions.weightedQuantilesPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("target_encode_loo"),
-      new ExpressionInfo(
-        classOf[graft.operators.TargetEncoding.type].getName,
-        null,
-        "target_encode_loo",
-        "target_encode_loo(table, idCol, categoryCol, labelCol) - leave-one-out target encoding in ppm with global-prior fallback: (id, category, y, enc_ppm).",
-        ""),
-      exprs => GraftExtensions.targetEncodeLooPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("negative_sample"),
-      new ExpressionInfo(
-        classOf[graft.operators.NegativeSampling.type].getName,
-        null,
-        "negative_sample",
-        "negative_sample(table, userCol, itemCol, numItems, k) - deterministic md5 hash-draw negatives per user from a dense item space: (user, item, draw).",
-        ""),
-      exprs => GraftExtensions.negativeSamplePlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("lorenz_gini"),
-      new ExpressionInfo(
-        classOf[graft.operators.Concentration.type].getName,
-        null,
-        "lorenz_gini",
-        "lorenz_gini(table, entityCol) - Lorenz concentration table + exact Gini over the count-of-counts histogram: (t, m, cum_entities, cum_weight, entity_share_bp, weight_share_bp, gini_ppm).",
-        ""),
-      exprs => GraftExtensions.lorenzGiniPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("blocking_quality"),
-      new ExpressionInfo(
-        classOf[graft.operators.BlockingQuality.type].getName,
-        null,
-        "blocking_quality",
-        "blocking_quality(blocksTable, clustersTable, idCol, blockCol, clusterCol) - ER blocking report from size histograms: (n, truth_pairs, cand_pairs, coblocked_truth_pairs, completeness_bp, reduction_bp).",
-        ""),
-      exprs => GraftExtensions.blockingQualityPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("diff_in_diff"),
-      new ExpressionInfo(
-        classOf[graft.operators.DiffInDiff.type].getName,
-        null,
-        "diff_in_diff",
-        "diff_in_diff(table, armCol, periodCol, yCol, treatLabel, ctrlLabel, preLabel, postLabel) - difference-in-differences from the 2x2 cell means in exact ppm.",
-        ""),
-      exprs => GraftExtensions.diffInDiffPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("fano_burstiness"),
-      new ExpressionInfo(
-        classOf[graft.operators.Burstiness.type].getName,
-        null,
-        "fano_burstiness",
-        "fano_burstiness(table, keyCol, bucketCol) - Fano factor of per-bucket counts per key over the data's bucket domain: (k, n_events, n_active_buckets, fano_ppm).",
-        ""),
-      exprs => GraftExtensions.fanoBurstinessPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("hits_scores"),
-      new ExpressionInfo(
-        classOf[graft.operators.Hits.type].getName,
-        null,
-        "hits_scores",
-        "hits_scores(table, iters) - unrolled unnormalized HITS over directed edges (src, dst): (id, auth, hub) exact integer walk counts.",
-        ""),
-      exprs => GraftExtensions.hitsPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("hits_converged"),
-      new ExpressionInfo(
-        classOf[graft.operators.Hits.type].getName,
-        null,
-        "hits_converged",
-        "hits_converged(table, iters) - ppm-of-max normalized HITS fixed point over directed edges (src, dst): (id, auth_ppm, hub_ppm), any iteration depth.",
-        ""),
-      exprs => GraftExtensions.hitsConvergedPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("modularity"),
-      new ExpressionInfo(
-        classOf[graft.operators.Modularity.type].getName,
-        null,
-        "modularity",
-        "modularity(edgesTable, labelsTable) - Newman Q of a community assignment in exact ppm: (label, n_nodes, e_in, d_tot, contrib_ppm, modularity_ppm).",
-        ""),
-      exprs => GraftExtensions.modularityPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("chi2_independence"),
-      new ExpressionInfo(
-        classOf[graft.operators.ChiSquare.type].getName,
-        null,
-        "chi2_independence",
-        "chi2_independence(table, xCol, yCol) - chi-square independence test of two categoricals, exact ppm contribs incl. absent cells: (x, y, o, r_tot, c_tot, contrib_ppm, chi2_ppm, dof).",
-        ""),
-      exprs => GraftExtensions.chi2IndependencePlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("conformal_calibrate"),
-      new ExpressionInfo(
-        classOf[graft.operators.Conformal.type].getName,
-        null,
-        "conformal_calibrate",
-        "conformal_calibrate(calTable, testTable, scoreCol, alphaNum, alphaDen) - split-conformal threshold at the exact ceil((n+1)(1-alpha)) rank plus realized test coverage: (n_cal, k, q_hat, exact, n_test, n_covered, coverage_ppm).",
-        ""),
-      exprs => GraftExtensions.conformalCalibratePlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("bcubed"),
-      new ExpressionInfo(
-        classOf[graft.operators.BCubed.type].getName,
-        null,
-        "bcubed",
-        "bcubed(table, clusterCol, labelCol) - B-cubed item-weighted clustering evaluation vs gold labels in exact ppm: (n, n_clusters, n_labels, p_ppm, r_ppm, f1_ppm).",
-        ""),
-      exprs => GraftExtensions.bcubedPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("flesch"),
-      new ExpressionInfo(
-        classOf[graft.operators.Readability.type].getName,
-        null,
-        "flesch",
-        "flesch(table, idCol, textCol) - Flesch reading-ease in exact milli-scale integers with defined surrogate counts: (id, words, sentences, syllables, flesch_milli, band).",
-        ""),
-      exprs => GraftExtensions.fleschPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("sweep_cut"),
-      new ExpressionInfo(
-        classOf[graft.operators.SweepCut.type].getName,
-        null,
-        "sweep_cut",
-        "sweep_cut(scoresTable, edgesTable, m) - ACL conductance sweep over score/degree-ranked nodes: (rank, id, score, degree, vol, cut, cond_ppm, best_rank).",
-        ""),
-      exprs => GraftExtensions.sweepCutPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("ktruss"),
-      new ExpressionInfo(
-        classOf[graft.operators.Truss.type].getName,
-        null,
-        "ktruss",
-        "ktruss(edgesTable, k, rounds) - k-truss by fixed-round synchronous edge peeling over undirected edges (a, b): surviving (a, b, support), a < b.",
-        ""),
-      exprs => GraftExtensions.ktrussPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("srm_check"),
-      new ExpressionInfo(
-        classOf[graft.operators.SampleRatio.type].getName,
-        null,
-        "srm_check",
-        "srm_check(table, armCol, aLabel, bLabel, expectA, expectB) - sample-ratio-mismatch chi-square vs the design ratio in exact ppm: (n_a, n_b, expect_a, expect_b, a_share_ppm, expected_a_ppm, srm_ppm, srm_alarm).",
-        ""),
-      exprs => GraftExtensions.srmCheckPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("rbo"),
-      new ExpressionInfo(
-        classOf[graft.operators.Rbo.type].getName,
-        null,
-        "rbo",
-        "rbo(xTable, yTable, qCol, dCol, rankCol, k, pNum, pDen) - rank-biased overlap of two rankings per query at depth k, exact ppm: (q, n_matched, rbo_ppm).",
-        ""),
-      exprs => GraftExtensions.rboPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("smd_balance"),
-      new ExpressionInfo(
-        classOf[graft.operators.Balance.type].getName,
-        null,
-        "smd_balance",
-        "smd_balance(table, armCol, xCol, aLabel, bLabel) - exact squared standardized mean difference across two arms: (n_a, n_b, mean_a_ppm, mean_b_ppm, var_a, var_b, smd2_ppm, balanced).",
-        ""),
-      exprs => GraftExtensions.smdBalancePlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("mann_kendall"),
-      new ExpressionInfo(
-        classOf[graft.operators.TrendTest.type].getName,
-        null,
-        "mann_kendall",
-        "mann_kendall(table, tCol, xCol) - Mann-Kendall trend test over a bounded unique time grain: (n, s, var18, z2_ppm), z2 vs chi-square(1) critical values.",
-        ""),
-      exprs => GraftExtensions.mannKendallPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("benford_audit"),
-      new ExpressionInfo(
-        classOf[graft.operators.Benford.type].getName,
-        null,
-        "benford_audit",
-        "benford_audit(table, valueCol) - Benford first-digit audit of positive integers vs the fixed ppm expectation: (d, o, expected_ppm, observed_ppm, contrib_ppm, chi2_ppm).",
-        ""),
-      exprs => GraftExtensions.benfordAuditPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("effective_sample_size"),
-      new ExpressionInfo(
-        classOf[graft.operators.EffectiveSampleSize.type].getName,
-        null,
-        "effective_sample_size",
-        "effective_sample_size(table, groupCol, wCol) - Kish ESS and design effect of integer weights per group in exact ppm: (group, n, w_sum, w_sq_sum, ess_ppm, deff_ppm).",
-        ""),
-      exprs => GraftExtensions.effectiveSampleSizePlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("assortativity"),
-      new ExpressionInfo(
-        classOf[graft.operators.GraphStats.type].getName,
-        null,
-        "assortativity",
-        "assortativity(table) - whole-graph stats over undirected edges (a, b): (n_nodes, n_edges, max_degree, sum_d2, assortativity_ppm).",
-        ""),
-      exprs => GraftExtensions.assortativityPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("edge_support"),
-      new ExpressionInfo(
-        classOf[graft.operators.Triangles.type].getName,
-        null,
-        "edge_support",
-        "edge_support(table) - per-edge triangle support (k-truss building block) over undirected edges (a, b): (a, b, support).",
-        ""),
-      exprs => GraftExtensions.edgeSupportPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("bipartite_project"),
-      new ExpressionInfo(
-        classOf[graft.operators.BipartiteProject.type].getName,
-        null,
-        "bipartite_project",
-        "bipartite_project(table, userCol, itemCol, minShared, maxUserDegree) - item-item co-occurrence graph from (user, item) interactions: (i, j, n_shared).",
-        ""),
-      exprs => GraftExtensions.bipartiteProjectPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("exp_smoothing"),
-      new ExpressionInfo(
-        classOf[graft.operators.ExpSmoothing.type].getName,
-        null,
-        "exp_smoothing",
-        "exp_smoothing(table, keyCol, bucketCol, valueCol, kLog2) - integer-exact exponential smoothing (alpha = 1/2^k) per key with one-step-ahead forecasts: (k, t, x, forecast_x2k, err_x2k, level_x2k).",
-        ""),
-      exprs => GraftExtensions.expSmoothingPlan(exprs)))
-    ext.injectTableFunction((
-      FunctionIdentifier("two_proportion_z"),
-      new ExpressionInfo(
-        classOf[graft.operators.Proportions.type].getName,
-        null,
-        "two_proportion_z",
-        "two_proportion_z(table, groupCol, successCol, aLabel, bLabel) - exact pooled two-proportion z-squared in ppm: (n_a, n_b, x_a, x_b, rate_a_ppm, rate_b_ppm, z2_ppm).",
-        ""),
-      exprs => GraftExtensions.twoProportionPlan(exprs)))
-    ()
+    for (f <- GraftExtensions.scalars) ext.injectFunction((f.id, f.info, f.build))
+    for (f <- GraftExtensions.tableFunctions)
+      ext.injectTableFunction((f.id, f.info, f.build(_).queryExecution.logical))
   }
 }
 
 object GraftExtensions {
 
-  /** Build the similarity-join logical plan from TVF arguments
-    * (string/double literals only — the table is resolved through the
-    * session catalog, then the lazy prefix-filter plan wraps it).
+  /** One call's literal arguments, read by position. A literal of the
+    * wrong type fails naming the function and the parameter.
     */
-  private def tvfArgs(name: String, exprs: Seq[Expression]): (String, String, String, Double) = {
-    require(
-      exprs.length == 4,
-      s"$name expects (table, idCol, textCol, threshold), got " + exprs.length + " arguments")
-    def str(e: Expression, what: String): String = e match {
+  final class Args(fn: String, params: Seq[String], val exprs: Seq[Expression]) {
+    def arity: Int = exprs.length
+
+    private def fail(i: Int, kind: String, got: Any): Nothing =
+      throw new IllegalArgumentException(s"$fn: ${params(i)} must be $kind literal, got $got")
+
+    def str(i: Int): String = exprs(i) match {
       case Literal(v: UTF8String, StringType) => v.toString
-      case other =>
-        throw new IllegalArgumentException(
-          s"$name: $what must be a string literal, got $other")
-    }
-    val threshold = exprs(3) match {
-      case Literal(v, _) if v != null => v.toString.toDouble
-      case other =>
-        throw new IllegalArgumentException(
-          s"$name: threshold must be a numeric literal, got $other")
-    }
-    (str(exprs(0), "table"), str(exprs(1), "idCol"), str(exprs(2), "textCol"), threshold)
-  }
-
-  /** Arity-overloaded: 4 args = self join over one table; 7 args =
-    * probe-vs-index (R-S) join over two tables,
-    * `(probeTable, probeId, probeText, indexTable, indexId, indexText, threshold)`.
-    */
-  private def twoTableToks(name: String, exprs: Seq[Expression]): (DataFrame, DataFrame, Double) = {
-    val spark = SparkSession.active
-    val probe = SimilarityJoin.tokenize(
-      spark.table(strArg(name, exprs.head, "probeTable")),
-      strArg(name, exprs(1), "probeId"), strArg(name, exprs(2), "probeText"))
-    val index = SimilarityJoin.tokenize(
-      spark.table(strArg(name, exprs(3), "indexTable")),
-      strArg(name, exprs(4), "indexId"), strArg(name, exprs(5), "indexText"))
-    (probe, index, doubleArg(name, exprs(6), "threshold"))
-  }
-
-  private[graft] def similarityJoinPlan(exprs: Seq[Expression]): LogicalPlan =
-    exprs.length match {
-      case 4 =>
-        val (table, idCol, textCol, tau) = tvfArgs("similarity_join", exprs)
-        SimilarityJoin
-          .prefixSelfJoin(SparkSession.active.table(table), idCol, textCol, tau)
-          .queryExecution.logical
-      case 7 =>
-        val (probe, index, tau) = twoTableToks("similarity_join", exprs)
-        SimilarityJoin.prefixJoin(probe, index, tau).queryExecution.logical
-      case n =>
-        throw new IllegalArgumentException(
-          "similarity_join expects (table, idCol, textCol, tau) or " +
-            "(probeTable, probeId, probeText, indexTable, indexId, indexText, tau), got " +
-            n + " arguments")
+      case other => fail(i, "a string", other)
     }
 
-  private[graft] def containmentJoinPlan(exprs: Seq[Expression]): LogicalPlan =
-    exprs.length match {
-      case 4 =>
-        val (table, idCol, textCol, gamma) = tvfArgs("containment_join", exprs)
-        SimilarityJoin
-          .containmentSelfJoin(SparkSession.active.table(table), idCol, textCol, gamma)
-          .queryExecution.logical
-      case 7 =>
-        val (probe, index, gamma) = twoTableToks("containment_join", exprs)
-        SimilarityJoin.containmentJoin(probe, index, gamma).queryExecution.logical
-      case n =>
-        throw new IllegalArgumentException(
-          "containment_join expects (table, idCol, textCol, gamma) or " +
-            "(probeTable, probeId, probeText, indexTable, indexId, indexText, gamma), got " +
-            n + " arguments")
+    def long(i: Int): Long = exprs(i) match {
+      case Literal(v: Byte, _) => v.toLong
+      case Literal(v: Short, _) => v.toLong
+      case Literal(v: Int, _) => v.toLong
+      case Literal(v: Long, _) => v
+      case other => fail(i, "an integer", other)
     }
 
-  private def strArg(name: String, e: Expression, what: String): String = e match {
-    case Literal(v: UTF8String, StringType) => v.toString
-    case other =>
-      throw new IllegalArgumentException(s"$name: $what must be a string literal, got $other")
+    def int(i: Int): Int = long(i).toInt
+
+    def double(i: Int): Double = exprs(i) match {
+      case Literal(v, _) if v != null =>
+        try v.toString.toDouble
+        catch { case _: NumberFormatException => fail(i, "a numeric", v) }
+      case other => fail(i, "a numeric", other)
+    }
+
+    def table(i: Int): DataFrame = SparkSession.active.table(str(i))
+    def col(i: Int): Column = org.apache.spark.sql.functions.col(str(i))
+    def csv(i: Int): Seq[String] = str(i).split(",").map(_.trim).filter(_.nonEmpty).toSeq
   }
 
-  private def longArg(name: String, e: Expression, what: String): Long = e match {
-    case Literal(v: Byte, _) => v.toLong
-    case Literal(v: Short, _) => v.toLong
-    case Literal(v: Int, _) => v.toLong
-    case Literal(v: Long, _) => v
-    case other =>
-      throw new IllegalArgumentException(s"$name: $what must be an integer literal, got $other")
-  }
-
-  private def doubleArg(name: String, e: Expression, what: String): Double = e match {
-    case Literal(v, _) if v != null =>
-      try v.toString.toDouble
-      catch {
-        case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"$name: $what must be a numeric literal, got $v")
-      }
-    case other =>
-      throw new IllegalArgumentException(s"$name: $what must be a numeric literal, got $other")
-  }
-
-  /** decontaminate(corpusTable, idCol, textCol, evalTable, evalId,
-    * evalText, n): benchmark-decontamination pass — the eval side is
-    * broadcast, the corpus streams (see [[graft.operators.Decontamination]]).
+  /** One registered function. Its parameter list — or alternative lists,
+    * picked by arity — is the only statement of its signature: the usage
+    * text `name(p1, …) - description`, the arity check and its message,
+    * and the per-argument literal errors all derive from it.
     */
-  private[graft] def decontaminatePlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "decontaminate"
-    require(
-      exprs.length == 7,
-      s"$name expects (corpusTable, idCol, textCol, evalTable, evalId, evalText, n), got " +
-        exprs.length + " arguments")
-    val spark = SparkSession.active
-    val n = longArg(name, exprs(6), "n").toInt
-    require(n > 0, s"$name: n must be positive, got $n")
-    graft.operators.Decontamination
-      .flag(
-        spark.table(strArg(name, exprs.head, "corpusTable")),
-        strArg(name, exprs(1), "idCol"),
-        strArg(name, exprs(2), "textCol"),
-        spark.table(strArg(name, exprs(3), "evalTable")),
-        strArg(name, exprs(4), "evalId"),
-        strArg(name, exprs(5), "evalText"),
-        n)
-      .queryExecution.logical
-  }
-
-  /** dsir_topk(table, idCol, textCol, targetBoolCol, n, nBuckets, scale, k):
-    * the target domain is the rows where `targetBoolCol` is true (callers
-    * compute the predicate in a view — a column name keeps the TVF's
-    * argument surface literal-only).
-    */
-  private[graft] def dsirTopKPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "dsir_topk"
-    require(
-      exprs.length == 8,
-      s"$name expects (table, idCol, textCol, targetBoolCol, n, nBuckets, scale, k), got " +
-        exprs.length + " arguments")
-    val spark = SparkSession.active
-    val n = longArg(name, exprs(4), "n").toInt
-    val nBuckets = longArg(name, exprs(5), "nBuckets").toInt
-    val scale = longArg(name, exprs(6), "scale")
-    val k = longArg(name, exprs(7), "k").toInt
-    graft.operators.ImportanceResampling
-      .resampleTopK(
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "idCol"),
-        strArg(name, exprs(2), "textCol"),
-        org.apache.spark.sql.functions.col(strArg(name, exprs(3), "targetBoolCol")),
-        n, nBuckets, scale, k)
-      .queryExecution.logical
-  }
-
-  /** pagerank(nodesTable, idCol, edgesTable, aCol, bCol, iters). */
-  private[graft] def pagerankPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "pagerank"
-    require(
-      exprs.length == 6,
-      s"$name expects (nodesTable, idCol, edgesTable, aCol, bCol, iters), got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.PageRank
-      .ranks(
-        spark.table(strArg(name, exprs.head, "nodesTable"))
-          .select(org.apache.spark.sql.functions.col(strArg(name, exprs(1), "idCol")).as("id")),
-        spark.table(strArg(name, exprs(2), "edgesTable"))
-          .select(
-            org.apache.spark.sql.functions.col(strArg(name, exprs(3), "aCol")).as("a"),
-            org.apache.spark.sql.functions.col(strArg(name, exprs(4), "bCol")).as("b")),
-        longArg(name, exprs(5), "iters").toInt)
-      .queryExecution.logical
-  }
-
-  /** interval_overlap(leftTable, rightTable, keyCol, lStart, lEnd, rStart,
-    * rEnd, bucketWidth).
-    */
-  private[graft] def intervalOverlapPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "interval_overlap"
-    require(
-      exprs.length == 8,
-      s"$name expects (leftTable, rightTable, keyCol, lStart, lEnd, rStart, rEnd, bucketWidth), " +
-        s"got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.IntervalJoin
-      .overlap(
-        spark.table(strArg(name, exprs.head, "leftTable")),
-        spark.table(strArg(name, exprs(1), "rightTable")),
-        Seq(strArg(name, exprs(2), "keyCol")),
-        strArg(name, exprs(3), "lStart"),
-        strArg(name, exprs(4), "lEnd"),
-        strArg(name, exprs(5), "rStart"),
-        strArg(name, exprs(6), "rEnd"),
-        longArg(name, exprs(7), "bucketWidth"))
-      .queryExecution.logical
-  }
-
-  /** itemset_pairs(table, basketCol, itemCol, minSupport). */
-  private[graft] def itemsetPairsPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "itemset_pairs"
-    require(
-      exprs.length == 4,
-      s"$name expects (table, basketCol, itemCol, minSupport), got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.Itemsets
-      .frequentPairs(
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "basketCol"),
-        strArg(name, exprs(2), "itemCol"),
-        longArg(name, exprs(3), "minSupport"))
-      .queryExecution.logical
-  }
-
-  /** triangles(edgesTable, aCol, bCol). */
-  private[graft] def trianglesPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "triangles"
-    require(exprs.length == 3, s"$name expects (edgesTable, aCol, bCol), got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.Triangles
-      .enumerate(
-        spark.table(strArg(name, exprs.head, "edgesTable"))
-          .select(
-            org.apache.spark.sql.functions.col(strArg(name, exprs(1), "aCol")).as("a"),
-            org.apache.spark.sql.functions.col(strArg(name, exprs(2), "bCol")).as("b")))
-      .queryExecution.logical
-  }
-
-  /** repeated_spans(table, idCol, textCol, k, minCount). */
-  private[graft] def repeatedSpansPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "repeated_spans"
-    require(
-      exprs.length == 5,
-      s"$name expects (table, idCol, textCol, k, minCount), got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.SubstringDedup
-      .repeatedSpans(
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "idCol"),
-        strArg(name, exprs(2), "textCol"),
-        longArg(name, exprs(3), "k").toInt,
-        longArg(name, exprs(4), "minCount"))
-      .queryExecution.logical
-  }
-
-  /** span_removal(table, idCol, textCol, k, minCount). */
-  private[graft] def spanRemovalPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "span_removal"
-    require(
-      exprs.length == 5,
-      s"$name expects (table, idCol, textCol, k, minCount), got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.SubstringDedup
-      .removeRepeatedSpans(
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "idCol"),
-        strArg(name, exprs(2), "textCol"),
-        longArg(name, exprs(3), "k").toInt,
-        longArg(name, exprs(4), "minCount"))
-      .queryExecution.logical
-  }
-
-  /** lm_buckets(table, idCol, textCol, minCount). */
-  private[graft] def lmBucketsPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "lm_buckets"
-    require(
-      exprs.length == 4,
-      s"$name expects (table, idCol, textCol, minCount), got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.LmScore
-      .familiarityBuckets(
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "idCol"),
-        strArg(name, exprs(2), "textCol"),
-        longArg(name, exprs(3), "minCount"))
-      .queryExecution.logical
-  }
-
-  /** bpe_train(table, textCol, nMerges). */
-  private[graft] def bpeTrainPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "bpe_train"
-    require(exprs.length == 3, s"$name expects (table, textCol, nMerges), got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.BpeTrain
-      .learnTable(
-        spark,
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "textCol"),
-        longArg(name, exprs(2), "nMerges").toInt)
-      .queryExecution.logical
-  }
-
-  /** bpe_encode(table, idCol, textCol, nMerges). */
-  private[graft] def bpeEncodePlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "bpe_encode"
-    require(
-      exprs.length == 4,
-      s"$name expects (table, idCol, textCol, nMerges), got ${exprs.length}")
-    val spark = SparkSession.active
-    val docs = spark.table(strArg(name, exprs.head, "table"))
-    val textCol = strArg(name, exprs(2), "textCol")
-    graft.operators.BpeTrain
-      .encode(
-        docs,
-        strArg(name, exprs(1), "idCol"),
-        textCol,
-        graft.operators.BpeTrain.learn(docs, textCol, longArg(name, exprs(3), "nMerges").toInt))
-      .queryExecution.logical
-  }
-
-  /** corpus_overlap(table, groupCol, textCol, k). */
-  private[graft] def corpusOverlapPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "corpus_overlap"
-    require(
-      exprs.length == 4,
-      s"$name expects (table, groupCol, textCol, k), got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.CorpusOverlap
-      .overlapMatrix(
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "groupCol"),
-        strArg(name, exprs(2), "textCol"),
-        longArg(name, exprs(3), "k").toInt)
-      .queryExecution.logical
-  }
-
-  /** label_propagation(nodesTable, idCol, edgesTable, aCol, bCol, iters). */
-  private[graft] def labelPropagationPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "label_propagation"
-    require(
-      exprs.length == 6,
-      s"$name expects (nodesTable, idCol, edgesTable, aCol, bCol, iters), got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.LabelPropagation
-      .propagate(
-        spark.table(strArg(name, exprs.head, "nodesTable"))
-          .select(org.apache.spark.sql.functions.col(strArg(name, exprs(1), "idCol")).as("id")),
-        spark.table(strArg(name, exprs(2), "edgesTable"))
-          .select(
-            org.apache.spark.sql.functions.col(strArg(name, exprs(3), "aCol")).as("a"),
-            org.apache.spark.sql.functions.col(strArg(name, exprs(4), "bCol")).as("b")),
-        longArg(name, exprs(5), "iters").toInt)
-      .queryExecution.logical
-  }
-
-  /** mixture_plan(table, strataCol, totalN). */
-  private[graft] def mixturePlanPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "mixture_plan"
-    require(
-      exprs.length == 3,
-      s"$name expects (table, strataCol, totalN), got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.Sampling
-      .mixturePlan(
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "strataCol"),
-        longArg(name, exprs(2), "totalN"))
-      .queryExecution.logical
-  }
-
-  /** temperature_sample(table, strataCol, idCol, totalN). */
-  private[graft] def temperatureSamplePlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "temperature_sample"
-    require(
-      exprs.length == 4,
-      s"$name expects (table, strataCol, idCol, totalN), got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.Sampling
-      .temperatureSample(
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "strataCol"),
-        strArg(name, exprs(2), "idCol"),
-        longArg(name, exprs(3), "totalN"))
-      .queryExecution.logical
-  }
-
-  /** distinctive_terms(table, groupCol, textCol, minCount, k). */
-  private[graft] def distinctiveTermsPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "distinctive_terms"
-    require(
-      exprs.length == 5,
-      s"$name expects (table, groupCol, textCol, minCount, k), got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.Keyness
-      .distinctiveTerms(
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "groupCol"),
-        strArg(name, exprs(2), "textCol"),
-        longArg(name, exprs(3), "minCount"),
-        longArg(name, exprs(4), "k").toInt)
-      .queryExecution.logical
-  }
-
-  /** exact_auc(table, scoreCol, labelCol). */
-  private[graft] def exactAucPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "exact_auc"
-    require(
-      exprs.length == 3,
-      s"$name expects (table, scoreCol, labelCol), got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.ModelEval
-      .exactAuc(
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "scoreCol"),
-        strArg(name, exprs(2), "labelCol"))
-      .queryExecution.logical
-  }
-
-  /** calibration_buckets(table, scoreCol, labelCol, nBuckets). */
-  private[graft] def calibrationBucketsPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "calibration_buckets"
-    require(
-      exprs.length == 4,
-      s"$name expects (table, scoreCol, labelCol, nBuckets), got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.ModelEval
-      .calibrationBuckets(
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "scoreCol"),
-        strArg(name, exprs(2), "labelCol"),
-        longArg(name, exprs(3), "nBuckets").toInt)
-      .queryExecution.logical
-  }
-
-  private def nodesEdges(
+  final case class Fn[T](
       name: String,
-      exprs: Seq[Expression]): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    import org.apache.spark.sql.functions.col
-    val spark = SparkSession.active
-    (
-      spark.table(strArg(name, exprs.head, "nodesTable"))
-        .select(col(strArg(name, exprs(1), "idCol")).as("id")),
-      spark.table(strArg(name, exprs(2), "edgesTable"))
-        .select(
-          col(strArg(name, exprs(3), "aCol")).as("a"),
-          col(strArg(name, exprs(4), "bCol")).as("b")))
-  }
+      owner: Class[_],
+      forms: Seq[Seq[String]],
+      description: String,
+      builder: Args => T) {
+    def id: FunctionIdentifier = FunctionIdentifier(name)
 
-  /** kcore(nodesTable, idCol, edgesTable, aCol, bCol, k, rounds). */
-  private[graft] def kcorePlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "kcore"
-    require(
-      exprs.length == 7,
-      s"$name expects (nodesTable, idCol, edgesTable, aCol, bCol, k, rounds), got ${exprs.length}")
-    val (nodes, edges) = nodesEdges(name, exprs)
-    graft.operators.KCore
-      .core(nodes, edges,
-        longArg(name, exprs(5), "k").toInt,
-        longArg(name, exprs(6), "rounds").toInt)
-      .queryExecution.logical
-  }
+    def info: ExpressionInfo = new ExpressionInfo(
+      owner.getName, null, name, s"$name(${forms.head.mkString(", ")}) - $description", "")
 
-  /** personalized_pagerank(nodesTable, idCol, edgesTable, aCol, bCol,
-    * sourcesTable, srcIdCol, iters).
-    */
-  private[graft] def personalizedPagerankPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "personalized_pagerank"
-    require(
-      exprs.length == 8,
-      s"$name expects (nodesTable, idCol, edgesTable, aCol, bCol, sourcesTable, srcIdCol, iters), got ${exprs.length}")
-    import org.apache.spark.sql.functions.col
-    val (nodes, edges) = nodesEdges(name, exprs)
-    graft.operators.PageRank
-      .personalizedRanks(
-        nodes, edges,
-        SparkSession.active.table(strArg(name, exprs(5), "sourcesTable"))
-          .select(col(strArg(name, exprs(6), "srcIdCol")).as("id")),
-        longArg(name, exprs(7), "iters").toInt)
-      .queryExecution.logical
-  }
-
-  /** bfs_hops(nodesTable, idCol, edgesTable, aCol, bCol, sourceId, rounds). */
-  private[graft] def bfsHopsPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "bfs_hops"
-    require(
-      exprs.length == 7,
-      s"$name expects (nodesTable, idCol, edgesTable, aCol, bCol, sourceId, rounds), got ${exprs.length}")
-    val (nodes, edges) = nodesEdges(name, exprs)
-    graft.operators.Reachability
-      .hopDistances(nodes, edges,
-        longArg(name, exprs(5), "sourceId"),
-        longArg(name, exprs(6), "rounds").toInt)
-      .queryExecution.logical
-  }
-
-  /** quantize_int8(table, idCol, embCol). */
-  private[graft] def quantizeInt8Plan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "quantize_int8"
-    require(
-      exprs.length == 3,
-      s"$name expects (table, idCol, embCol), got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.SimilaritySearch
-      .quantizeInt8(
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "idCol"),
-        strArg(name, exprs(2), "embCol"))
-      .queryExecution.logical
-  }
-
-  /** quantized_ann(table, idCol, embCol, maxQueryId, k). */
-  private[graft] def quantizedAnnPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "quantized_ann"
-    require(
-      exprs.length == 5,
-      s"$name expects (table, idCol, embCol, maxQueryId, k), got ${exprs.length}")
-    val spark = SparkSession.active
-    import org.apache.spark.sql.functions.col
-    val idCol = strArg(name, exprs(1), "idCol")
-    val codes = graft.operators.SimilaritySearch.quantizeInt8(
-      spark.table(strArg(name, exprs.head, "table")),
-      idCol,
-      strArg(name, exprs(2), "embCol"))
-    graft.operators.SimilaritySearch
-      .quantizedTopK(
-        codes.filter(col(idCol) < longArg(name, exprs(3), "maxQueryId"))
-          .select(col(idCol).as("q_id"), col("codes").as("q_codes")),
-        codes.select(col(idCol).as("n_id"), col("codes").as("n_codes")),
-        longArg(name, exprs(4), "k").toInt)
-      .queryExecution.logical
-  }
-
-  /** adaptive_salted_join(probeTable, buildTable, key, threshold, maxSalts). */
-  private[graft] def adaptiveSaltedJoinPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "adaptive_salted_join"
-    require(
-      exprs.length == 5,
-      s"$name expects (probeTable, buildTable, key, threshold, maxSalts), got ${exprs.length}")
-    val spark = SparkSession.active
-    val probe = spark.table(strArg(name, exprs.head, "probeTable"))
-    val key = strArg(name, exprs(2), "key")
-    graft.operators.Salting
-      .adaptiveSaltedJoin(
-        probe,
-        spark.table(strArg(name, exprs(1), "buildTable")),
-        key,
-        graft.operators.Salting.hotKeyFactors(
-          probe, key,
-          longArg(name, exprs(3), "threshold"),
-          longArg(name, exprs(4), "maxSalts").toInt))
-      .queryExecution.logical
-  }
-
-  /** clustering_coefficient(edgesTable, aCol, bCol). */
-  private[graft] def clusteringCoefficientPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "clustering_coefficient"
-    require(exprs.length == 3, s"$name expects (edgesTable, aCol, bCol), got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.Triangles
-      .clusteringCoefficient(
-        spark.table(strArg(name, exprs.head, "edgesTable"))
-          .select(
-            org.apache.spark.sql.functions.col(strArg(name, exprs(1), "aCol")).as("a"),
-            org.apache.spark.sql.functions.col(strArg(name, exprs(2), "bCol")).as("b")))
-      .queryExecution.logical
-  }
-
-  /** rrf_fusion(tablesCsv, idCol, rankCol, kConst, scale, topK). */
-  private[graft] def rrfFusionPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "rrf_fusion"
-    require(
-      exprs.length == 6,
-      s"$name expects (tablesCsv, idCol, rankCol, kConst, scale, topK), got ${exprs.length}")
-    val spark = SparkSession.active
-    val tables = strArg(name, exprs.head, "tablesCsv")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    require(tables.nonEmpty, s"$name needs at least one ranking table")
-    graft.operators.Fusion
-      .rrf(
-        tables.map(spark.table),
-        strArg(name, exprs(1), "idCol"),
-        strArg(name, exprs(2), "rankCol"),
-        longArg(name, exprs(3), "kConst"),
-        longArg(name, exprs(4), "scale"),
-        longArg(name, exprs(5), "topK").toInt)
-      .queryExecution.logical
-  }
-
-  /** edit_distance_join(table, wordCol, k). */
-  private[graft] def editDistanceJoinPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "edit_distance_join"
-    require(exprs.length == 3, s"$name expects (table, wordCol, k), got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.EditDistanceJoin
-      .selfJoin(
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "wordCol"),
-        longArg(name, exprs(2), "k").toInt)
-      .queryExecution.logical
-  }
-
-  /** retention_cohorts(table, userCol, tsCol, granularity, offsetDays). */
-  private[graft] def retentionPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "retention_cohorts"
-    require(
-      exprs.length == 5,
-      s"$name expects (table, userCol, tsCol, granularity, offsetDays), got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.Cohorts
-      .retention(
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "userCol"),
-        strArg(name, exprs(2), "tsCol"),
-        strArg(name, exprs(3), "granularity"),
-        longArg(name, exprs(4), "offsetDays").toInt)
-      .queryExecution.logical
-  }
-
-  /** funnel(table, userCol, tsUsCol, typeCol, stepsCsv, windowUs). */
-  private[graft] def funnelPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "funnel"
-    require(
-      exprs.length == 6,
-      s"$name expects (table, userCol, tsUsCol, typeCol, stepsCsv, windowUs), got ${exprs.length}")
-    val spark = SparkSession.active
-    val steps = strArg(name, exprs(4), "stepsCsv").split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    graft.operators.Funnel
-      .analyze(
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "userCol"),
-        strArg(name, exprs(2), "tsUsCol"),
-        strArg(name, exprs(3), "typeCol"),
-        steps,
-        longArg(name, exprs(5), "windowUs"))
-      .queryExecution.logical
-  }
-
-  /** scd2_history(table, keyCol, tsUsCol, tiebreakCol, attrsCsv). */
-  private[graft] def scd2Plan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "scd2_history"
-    require(
-      exprs.length == 5,
-      s"$name expects (table, keyCol, tsUsCol, tiebreakCol, attrsCsv), got ${exprs.length}")
-    val spark = SparkSession.active
-    val attrs = strArg(name, exprs(4), "attrsCsv").split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    graft.operators.Scd
-      .type2History(
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "keyCol"),
-        strArg(name, exprs(2), "tsUsCol"),
-        strArg(name, exprs(3), "tiebreakCol"),
-        attrs)
-      .queryExecution.logical
-  }
-
-  /** mad_outliers(table, groupCol, valueCol, k). */
-  private[graft] def madOutliersPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "mad_outliers"
-    require(
-      exprs.length == 4,
-      s"$name expects (table, groupCol, valueCol, k), got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.Anomaly
-      .madOutliers(
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "groupCol"),
-        strArg(name, exprs(2), "valueCol"),
-        longArg(name, exprs(3), "k"))
-      .queryExecution.logical
-  }
-
-  /** collocations(table, idCol, textCol, minCount, k). */
-  private[graft] def collocationsPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "collocations"
-    require(
-      exprs.length == 5,
-      s"$name expects (table, idCol, textCol, minCount, k), got ${exprs.length}")
-    val spark = SparkSession.active
-    graft.operators.Collocations
-      .topByLift(
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "idCol"),
-        strArg(name, exprs(2), "textCol"),
-        longArg(name, exprs(3), "minCount"),
-        longArg(name, exprs(4), "k").toInt)
-      .queryExecution.logical
-  }
-
-  /** hll_registers(table, itemCol, p, groupColOrEmpty). */
-  private[graft] def hllRegistersPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "hll_registers"
-    require(
-      exprs.length == 4,
-      s"$name expects (table, itemCol, p, groupColOrEmpty), got ${exprs.length}")
-    val spark = SparkSession.active
-    val group = strArg(name, exprs(3), "groupColOrEmpty")
-    graft.operators.Hll
-      .registers(
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "itemCol"),
-        longArg(name, exprs(2), "p").toInt,
-        if (group.isEmpty) Seq.empty else Seq(group))
-      .queryExecution.logical
-  }
-
-  /** connected_components(nodesTable, idCol, edgesTable, aCol, bCol). */
-  private[graft] def connectedComponentsPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "connected_components"
-    require(
-      exprs.length == 5,
-      s"$name expects (nodesTable, idCol, edgesTable, aCol, bCol), got ${exprs.length} arguments")
-    val spark = SparkSession.active
-    val nodes = spark.table(strArg(name, exprs.head, "nodesTable"))
-      .select(org.apache.spark.sql.functions.col(strArg(name, exprs(1), "idCol")).as("id"))
-    val edges = spark.table(strArg(name, exprs(2), "edgesTable"))
-      .select(
-        org.apache.spark.sql.functions.col(strArg(name, exprs(3), "aCol")).as("a"),
-        org.apache.spark.sql.functions.col(strArg(name, exprs(4), "bCol")).as("b"))
-    graft.operators.Dedup.connectedComponents(nodes, edges).queryExecution.logical
-  }
-
-  /** decontaminate_bloom(corpusTable, idCol, textCol, evalTable, evalId,
-    * evalText, n, fpp) — the shuffle-verify regime (broadcastJoin=false),
-    * since the broadcast regime is what plain `decontaminate` plans.
-    */
-  private[graft] def decontaminateBloomPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "decontaminate_bloom"
-    require(
-      exprs.length == 8,
-      s"$name expects (corpusTable, idCol, textCol, evalTable, evalId, evalText, n, fpp), " +
-        s"got ${exprs.length} arguments")
-    val spark = SparkSession.active
-    val n = longArg(name, exprs(6), "n").toInt
-    require(n > 0, s"$name: n must be positive, got $n")
-    graft.operators.Decontamination
-      .flagBloom(
-        spark.table(strArg(name, exprs.head, "corpusTable")),
-        strArg(name, exprs(1), "idCol"),
-        strArg(name, exprs(2), "textCol"),
-        spark.table(strArg(name, exprs(3), "evalTable")),
-        strArg(name, exprs(4), "evalId"),
-        strArg(name, exprs(5), "evalText"),
-        n,
-        fpp = doubleArg(name, exprs(7), "fpp"),
-        broadcastJoin = false)
-      .queryExecution.logical
-  }
-
-  /** cms_heavy_hitters(table, itemCol, depth, width, threshold). */
-  private[graft] def cmsHeavyHittersPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "cms_heavy_hitters"
-    require(
-      exprs.length == 5,
-      s"$name expects (table, itemCol, depth, width, threshold), got ${exprs.length} arguments")
-    val spark = SparkSession.active
-    graft.operators.CountMin
-      .heavyHitters(
-        spark.table(strArg(name, exprs.head, "table")),
-        strArg(name, exprs(1), "itemCol"),
-        longArg(name, exprs(2), "depth").toInt,
-        longArg(name, exprs(3), "width").toInt,
-        org.apache.spark.sql.functions.lit(longArg(name, exprs(4), "threshold")))
-      .queryExecution.logical
-  }
-
-  /** ann_topk(queryTable, qId, qEmb, corpusTable, nId, nEmb, k, method):
-    * the ANN family behind one SQL entry point. `method` picks the scale
-    * path — 'brute' (exact baseline), 'lsh' (random-hyperplane buckets),
-    * 'ivf' (inverted-file cells) — with the operators' default recall
-    * parameters; the Scala API exposes the tuning knobs.
-    */
-  private[graft] def annTopKPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val name = "ann_topk"
-    require(
-      exprs.length == 8,
-      s"$name expects (queryTable, qId, qEmb, corpusTable, nId, nEmb, k, method), got " +
-        exprs.length + " arguments")
-    val spark = SparkSession.active
-    val queries = spark.table(strArg(name, exprs.head, "queryTable"))
-      .select(
-        org.apache.spark.sql.functions.col(strArg(name, exprs(1), "qId")).as("q_id"),
-        org.apache.spark.sql.functions.col(strArg(name, exprs(2), "qEmb")).as("q_emb"))
-    val corpus = spark.table(strArg(name, exprs(3), "corpusTable"))
-      .select(
-        org.apache.spark.sql.functions.col(strArg(name, exprs(4), "nId")).as("n_id"),
-        org.apache.spark.sql.functions.col(strArg(name, exprs(5), "nEmb")).as("n_emb"))
-    val k = longArg(name, exprs(6), "k").toInt
-    require(k > 0, s"$name: k must be positive, got $k")
-    val out = strArg(name, exprs(7), "method") match {
-      case "brute" => graft.operators.SimilaritySearch.bruteForceTopK(queries, corpus, k)
-      case "lsh" => graft.operators.SimilaritySearch.lshTopK(queries, corpus, k)
-      case "ivf" => graft.operators.SimilaritySearch.ivfTopK(queries, corpus, k)
-      case other =>
+    def build(exprs: Seq[Expression]): T = {
+      val params = forms.find(_.length == exprs.length).getOrElse(
         throw new IllegalArgumentException(
-          s"$name: method must be one of brute/lsh/ivf, got '$other'")
+          s"$name expects ${forms.map(_.mkString("(", ", ", ")")).mkString(" or ")}, got " +
+            s"${exprs.length} arguments"))
+      builder(new Args(name, params, exprs))
     }
-    out.queryExecution.logical
   }
 
-  private[graft] def minhashDedupPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val (table, idCol, textCol, tau) = tvfArgs("minhash_dedup", exprs)
-    val toks = SimilarityJoin.tokenize(SparkSession.active.table(table), idCol, textCol)
-    // connected-components iterates driver-side, so this TVF computes its
-    // cluster labels when the query is ANALYZED (not lazily) — same
-    // behavior as calling Dedup.minhashDedup directly
-    graft.operators.Dedup.minhashDedup(toks, tau).queryExecution.logical
-  }
+  private def scalar(name: String, owner: Class[_], params: String, description: String)(
+      builder: Args => Expression): Fn[Expression] =
+    Fn(name, owner, Seq(params.split(", ").toSeq), description, builder)
 
-  private[graft] def semanticDedupPlan(exprs: Seq[Expression]): LogicalPlan = {
-    require(
-      exprs.length == 5,
-      "semantic_dedup expects (table, idCol, embCol, tau, nCells), got " +
-        exprs.length + " arguments")
-    val n = "semantic_dedup"
-    val t = SparkSession.active.table(strArg(n, exprs.head, "table"))
-    val vectors = t.select(
-      org.apache.spark.sql.functions.col(strArg(n, exprs(1), "idCol")).as("vid"),
-      org.apache.spark.sql.functions.col(strArg(n, exprs(2), "embCol")).as("emb"))
-    graft.operators.SimilaritySearch
-      .semanticDedup(vectors, doubleArg(n, exprs(3), "tau"),
-        longArg(n, exprs(4), "nCells").toInt)
-      .queryExecution.logical
-  }
+  /** `or` is an alternative parameter list of another arity. */
+  private def tvf(
+      name: String,
+      owner: Class[_],
+      params: String,
+      description: String,
+      or: String = "")(builder: Args => DataFrame): Fn[DataFrame] =
+    Fn(name, owner, Seq(params, or).filter(_.nonEmpty).map(_.split(", ").toSeq), description,
+      builder)
 
-  private[graft] def subsequenceMatchPlan(exprs: Seq[Expression]): LogicalPlan = {
-    require(
-      exprs.length == 7,
-      "subsequence_match expects (series, query, mode, eps, band, alpha, beta), got " +
-        exprs.length + " arguments")
-    val n = "subsequence_match"
-    val spark = SparkSession.active
-    val series = spark.table(strArg(n, exprs.head, "series"))
-    // the query window is driver-sized by definition (one probe sequence);
-    // phase-1 plan construction needs its values, so it is collected here
-    val q = spark.table(strArg(n, exprs(1), "query"))
-      .orderBy("idx").select("v").collect().map(_.getDouble(0))
-    require(q.nonEmpty, s"$n: query table is empty")
-    val index = graft.operators.SubsequenceMatch.meanIndex(series)
-    graft.operators.SubsequenceMatch
-      .matchSubsequence(
-        strArg(n, exprs(2), "mode"),
-        series,
-        index,
-        q,
-        doubleArg(n, exprs(3), "eps"),
-        band = longArg(n, exprs(4), "band").toInt,
-        alpha = doubleArg(n, exprs(5), "alpha"),
-        beta = doubleArg(n, exprs(6), "beta"))
-      .queryExecution.logical
-  }
+  val scalars: Seq[Fn[Expression]] = Seq(
+    scalar("java_hash", classOf[JavaStringHash], "str",
+      "Java String.hashCode of `str` (reference-compatible signature keys).") { a =>
+      JavaStringHash(a.exprs(0))
+    },
+    scalar("luhn_check", classOf[LuhnCheck], "str",
+      "true iff str (spaces/hyphens allowed) is a 13-19-digit run passing the Luhn " +
+        "checksum (ISO/IEC 7812).") { a =>
+      LuhnCheck(a.exprs(0))
+    },
+    scalar("nfc_normalize", classOf[NfcNormalize], "str",
+      "Unicode NFC canonical composition (UAX #15); no-op fast path for " +
+        "already-normalized input.") { a =>
+      NfcNormalize(a.exprs(0))
+    },
+    scalar("intersect_size", classOf[ArrayIntersectSize], "a, b",
+      "distinct-element intersection count of two string arrays (similarity-join verify " +
+        "kernel).") { a =>
+      ArrayIntersectSize(a.exprs(0), a.exprs(1))
+    },
+    scalar("cosine_sim", classOf[CosineSimilarity], "a, b",
+      "fused single-pass cosine similarity of two float arrays (ANN/semantic-dedup " +
+        "verify kernel).") { a =>
+      CosineSimilarity(a.exprs(0), a.exprs(1))
+    },
+    scalar("simhash64", classOf[SimHash64], "toks",
+      "64-bit SimHash fingerprint of a string array (MD5 token hash, engine-portable).") { a =>
+      SimHash64(a.exprs(0))
+    },
+    scalar("lsh_signature", classOf[LshSignature], "emb, tables, bits",
+      "all random-hyperplane LSH bucket ids of a float-array embedding.") { a =>
+      LshSignature.builder(a.exprs)
+    },
+    scalar("winnow_select", classOf[WinnowSelect], "words, k, w",
+      "distinct winnowed (w-window-min) k-shingle MD5 fingerprints of a word array.") { a =>
+      WinnowSelect.builder(a.exprs)
+    },
+    scalar("minhash_bands", classOf[MinHashBands], "toks, bands, rowsPerBand",
+      "banded MinHash signatures of a string array.") { a =>
+      MinHashBands.builder(a.exprs)
+    },
+    scalar("wordpiece_encode", classOf[WordPieceEncode], "words, starts, continuations",
+      "greedy longest-match WordPiece sub-word segmentation of a word array (BERT [UNK] " +
+        "contract; vocab as literal arrays).") { a =>
+      WordPieceEncode.builder(a.exprs)
+    })
 
-  private[graft] def asofJoinPlan(exprs: Seq[Expression]): LogicalPlan = {
-    require(
-      exprs.length == 5,
-      "asof_join expects (left, right, key, timeCol, tiebreak), got " + exprs.length +
-        " arguments")
-    val n = "asof_join"
-    val spark = SparkSession.active
-    graft.operators.AsOfJoin
-      .backward(
-        spark.table(strArg(n, exprs.head, "left")),
-        spark.table(strArg(n, exprs(1), "right")),
-        Seq(strArg(n, exprs(2), "key")),
-        strArg(n, exprs(3), "timeCol"),
-        strArg(n, exprs(4), "tiebreak"))
-      .queryExecution.logical
-  }
+  /** Probe-vs-index (R-S) parameters shared by the two-table set joins. */
+  private val rsForm = "probeTable, probeId, probeText, indexTable, indexId, indexText"
 
-  private[graft] def redactPiiPlan(exprs: Seq[Expression]): LogicalPlan = {
-    require(
-      exprs.length == 3,
-      "redact_pii expects (table, idCol, textCol), got " + exprs.length + " arguments")
-    val n = "redact_pii"
-    graft.operators.TextAnalysis
-      .redactPii(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "idCol"),
-        strArg(n, exprs(2), "textCol"))
-      .queryExecution.logical
-  }
+  private def rsTokens(a: Args): (DataFrame, DataFrame) = (
+    SimilarityJoin.tokenize(a.table(0), a.str(1), a.str(2)),
+    SimilarityJoin.tokenize(a.table(3), a.str(4), a.str(5)))
 
-  private[graft] def keywordTopKPlan(exprs: Seq[Expression]): LogicalPlan = {
-    require(
-      exprs.length == 5,
-      "keyword_topk expects (table, idCol, textCol, termsCsv, k), got " +
-        exprs.length + " arguments")
-    val n = "keyword_topk"
-    val terms = strArg(n, exprs(3), "termsCsv").split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    require(terms.nonEmpty, s"$n: termsCsv has no terms")
-    graft.operators.KeywordSearch
-      .topK(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "idCol"),
-        strArg(n, exprs(2), "textCol"),
-        terms,
-        longArg(n, exprs(4), "k").toInt)
-      .queryExecution.logical
-  }
+  /** `(nodesTable, idCol, edgesTable, aCol, bCol, …)` as (id) nodes and (a, b) edges. */
+  private def nodesEdges(a: Args): (DataFrame, DataFrame) = (
+    a.table(0).select(a.col(1).as("id")),
+    a.table(2).select(a.col(3).as("a"), a.col(4).as("b")))
 
-  private[graft] def packSequencesPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "pack_sequences"
-    require(
-      exprs.length == 5,
-      s"$n expects (table, idCol, textCol, budget, nStreams), got " + exprs.length + " arguments")
-    graft.operators.Packing
-      .packSpans(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "idCol"),
-        strArg(n, exprs(2), "textCol"),
-        longArg(n, exprs(3), "budget"),
-        longArg(n, exprs(4), "nStreams").toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def blockDedupPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "block_dedup"
-    require(
-      exprs.length == 4,
-      s"$n expects (table, idCol, textCol, blockWords), got " + exprs.length + " arguments")
-    graft.operators.BlockDedup
-      .dedup(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "idCol"),
-        strArg(n, exprs(2), "textCol"),
-        longArg(n, exprs(3), "blockWords").toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def decontaminateFuzzyPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "decontaminate_fuzzy"
-    require(
-      exprs.length == 7,
-      s"$n expects (corpusTable, idCol, textCol, evalTable, evalId, evalText, tau), got " +
-        exprs.length + " arguments")
-    val spark = SparkSession.active
-    graft.operators.Decontamination
-      .flagFuzzy(
-        spark.table(strArg(n, exprs.head, "corpusTable")),
-        strArg(n, exprs(1), "idCol"),
-        strArg(n, exprs(2), "textCol"),
-        spark.table(strArg(n, exprs(3), "evalTable")),
-        strArg(n, exprs(4), "evalId"),
-        strArg(n, exprs(5), "evalText"),
-        doubleArg(n, exprs(6), "tau"))
-      .queryExecution.logical
-  }
-
-  private[graft] def exactQuantilesPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "exact_quantiles"
-    require(
-      exprs.length == 4,
-      s"$n expects (table, groupCol, valueCol, qsCsv), got " + exprs.length + " arguments")
-    val qs = strArg(n, exprs(3), "qsCsv").split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      .map { entry =>
+  val tableFunctions: Seq[Fn[DataFrame]] = Seq(
+    tvf("similarity_join", classOf[SimilarityJoin.type], "table, idCol, textCol, tau",
+      s"all pairs of rows with token-set Jaccard >= tau; 7-arg form ($rsForm, tau) joins " +
+        "two tables.",
+      or = s"$rsForm, tau") { a =>
+      if (a.arity == 4) {
+        SimilarityJoin.prefixSelfJoin(a.table(0), a.str(1), a.str(2), a.double(3))
+      } else {
+        val (probe, index) = rsTokens(a)
+        SimilarityJoin.prefixJoin(probe, index, a.double(6))
+      }
+    },
+    tvf("containment_join", classOf[SimilarityJoin.type], "table, idCol, textCol, gamma",
+      s"ordered pairs (x, y) with |x∩y| >= ceil(gamma*|x|) over token sets; 7-arg form " +
+        s"($rsForm, gamma) probes one table against another.",
+      or = s"$rsForm, gamma") { a =>
+      if (a.arity == 4) {
+        SimilarityJoin.containmentSelfJoin(a.table(0), a.str(1), a.str(2), a.double(3))
+      } else {
+        val (probe, index) = rsTokens(a)
+        SimilarityJoin.containmentJoin(probe, index, a.double(6))
+      }
+    },
+    tvf("asof_join", classOf[AsOfJoin.type], "left, right, key, timeCol, tiebreak",
+      "each left row joined to the LATEST right row of the same key at or before its " +
+        "time (left outer; ties to greatest tiebreak).") { a =>
+      AsOfJoin.backward(a.table(0), a.table(1), Seq(a.str(2)), a.str(3), a.str(4))
+    },
+    tvf("minhash_dedup", classOf[Dedup.type], "table, idCol, textCol, tau",
+      "every record labeled with its duplicate-cluster representative (MinHash/LSH " +
+        "candidates, exact-Jaccard verify, connected components).") { a =>
+      // connected-components iterates driver-side, so this TVF computes its
+      // cluster labels when the query is ANALYZED (not lazily) — same
+      // behavior as calling Dedup.minhashDedup directly
+      Dedup.minhashDedup(SimilarityJoin.tokenize(a.table(0), a.str(1), a.str(2)), a.double(3))
+    },
+    tvf("semantic_dedup", classOf[SimilaritySearch.type], "table, idCol, embCol, tau, nCells",
+      "SemDeDup over embeddings: (vid, dup_of) with dup_of = min same-IVF-cell id at " +
+        "cosine >= tau (-1 = kept).") { a =>
+      val vectors = a.table(0).select(a.col(1).as("vid"), a.col(2).as("emb"))
+      SimilaritySearch.semanticDedup(vectors, a.double(3), a.int(4))
+    },
+    tvf("subsequence_match", classOf[SubsequenceMatch.type],
+      "series, query, mode, eps, band, alpha, beta",
+      "KV-match subsequence search of the (idx, v) query table in the (idx, v) series " +
+        "table; mode in ed/dtw/normed/normdtw; returns (start, d2).") { a =>
+      val series = a.table(0)
+      // the query window is driver-sized by definition (one probe sequence);
+      // phase-1 plan construction needs its values, so it is collected here
+      val q = a.table(1).orderBy("idx").select("v").collect().map(_.getDouble(0))
+      require(q.nonEmpty, "subsequence_match: query table is empty")
+      val index = SubsequenceMatch.meanIndex(series)
+      SubsequenceMatch.matchSubsequence(a.str(2), series, index, q, a.double(3), band = a.int(4),
+        alpha = a.double(5), beta = a.double(6))
+    },
+    tvf("decontaminate", classOf[Decontamination.type],
+      "corpusTable, idCol, textCol, evalTable, evalId, evalText, n",
+      "corpus docs sharing any word n-gram with the (broadcast) eval set: (id, " +
+        "n_hit_grams, n_eval_docs).") { a =>
+      val n = a.int(6)
+      require(n > 0, s"decontaminate: n must be positive, got $n")
+      Decontamination.flag(a.table(0), a.str(1), a.str(2), a.table(3), a.str(4), a.str(5), n)
+    },
+    // the target domain is the rows where `targetBoolCol` is true (callers
+    // compute the predicate in a view — a column name keeps the TVF's
+    // argument surface literal-only)
+    tvf("dsir_topk", classOf[ImportanceResampling.type],
+      "table, idCol, textCol, targetBoolCol, n, nBuckets, scale, k",
+      "DSIR importance resampling: top-k non-target docs by hashed-n-gram integer " +
+        "likelihood ratio toward the target rows. Returns (id, score, n_grams, rk).") { a =>
+      ImportanceResampling.resampleTopK(a.table(0), a.str(1), a.str(2), a.col(3), a.int(4),
+        a.int(5), a.long(6), a.int(7))
+    },
+    tvf("pagerank", classOf[PageRank.type], "nodesTable, idCol, edgesTable, aCol, bCol, iters",
+      "exact-integer damped PageRank (scale 10^12). Returns (id, rank).") { a =>
+      val (nodes, edges) = nodesEdges(a)
+      PageRank.ranks(nodes, edges, a.int(5))
+    },
+    tvf("interval_overlap", classOf[IntervalJoin.type],
+      "leftTable, rightTable, keyCol, lStart, lEnd, rStart, rEnd, bucketWidth",
+      "same-key rows whose [start,end] intervals intersect (bucketed equi-join, exact " +
+        "verify).") { a =>
+      IntervalJoin.overlap(a.table(0), a.table(1), Seq(a.str(2)), a.str(3), a.str(4), a.str(5),
+        a.str(6), a.long(7))
+    },
+    tvf("itemset_pairs", classOf[Itemsets.type], "table, basketCol, itemCol, minSupport",
+      "frequent co-occurring item pairs with lift (A-Priori pruned).") { a =>
+      Itemsets.frequentPairs(a.table(0), a.str(1), a.str(2), a.long(3))
+    },
+    tvf("triangles", classOf[Triangles.type], "edgesTable, aCol, bCol",
+      "exact triangle enumeration of the undirected edge set as (x, y, z), x < y < z.") { a =>
+      Triangles.enumerate(a.table(0).select(a.col(1).as("a"), a.col(2).as("b")))
+    },
+    tvf("clustering_coefficient", classOf[Triangles.type], "edgesTable, aCol, bCol",
+      "per-node local clustering coefficient in basis points: (id, degree, n_triangles, " +
+        "cc_bp).") { a =>
+      Triangles.clusteringCoefficient(a.table(0).select(a.col(1).as("a"), a.col(2).as("b")))
+    },
+    tvf("rrf_fusion", classOf[Fusion.type], "tablesCsv, idCol, rankCol, kConst, scale, topK",
+      "reciprocal-rank fusion of ranked lists: top-k ids by summed scale div (kConst + " +
+        "rank).") { a =>
+      val tables = a.csv(0)
+      require(tables.nonEmpty, "rrf_fusion needs at least one ranking table")
+      Fusion.rrf(tables.map(SparkSession.active.table), a.str(1), a.str(2), a.long(3), a.long(4),
+        a.int(5))
+    },
+    tvf("repeated_spans", classOf[SubstringDedup.type], "table, idCol, textCol, k, minCount",
+      "maximal token spans covered by k-token shingles repeating >= minCount times " +
+        "corpus-wide.") { a =>
+      SubstringDedup.repeatedSpans(a.table(0), a.str(1), a.str(2), a.int(3), a.long(4))
+    },
+    tvf("span_removal", classOf[SubstringDedup.type], "table, idCol, textCol, k, minCount",
+      "excise every non-canonical occurrence of each repeated span; (doc_id, clean_text).") { a =>
+      SubstringDedup.removeRepeatedSpans(a.table(0), a.str(1), a.str(2), a.int(3), a.long(4))
+    },
+    tvf("lm_buckets", classOf[LmScore.type], "table, idCol, textCol, minCount",
+      "CCNet-style head/middle/tail familiarity buckets under the corpus's own bigram LM " +
+        "(exact basis points).") { a =>
+      LmScore.familiarityBuckets(a.table(0), a.str(1), a.str(2), a.long(3))
+    },
+    tvf("bpe_train", classOf[BpeTrain.type], "table, textCol, nMerges",
+      "learned BPE merge table (step, lhs, rhs, pair_cnt, corpus_symbols) from " +
+        "distributed pair counting.") { a =>
+      BpeTrain.learnTable(SparkSession.active, a.table(0), a.str(1), a.int(2))
+    },
+    tvf("bpe_encode", classOf[BpeTrain.type], "table, idCol, textCol, nMerges",
+      "per-row BPE symbol counts (id, n_words, n_bpe) after training nMerges merges on " +
+        "the same table.") { a =>
+      val docs = a.table(0)
+      val textCol = a.str(2)
+      BpeTrain.encode(docs, a.str(1), textCol, BpeTrain.learn(docs, textCol, a.int(3)))
+    },
+    tvf("corpus_overlap", classOf[CorpusOverlap.type], "table, groupCol, textCol, k",
+      "cross-group distinct-k-shingle overlap matrix with Jaccard/containment basis points.") { a =>
+      CorpusOverlap.overlapMatrix(a.table(0), a.str(1), a.str(2), a.int(3))
+    },
+    tvf("label_propagation", classOf[LabelPropagation.type],
+      "nodesTable, idCol, edgesTable, aCol, bCol, iters",
+      "synchronous plurality label propagation communities (deterministic min-label " +
+        "tie-break).") { a =>
+      val (nodes, edges) = nodesEdges(a)
+      LabelPropagation.propagate(nodes, edges, a.int(5))
+    },
+    tvf("mixture_plan", classOf[Sampling.type], "table, strataCol, totalN",
+      "temperature (alpha=1/2) mixture quotas: exact isqrt weights, floor quotas capped " +
+        "at stratum size.") { a =>
+      Sampling.mixturePlan(a.table(0), a.str(1), a.long(2))
+    },
+    tvf("temperature_sample", classOf[Sampling.type], "table, strataCol, idCol, totalN",
+      "materialize the mixture_plan quotas by MD5-prefix selection per stratum.") { a =>
+      Sampling.temperatureSample(a.table(0), a.str(1), a.str(2), a.long(3))
+    },
+    tvf("distinctive_terms", classOf[Keyness.type], "table, groupCol, textCol, minCount, k",
+      "top-k tokens per group by exact integer lift (keyness).") { a =>
+      Keyness.distinctiveTerms(a.table(0), a.str(1), a.str(2), a.long(3), a.int(4))
+    },
+    tvf("exact_auc", classOf[ModelEval.type], "table, scoreCol, labelCol",
+      "exact Mann-Whitney AUC of an integer score vs a 0/1 label (histogram + recursive " +
+        "prefix, never pairs).") { a =>
+      ModelEval.exactAuc(a.table(0), a.str(1), a.str(2))
+    },
+    tvf("calibration_buckets", classOf[ModelEval.type], "table, scoreCol, labelCol, nBuckets",
+      "equi-width score bands with exact basis-point positive rates.") { a =>
+      ModelEval.calibrationBuckets(a.table(0), a.str(1), a.str(2), a.int(3))
+    },
+    tvf("kcore", classOf[KCore.type], "nodesTable, idCol, edgesTable, aCol, bCol, k, rounds",
+      "survivors of `rounds` synchronous k-peels with their final degree.") { a =>
+      val (nodes, edges) = nodesEdges(a)
+      KCore.core(nodes, edges, a.int(5), a.int(6))
+    },
+    tvf("personalized_pagerank", classOf[PageRank.type],
+      "nodesTable, idCol, edgesTable, aCol, bCol, sourcesTable, srcIdCol, iters",
+      "exact-integer PPR with restart mass on the source set.") { a =>
+      val (nodes, edges) = nodesEdges(a)
+      PageRank.personalizedRanks(nodes, edges, a.table(5).select(a.col(6).as("id")), a.int(7))
+    },
+    tvf("bfs_hops", classOf[Reachability.type],
+      "nodesTable, idCol, edgesTable, aCol, bCol, sourceId, rounds",
+      "bounded-hop BFS distances from a source; -1 beyond the horizon.") { a =>
+      val (nodes, edges) = nodesEdges(a)
+      Reachability.hopDistances(nodes, edges, a.long(5), a.int(6))
+    },
+    tvf("quantize_int8", classOf[SimilaritySearch.type], "table, idCol, embCol",
+      "symmetric int8 embedding quantization: (id, scale, codes array<int>), bit-exact " +
+        "cross-engine.") { a =>
+      SimilaritySearch.quantizeInt8(a.table(0), a.str(1), a.str(2))
+    },
+    tvf("quantized_ann", classOf[SimilaritySearch.type], "table, idCol, embCol, maxQueryId, k",
+      "top-k cosine over int8-quantized vectors (queries = id < maxQueryId), integer " +
+        "numerators.") { a =>
+      val id = a.col(1)
+      val codes = SimilaritySearch.quantizeInt8(a.table(0), a.str(1), a.str(2))
+      SimilaritySearch.quantizedTopK(
+        codes.filter(id < a.long(3)).select(id.as("q_id"), col("codes").as("q_codes")),
+        codes.select(id.as("n_id"), col("codes").as("n_codes")),
+        a.int(4))
+    },
+    tvf("adaptive_salted_join", classOf[Salting.type],
+      "probeTable, buildTable, key, threshold, maxSalts",
+      "inner equi-join with per-key skew salting from the probe's measured key histogram.") { a =>
+      val probe = a.table(0)
+      val key = a.str(2)
+      Salting.adaptiveSaltedJoin(probe, a.table(1), key,
+        Salting.hotKeyFactors(probe, key, a.long(3), a.int(4)))
+    },
+    tvf("edit_distance_join", classOf[EditDistanceJoin.type], "table, wordCol, k",
+      "pairs of distinct values within Levenshtein distance k (FastSS deletion " +
+        "neighborhoods).") { a =>
+      EditDistanceJoin.selfJoin(a.table(0), a.str(1), a.int(2))
+    },
+    tvf("retention_cohorts", classOf[Cohorts.type],
+      "table, userCol, tsCol, granularity, offsetDays",
+      "(cohort, offset, n_users, cohort_size, retention_bp) retention triangle from raw " +
+        "events.") { a =>
+      Cohorts.retention(a.table(0), a.str(1), a.str(2), a.str(3), a.int(4))
+    },
+    tvf("funnel", classOf[Funnel.type], "table, userCol, tsUsCol, typeCol, stepsCsv, windowUs",
+      "earliest ordered completion of the comma-separated steps per user within windowUs " +
+        "of step 1.") { a =>
+      Funnel.analyze(a.table(0), a.str(1), a.str(2), a.str(3), a.csv(4), a.long(5))
+    },
+    tvf("scd2_history", classOf[Scd.type], "table, keyCol, tsUsCol, tiebreakCol, attrsCsv",
+      "type-2 validity intervals per effective change of the comma-separated attributes " +
+        "(-1 = open).") { a =>
+      Scd.type2History(a.table(0), a.str(1), a.str(2), a.str(3), a.csv(4))
+    },
+    tvf("mad_outliers", classOf[Anomaly.type], "table, groupCol, valueCol, k",
+      "rows with |value - group median| > k * group MAD (exact integer decisions).") { a =>
+      Anomaly.madOutliers(a.table(0), a.str(1), a.str(2), a.long(3))
+    },
+    tvf("collocations", classOf[Collocations.type], "table, idCol, textCol, minCount, k",
+      "top-k word bigrams by PMI lift with min-support filtering.") { a =>
+      Collocations.topByLift(a.table(0), a.str(1), a.str(2), a.long(3), a.int(4))
+    },
+    tvf("hll_registers", classOf[Hll.type], "table, itemCol, p, groupColOrEmpty",
+      "HLL distinct-count registers (bucket, maxrank), optionally per group.") { a =>
+      val group = a.str(3)
+      Hll.registers(a.table(0), a.str(1), a.int(2), if (group.isEmpty) Seq.empty else Seq(group))
+    },
+    tvf("connected_components", classOf[Dedup.type], "nodesTable, idCol, edgesTable, aCol, bCol",
+      "label every node with the minimum id reachable through the undirected edge set. " +
+        "Returns (id, rep).") { a =>
+      val (nodes, edges) = nodesEdges(a)
+      Dedup.connectedComponents(nodes, edges)
+    },
+    // the shuffle-verify regime (broadcastJoin=false), since the broadcast
+    // regime is what plain `decontaminate` plans
+    tvf("decontaminate_bloom", classOf[Decontamination.type],
+      "corpusTable, idCol, textCol, evalTable, evalId, evalText, n, fpp",
+      "same result as decontaminate, with a Bloom bitset pruning the corpus grams ahead " +
+        "of a shuffle verify join (the eval-set-too-big-to-broadcast regime).") { a =>
+      val n = a.int(6)
+      require(n > 0, s"decontaminate_bloom: n must be positive, got $n")
+      Decontamination.flagBloom(a.table(0), a.str(1), a.str(2), a.table(3), a.str(4), a.str(5), n,
+        fpp = a.double(7), broadcastJoin = false)
+    },
+    tvf("cms_heavy_hitters", classOf[CountMin.type], "table, itemCol, depth, width, threshold",
+      "count-min-sketch heavy hitters over item occurrences, survivors exact-verified. " +
+        "Returns (item, est, exact).") { a =>
+      CountMin.heavyHitters(a.table(0), a.str(1), a.int(2), a.int(3), lit(a.long(4)))
+    },
+    // the ANN family behind one SQL entry point: `method` picks the scale
+    // path — 'brute' (exact baseline), 'lsh' (random-hyperplane buckets),
+    // 'ivf' (inverted-file cells) — with the operators' default recall
+    // parameters; the Scala API exposes the tuning knobs
+    tvf("ann_topk", classOf[SimilaritySearch.type],
+      "queryTable, qId, qEmb, corpusTable, nId, nEmb, k, method",
+      "per-query cosine top-k over an embedding corpus; method in brute/lsh/ivf. Returns " +
+        "(q_id, n_id, rank, sim).") { a =>
+      val queries = a.table(0).select(a.col(1).as("q_id"), a.col(2).as("q_emb"))
+      val corpus = a.table(3).select(a.col(4).as("n_id"), a.col(5).as("n_emb"))
+      val k = a.int(6)
+      require(k > 0, s"ann_topk: k must be positive, got $k")
+      a.str(7) match {
+        case "brute" => SimilaritySearch.bruteForceTopK(queries, corpus, k)
+        case "lsh" => SimilaritySearch.lshTopK(queries, corpus, k)
+        case "ivf" => SimilaritySearch.ivfTopK(queries, corpus, k)
+        case other =>
+          throw new IllegalArgumentException(
+            s"ann_topk: method must be one of brute/lsh/ivf, got '$other'")
+      }
+    },
+    tvf("range_join", classOf[RangeJoin.type], "left, right, key, lTime, rTime, lower, upper",
+      "pairs of same-key rows with rTime - lTime in [lower, upper] (long domain).") { a =>
+      RangeJoin.timeRange(a.table(0), a.table(1), Seq(a.str(2)), a.str(3), a.str(4), a.long(5),
+        a.long(6))
+    },
+    tvf("redact_pii", classOf[TextAnalysis.type], "table, idCol, textCol",
+      "count + mask the default PII battery (email, phone, IPv4) in sequence: (id, " +
+        "n_email, n_phone, n_ip, clean_text).") { a =>
+      TextAnalysis.redactPii(a.table(0), a.str(1), a.str(2))
+    },
+    tvf("keyword_topk", classOf[KeywordSearch.type], "table, idCol, textCol, termsCsv, k",
+      "k best docs by the integer-exact relevance sum tf*(N-df) over the comma-separated " +
+        "terms: (id, n_hit, score).") { a =>
+      val terms = a.csv(3)
+      require(terms.nonEmpty, "keyword_topk: termsCsv has no terms")
+      KeywordSearch.topK(a.table(0), a.str(1), a.str(2), terms, a.int(4))
+    },
+    tvf("weighted_sample", classOf[Sampling.type], "table, idCol, strataCol, ratesCsv, defaultRate",
+      "deterministic per-stratum downsampling by MD5-uniform; ratesCsv like " +
+        "'src0:0.9,src1:0.6'.") { a =>
+      val rates = a.csv(3).map { kv =>
+        kv.split(":") match {
+          case Array(k, v) => k.trim -> v.trim.toDouble
+          case _ => throw new IllegalArgumentException(
+            s"weighted_sample: ratesCsv entries must be 'stratum:rate', got '$kv'")
+        }
+      }
+      Sampling.weightedSample(a.table(0), a.str(1), a.str(2), rates, a.double(4))
+    },
+    tvf("pack_sequences", classOf[Packing.type], "table, idCol, textCol, budget, nStreams",
+      "concat-and-chunk sequence packing into budget-token context windows over " +
+        "id-sharded streams: (id, stream, n_tokens, tok_start, first_pack, last_pack).") { a =>
+      Packing.packSpans(a.table(0), a.str(1), a.str(2), a.long(3), a.int(4))
+    },
+    tvf("block_dedup", classOf[BlockDedup.type], "table, idCol, textCol, blockWords",
+      "remove every repeated blockWords-token block except its globally first " +
+        "occurrence: (id, n_blocks, n_kept, dedup_text).") { a =>
+      BlockDedup.dedup(a.table(0), a.str(1), a.str(2), a.int(3))
+    },
+    tvf("decontaminate_fuzzy", classOf[Decontamination.type],
+      "corpusTable, idCol, textCol, evalTable, evalId, evalText, tau",
+      "(corpus doc, eval doc) pairs with token-set Jaccard >= tau via broadcast MinHash " +
+        "candidates + exact verify: (id, eval_id, inter, uni).") { a =>
+      Decontamination.flagFuzzy(a.table(0), a.str(1), a.str(2), a.table(3), a.str(4), a.str(5),
+        a.double(6))
+    },
+    tvf("exact_quantiles", classOf[Quantiles.type], "table, groupCol, valueCol, qsCsv",
+      "exact percentile_disc quantiles per group, histogram-first; qsCsv like " +
+        "'p50:1/2,p90:9/10': (group, n, <one column per quantile>).") { a =>
+      val qs = a.csv(3).map { entry =>
         entry.split("[:/]") match {
           case Array(name, num, den) => (name.trim, num.trim.toLong, den.trim.toLong)
           case _ => throw new IllegalArgumentException(
-            s"$n: qsCsv entries must be 'name:num/den', got '$entry'")
+            s"exact_quantiles: qsCsv entries must be 'name:num/den', got '$entry'")
         }
       }
-    graft.operators.Quantiles
-      .exactQuantiles(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "groupCol"),
-        strArg(n, exprs(2), "valueCol"),
-        qs)
-      .queryExecution.logical
-  }
-
-  private[graft] def hybridDedupPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "hybrid_dedup"
-    require(
-      exprs.length == 8,
-      s"$n expects (docsTable, idCol, textCol, embTable, embId, embCol, tauText, tauSem), got " +
-        exprs.length + " arguments")
-    val spark = SparkSession.active
-    import org.apache.spark.sql.functions.col
-    val tokens = SimilarityJoin.tokenize(
-      spark.table(strArg(n, exprs.head, "docsTable")),
-      strArg(n, exprs(1), "idCol"),
-      strArg(n, exprs(2), "textCol"))
-    val vectors = spark.table(strArg(n, exprs(3), "embTable"))
-      .select(
-        col(strArg(n, exprs(4), "embId")).as("vid"),
-        col(strArg(n, exprs(5), "embCol")).as("emb"))
-    graft.operators.Dedup
-      .hybridDedup(tokens, vectors,
-        doubleArg(n, exprs(6), "tauText"),
-        doubleArg(n, exprs(7), "tauSem"))
-      .queryExecution.logical
-  }
-
-  private[graft] def kmeansAssignPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "kmeans_assign"
-    require(
-      exprs.length == 5,
-      s"$n expects (table, idCol, embCol, k, iters), got " + exprs.length + " arguments")
-    val df = SparkSession.active.table(strArg(n, exprs.head, "table"))
-    graft.operators.Clustering
-      .kmeansAssign(
-        df.select(
-          org.apache.spark.sql.functions.col(strArg(n, exprs(1), "idCol")).as("vid"),
-          org.apache.spark.sql.functions.col(strArg(n, exprs(2), "embCol")).as("emb")),
-        longArg(n, exprs(3), "k").toInt,
-        longArg(n, exprs(4), "iters").toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def kanonSuppressPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "kanon_suppress"
-    require(
-      exprs.length == 3,
-      s"$n expects (table, qiCsv, k), got " + exprs.length + " arguments")
-    val qi = strArg(n, exprs(1), "qiCsv").split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    require(qi.nonEmpty, s"$n: qiCsv named no columns")
-    graft.operators.KAnonymity
-      .suppress(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        qi,
-        longArg(n, exprs(2), "k"))
-      .queryExecution.logical
-  }
-
-  private[graft] def fdProfilePlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "fd_profile"
-    require(
-      exprs.length == 2,
-      s"$n expects (table, colsCsv), got " + exprs.length + " arguments")
-    val cols = strArg(n, exprs(1), "colsCsv").split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    graft.operators.Profiling
-      .functionalDependencies(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        cols)
-      .queryExecution.logical
-  }
-
-  private[graft] def pqAdcPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "pq_adc"
-    require(
-      exprs.length == 11,
-      s"$n expects (queries, qIdCol, qEmbCol, corpus, idCol, embCol, dim, m, ks, iters, k), got " +
-        exprs.length + " arguments")
-    import org.apache.spark.sql.functions.col
-    val corpus = SparkSession.active.table(strArg(n, exprs(3), "corpus"))
-      .select(
-        col(strArg(n, exprs(4), "idCol")).as("vid"),
-        col(strArg(n, exprs(5), "embCol")).as("emb"))
-    val dim = longArg(n, exprs(6), "dim").toInt
-    val m = longArg(n, exprs(7), "m").toInt
-    val books = graft.operators.Pq.trainCodebooks(
-      corpus, dim, m,
-      longArg(n, exprs(8), "ks").toInt,
-      longArg(n, exprs(9), "iters").toInt)
-    val codes = graft.operators.Pq.encode(corpus, books, dim, m)
-    graft.operators.Pq
-      .adcTopK(
-        SparkSession.active.table(strArg(n, exprs.head, "queries"))
-          .select(
-            col(strArg(n, exprs(1), "qIdCol")).as("q_id"),
-            col(strArg(n, exprs(2), "qEmbCol")).as("q_emb")),
-        books, codes,
-        longArg(n, exprs(10), "k").toInt,
-        dim, m)
-      .queryExecution.logical
-  }
-
-  private[graft] def rfmPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "rfm"
-    require(
-      exprs.length == 5,
-      s"$n expects (table, userCol, tsSecCol, centsCol, asOfSec), got " +
-        exprs.length + " arguments")
-    graft.operators.Cohorts
-      .rfm(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "userCol"),
-        strArg(n, exprs(2), "tsSecCol"),
-        strArg(n, exprs(3), "centsCol"),
-        longArg(n, exprs(4), "asOfSec"))
-      .queryExecution.logical
-  }
-
-  private[graft] def goldenRecordPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "golden_record"
-    require(
-      exprs.length == 6,
-      s"$n expects (table, clusterCol, idCol, longestCsv, maxCsv, modeCsv), got " +
-        exprs.length + " arguments")
-    def csv(i: Int, what: String) =
-      strArg(n, exprs(i), what).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    graft.operators.Survivorship
-      .goldenRecord(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "clusterCol"),
-        strArg(n, exprs(2), "idCol"),
-        longestCols = csv(3, "longestCsv"),
-        maxCols = csv(4, "maxCsv"),
-        modeCols = csv(5, "modeCsv"))
-      .queryExecution.logical
-  }
-
-  private[graft] def percentileRanksPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "percentile_ranks"
-    require(
-      exprs.length == 3,
-      s"$n expects (table, groupCol, valueCol), got " + exprs.length + " arguments")
-    graft.operators.Quantiles
-      .percentileRanks(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "groupCol"),
-        strArg(n, exprs(2), "valueCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def paretoFrontPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "pareto_front"
-    require(
-      exprs.length == 3,
-      s"$n expects (table, idCol, dimsCsv), got " + exprs.length + " arguments")
-    val dims = strArg(n, exprs(2), "dimsCsv").split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    require(dims.nonEmpty, s"$n: dimsCsv named no columns")
-    graft.operators.Skyline
-      .paretoFront(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "idCol"),
-        dims)
-      .queryExecution.logical
-  }
-
-  private[graft] def indProfilePlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "ind_profile"
-    require(
-      exprs.length == 1,
-      s"$n expects (sourcesCsv of 'table:column' entries), got " + exprs.length + " arguments")
-    val sources = strArg(n, exprs.head, "sourcesCsv")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      .map { entry =>
-        entry.split(":") match {
-          case Array(tbl, c) =>
-            (s"${tbl.trim}.${c.trim}", SparkSession.active.table(tbl.trim), c.trim)
-          case _ => throw new IllegalArgumentException(
-            s"$n: sources must be 'table:column', got '$entry'")
-        }
+      Quantiles.exactQuantiles(a.table(0), a.str(1), a.str(2), qs)
+    },
+    tvf("hybrid_dedup", classOf[Dedup.type],
+      "docsTable, idCol, textCol, embTable, embId, embCol, tauText, tauSem",
+      "duplicate clusters over the union of token-Jaccard and same-IVF-cell cosine " +
+        "evidence: (sid, rep).") { a =>
+      val tokens = SimilarityJoin.tokenize(a.table(0), a.str(1), a.str(2))
+      val vectors = a.table(3).select(a.col(4).as("vid"), a.col(5).as("emb"))
+      Dedup.hybridDedup(tokens, vectors, a.double(6), a.double(7))
+    },
+    tvf("kmeans_assign", classOf[Clustering.type], "table, idCol, embCol, k, iters",
+      "Lloyd k-means over an embedding column on the exact integer grid: (vid, cell, " +
+        "cell_n).") { a =>
+      Clustering.kmeansAssign(a.table(0).select(a.col(1).as("vid"), a.col(2).as("emb")), a.int(3),
+        a.int(4))
+    },
+    tvf("kanon_suppress", classOf[KAnonymity.type], "table, qiCsv, k",
+      "k-anonymity release: quasi-identifier combinations covering < k rows are " +
+        "suppressed to NULL; every row ships its anonymity-set size as qi_n.") { a =>
+      val qi = a.csv(1)
+      require(qi.nonEmpty, "kanon_suppress: qiCsv named no columns")
+      KAnonymity.suppress(a.table(0), qi, a.long(2))
+    },
+    tvf("ldiverse_suppress", classOf[KAnonymity.type], "table, qiCsv, sensCol, k, l",
+      "distinct-l-diversity release: QI combos need >= k rows AND >= l distinct " +
+        "sensitive values; rows ship qi_n and qi_nsens.") { a =>
+      val qi = a.csv(1)
+      require(qi.nonEmpty, "ldiverse_suppress: qiCsv named no columns")
+      KAnonymity.suppressDiverse(a.table(0), qi, a.str(2), a.long(3), a.long(4))
+    },
+    tvf("semantic_decon", classOf[Decontamination.type],
+      "corpusTable, idCol, embCol, evalTable, evalId, evalEmb, tau, nCells",
+      "embedding-cosine decontamination; nCells = 0 broadcasts the eval set (exact), " +
+        "nCells > 0 uses the IVF-cell scale path: (id, n_eval_hits, eval_id).") { a =>
+      val (corpus, eval) = (a.table(0), a.table(3))
+      val nCells = a.int(7)
+      if (nCells == 0) {
+        Decontamination.flagSemantic(corpus, a.str(1), a.str(2), eval, a.str(4), a.str(5),
+          a.double(6))
+      } else {
+        Decontamination.flagSemanticCells(corpus, a.str(1), a.str(2), eval, a.str(4), a.str(5),
+          a.double(6), nCells)
       }
-    graft.operators.Profiling
-      .inclusionDependencies(sources)
-      .queryExecution.logical
-  }
-
-  private[graft] def ldiverseSuppressPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "ldiverse_suppress"
-    require(
-      exprs.length == 5,
-      s"$n expects (table, qiCsv, sensCol, k, l), got " + exprs.length + " arguments")
-    val qi = strArg(n, exprs(1), "qiCsv").split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    require(qi.nonEmpty, s"$n: qiCsv named no columns")
-    graft.operators.KAnonymity
-      .suppressDiverse(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        qi,
-        strArg(n, exprs(2), "sensCol"),
-        longArg(n, exprs(3), "k"),
-        longArg(n, exprs(4), "l"))
-      .queryExecution.logical
-  }
-
-  private[graft] def semanticDeconPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "semantic_decon"
-    require(
-      exprs.length == 8,
-      s"$n expects (corpusTable, idCol, embCol, evalTable, evalId, evalEmb, tau, nCells), got " +
-        exprs.length + " arguments")
-    val spark = SparkSession.active
-    val corpus = spark.table(strArg(n, exprs.head, "corpusTable"))
-    val eval = spark.table(strArg(n, exprs(3), "evalTable"))
-    val (idC, embC) = (strArg(n, exprs(1), "idCol"), strArg(n, exprs(2), "embCol"))
-    val (eIdC, eEmbC) = (strArg(n, exprs(4), "evalId"), strArg(n, exprs(5), "evalEmb"))
-    val tau = doubleArg(n, exprs(6), "tau")
-    val nCells = longArg(n, exprs(7), "nCells").toInt
-    val out =
-      if (nCells == 0)
-        graft.operators.Decontamination.flagSemantic(corpus, idC, embC, eval, eIdC, eEmbC, tau)
-      else
-        graft.operators.Decontamination
-          .flagSemanticCells(corpus, idC, embC, eval, eIdC, eEmbC, tau, nCells)
-    out.queryExecution.logical
-  }
-
-  private[graft] def tokenizerFertilityPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "tokenizer_fertility"
-    require(
-      exprs.length == 5,
-      s"$n expects (table, idCol, textCol, strataCol, nMerges), got " + exprs.length +
-        " arguments")
-    val docs = SparkSession.active.table(strArg(n, exprs.head, "table"))
-    val textCol = strArg(n, exprs(2), "textCol")
-    val merges = graft.operators.BpeTrain
-      .learn(docs, textCol, longArg(n, exprs(4), "nMerges").toInt)
-    graft.operators.BpeTrain
-      .fertility(docs, strArg(n, exprs(1), "idCol"), textCol,
-        strArg(n, exprs(3), "strataCol"), merges)
-      .queryExecution.logical
-  }
-
-  private[graft] def lshRecallPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "lsh_recall"
-    require(
-      exprs.length == 7,
-      s"$n expects (table, idCol, textCol, tau, bands, rowsPerBand, bandBp), got " +
-        exprs.length + " arguments")
-    val toks = SimilarityJoin.tokenize(
-      SparkSession.active.table(strArg(n, exprs.head, "table")),
-      strArg(n, exprs(1), "idCol"),
-      strArg(n, exprs(2), "textCol"))
-    graft.operators.Dedup
-      .lshRecallCertificate(
-        toks,
-        doubleArg(n, exprs(3), "tau"),
-        longArg(n, exprs(4), "bands").toInt,
-        longArg(n, exprs(5), "rowsPerBand").toInt,
-        longArg(n, exprs(6), "bandBp").toInt,
+    },
+    tvf("tokenizer_fertility", classOf[BpeTrain.type], "table, idCol, textCol, strataCol, nMerges",
+      "trains nMerges BPE merges on the corpus and reports per-stratum tokens/word + " +
+        "chars/token in exact basis points: (strata, n_docs, n_words, n_bpe, n_chars, " +
+        "fertility_bp, chars_per_tok_bp).") { a =>
+      val docs = a.table(0)
+      val textCol = a.str(2)
+      val merges = BpeTrain.learn(docs, textCol, a.int(4))
+      BpeTrain.fertility(docs, a.str(1), textCol, a.str(3), merges)
+    },
+    tvf("lsh_recall", classOf[Dedup.type], "table, idCol, textCol, tau, bands, rowsPerBand, bandBp",
+      "MinHash-LSH recall certificate vs the exact segment join, per Jaccard band: " +
+        "(jacc_band_bp, n_true, n_found, recall_bp).") { a =>
+      val toks = SimilarityJoin.tokenize(a.table(0), a.str(1), a.str(2))
+      Dedup.lshRecallCertificate(toks, a.double(3), a.int(4), a.int(5), a.int(6),
         maxQuadBucket = Int.MaxValue)
-      .queryExecution.logical
-  }
-
-  private[graft] def crosslmBucketsPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "crosslm_buckets"
-    require(
-      exprs.length == 6,
-      s"$n expects (table, idCol, textCol, refTable, refTextCol, minCount), got " +
-        exprs.length + " arguments")
-    val spark = SparkSession.active
-    graft.operators.LmScore
-      .familiarityBucketsAgainst(
-        spark.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "idCol"),
-        strArg(n, exprs(2), "textCol"),
-        spark.table(strArg(n, exprs(3), "refTable")),
-        strArg(n, exprs(4), "refTextCol"),
-        longArg(n, exprs(5), "minCount"))
-      .queryExecution.logical
-  }
-
-  private[graft] def hardNegativesPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "hard_negatives"
-    require(
-      exprs.length == 8,
-      s"$n expects (queryTable, qId, qEmb, corpusTable, nId, nEmb, k, tauDup), got " +
-        exprs.length + " arguments")
-    val spark = SparkSession.active
-    import org.apache.spark.sql.functions.col
-    graft.operators.SimilaritySearch
-      .hardNegatives(
-        spark.table(strArg(n, exprs.head, "queryTable"))
-          .select(
-            col(strArg(n, exprs(1), "qId")).as("q_id"),
-            col(strArg(n, exprs(2), "qEmb")).as("q_emb")),
-        spark.table(strArg(n, exprs(3), "corpusTable"))
-          .select(
-            col(strArg(n, exprs(4), "nId")).as("n_id"),
-            col(strArg(n, exprs(5), "nEmb")).as("n_emb")),
-        longArg(n, exprs(6), "k").toInt,
-        doubleArg(n, exprs(7), "tauDup"))
-      .queryExecution.logical
-  }
-
-  private[graft] def epochOrderPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "epoch_order"
-    require(
-      exprs.length == 4,
-      s"$n expects (table, idCol, nShards, epoch), got " + exprs.length + " arguments")
-    graft.operators.Packing
-      .epochOrder(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "idCol"),
-        longArg(n, exprs(2), "nShards").toInt,
-        longArg(n, exprs(3), "epoch").toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def phashPairsPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "phash_pairs"
-    require(
-      exprs.length == 4,
-      s"$n expects (mediaTable, idCol, payloadCol, maxHamming), got " + exprs.length +
-        " arguments")
-    import org.apache.spark.sql.functions.col
-    graft.operators.Multimodal
-      .phashPairs(
-        SparkSession.active.table(strArg(n, exprs.head, "mediaTable"))
-          .select(
-            col(strArg(n, exprs(1), "idCol")).as("media_id"),
-            col(strArg(n, exprs(2), "payloadCol")).as("payload")),
-        longArg(n, exprs(3), "maxHamming").toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def cdcFingerprintPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "cdc_fingerprint"
-    require(
-      exprs.length == 4,
-      s"$n expects (mediaTable, idCol, payloadCol, w), got " + exprs.length +
-        " arguments")
-    import org.apache.spark.sql.functions.col
-    graft.operators.Multimodal
-      .cdcFingerprint(
-        SparkSession.active.table(strArg(n, exprs.head, "mediaTable"))
-          .select(
-            col(strArg(n, exprs(1), "idCol")).as("media_id"),
-            col(strArg(n, exprs(2), "payloadCol")).as("payload")),
-        longArg(n, exprs(3), "w").toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def iqrOutliersPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "iqr_outliers"
-    require(
-      exprs.length == 5,
-      s"$n expects (table, groupCol, valueCol, kNum, kDen), got " +
-        exprs.length + " arguments")
-    graft.operators.Anomaly
-      .iqrOutliers(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "groupCol"),
-        strArg(n, exprs(2), "valueCol"),
-        longArg(n, exprs(3), "kNum"),
-        longArg(n, exprs(4), "kDen"))
-      .queryExecution.logical
-  }
-
-  private[graft] def phraseCountPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "phrase_count"
-    require(
-      exprs.length == 4,
-      s"$n expects (table, idCol, textCol, phrase), got " + exprs.length + " arguments")
-    graft.operators.KeywordSearch
-      .phraseCount(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "idCol"),
-        strArg(n, exprs(2), "textCol"),
-        strArg(n, exprs(3), "phrase").split(" ").filter(_.nonEmpty).toSeq)
-      .queryExecution.logical
-  }
-
-  private[graft] def eventPatternPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "event_pattern"
-    require(
-      exprs.length == 7,
-      s"$n expects (table, keyCol, tsCol, idCol, typeCol, symbolsSpec, pattern), got " +
-        exprs.length + " arguments")
-    val symbols = strArg(n, exprs(5), "symbolsSpec").split(",").map(_.trim)
-      .filter(_.nonEmpty).map { s =>
+    },
+    tvf("crosslm_buckets", classOf[LmScore.type],
+      "table, idCol, textCol, refTable, refTextCol, minCount",
+      "head/middle/tail partition under a bigram LM trained on the REFERENCE table " +
+        "(CCNet shape): (id, n_bigrams, n_oov, score_bp, bucket).") { a =>
+      LmScore.familiarityBucketsAgainst(a.table(0), a.str(1), a.str(2), a.table(3), a.str(4),
+        a.long(5))
+    },
+    tvf("hard_negatives", classOf[SimilaritySearch.type],
+      "queryTable, qId, qEmb, corpusTable, nId, nEmb, k, tauDup",
+      "per-anchor top-k most-similar corpus vectors below the duplicate threshold: " +
+        "(q_id, n_id, rank, sim).") { a =>
+      SimilaritySearch.hardNegatives(
+        a.table(0).select(a.col(1).as("q_id"), a.col(2).as("q_emb")),
+        a.table(3).select(a.col(4).as("n_id"), a.col(5).as("n_emb")),
+        a.int(6), a.double(7))
+    },
+    tvf("epoch_order", classOf[Packing.type], "table, idCol, nShards, epoch",
+      "deterministic per-epoch reader shard/order layout from md5(id || ':' || epoch): " +
+        "(id, epoch, shard, pos).") { a =>
+      Packing.epochOrder(a.table(0), a.str(1), a.int(2), a.int(3))
+    },
+    tvf("phash_pairs", classOf[Multimodal.type], "mediaTable, idCol, payloadCol, maxHamming",
+      "near-duplicate media pairs by 64-bit perceptual-hash fingerprints (md5 " +
+        "block-parity stub) via the block-pigeonhole join: (x_id, y_id, hamming).") { a =>
+      Multimodal.phashPairs(
+        a.table(0).select(a.col(1).as("media_id"), a.col(2).as("payload")), a.int(3))
+    },
+    tvf("cdc_fingerprint", classOf[Multimodal.type], "mediaTable, idCol, payloadCol, w",
+      "content-defined-chunking fingerprint (length-robust: insert/delete flips O(1) " +
+        "bits via boundary realignment): (media_id, fp).") { a =>
+      Multimodal.cdcFingerprint(
+        a.table(0).select(a.col(1).as("media_id"), a.col(2).as("payload")), a.int(3))
+    },
+    tvf("iqr_outliers", classOf[Anomaly.type], "table, groupCol, valueCol, kNum, kDen",
+      "Tukey boxplot fences per group (exact percentile_disc quartiles, pure-integer " +
+        "decisions): rows outside Q1 - k*IQR / Q3 + k*IQR.") { a =>
+      Anomaly.iqrOutliers(a.table(0), a.str(1), a.str(2), a.long(3), a.long(4))
+    },
+    tvf("phrase_count", classOf[KeywordSearch.type], "table, idCol, textCol, phrase",
+      "exact-phrase occurrences per document (overlapping counted) of the space-separated " +
+        "phrase: (id, n_occ, first_pos).") { a =>
+      KeywordSearch.phraseCount(a.table(0), a.str(1), a.str(2),
+        a.str(3).split(" ").filter(_.nonEmpty).toSeq)
+    },
+    tvf("event_pattern", classOf[EventPattern.type],
+      "table, keyCol, tsCol, idCol, typeCol, symbolsSpec, pattern",
+      "MATCH_RECOGNIZE-lite: regex over per-key event-symbol sequences; symbolsSpec like " +
+        "'view:v,click:c'. Output (key, seq, n_events, n_matches, first_match).") { a =>
+      val symbols = a.csv(5).map { s =>
         val Array(ty, sym) = s.split(":", 2)
         ty.trim -> sym.trim
       }.toMap
-    graft.operators.EventPattern
-      .matchPattern(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "keyCol"),
-        strArg(n, exprs(2), "tsCol"),
-        strArg(n, exprs(3), "idCol"),
-        strArg(n, exprs(4), "typeCol"),
-        symbols,
-        strArg(n, exprs(6), "pattern"))
-      .queryExecution.logical
-  }
-
-  private[graft] def knFamiliarityPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "kn_familiarity"
-    require(
-      exprs.length == 5,
-      s"$n expects (docsTable, idCol, textCol, trainTable, trainTextCol), got " +
-        exprs.length + " arguments")
-    val spark = SparkSession.active
-    graft.operators.LmScore
-      .knFamiliarity(
-        spark.table(strArg(n, exprs.head, "docsTable")),
-        strArg(n, exprs(1), "idCol"),
-        strArg(n, exprs(2), "textCol"),
-        spark.table(strArg(n, exprs(3), "trainTable")),
-        strArg(n, exprs(4), "trainTextCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def multiTouchPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "multi_touch"
-    require(
-      exprs.length == 9,
-      s"$n expects (table, userCol, tsUsCol, idCol, typeCol, touchTypesCsv, convType, windowUs, model), got " +
-        exprs.length + " arguments")
-    graft.operators.Attribution
-      .multiTouch(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "userCol"),
-        strArg(n, exprs(2), "tsUsCol"),
-        strArg(n, exprs(3), "idCol"),
-        strArg(n, exprs(4), "typeCol"),
-        strArg(n, exprs(5), "touchTypesCsv")
-          .split(",").map(_.trim).filter(_.nonEmpty).toSeq,
-        strArg(n, exprs(6), "convType"),
-        longArg(n, exprs(7), "windowUs"),
-        strArg(n, exprs(8), "model"))
-      .queryExecution.logical
-  }
-
-  private[graft] def fsLinkPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "fs_link"
-    require(
-      exprs.length == 8,
-      s"$n expects (aTable, bTable, idA, idB, labeledTable, candidatesTable, attrsCsv, thetaNum), got " +
-        exprs.length + " arguments")
-    val spark = SparkSession.active
-    val a = spark.table(strArg(n, exprs.head, "aTable"))
-    val b = spark.table(strArg(n, exprs(1), "bTable"))
-    val idA = strArg(n, exprs(2), "idA")
-    val idB = strArg(n, exprs(3), "idB")
-    val labeled = spark.table(strArg(n, exprs(4), "labeledTable"))
-    val cands = spark.table(strArg(n, exprs(5), "candidatesTable"))
-    val attrs = strArg(n, exprs(6), "attrsCsv")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val weights = graft.operators.RecordLinkage.fsWeights(a, b, idA, idB, labeled, attrs)
-    graft.operators.RecordLinkage
-      .scorePairs(a, b, idA, idB, attrs, cands, weights,
-        thetaNum = longArg(n, exprs(7), "thetaNum"))
-      .queryExecution.logical
-  }
-
-  private[graft] def fsLinkEmPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "fs_link_em"
-    require(
-      exprs.length == 8,
-      s"$n expects (aTable, bTable, idA, idB, candidatesTable, attrsCsv, thetaNum, iters), got " +
-        exprs.length + " arguments")
-    val spark = SparkSession.active
-    val a = spark.table(strArg(n, exprs.head, "aTable"))
-    val b = spark.table(strArg(n, exprs(1), "bTable"))
-    val idA = strArg(n, exprs(2), "idA")
-    val idB = strArg(n, exprs(3), "idB")
-    val cands = spark.table(strArg(n, exprs(4), "candidatesTable"))
-    val attrs = strArg(n, exprs(5), "attrsCsv")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val weights = graft.operators.RecordLinkage.fsWeightsEm(
-      a, b, idA, idB, cands, attrs,
-      iters = longArg(n, exprs(7), "iters").toInt)
-    graft.operators.RecordLinkage
-      .scorePairs(a, b, idA, idB, attrs, cands, weights,
-        thetaNum = longArg(n, exprs(6), "thetaNum"))
-      .queryExecution.logical
-  }
-
-  private[graft] def leakageSafeSplitPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "leakage_safe_split"
-    require(
-      exprs.length == 6,
-      s"$n expects (table, idCol, clustersTable, clusterIdCol, repCol, splitsSpec), got " +
-        exprs.length + " arguments")
-    val spark = SparkSession.active
-    val splits = strArg(n, exprs(5), "splitsSpec").split("\\|").map(_.trim)
-      .filter(_.nonEmpty).map { s =>
+      EventPattern.matchPattern(a.table(0), a.str(1), a.str(2), a.str(3), a.str(4), symbols,
+        a.str(6))
+    },
+    tvf("kn_familiarity", classOf[LmScore.type],
+      "docsTable, idCol, textCol, trainTable, trainTextCol",
+      "interpolated Kneser-Ney (d=3/4) bigram familiarity in exact fixed point: (id, " +
+        "n_bigrams, n_backoff, score_bp).") { a =>
+      LmScore.knFamiliarity(a.table(0), a.str(1), a.str(2), a.table(3), a.str(4))
+    },
+    tvf("multi_touch", classOf[Attribution.type],
+      "table, userCol, tsUsCol, idCol, typeCol, touchTypesCsv, convType, windowUs, model",
+      "multi-touch attribution ('linear' | 'u') in exact basis points; each touch " +
+        "credits the next conversion within the window.") { a =>
+      Attribution.multiTouch(a.table(0), a.str(1), a.str(2), a.str(3), a.str(4), a.csv(5),
+        a.str(6), a.long(7), a.str(8))
+    },
+    tvf("fs_link", classOf[RecordLinkage.type],
+      "aTable, bTable, idA, idB, labeledTable, candidatesTable, attrsCsv, thetaNum",
+      "Fellegi-Sunter record linkage: exact integer m/u likelihood-ratio scores over " +
+        "candidate pairs; labeled/candidates tables carry (x_id, y_id).") { a =>
+      val (ta, tb, idA, idB, attrs) = (a.table(0), a.table(1), a.str(2), a.str(3), a.csv(6))
+      val weights = RecordLinkage.fsWeights(ta, tb, idA, idB, a.table(4), attrs)
+      RecordLinkage.scorePairs(ta, tb, idA, idB, attrs, a.table(5), weights, thetaNum = a.long(7))
+    },
+    tvf("fs_link_em", classOf[RecordLinkage.type],
+      "aTable, bTable, idA, idB, candidatesTable, attrsCsv, thetaNum, iters",
+      "unsupervised Fellegi-Sunter: m/u fitted by fixed-point-integer EM over the " +
+        "candidate agreement-pattern histogram (no labeled sample), then exact " +
+        "likelihood-ratio scores.") { a =>
+      val (ta, tb, idA, idB, attrs) = (a.table(0), a.table(1), a.str(2), a.str(3), a.csv(5))
+      val cands = a.table(4)
+      val weights = RecordLinkage.fsWeightsEm(ta, tb, idA, idB, cands, attrs, iters = a.int(7))
+      RecordLinkage.scorePairs(ta, tb, idA, idB, attrs, cands, weights, thetaNum = a.long(6))
+    },
+    tvf("leakage_safe_split", classOf[Sampling.type],
+      "table, idCol, clustersTable, clusterIdCol, repCol, splitsSpec",
+      "split keyed on the dup-cluster representative: near-duplicates never straddle " +
+        "splits; splitsSpec like 'train:0.8|val:0.1|test:0.1'.") { a =>
+      val splits = a.str(5).split("\\|").map(_.trim).filter(_.nonEmpty).map { s =>
         val Array(name, frac) = s.split(":", 2)
         name.trim -> frac.trim.toDouble
       }.toSeq
-    graft.operators.Sampling
-      .leakageSafeSplit(
-        spark.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "idCol"),
-        spark.table(strArg(n, exprs(2), "clustersTable")),
-        strArg(n, exprs(3), "clusterIdCol"),
-        strArg(n, exprs(4), "repCol"),
-        splits)
-      .queryExecution.logical
-  }
-
-  private[graft] def ppsSamplePlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "pps_sample"
-    require(
-      exprs.length == 4,
-      s"$n expects (table, idCol, weightCol, k), got " + exprs.length + " arguments")
-    graft.operators.Sampling
-      .ppsSystematic(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "idCol"),
-        strArg(n, exprs(2), "weightCol"),
-        longArg(n, exprs(3), "k").toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def chiDriftPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "chi_drift"
-    require(
-      exprs.length == 3,
-      s"$n expects (refTable, curTable, bucketCol), got " + exprs.length + " arguments")
-    graft.operators.Drift
-      .chiDrift(
-        SparkSession.active.table(strArg(n, exprs.head, "refTable")),
-        SparkSession.active.table(strArg(n, exprs(1), "curTable")),
-        strArg(n, exprs(2), "bucketCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def kCentersPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "k_centers"
-    require(
-      exprs.length == 4,
-      s"$n expects (table, idCol, embCol, k), got " + exprs.length + " arguments")
-    graft.operators.Coreset
-      .kCenters(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "idCol"),
-        strArg(n, exprs(2), "embCol"),
-        longArg(n, exprs(3), "k").toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def constraintChecksPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "constraint_checks"
-    require(
-      exprs.length == 2,
-      s"$n expects (table, spec), got " + exprs.length + " arguments")
-    val spark = SparkSession.active
-    import graft.operators.Constraints._
-    val checks = strArg(n, exprs(1), "spec").split(";").map(_.trim).filter(_.nonEmpty)
-      .map { s =>
+      Sampling.leakageSafeSplit(a.table(0), a.str(1), a.table(2), a.str(3), a.str(4), splits)
+    },
+    tvf("chi_drift", classOf[Drift.type], "refTable, curTable, bucketCol",
+      "per-bucket distribution drift between two snapshots: chi-square-shaped divergence " +
+        "on exact basis-point shares (integer math; the engine-portable PSI stand-in).") { a =>
+      Drift.chiDrift(a.table(0), a.table(1), a.str(2))
+    },
+    tvf("k_centers", classOf[Coreset.type], "table, idCol, embCol, k",
+      "diversity-maximizing coreset: greedy k-center (farthest-point traversal) over an " +
+        "embedding column; (rank, id, d2) in selection order, d2 = squared distance to the " +
+        "nearest prior center.") { a =>
+      Coreset.kCenters(a.table(0), a.str(1), a.str(2), a.int(3))
+    },
+    tvf("pps_sample", classOf[Sampling.type], "table, idCol, weightCol, k",
+      "PPS systematic sampling: k draws with inclusion probability exactly proportional " +
+        "to the integer weight; (idCol, weight, n_hits), sum(n_hits) = k.") { a =>
+      Sampling.ppsSystematic(a.table(0), a.str(1), a.str(2), a.int(3))
+    },
+    tvf("constraint_checks", classOf[Constraints.type], "table, spec",
+      "Deequ-shaped data-quality suite; spec is ';'-separated checks: complete:col:bp | " +
+        "in_range:col:lo:hi:bp | in_set:col:v1|v2:bp | regex:col:re:bp (no ':' in re) | " +
+        "row_count:lo:hi | unique:col:bp | fk:col:refTable:refCol. Output (check, target, " +
+        "metric_bp, threshold_bp, pass).") { a =>
+      import Constraints._
+      val checks = a.str(1).split(";").map(_.trim).filter(_.nonEmpty).map { s =>
         (s.split(":", -1).map(_.trim).toSeq match {
           case Seq("complete", c, bp)          => Complete(c, bp.toLong)
           case Seq("in_range", c, lo, hi, bp)  => InRange(c, lo.toLong, hi.toLong, bp.toLong)
@@ -2911,959 +697,425 @@ object GraftExtensions {
           case Seq("regex", c, re, bp)         => MatchesRegex(c, re, bp.toLong)
           case Seq("row_count", lo, hi)        => RowCount(lo.toLong, hi.toLong)
           case Seq("unique", c, bp)            => Unique(c, bp.toLong)
-          case Seq("fk", c, ref, rc)           => ForeignKey(c, spark.table(ref), rc)
-          case other =>
-            throw new IllegalArgumentException(s"$n: unparseable check '$s'")
+          case Seq("fk", c, ref, rc)           => ForeignKey(c, SparkSession.active.table(ref), rc)
+          case _ =>
+            throw new IllegalArgumentException(s"constraint_checks: unparseable check '$s'")
         }): Check
       }.toSeq
-    graft.operators.Constraints
-      .validate(spark.table(strArg(n, exprs.head, "table")), checks)
-      .queryExecution.logical
-  }
-
-  private[graft] def cdcApplyPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "cdc_apply"
-    require(
-      exprs.length == 6,
-      s"$n expects (baseTable, changesTable, keyCol, seqCol, opCol, valueColsCsv), got " +
-        exprs.length + " arguments")
-    val spark = SparkSession.active
-    val valueCols = strArg(n, exprs(5), "valueColsCsv")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    graft.operators.Cdc
-      .applyChangelog(
-        spark.table(strArg(n, exprs.head, "baseTable")),
-        spark.table(strArg(n, exprs(1), "changesTable")),
-        strArg(n, exprs(2), "keyCol"),
-        strArg(n, exprs(3), "seqCol"),
-        strArg(n, exprs(4), "opCol"),
-        valueCols)
-      .queryExecution.logical
-  }
-
-  private[graft] def cdcChangelogPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "cdc_changelog"
-    require(
-      exprs.length == 4,
-      s"$n expects (oldTable, newTable, keyCol, valueColsCsv), got " +
-        exprs.length + " arguments")
-    val spark = SparkSession.active
-    val valueCols = strArg(n, exprs(3), "valueColsCsv")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    graft.operators.Cdc
-      .changelog(
-        spark.table(strArg(n, exprs.head, "oldTable")),
-        spark.table(strArg(n, exprs(1), "newTable")),
-        strArg(n, exprs(2), "keyCol"),
-        valueCols)
-      .queryExecution.logical
-  }
-
-  private[graft] def ivfUpsertPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "ivf_upsert"
-    require(
-      exprs.length == 4,
-      s"$n expects (centroidsTable, addsTable, idCol, embCol), got " + exprs.length +
-        " arguments")
-    val spark = SparkSession.active
-    import org.apache.spark.sql.functions.col
-    graft.operators.SimilaritySearch
-      .upsertIvfIndex(
-        spark.table(strArg(n, exprs.head, "centroidsTable")),
-        spark.table(strArg(n, exprs(1), "addsTable"))
-          .select(
-            col(strArg(n, exprs(2), "idCol")).as("n_id"),
-            col(strArg(n, exprs(3), "embCol")).as("n_emb")))
-      .queryExecution.logical
-  }
-
-  private[graft] def meanPoolPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "mean_pool"
-    require(
-      exprs.length == 4,
-      s"$n expects (table, gidCol, embCol, scaleBits), got " + exprs.length + " arguments")
-    import org.apache.spark.sql.functions.col
-    graft.operators.SimilaritySearch
-      .meanPoolQuantized(
-        SparkSession.active.table(strArg(n, exprs.head, "table"))
-          .select(
-            col(strArg(n, exprs(1), "gidCol")).as("gid"),
-            col(strArg(n, exprs(2), "embCol")).as("emb")),
-        longArg(n, exprs(3), "scaleBits").toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def signProjectPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "sign_project"
-    require(
-      exprs.length == 6,
-      s"$n expects (table, idCol, embCol, dim, outDims, scaleBits), got " +
-        exprs.length + " arguments")
-    graft.operators.SimilaritySearch
-      .signProject(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "idCol"),
-        strArg(n, exprs(2), "embCol"),
-        longArg(n, exprs(3), "dim").toInt,
-        longArg(n, exprs(4), "outDims").toInt,
-        longArg(n, exprs(5), "scaleBits").toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def decayedTopKPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "decayed_topk"
-    require(
-      exprs.length == 7,
-      s"$n expects (table, keyCol, tsSecCol, asOfSec, genSecs, horizon, k), got " +
-        exprs.length + " arguments")
-    graft.operators.Decay
-      .decayedTopK(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        Seq(strArg(n, exprs(1), "keyCol")),
-        strArg(n, exprs(2), "tsSecCol"),
-        longArg(n, exprs(3), "asOfSec"),
-        longArg(n, exprs(4), "genSecs"),
-        longArg(n, exprs(5), "horizon").toInt,
-        longArg(n, exprs(6), "k").toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def cohenKappaPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "cohen_kappa"
-    require(
-      exprs.length == 3,
-      s"$n expects (table, raterACol, raterBCol), got " + exprs.length + " arguments")
-    graft.operators.ModelEval
-      .cohenKappa(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "raterACol"),
-        strArg(n, exprs(2), "raterBCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def weightedSamplePlan(exprs: Seq[Expression]): LogicalPlan = {
-    require(
-      exprs.length == 5,
-      "weighted_sample expects (table, idCol, strataCol, ratesCsv, defaultRate), got " +
-        exprs.length + " arguments")
-    val n = "weighted_sample"
-    val rates = strArg(n, exprs(3), "ratesCsv").split(",").map(_.trim).filter(_.nonEmpty)
-      .toSeq.map { kv =>
-        kv.split(":") match {
-          case Array(k, v) => k.trim -> v.trim.toDouble
+      Constraints.validate(a.table(0), checks)
+    },
+    tvf("cdc_apply", classOf[Cdc.type],
+      "baseTable, changesTable, keyCol, seqCol, opCol, valueColsCsv",
+      "lakehouse MERGE: apply a keyed upsert/delete changelog (max-seq winner per key) " +
+        "to a base snapshot: (keyCol, valueCols...).") { a =>
+      Cdc.applyChangelog(a.table(0), a.table(1), a.str(2), a.str(3), a.str(4), a.csv(5))
+    },
+    tvf("cdc_changelog", classOf[Cdc.type], "oldTable, newTable, keyCol, valueColsCsv",
+      "minimal changelog between two snapshots: (keyCol, op, valueCols...) with op in " +
+        "{upsert, delete}; unchanged keys absent.") { a =>
+      Cdc.changelog(a.table(0), a.table(1), a.str(2), a.csv(3))
+    },
+    tvf("ivf_upsert", classOf[SimilaritySearch.type], "centroidsTable, addsTable, idCol, embCol",
+      "assign an increment to an existing IVF index's frozen centroids (the no-rebuild " +
+        "index maintenance path): (n_id, n_emb, cell).") { a =>
+      SimilaritySearch.upsertIvfIndex(a.table(0),
+        a.table(1).select(a.col(2).as("n_id"), a.col(3).as("n_emb")))
+    },
+    tvf("mean_pool", classOf[SimilaritySearch.type], "table, gidCol, embCol, scaleBits",
+      "order-invariant chunk-to-document embedding mean on the 2^scaleBits fixed-point " +
+        "grid: (gid, dim, n_chunks, pooled_q).") { a =>
+      SimilaritySearch.meanPoolQuantized(
+        a.table(0).select(a.col(1).as("gid"), a.col(2).as("emb")), a.int(3))
+    },
+    tvf("sign_project", classOf[SimilaritySearch.type],
+      "table, idCol, embCol, dim, outDims, scaleBits",
+      "Johnson-Lindenstrauss Rademacher projection to outDims integer coordinates on the " +
+        "2^scaleBits grid: (id, proj).") { a =>
+      SimilaritySearch.signProject(a.table(0), a.str(1), a.str(2), a.int(3), a.int(4), a.int(5))
+    },
+    tvf("decayed_topk", classOf[Decay.type],
+      "table, keyCol, tsSecCol, asOfSec, genSecs, horizon, k",
+      "k hottest keys by exact-integer exponential time decay (weight 2^(horizon-age) " +
+        "per genSecs generation): (key, n_window, decayed, rank).") { a =>
+      Decay.decayedTopK(a.table(0), Seq(a.str(1)), a.str(2), a.long(3), a.long(4), a.int(5),
+        a.int(6))
+    },
+    tvf("cohen_kappa", classOf[ModelEval.type], "table, raterACol, raterBCol",
+      "chance-corrected inter-annotator agreement in exact basis points: one row (n, " +
+        "n_agree, po_bp, pe_bp, kappa_bp).") { a =>
+      ModelEval.cohenKappa(a.table(0), a.str(1), a.str(2))
+    },
+    tvf("fd_profile", classOf[Profiling.type], "table, colsCsv",
+      "functional-dependency audit over every ordered column pair: (a, b, n_lhs, " +
+        "n_pairs, holds, violations). One scan, no per-pair rescans.") { a =>
+      Profiling.functionalDependencies(a.table(0), a.csv(1))
+    },
+    tvf("ind_profile", classOf[Profiling.type], "sourcesCsv",
+      "inclusion-dependency (FK) discovery over 'table:column' sources: (a, b, " +
+        "n_lhs_values, n_missing, holds). Single value-grouped pass, no per-pair EXCEPT " +
+        "joins.") { a =>
+      val sources = a.csv(0).map { entry =>
+        entry.split(":") match {
+          case Array(tbl, c) =>
+            (s"${tbl.trim}.${c.trim}", SparkSession.active.table(tbl.trim), c.trim)
           case _ => throw new IllegalArgumentException(
-            s"$n: ratesCsv entries must be 'stratum:rate', got '$kv'")
+            s"ind_profile: sources must be 'table:column', got '$entry'")
         }
       }
-    graft.operators.Sampling
-      .weightedSample(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "idCol"),
-        strArg(n, exprs(2), "strataCol"),
-        rates,
-        doubleArg(n, exprs(4), "defaultRate"))
-      .queryExecution.logical
-  }
-
-  private[graft] def rangeJoinPlan(exprs: Seq[Expression]): LogicalPlan = {
-    require(
-      exprs.length == 7,
-      "range_join expects (left, right, key, lTime, rTime, lower, upper), got " +
-        exprs.length + " arguments")
-    val n = "range_join"
-    val spark = SparkSession.active
-    graft.operators.RangeJoin
-      .timeRange(
-        spark.table(strArg(n, exprs.head, "left")),
-        spark.table(strArg(n, exprs(1), "right")),
-        Seq(strArg(n, exprs(2), "key")),
-        strArg(n, exprs(3), "lTime"),
-        strArg(n, exprs(4), "rTime"),
-        longArg(n, exprs(5), "lower"),
-        longArg(n, exprs(6), "upper"))
-      .queryExecution.logical
-  }
-
-  private[graft] def chunkOverlapPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "chunk_overlap"
-    require(
-      exprs.length == 5,
-      s"$n expects (table, idCol, textCol, width, stride), got ${exprs.length} arguments")
-    graft.operators.Chunking
-      .chunkSpans(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "idCol"),
-        strArg(n, exprs(2), "textCol"),
-        longArg(n, exprs(3), "width"),
-        longArg(n, exprs(4), "stride"))
-      .queryExecution.logical
-  }
-
-  private[graft] def snapshotDiffPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "snapshot_diff"
-    require(
-      exprs.length == 4,
-      s"$n expects (oldTable, newTable, idCol, contentCol), got ${exprs.length} arguments")
-    val spark = SparkSession.active
-    graft.operators.SnapshotDiff
-      .diff(
-        spark.table(strArg(n, exprs.head, "oldTable")),
-        spark.table(strArg(n, exprs(1), "newTable")),
-        strArg(n, exprs(2), "idCol"),
-        Seq(strArg(n, exprs(3), "contentCol")))
-      .queryExecution.logical
-  }
-
-  private[graft] def trainingOrderPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "training_order"
-    require(
-      exprs.length == 3,
-      s"$n expects (table, idCol, nShards), got ${exprs.length} arguments")
-    val shards = longArg(n, exprs(2), "nShards")
-    require(shards > 0 && shards <= Int.MaxValue, s"$n: nShards must be a positive int, got $shards")
-    graft.operators.Packing
-      .trainingOrder(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "idCol"),
-        shards.toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def rankEvalPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "rank_eval"
-    require(
-      exprs.length == 6,
-      s"$n expects (runTable, qrelsTable, qCol, dCol, rankCol, k), got ${exprs.length} arguments")
-    val k = longArg(n, exprs(5), "k")
-    require(k >= 1 && k <= Int.MaxValue, s"$n: k must be a positive int, got $k")
-    graft.operators.RankEval
-      .perQuery(
-        SparkSession.active.table(strArg(n, exprs.head, "runTable")),
-        SparkSession.active.table(strArg(n, exprs(1), "qrelsTable")),
-        strArg(n, exprs(2), "qCol"),
-        strArg(n, exprs(3), "dCol"),
-        strArg(n, exprs(4), "rankCol"),
-        k.toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def frequentLinesPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "frequent_lines"
-    require(
-      exprs.length == 6,
-      s"$n expects (table, idCol, textCol, sourceCol, delim, minDocs), got ${exprs.length} arguments")
-    graft.operators.Boilerplate
-      .frequentLines(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "idCol"),
-        strArg(n, exprs(2), "textCol"),
-        strArg(n, exprs(3), "sourceCol"),
-        strArg(n, exprs(4), "delim"),
-        longArg(n, exprs(5), "minDocs"))
-      .queryExecution.logical
-  }
-
-  private[graft] def boilerplateCleanPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "boilerplate_clean"
-    require(
-      exprs.length == 6,
-      s"$n expects (table, idCol, textCol, sourceCol, delim, minDocs), got ${exprs.length} arguments")
-    graft.operators.Boilerplate
-      .removeLines(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "idCol"),
-        strArg(n, exprs(2), "textCol"),
-        strArg(n, exprs(3), "sourceCol"),
-        strArg(n, exprs(4), "delim"),
-        longArg(n, exprs(5), "minDocs"))
-      .queryExecution.logical
-  }
-
-  private[graft] def preferencePairsPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "preference_pairs"
-    require(
-      exprs.length == 5,
-      s"$n expects (table, groupCol, idCol, scoreCol, minMargin), got ${exprs.length} arguments")
-    graft.operators.PreferencePairs
-      .pairs(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "groupCol"),
-        strArg(n, exprs(2), "idCol"),
-        strArg(n, exprs(3), "scoreCol"),
-        longArg(n, exprs(4), "minMargin"))
-      .queryExecution.logical
-  }
-
-  private[graft] def sketchQuantilesPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "sketch_quantiles"
-    require(
-      exprs.length == 6,
-      s"$n expects (table, groupCol, idCol, valueCol, k, qsSpec), got ${exprs.length} arguments")
-    val k = longArg(n, exprs(4), "k")
-    require(k >= 1 && k <= Int.MaxValue, s"$n: k must be a positive int, got $k")
-    val qs = strArg(n, exprs(5), "qsSpec").split(",").map(_.trim).filter(_.nonEmpty)
-      .map { s =>
+      Profiling.inclusionDependencies(sources)
+    },
+    tvf("pq_adc", classOf[Pq.type],
+      "queries, qIdCol, qEmbCol, corpus, idCol, embCol, dim, m, ks, iters, k",
+      "product-quantization ADC top-k: integer-centroid codebooks trained inline, (q_id, " +
+        "n_id, rank, d2).") { a =>
+      val corpus = a.table(3).select(a.col(4).as("vid"), a.col(5).as("emb"))
+      val dim = a.int(6)
+      val m = a.int(7)
+      val books = Pq.trainCodebooks(corpus, dim, m, a.int(8), a.int(9))
+      val codes = Pq.encode(corpus, books, dim, m)
+      Pq.adcTopK(a.table(0).select(a.col(1).as("q_id"), a.col(2).as("q_emb")), books, codes,
+        a.int(10), dim, m)
+    },
+    tvf("pareto_front", classOf[Skyline.type], "table, idCol, dimsCsv",
+      "distributed skyline: rows no other row dominates on ALL (maximizing) dims; " +
+        "two-phase bucket-local fronts, no n-squared theta-join.") { a =>
+      val dims = a.csv(2)
+      require(dims.nonEmpty, "pareto_front: dimsCsv named no columns")
+      Skyline.paretoFront(a.table(0), a.str(1), dims)
+    },
+    tvf("percentile_ranks", classOf[Quantiles.type], "table, groupCol, valueCol",
+      "per-group cume_dist of every distinct value in exact basis points, via histogram " +
+        "+ recursive prefix sum: (group, value, n_rows, cum_le, pct_bp).") { a =>
+      Quantiles.percentileRanks(a.table(0), a.str(1), a.str(2))
+    },
+    tvf("golden_record", classOf[Survivorship.type],
+      "table, clusterCol, idCol, longestCsv, maxCsv, modeCsv",
+      "per-cluster survivorship merge under deterministic rules (longest / max / " +
+        "count-desc-value-asc mode); empty CSVs allowed.") { a =>
+      Survivorship.goldenRecord(a.table(0), a.str(1), a.str(2), longestCols = a.csv(3),
+        maxCols = a.csv(4), modeCols = a.csv(5))
+    },
+    tvf("rfm", classOf[Cohorts.type], "table, userCol, tsSecCol, centsCol, asOfSec",
+      "recency/frequency/monetary per user with exact population quintiles: (user, " +
+        "r_days, f, m_cents, r_q, f_q, m_q).") { a =>
+      Cohorts.rfm(a.table(0), a.str(1), a.str(2), a.str(3), a.long(4))
+    },
+    tvf("chunk_overlap", classOf[Chunking.type], "table, idCol, textCol, width, stride",
+      "overlapping width-token chunks stepping by stride per document: (id, chunk, " +
+        "tok_start, tok_end, n_chunk_tokens, chunk_text).") { a =>
+      Chunking.chunkSpans(a.table(0), a.str(1), a.str(2), a.long(3), a.long(4))
+    },
+    tvf("snapshot_diff", classOf[SnapshotDiff.type], "oldTable, newTable, idCol, contentCol",
+      "CDC classification per id: (id, status in added|removed|changed|unchanged) via " +
+        "digest-first full-outer join.") { a =>
+      SnapshotDiff.diff(a.table(0), a.table(1), a.str(2), Seq(a.str(3)))
+    },
+    tvf("training_order", classOf[Packing.type], "table, idCol, nShards",
+      "deterministic MD5-ordered loader layout: (id, shard, pos).") { a =>
+      val shards = a.long(2)
+      require(shards > 0 && shards <= Int.MaxValue,
+        s"training_order: nShards must be a positive int, got $shards")
+      Packing.trainingOrder(a.table(0), a.str(1), shards.toInt)
+    },
+    tvf("rank_eval", classOf[RankEval.type], "runTable, qrelsTable, qCol, dCol, rankCol, k",
+      "trec_eval-shaped per-query retrieval metrics at cutoff k: (q, n_rel, n_rel_ret, " +
+        "first_rel_rank, rr_ppm, recall_bp, precision_bp, hit).") { a =>
+      val k = a.long(5)
+      require(k >= 1 && k <= Int.MaxValue, s"rank_eval: k must be a positive int, got $k")
+      RankEval.perQuery(a.table(0), a.table(1), a.str(2), a.str(3), a.str(4), k.toInt)
+    },
+    tvf("frequent_lines", classOf[Boilerplate.type],
+      "table, idCol, textCol, sourceCol, delim, minDocs",
+      "C4-style template inventory: lines appearing in >= minDocs distinct docs of the " +
+        "same source: (source, line, n_docs).") { a =>
+      Boilerplate.frequentLines(a.table(0), a.str(1), a.str(2), a.str(3), a.str(4), a.long(5))
+    },
+    tvf("boilerplate_clean", classOf[Boilerplate.type],
+      "table, idCol, textCol, sourceCol, delim, minDocs",
+      "remove frequent-line boilerplate and reassemble docs: (id, n_lines, n_removed, " +
+        "text_clean).") { a =>
+      Boilerplate.removeLines(a.table(0), a.str(1), a.str(2), a.str(3), a.str(4), a.long(5))
+    },
+    tvf("preference_pairs", classOf[PreferencePairs.type],
+      "table, groupCol, idCol, scoreCol, minMargin",
+      "best-vs-worst candidate per group with deterministic ties, margin-floored: (g, " +
+        "n_candidates, chosen_id, chosen_score, rejected_id, rejected_score, margin).") { a =>
+      PreferencePairs.pairs(a.table(0), a.str(1), a.str(2), a.str(3), a.long(4))
+    },
+    tvf("theilsen_trend", classOf[TheilSen.type], "table, keyCol, xCol, yCol",
+      "Theil-Sen median slope per key over integer points, exact rational ordering: (k, " +
+        "n_points, n_pairs, slope_num, slope_den, slope_ppm).") { a =>
+      TheilSen.medianSlope(a.table(0), a.str(1), a.str(2), a.str(3))
+    },
+    tvf("sketch_quantiles", classOf[QuantileSketch.type],
+      "table, groupCol, idCol, valueCol, k, qsSpec",
+      "quantile estimates from the deterministic mergeable bottom-k-by-md5 sample: " +
+        "(group, q_num, q_den, n_sample, est); qsSpec like 'num:den,...'.") { a =>
+      val k = a.long(4)
+      require(k >= 1 && k <= Int.MaxValue, s"sketch_quantiles: k must be a positive int, got $k")
+      val qs = a.csv(5).map { s =>
         val parts = s.split(":")
-        require(parts.length == 2, s"$n: quantile spec entries must be num:den, got '$s'")
+        require(parts.length == 2,
+          s"sketch_quantiles: quantile spec entries must be num:den, got '$s'")
         (parts(0).trim.toLong, parts(1).trim.toLong)
-      }.toSeq
-    val sketch = graft.operators.QuantileSketch.build(
-      SparkSession.active.table(strArg(n, exprs.head, "table")),
-      Seq(strArg(n, exprs(1), "groupCol")),
-      strArg(n, exprs(2), "idCol"),
-      strArg(n, exprs(3), "valueCol"),
-      k.toInt)
-    graft.operators.QuantileSketch
-      .quantiles(sketch, Seq(strArg(n, exprs(1), "groupCol")), qs)
-      .queryExecution.logical
-  }
-
-  private[graft] def coecPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "coec"
-    require(
-      exprs.length == 4,
-      s"$n expects (table, itemCol, positionCol, clickedCol), got ${exprs.length} arguments")
-    graft.operators.ClickModels
-      .coec(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "itemCol"),
-        strArg(n, exprs(2), "positionCol"),
-        strArg(n, exprs(3), "clickedCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def dictionaryMatchPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "dictionary_match"
-    require(
-      exprs.length == 6,
-      s"$n expects (docsTable, idCol, textCol, dictTable, phraseIdCol, phraseCol), got ${exprs.length} arguments")
-    graft.operators.KeywordSearch
-      .dictionaryMatch(
-        SparkSession.active.table(strArg(n, exprs.head, "docsTable")),
-        strArg(n, exprs(1), "idCol"),
-        strArg(n, exprs(2), "textCol"),
-        SparkSession.active.table(strArg(n, exprs(3), "dictTable")),
-        strArg(n, exprs(4), "phraseIdCol"),
-        strArg(n, exprs(5), "phraseCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def forgetAuditPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "forget_audit"
-    require(
-      exprs.length == 3,
-      s"$n expects (subjectsTable, subjectCol, 'name:table:key,...'), got ${exprs.length} arguments")
-    val spark = SparkSession.active
-    val tables = strArg(n, exprs(2), "tablesSpec")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      .map { s =>
-        val parts = s.split(":")
-        require(parts.length == 3, s"$n: table spec entries must be name:table:key, got '$s'")
-        (parts(0).trim, spark.table(parts(1).trim), parts(2).trim)
       }
-    graft.operators.Forget
-      .audit(
-        spark.table(strArg(n, exprs.head, "subjectsTable")),
-        strArg(n, exprs(1), "subjectCol"),
-        tables)
-      .queryExecution.logical
-  }
-
-  private[graft] def intervalUnionPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "interval_union"
-    require(
-      exprs.length == 4,
-      s"$n expects (table, keyCol, startCol, endCol), got ${exprs.length} arguments")
-    graft.operators.Intervals
-      .unionLength(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "keyCol"),
-        strArg(n, exprs(2), "startCol"),
-        strArg(n, exprs(3), "endCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def markovTransitionsPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "markov_transitions"
-    require(
-      exprs.length == 5,
-      s"$n expects (table, keyCol, tsCol, tiebreakCol, stateCol), got ${exprs.length} arguments")
-    graft.operators.Transitions
-      .matrix(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "keyCol"),
-        strArg(n, exprs(2), "tsCol"),
-        strArg(n, exprs(3), "tiebreakCol"),
-        strArg(n, exprs(4), "stateCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def prioritySamplePlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "priority_sample"
-    require(
-      exprs.length == 5,
-      s"$n expects (table, groupCol, idCol, wCol, k), got ${exprs.length} arguments")
-    val k = longArg(n, exprs(4), "k")
-    require(k >= 1 && k <= Int.MaxValue, s"$n: k must be a positive int, got $k")
-    val g = Seq(strArg(n, exprs(1), "groupCol"))
-    graft.operators.PrioritySample
-      .estimates(
-        graft.operators.PrioritySample.sketch(
-          SparkSession.active.table(strArg(n, exprs.head, "table")),
-          g,
-          strArg(n, exprs(2), "idCol"),
-          strArg(n, exprs(3), "wCol"),
-          k.toInt),
+      val sketch = QuantileSketch.build(a.table(0), Seq(a.str(1)), a.str(2), a.str(3), k.toInt)
+      QuantileSketch.quantiles(sketch, Seq(a.str(1)), qs)
+    },
+    tvf("coec", classOf[ClickModels.type], "table, itemCol, positionCol, clickedCol",
+      "clicks over expected clicks: position-bias-corrected CTR per item in exact basis " +
+        "points: (item, n_imp, n_clicks, expected_ppm, coec_bp).") { a =>
+      ClickModels.coec(a.table(0), a.str(1), a.str(2), a.str(3))
+    },
+    tvf("dictionary_match", classOf[KeywordSearch.type],
+      "docsTable, idCol, textCol, dictTable, phraseIdCol, phraseCol",
+      "gazetteer tagging: every dictionary phrase vs every doc in one pass, rarest-token " +
+        "anchors + exact slice verify: (id, phrase_id, n_occ, first_pos).") { a =>
+      KeywordSearch.dictionaryMatch(a.table(0), a.str(1), a.str(2), a.table(3), a.str(4), a.str(5))
+    },
+    tvf("forget_audit", classOf[Forget.type], "subjectsTable, subjectCol, tablesSpec",
+      "GDPR deletion-cascade audit: per table (table, n_before, n_removed, n_after) in " +
+        "one pass each; tablesSpec like 'name1:table1:key1,name2:table2:key2'.") { a =>
+      val tables = a.csv(2).map { s =>
+        val parts = s.split(":")
+        require(parts.length == 3,
+          s"forget_audit: table spec entries must be name:table:key, got '$s'")
+        (parts(0).trim, SparkSession.active.table(parts(1).trim), parts(2).trim)
+      }
+      Forget.audit(a.table(0), a.str(1), tables)
+    },
+    tvf("interval_union", classOf[Intervals.type], "table, keyCol, startCol, endCol",
+      "gaps-and-islands interval-union measure per key: (k, n_intervals, n_islands, " +
+        "covered, max_gap).") { a =>
+      Intervals.unionLength(a.table(0), a.str(1), a.str(2), a.str(3))
+    },
+    tvf("markov_transitions", classOf[Transitions.type],
+      "table, keyCol, tsCol, tiebreakCol, stateCol",
+      "first-order transition table over keyed event sequences: (state, next, n, p_bp).") { a =>
+      Transitions.matrix(a.table(0), a.str(1), a.str(2), a.str(3), a.str(4))
+    },
+    tvf("priority_sample", classOf[PrioritySample.type], "table, groupCol, idCol, wCol, k",
+      "Duffield-Lund-Thorup priority sample per group with unbiased subset-sum " +
+        "estimates: (group, id, w, est_ppm).") { a =>
+      val k = a.long(4)
+      require(k >= 1 && k <= Int.MaxValue, s"priority_sample: k must be a positive int, got $k")
+      val g = Seq(a.str(1))
+      PrioritySample.estimates(PrioritySample.sketch(a.table(0), g, a.str(2), a.str(3), k.toInt),
         g, k.toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def amsF2Plan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "ams_f2"
-    require(
-      exprs.length == 3,
-      s"$n expects (table, keyCol, s), got ${exprs.length} arguments")
-    val s = longArg(n, exprs(2), "s")
-    require(s >= 1 && s <= 64, s"$n: s must be in [1, 64], got $s")
-    graft.operators.AmsSketch
-      .build(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "keyCol"),
-        s.toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def linkPredictionPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "link_prediction"
-    require(
-      exprs.length == 3,
-      s"$n expects (table, minCommon, maxCenterDegree), got ${exprs.length} arguments")
-    val minCommon = longArg(n, exprs(1), "minCommon")
-    val cap = longArg(n, exprs(2), "maxCenterDegree")
-    require(minCommon >= 1 && minCommon <= Int.MaxValue,
-      s"$n: minCommon must be a positive int, got $minCommon")
-    require(cap >= 2 && cap <= Int.MaxValue,
-      s"$n: maxCenterDegree must be an int >= 2, got $cap")
-    graft.operators.LinkPrediction
-      .scores(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        minCommon.toInt,
-        cap.toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def kaplanMeierPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "kaplan_meier"
-    require(
-      exprs.length == 4,
-      s"$n expects (table, groupCol, durationCol, eventCol), got ${exprs.length} arguments")
-    graft.operators.Survival
-      .kaplanMeier(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "groupCol"),
-        strArg(n, exprs(2), "durationCol"),
-        strArg(n, exprs(3), "eventCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def cupedPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "cuped"
-    require(
-      exprs.length == 4,
-      s"$n expects (table, armCol, xCol, yCol), got ${exprs.length} arguments")
-    graft.operators.Cuped
-      .adjust(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "armCol"),
-        strArg(n, exprs(2), "xCol"),
-        strArg(n, exprs(3), "yCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def giniStumpPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "gini_stump"
-    require(
-      exprs.length == 3,
-      s"$n expects (table, featureCol, labelCol), got ${exprs.length} arguments")
-    graft.operators.GiniStump
-      .splits(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "featureCol"),
-        strArg(n, exprs(2), "labelCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def mannWhitneyPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "mann_whitney"
-    require(
-      exprs.length == 5,
-      s"$n expects (table, sampleCol, valueCol, aLabel, bLabel), got ${exprs.length} arguments")
-    graft.operators.MannWhitney
-      .uTest(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "sampleCol"),
-        strArg(n, exprs(2), "valueCol"),
-        strArg(n, exprs(3), "aLabel"),
-        strArg(n, exprs(4), "bLabel"))
-      .queryExecution.logical
-  }
-
-  private[graft] def cusumPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "cusum"
-    require(
-      exprs.length == 5,
-      s"$n expects (table, bucketCol, valueCol, ref, h), got ${exprs.length} arguments")
-    graft.operators.ChangePoint
-      .cusum(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "bucketCol"),
-        strArg(n, exprs(2), "valueCol"),
-        longArg(n, exprs(3), "ref"),
-        longArg(n, exprs(4), "h"))
-      .queryExecution.logical
-  }
-
-  private[graft] def trimmedMeanPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "trimmed_mean"
-    require(
-      exprs.length == 4,
-      s"$n expects (table, groupCol, valueCol, trimBp), got ${exprs.length} arguments")
-    val bp = longArg(n, exprs(3), "trimBp")
-    require(bp >= 0 && bp < 5000, s"$n: trimBp must be in [0, 5000), got $bp")
-    graft.operators.RobustMean
-      .trimmed(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "groupCol"),
-        strArg(n, exprs(2), "valueCol"),
-        bp.toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def amsJoinSizePlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "ams_join_size"
-    require(
-      exprs.length == 5,
-      s"$n expects (tableA, keyA, tableB, keyB, s), got ${exprs.length} arguments")
-    val s = longArg(n, exprs(4), "s")
-    require(s >= 1 && s <= 32, s"$n: s must be in [1, 32], got $s")
-    graft.operators.AmsSketch
-      .joinSizeEstimate(
-        graft.operators.AmsSketch.build(
-          SparkSession.active.table(strArg(n, exprs.head, "tableA")),
-          strArg(n, exprs(1), "keyA"), s.toInt),
-        graft.operators.AmsSketch.build(
-          SparkSession.active.table(strArg(n, exprs(2), "tableB")),
-          strArg(n, exprs(3), "keyB"), s.toInt))
-      .queryExecution.logical
-  }
-
-  private[graft] def seqPatternsPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "seq_patterns"
-    require(
-      exprs.length == 6,
-      s"$n expects (table, keyCol, tsCol, tiebreakCol, stateCol, minSupport), got ${exprs.length} arguments")
-    val sup = longArg(n, exprs(5), "minSupport")
-    require(sup >= 1, s"$n: minSupport must be >= 1, got $sup")
-    graft.operators.SeqPatterns
-      .trigramSurprise(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "keyCol"),
-        strArg(n, exprs(2), "tsCol"),
-        strArg(n, exprs(3), "tiebreakCol"),
-        strArg(n, exprs(4), "stateCol"),
-        sup)
-      .queryExecution.logical
-  }
-
-  private[graft] def weightedQuantilesPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "weighted_quantiles"
-    require(
-      exprs.length == 4,
-      s"$n expects (table, groupCol, valueCol, weightCol), got ${exprs.length} arguments")
-    graft.operators.Quantiles
-      .weighted(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "groupCol"),
-        strArg(n, exprs(2), "valueCol"),
-        strArg(n, exprs(3), "weightCol"),
+    },
+    tvf("ams_f2", classOf[AmsSketch.type], "table, keyCol, s",
+      "AMS tug-of-war sketch counters for the second frequency moment / self-join size: " +
+        "(r, counter).") { a =>
+      val s = a.long(2)
+      require(s >= 1 && s <= 64, s"ams_f2: s must be in [1, 64], got $s")
+      AmsSketch.build(a.table(0), a.str(1), s.toInt)
+    },
+    tvf("link_prediction", classOf[LinkPrediction.type], "table, minCommon, maxCenterDegree",
+      "neighborhood-overlap link prediction over undirected edges (a, b): (x, y, " +
+        "n_common, jaccard_bp, ra_ppm) for non-adjacent pairs.") { a =>
+      val minCommon = a.long(1)
+      val cap = a.long(2)
+      require(minCommon >= 1 && minCommon <= Int.MaxValue,
+        s"link_prediction: minCommon must be a positive int, got $minCommon")
+      require(cap >= 2 && cap <= Int.MaxValue,
+        s"link_prediction: maxCenterDegree must be an int >= 2, got $cap")
+      LinkPrediction.scores(a.table(0), minCommon.toInt, cap.toInt)
+    },
+    tvf("kaplan_meier", classOf[Survival.type], "table, groupCol, durationCol, eventCol",
+      "Kaplan-Meier survival curve per group in exact ppm: (g, t, n_risk, n_events, s_ppm).") { a =>
+      Survival.kaplanMeier(a.table(0), a.str(1), a.str(2), a.str(3))
+    },
+    tvf("cuped", classOf[Cuped.type], "table, armCol, xCol, yCol",
+      "CUPED variance reduction from sufficient statistics: (arm, n, theta_ppm, " +
+        "mean_y_ppm, mean_ycup_ppm, varred_bp).") { a =>
+      Cuped.adjust(a.table(0), a.str(1), a.str(2), a.str(3))
+    },
+    tvf("gini_stump", classOf[GiniStump.type], "table, featureCol, labelCol",
+      "exact CART decision-stump split scan: (v, n_left, pos_left, gini_ppm) per " +
+        "candidate threshold.") { a =>
+      GiniStump.splits(a.table(0), a.str(1), a.str(2))
+    },
+    tvf("mann_whitney", classOf[MannWhitney.type], "table, sampleCol, valueCol, aLabel, bLabel",
+      "exact tie-corrected Mann-Whitney U rank-sum test: (n_a, n_b, u2_a, u2_b, " +
+        "cles_ppm, var12s).") { a =>
+      MannWhitney.uTest(a.table(0), a.str(1), a.str(2), a.str(3), a.str(4))
+    },
+    tvf("cusum", classOf[ChangePoint.type], "table, bucketCol, valueCol, ref, h",
+      "one-sided CUSUM change-point statistic per bucket via distributed prefix scans: " +
+        "(t, x, cusum, alarm).") { a =>
+      ChangePoint.cusum(a.table(0), a.str(1), a.str(2), a.long(3), a.long(4))
+    },
+    tvf("trimmed_mean", classOf[RobustMean.type], "table, groupCol, valueCol, trimBp",
+      "exact trimmed/winsorized/plain means per group in ppm: (g, n, cut, " +
+        "trimmed_mean_ppm, winsor_mean_ppm, mean_ppm).") { a =>
+      val bp = a.long(3)
+      require(bp >= 0 && bp < 5000, s"trimmed_mean: trimBp must be in [0, 5000), got $bp")
+      RobustMean.trimmed(a.table(0), a.str(1), a.str(2), bp.toInt)
+    },
+    tvf("ams_join_size", classOf[AmsSketch.type], "tableA, keyA, tableB, keyB, s",
+      "AGMS equi-join size estimate from two tug-of-war sketches: (s, join_size_est).") { a =>
+      val s = a.long(4)
+      require(s >= 1 && s <= 32, s"ams_join_size: s must be in [1, 32], got $s")
+      AmsSketch.joinSizeEstimate(AmsSketch.build(a.table(0), a.str(1), s.toInt),
+        AmsSketch.build(a.table(2), a.str(3), s.toInt))
+    },
+    tvf("seq_patterns", classOf[SeqPatterns.type],
+      "table, keyCol, tsCol, tiebreakCol, stateCol, minSupport",
+      "sequential trigram mining with Markov-surprise: (a, b, c, n, users, surprise_bp).") { a =>
+      val sup = a.long(5)
+      require(sup >= 1, s"seq_patterns: minSupport must be >= 1, got $sup")
+      SeqPatterns.trigramSurprise(a.table(0), a.str(1), a.str(2), a.str(3), a.str(4), sup)
+    },
+    tvf("weighted_quantiles", classOf[Quantiles.type], "table, groupCol, valueCol, weightCol",
+      "exact weighted p25/p50/p75/p95 per group from the weight-summed value grain: " +
+        "(group, w_total, p25, p50, p75, p95).") { a =>
+      Quantiles.weighted(a.table(0), a.str(1), a.str(2), a.str(3),
         Seq(("p25", 1L, 4L), ("p50", 1L, 2L), ("p75", 3L, 4L), ("p95", 19L, 20L)))
-      .queryExecution.logical
-  }
-
-  private[graft] def targetEncodeLooPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "target_encode_loo"
-    require(
-      exprs.length == 4,
-      s"$n expects (table, idCol, categoryCol, labelCol), got ${exprs.length} arguments")
-    graft.operators.TargetEncoding
-      .leaveOneOut(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "idCol"),
-        strArg(n, exprs(2), "categoryCol"),
-        strArg(n, exprs(3), "labelCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def negativeSamplePlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "negative_sample"
-    require(
-      exprs.length == 5,
-      s"$n expects (table, userCol, itemCol, numItems, k), got ${exprs.length} arguments")
-    val numItems = longArg(n, exprs(3), "numItems")
-    val k = longArg(n, exprs(4), "k")
-    require(k >= 1 && k <= Int.MaxValue, s"$n: k must be a positive int, got $k")
-    graft.operators.NegativeSampling
-      .sample(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "userCol"),
-        strArg(n, exprs(2), "itemCol"),
-        numItems,
-        k.toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def lorenzGiniPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "lorenz_gini"
-    require(
-      exprs.length == 2,
-      s"$n expects (table, entityCol), got ${exprs.length} arguments")
-    graft.operators.Concentration
-      .lorenz(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "entityCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def blockingQualityPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "blocking_quality"
-    require(
-      exprs.length == 5,
-      s"$n expects (blocksTable, clustersTable, idCol, blockCol, clusterCol), got ${exprs.length} arguments")
-    graft.operators.BlockingQuality
-      .report(
-        SparkSession.active.table(strArg(n, exprs.head, "blocksTable")),
-        SparkSession.active.table(strArg(n, exprs(1), "clustersTable")),
-        strArg(n, exprs(2), "idCol"),
-        strArg(n, exprs(3), "blockCol"),
-        strArg(n, exprs(4), "clusterCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def diffInDiffPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "diff_in_diff"
-    require(
-      exprs.length == 8,
-      s"$n expects (table, armCol, periodCol, yCol, treatLabel, ctrlLabel, preLabel, postLabel), got ${exprs.length} arguments")
-    graft.operators.DiffInDiff
-      .estimate(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "armCol"),
-        strArg(n, exprs(2), "periodCol"),
-        strArg(n, exprs(3), "yCol"),
-        strArg(n, exprs(4), "treatLabel"),
-        strArg(n, exprs(5), "ctrlLabel"),
-        strArg(n, exprs(6), "preLabel"),
-        strArg(n, exprs(7), "postLabel"))
-      .queryExecution.logical
-  }
-
-  private[graft] def fanoBurstinessPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "fano_burstiness"
-    require(
-      exprs.length == 3,
-      s"$n expects (table, keyCol, bucketCol), got ${exprs.length} arguments")
-    graft.operators.Burstiness
-      .fano(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "keyCol"),
-        strArg(n, exprs(2), "bucketCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def hitsPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "hits_scores"
-    require(
-      exprs.length == 2,
-      s"$n expects (table, iters), got ${exprs.length} arguments")
-    val iters = longArg(n, exprs(1), "iters")
-    require(iters >= 1 && iters <= 4, s"$n: iters must be in [1, 4], got $iters")
-    graft.operators.Hits
-      .scores(SparkSession.active.table(strArg(n, exprs.head, "table")), iters.toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def hitsConvergedPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "hits_converged"
-    require(
-      exprs.length == 2,
-      s"$n expects (table, iters), got ${exprs.length} arguments")
-    val iters = longArg(n, exprs(1), "iters")
-    require(iters >= 1, s"$n: iters must be >= 1, got $iters")
-    graft.operators.Hits
-      .normalizedScores(
-        SparkSession.active.table(strArg(n, exprs.head, "table")), iters.toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def modularityPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "modularity"
-    require(
-      exprs.length == 2,
-      s"$n expects (edgesTable, labelsTable), got ${exprs.length} arguments")
-    graft.operators.Modularity
-      .score(
-        SparkSession.active.table(strArg(n, exprs.head, "edgesTable")),
-        SparkSession.active.table(strArg(n, exprs(1), "labelsTable")))
-      .queryExecution.logical
-  }
-
-  private[graft] def chi2IndependencePlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "chi2_independence"
-    require(
-      exprs.length == 3,
-      s"$n expects (table, xCol, yCol), got ${exprs.length} arguments")
-    graft.operators.ChiSquare
-      .independence(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "xCol"),
-        strArg(n, exprs(2), "yCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def conformalCalibratePlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "conformal_calibrate"
-    require(
-      exprs.length == 5,
-      s"$n expects (calTable, testTable, scoreCol, alphaNum, alphaDen), " +
-        s"got ${exprs.length} arguments")
-    graft.operators.Conformal
-      .calibrate(
-        SparkSession.active.table(strArg(n, exprs.head, "calTable")),
-        SparkSession.active.table(strArg(n, exprs(1), "testTable")),
-        strArg(n, exprs(2), "scoreCol"),
-        longArg(n, exprs(3), "alphaNum"),
-        longArg(n, exprs(4), "alphaDen"))
-      .queryExecution.logical
-  }
-
-  private[graft] def bcubedPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "bcubed"
-    require(
-      exprs.length == 3,
-      s"$n expects (table, clusterCol, labelCol), got ${exprs.length} arguments")
-    graft.operators.BCubed
-      .score(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "clusterCol"),
-        strArg(n, exprs(2), "labelCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def fleschPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "flesch"
-    require(
-      exprs.length == 3,
-      s"$n expects (table, idCol, textCol), got ${exprs.length} arguments")
-    graft.operators.Readability
-      .flesch(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "idCol"),
-        strArg(n, exprs(2), "textCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def sweepCutPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "sweep_cut"
-    require(
-      exprs.length == 3,
-      s"$n expects (scoresTable, edgesTable, m), got ${exprs.length} arguments")
-    graft.operators.SweepCut
-      .sweep(
-        SparkSession.active.table(strArg(n, exprs.head, "scoresTable")),
-        SparkSession.active.table(strArg(n, exprs(1), "edgesTable")),
-        longArg(n, exprs(2), "m").toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def ktrussPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "ktruss"
-    require(
-      exprs.length == 3,
-      s"$n expects (edgesTable, k, rounds), got ${exprs.length} arguments")
-    graft.operators.Truss
-      .peel(
-        SparkSession.active.table(strArg(n, exprs.head, "edgesTable")),
-        longArg(n, exprs(1), "k").toInt,
-        longArg(n, exprs(2), "rounds").toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def srmCheckPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "srm_check"
-    require(
-      exprs.length == 6,
-      s"$n expects (table, armCol, aLabel, bLabel, expectA, expectB), " +
-        s"got ${exprs.length} arguments")
-    graft.operators.SampleRatio
-      .check(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "armCol"),
-        strArg(n, exprs(2), "aLabel"),
-        strArg(n, exprs(3), "bLabel"),
-        longArg(n, exprs(4), "expectA"),
-        longArg(n, exprs(5), "expectB"))
-      .queryExecution.logical
-  }
-
-  private[graft] def rboPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "rbo"
-    require(
-      exprs.length == 8,
-      s"$n expects (xTable, yTable, qCol, dCol, rankCol, k, pNum, pDen), " +
-        s"got ${exprs.length} arguments")
-    graft.operators.Rbo
-      .perQuery(
-        SparkSession.active.table(strArg(n, exprs.head, "xTable")),
-        SparkSession.active.table(strArg(n, exprs(1), "yTable")),
-        strArg(n, exprs(2), "qCol"),
-        strArg(n, exprs(3), "dCol"),
-        strArg(n, exprs(4), "rankCol"),
-        longArg(n, exprs(5), "k").toInt,
-        longArg(n, exprs(6), "pNum"),
-        longArg(n, exprs(7), "pDen"))
-      .queryExecution.logical
-  }
-
-  private[graft] def smdBalancePlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "smd_balance"
-    require(
-      exprs.length == 5,
-      s"$n expects (table, armCol, xCol, aLabel, bLabel), got ${exprs.length} arguments")
-    graft.operators.Balance
-      .smd(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "armCol"),
-        strArg(n, exprs(2), "xCol"),
-        strArg(n, exprs(3), "aLabel"),
-        strArg(n, exprs(4), "bLabel"))
-      .queryExecution.logical
-  }
-
-  private[graft] def mannKendallPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "mann_kendall"
-    require(
-      exprs.length == 3,
-      s"$n expects (table, tCol, xCol), got ${exprs.length} arguments")
-    graft.operators.TrendTest
-      .mannKendall(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "tCol"),
-        strArg(n, exprs(2), "xCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def benfordAuditPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "benford_audit"
-    require(
-      exprs.length == 2,
-      s"$n expects (table, valueCol), got ${exprs.length} arguments")
-    graft.operators.Benford
-      .firstDigit(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "valueCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def effectiveSampleSizePlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "effective_sample_size"
-    require(
-      exprs.length == 3,
-      s"$n expects (table, groupCol, wCol), got ${exprs.length} arguments")
-    graft.operators.EffectiveSampleSize
-      .perGroup(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        Seq(strArg(n, exprs(1), "groupCol")),
-        strArg(n, exprs(2), "wCol"))
-      .queryExecution.logical
-  }
-
-  private[graft] def assortativityPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "assortativity"
-    require(exprs.length == 1, s"$n expects (table), got ${exprs.length} arguments")
-    graft.operators.GraphStats
-      .assortativity(SparkSession.active.table(strArg(n, exprs.head, "table")))
-      .queryExecution.logical
-  }
-
-  private[graft] def edgeSupportPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "edge_support"
-    require(exprs.length == 1, s"$n expects (table), got ${exprs.length} arguments")
-    graft.operators.Triangles
-      .edgeSupport(SparkSession.active.table(strArg(n, exprs.head, "table")))
-      .queryExecution.logical
-  }
-
-  private[graft] def bipartiteProjectPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "bipartite_project"
-    require(
-      exprs.length == 5,
-      s"$n expects (table, userCol, itemCol, minShared, maxUserDegree), got ${exprs.length} arguments")
-    val minShared = longArg(n, exprs(3), "minShared")
-    val cap = longArg(n, exprs(4), "maxUserDegree")
-    require(cap >= 2 && cap <= Int.MaxValue, s"$n: maxUserDegree must be an int >= 2, got $cap")
-    graft.operators.BipartiteProject
-      .project(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "userCol"),
-        strArg(n, exprs(2), "itemCol"),
-        minShared,
-        cap.toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def expSmoothingPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "exp_smoothing"
-    require(
-      exprs.length == 5,
-      s"$n expects (table, keyCol, bucketCol, valueCol, kLog2), got ${exprs.length} arguments")
-    val k = longArg(n, exprs(4), "kLog2")
-    require(k >= 1 && k <= 20, s"$n: kLog2 must be in [1, 20], got $k")
-    graft.operators.ExpSmoothing
-      .ema(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "keyCol"),
-        strArg(n, exprs(2), "bucketCol"),
-        strArg(n, exprs(3), "valueCol"),
-        k.toInt)
-      .queryExecution.logical
-  }
-
-  private[graft] def twoProportionPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "two_proportion_z"
-    require(
-      exprs.length == 5,
-      s"$n expects (table, groupCol, successCol, aLabel, bLabel), got ${exprs.length} arguments")
-    graft.operators.Proportions
-      .zTest(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "groupCol"),
-        strArg(n, exprs(2), "successCol"),
-        strArg(n, exprs(3), "aLabel"),
-        strArg(n, exprs(4), "bLabel"))
-      .queryExecution.logical
-  }
-
-  private[graft] def theilSenPlan(exprs: Seq[Expression]): LogicalPlan = {
-    val n = "theilsen_trend"
-    require(
-      exprs.length == 4,
-      s"$n expects (table, keyCol, xCol, yCol), got ${exprs.length} arguments")
-    graft.operators.TheilSen
-      .medianSlope(
-        SparkSession.active.table(strArg(n, exprs.head, "table")),
-        strArg(n, exprs(1), "keyCol"),
-        strArg(n, exprs(2), "xCol"),
-        strArg(n, exprs(3), "yCol"))
-      .queryExecution.logical
-  }
+    },
+    tvf("target_encode_loo", classOf[TargetEncoding.type], "table, idCol, categoryCol, labelCol",
+      "leave-one-out target encoding in ppm with global-prior fallback: (id, category, " +
+        "y, enc_ppm).") { a =>
+      TargetEncoding.leaveOneOut(a.table(0), a.str(1), a.str(2), a.str(3))
+    },
+    tvf("negative_sample", classOf[NegativeSampling.type], "table, userCol, itemCol, numItems, k",
+      "deterministic md5 hash-draw negatives per user from a dense item space: (user, " +
+        "item, draw).") { a =>
+      val k = a.long(4)
+      require(k >= 1 && k <= Int.MaxValue, s"negative_sample: k must be a positive int, got $k")
+      NegativeSampling.sample(a.table(0), a.str(1), a.str(2), a.long(3), k.toInt)
+    },
+    tvf("lorenz_gini", classOf[Concentration.type], "table, entityCol",
+      "Lorenz concentration table + exact Gini over the count-of-counts histogram: (t, " +
+        "m, cum_entities, cum_weight, entity_share_bp, weight_share_bp, gini_ppm).") { a =>
+      Concentration.lorenz(a.table(0), a.str(1))
+    },
+    tvf("blocking_quality", classOf[BlockingQuality.type],
+      "blocksTable, clustersTable, idCol, blockCol, clusterCol",
+      "ER blocking report from size histograms: (n, truth_pairs, cand_pairs, " +
+        "coblocked_truth_pairs, completeness_bp, reduction_bp).") { a =>
+      BlockingQuality.report(a.table(0), a.table(1), a.str(2), a.str(3), a.str(4))
+    },
+    tvf("diff_in_diff", classOf[DiffInDiff.type],
+      "table, armCol, periodCol, yCol, treatLabel, ctrlLabel, preLabel, postLabel",
+      "difference-in-differences from the 2x2 cell means in exact ppm.") { a =>
+      DiffInDiff.estimate(a.table(0), a.str(1), a.str(2), a.str(3), a.str(4), a.str(5), a.str(6),
+        a.str(7))
+    },
+    tvf("fano_burstiness", classOf[Burstiness.type], "table, keyCol, bucketCol",
+      "Fano factor of per-bucket counts per key over the data's bucket domain: (k, " +
+        "n_events, n_active_buckets, fano_ppm).") { a =>
+      Burstiness.fano(a.table(0), a.str(1), a.str(2))
+    },
+    tvf("hits_scores", classOf[Hits.type], "table, iters",
+      "unrolled unnormalized HITS over directed edges (src, dst): (id, auth, hub) exact " +
+        "integer walk counts.") { a =>
+      val iters = a.long(1)
+      require(iters >= 1 && iters <= 4, s"hits_scores: iters must be in [1, 4], got $iters")
+      Hits.scores(a.table(0), iters.toInt)
+    },
+    tvf("hits_converged", classOf[Hits.type], "table, iters",
+      "ppm-of-max normalized HITS fixed point over directed edges (src, dst): (id, " +
+        "auth_ppm, hub_ppm), any iteration depth.") { a =>
+      val iters = a.long(1)
+      require(iters >= 1, s"hits_converged: iters must be >= 1, got $iters")
+      Hits.normalizedScores(a.table(0), iters.toInt)
+    },
+    tvf("modularity", classOf[Modularity.type], "edgesTable, labelsTable",
+      "Newman Q of a community assignment in exact ppm: (label, n_nodes, e_in, d_tot, " +
+        "contrib_ppm, modularity_ppm).") { a =>
+      Modularity.score(a.table(0), a.table(1))
+    },
+    tvf("chi2_independence", classOf[ChiSquare.type], "table, xCol, yCol",
+      "chi-square independence test of two categoricals, exact ppm contribs incl. absent " +
+        "cells: (x, y, o, r_tot, c_tot, contrib_ppm, chi2_ppm, dof).") { a =>
+      ChiSquare.independence(a.table(0), a.str(1), a.str(2))
+    },
+    tvf("conformal_calibrate", classOf[Conformal.type],
+      "calTable, testTable, scoreCol, alphaNum, alphaDen",
+      "split-conformal threshold at the exact ceil((n+1)(1-alpha)) rank plus realized " +
+        "test coverage: (n_cal, k, q_hat, exact, n_test, n_covered, coverage_ppm).") { a =>
+      Conformal.calibrate(a.table(0), a.table(1), a.str(2), a.long(3), a.long(4))
+    },
+    tvf("bcubed", classOf[BCubed.type], "table, clusterCol, labelCol",
+      "B-cubed item-weighted clustering evaluation vs gold labels in exact ppm: (n, " +
+        "n_clusters, n_labels, p_ppm, r_ppm, f1_ppm).") { a =>
+      BCubed.score(a.table(0), a.str(1), a.str(2))
+    },
+    tvf("flesch", classOf[Readability.type], "table, idCol, textCol",
+      "Flesch reading-ease in exact milli-scale integers with defined surrogate counts: " +
+        "(id, words, sentences, syllables, flesch_milli, band).") { a =>
+      Readability.flesch(a.table(0), a.str(1), a.str(2))
+    },
+    tvf("sweep_cut", classOf[SweepCut.type], "scoresTable, edgesTable, m",
+      "ACL conductance sweep over score/degree-ranked nodes: (rank, id, score, degree, " +
+        "vol, cut, cond_ppm, best_rank).") { a =>
+      SweepCut.sweep(a.table(0), a.table(1), a.int(2))
+    },
+    tvf("ktruss", classOf[Truss.type], "edgesTable, k, rounds",
+      "k-truss by fixed-round synchronous edge peeling over undirected edges (a, b): " +
+        "surviving (a, b, support), a < b.") { a =>
+      Truss.peel(a.table(0), a.int(1), a.int(2))
+    },
+    tvf("srm_check", classOf[SampleRatio.type], "table, armCol, aLabel, bLabel, expectA, expectB",
+      "sample-ratio-mismatch chi-square vs the design ratio in exact ppm: (n_a, n_b, " +
+        "expect_a, expect_b, a_share_ppm, expected_a_ppm, srm_ppm, srm_alarm).") { a =>
+      SampleRatio.check(a.table(0), a.str(1), a.str(2), a.str(3), a.long(4), a.long(5))
+    },
+    tvf("rbo", classOf[Rbo.type], "xTable, yTable, qCol, dCol, rankCol, k, pNum, pDen",
+      "rank-biased overlap of two rankings per query at depth k, exact ppm: (q, " +
+        "n_matched, rbo_ppm).") { a =>
+      Rbo.perQuery(a.table(0), a.table(1), a.str(2), a.str(3), a.str(4), a.int(5), a.long(6),
+        a.long(7))
+    },
+    tvf("smd_balance", classOf[Balance.type], "table, armCol, xCol, aLabel, bLabel",
+      "exact squared standardized mean difference across two arms: (n_a, n_b, " +
+        "mean_a_ppm, mean_b_ppm, var_a, var_b, smd2_ppm, balanced).") { a =>
+      Balance.smd(a.table(0), a.str(1), a.str(2), a.str(3), a.str(4))
+    },
+    tvf("mann_kendall", classOf[TrendTest.type], "table, tCol, xCol",
+      "Mann-Kendall trend test over a bounded unique time grain: (n, s, var18, z2_ppm), " +
+        "z2 vs chi-square(1) critical values.") { a =>
+      TrendTest.mannKendall(a.table(0), a.str(1), a.str(2))
+    },
+    tvf("benford_audit", classOf[Benford.type], "table, valueCol",
+      "Benford first-digit audit of positive integers vs the fixed ppm expectation: (d, " +
+        "o, expected_ppm, observed_ppm, contrib_ppm, chi2_ppm).") { a =>
+      Benford.firstDigit(a.table(0), a.str(1))
+    },
+    tvf("effective_sample_size", classOf[EffectiveSampleSize.type], "table, groupCol, wCol",
+      "Kish ESS and design effect of integer weights per group in exact ppm: (group, n, " +
+        "w_sum, w_sq_sum, ess_ppm, deff_ppm).") { a =>
+      EffectiveSampleSize.perGroup(a.table(0), Seq(a.str(1)), a.str(2))
+    },
+    tvf("assortativity", classOf[GraphStats.type], "table",
+      "whole-graph stats over undirected edges (a, b): (n_nodes, n_edges, max_degree, " +
+        "sum_d2, assortativity_ppm).") { a =>
+      GraphStats.assortativity(a.table(0))
+    },
+    tvf("edge_support", classOf[Triangles.type], "table",
+      "per-edge triangle support (k-truss building block) over undirected edges (a, b): " +
+        "(a, b, support).") { a =>
+      Triangles.edgeSupport(a.table(0))
+    },
+    tvf("bipartite_project", classOf[BipartiteProject.type],
+      "table, userCol, itemCol, minShared, maxUserDegree",
+      "item-item co-occurrence graph from (user, item) interactions: (i, j, n_shared).") { a =>
+      val cap = a.long(4)
+      require(cap >= 2 && cap <= Int.MaxValue,
+        s"bipartite_project: maxUserDegree must be an int >= 2, got $cap")
+      BipartiteProject.project(a.table(0), a.str(1), a.str(2), a.long(3), cap.toInt)
+    },
+    tvf("exp_smoothing", classOf[ExpSmoothing.type], "table, keyCol, bucketCol, valueCol, kLog2",
+      "integer-exact exponential smoothing (alpha = 1/2^k) per key with one-step-ahead " +
+        "forecasts: (k, t, x, forecast_x2k, err_x2k, level_x2k).") { a =>
+      val k = a.long(4)
+      require(k >= 1 && k <= 20, s"exp_smoothing: kLog2 must be in [1, 20], got $k")
+      ExpSmoothing.ema(a.table(0), a.str(1), a.str(2), a.str(3), k.toInt)
+    },
+    tvf("two_proportion_z", classOf[Proportions.type],
+      "table, groupCol, successCol, aLabel, bLabel",
+      "exact pooled two-proportion z-squared in ppm: (n_a, n_b, x_a, x_b, rate_a_ppm, " +
+        "rate_b_ppm, z2_ppm).") { a =>
+      Proportions.zTest(a.table(0), a.str(1), a.str(2), a.str(3), a.str(4))
+    })
 }

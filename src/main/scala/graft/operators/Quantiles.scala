@@ -23,6 +23,25 @@ import org.apache.spark.sql.functions._
   */
 object Quantiles {
 
+  /** Histogram rows `(group, __v, __c)` with the running count `__cum`
+    * and the group total `__n`. Totals are a |groups|-row aggregate joined
+    * back, NOT a second unordered window: the whole-partition window is
+    * another full buffered pass over the histogram at |groups|-task
+    * parallelism (guide §2.4). The join is null-safe, so a NULL group
+    * stays a group as it is for the window and the final groupBy, and it
+    * carries no broadcast hint: the planner sizes it, so a
+    * high-cardinality group column does not force a driver-side collect.
+    */
+  private def withTotals(hist: DataFrame, groupCol: String): DataFrame = {
+    val w = Window.partitionBy(groupCol).orderBy("__v")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val totals = hist.groupBy(col(groupCol).as("__g")).agg(sum("__c").as("__n"))
+    hist
+      .withColumn("__cum", sum("__c").over(w))
+      .join(totals, col(groupCol) <=> col("__g"))
+      .drop("__g")
+  }
+
   /** Output: (group, n, q_<name> per requested quantile), all integers.
     * `qs` entries are (colName, num, den) — e.g. ("p50", 1, 2).
     */
@@ -38,16 +57,7 @@ object Quantiles {
     val hist = df
       .groupBy(col(groupCol), col(valueCol).as("__v"))
       .agg(count(lit(1)).as("__c"))
-    val w = Window.partitionBy(groupCol).orderBy("__v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // group totals as a |groups|-row aggregate broadcast back in, NOT a
-    // second unordered window: the whole-partition window is another full
-    // buffered pass over the histogram at |groups|-task parallelism
-    // (guide §2.4 — same value, one histogram pass instead of two)
-    val totals = hist.groupBy(groupCol).agg(sum("__c").as("__n"))
-    val ranked = hist
-      .withColumn("__cum", sum("__c").over(w))
-      .join(broadcast(totals), Seq(groupCol))
+    val ranked = withTotals(hist, groupCol)
     val aggs = qs.map { case (name, num, den) =>
       min(when(col("__cum") >= expr(s"(${num}L * __n + ${den}L - 1L) div ${den}L"), col("__v")))
         .as(name)
@@ -91,14 +101,7 @@ object Quantiles {
           .otherwise(col(weightCol).cast("long")).as("__w0"))
       .groupBy(col(groupCol), col("__v"))
       .agg(sum("__w0").as("__c"))
-    val w = Window.partitionBy(groupCol).orderBy("__v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // group totals via a tiny aggregate + broadcast join, not a second
-    // whole-partition window pass — see exactQuantiles
-    val totals = hist.groupBy(groupCol).agg(sum("__c").as("__n"))
-    val ranked = hist
-      .withColumn("__cum", sum("__c").over(w))
-      .join(broadcast(totals), Seq(groupCol))
+    val ranked = withTotals(hist, groupCol)
     // __n = 0 (an all-zero-weight group) would make the ceil threshold 0
     // and '__cum >= 0' vacuously true — guard it so such a group reports
     // NULL quantiles instead of silently selecting its minimum value

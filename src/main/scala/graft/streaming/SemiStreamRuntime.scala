@@ -34,11 +34,23 @@ object SemiStreamRuntime {
     * measured 2.2× faster at this state scale. The clone shares the
     * SparkContext; the caller's session parallelism is never touched, and
     * no failure path can leave an altered conf behind.
+    *
+    * A new session starts from the SparkContext's conf, so the parent's
+    * runtime settings (`spark.conf.set` after startup: time zone, AQE,
+    * graft knobs) are copied over first. Static SQL confs such as
+    * `spark.sql.extensions` cannot be set on a session and are skipped;
+    * `spark.graft.*` keys are not SQL-registered, so `isModifiable`
+    * does not vouch for them, but they are graft's own runtime settings.
     */
   def stateSession(spark: SparkSession): SparkSession = {
     val n = spark.conf.getOption("spark.graft.state.partitions")
       .map(_.trim.toInt).filter(_ > 0).getOrElse(8)
     val s = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (k.startsWith("spark.graft.") || (k.startsWith("spark.sql.") && s.conf.isModifiable(k))) {
+        s.conf.set(k, v)
+      }
+    }
     s.conf.set("spark.sql.shuffle.partitions", n.toString)
     s
   }

@@ -154,17 +154,6 @@ object SemiStreamSimilarityJoin {
     // needs the schema captured at write time, not inference
     @volatile var outSchema: org.apache.spark.sql.types.StructType = null
 
-    // phase profiler (dev-only, env-gated — stderr lines, never in timings
-    // otherwise); the guide-§1 decomposition knob for this pipeline
-    val prof = sys.env.contains("SPARK_GRAFT_SIMJOIN_PROFILE")
-    def phase[T](batchId: Long, name: String)(f: => T): T = {
-      val s = System.nanoTime()
-      val r = f
-      if (prof) System.err.println(
-        s"SIMJOIN_PROF batch=$batchId $name ${(System.nanoTime() - s) / 1000000} ms")
-      r
-    }
-
     val perBatch: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
       val bToks = SimilarityJoin.tokenize(batch.toDF(), idCol, textCol)
       val probeRows = mode match {
@@ -198,7 +187,7 @@ object SemiStreamSimilarityJoin {
       // corpus: broadcast them into the verify join — the stored side is
       // the only big relation a batch ever shuffles against
       val xB = broadcast(bToks.select(col("sid").as("x_id"), col("toks").as("x_toks")))
-      phase(batchId, "probe+fetch+verify+write") { manager.processBatch(probeRows) { joined =>
+      manager.processBatch(probeRows) { joined =>
         // joined = probe rows ⋈ index rows on the key (hits ∪ fetched
         // misses) = the candidate pairs of this batch
         val lengthPruned = joined
@@ -249,14 +238,12 @@ object SemiStreamSimilarityJoin {
         // partition instead of double-appending
         val out = verified.withColumn("__batch", lit(batchId))
         outSchema = out.schema
-        phase(batchId, "verify+write") {
-          out.write
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch")
-            .parquet(outDir)
-        }
-      } }
+        out.write
+          .mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("__batch")
+          .parquet(outDir)
+      }
       ()
     }
 

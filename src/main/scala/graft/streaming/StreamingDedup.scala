@@ -240,23 +240,12 @@ object StreamingDedup {
     val sigState = store(spark, sigDir, sigSchema, Seq("sid", "band", "bsig"))
     val tokState = store(spark, tokDir, tokSchema, Seq("sid"))
 
-    // phase profiler (dev-only, env-gated — stderr lines, never in timings
-    // otherwise)
-    val prof = sys.env.contains("SPARK_GRAFT_DEDUP_PROFILE")
-    def phase[T](batchId: Long, name: String)(f: => T): T = {
-      val s = System.nanoTime()
-      val r = f
-      if (prof) System.err.println(
-        s"DEDUP_PROF batch=$batchId $name ${(System.nanoTime() - s) / 1000000} ms")
-      r
-    }
-
     val perBatch: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
       val t0 = System.nanoTime()
 
       // fold earlier, checkpoint-committed increments (never this batch's
       // own — a retry must still hide its failed attempt via batch<batchId)
-      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) phase(batchId, "compact") {
+      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
         val afterPublish: () => Unit =
           if (!crashInCompaction) () => ()
           else () => {
@@ -281,9 +270,7 @@ object StreamingDedup {
       // distinct bucket ids in this batch — ≤ nBuckets values, the ONLY
       // driver-side collects in the batch loop. This first action also
       // materializes both persists (no separate count() job)
-      val sigPbs = phase(batchId, "tokenize+sigs+sigPbs") {
-        bSigs.select("pb").distinct().collect().map(_.getInt(0)).toSeq
-      }
+      val sigPbs = bSigs.select("pb").distinct().collect().map(_.getInt(0)).toSeq
 
       // NO broadcast hints on the token-ARRAY relations (xB/yBatch): a hint
       // forces a driver collect + broadcast build of the batch's token
@@ -334,25 +321,11 @@ object StreamingDedup {
         .dropDuplicates("x_id", "y_id")
         .persist(storage)
 
-      // dev-only plan evidence (env-gated): dump the state-probe join's
-      // physical plan per batch — the artifact that proves which join
-      // strategy the salted/broadcast regime actually planned
-      sys.env.get("SPARK_GRAFT_DUMP_PLAN_DIR").foreach { d =>
-        val tag = if (saltArm > 0L) "salted" else "broadcast"
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$d/stateprobe_${tag}_batch$batchId.txt"),
-          stateCand.queryExecution
-            .explainString(org.apache.spark.sql.execution.FormattedMode)
-            .getBytes("UTF-8"))
-      }
-
       // token fetch of just the candidate y-docs (S5 keyed-fetch
       // reduction) against a bucket-pruned scan
       val needed = stateCand.select("y_id").distinct().persist(storage)
-      val tokPbs = phase(batchId, "stateCand+tokPbs") {
-        needed.select(bucketOf(nBuckets, col("y_id")).as("pb"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-      }
+      val tokPbs = needed.select(bucketOf(nBuckets, col("y_id")).as("pb"))
+        .distinct().collect().map(_.getInt(0)).toSeq
       val stateToks = tokState.read(batchId, tokPbs)
       val yFetch = stateToks
         .join(broadcast(needed), stateToks("sid") === needed("y_id"), "left_semi")
@@ -391,8 +364,8 @@ object StreamingDedup {
       // reads above already snapshotted their file lists at plan time, so
       // a concurrent append is invisible to them even before the
       // batch<batchId visibility filter drops it
-      phase(batchId, "verify+out+appends") { ConcurrentEffects.all(
-        () => phase(batchId, "effect:verify+out") {
+      ConcurrentEffects.all(
+        () =>
           bToks.select(col("sid").as("x_id"))
             .join(dupOf, Seq("x_id"), "left")
             .select(
@@ -401,17 +374,13 @@ object StreamingDedup {
             .repartition(1)
             .write
             .mode("overwrite")
-            .parquet(s"$outDir/batch=$batchId")
-        },
-        () => phase(batchId, "effect:sigAppend") {
-          sigState.append(bSigs.select(col("sid"), col("band"), col("bsig"), col("pb")), batchId)
-        },
-        () => phase(batchId, "effect:tokAppend") {
+            .parquet(s"$outDir/batch=$batchId"),
+        () =>
+          sigState.append(bSigs.select(col("sid"), col("band"), col("bsig"), col("pb")), batchId),
+        () =>
           tokState.append(
             bVToks.select(col("sid"), col("toks"), bucketOf(nBuckets, col("sid")).as("pb")),
-            batchId)
-        })
-      }
+            batchId))
 
       stateCand.unpersist(); needed.unpersist(); bToks.unpersist(); bSigs.unpersist()
       onBatch(batchId, (System.nanoTime() - t0) / 1000000L)

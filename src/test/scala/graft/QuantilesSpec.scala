@@ -79,6 +79,21 @@ class QuantilesSpec extends SparkSpec {
     assert(got == Seq(("ok", 2L, Some(5L)), ("z", 0L, None)))
   }
 
+  test("a NULL group is a group: exact_quantiles and weighted_quantiles TVFs keep it") {
+    Seq[(String, Long, Long)](("a", 1L, 1L), ("a", 3L, 1L), (null, 2L, 1L), (null, 8L, 3L))
+      .toDF("g", "v", "w").createOrReplaceTempView("q_null_groups")
+    val exact = spark.sql(
+        "SELECT * FROM exact_quantiles('q_null_groups', 'g', 'v', 'p50:1/2,max:1/1')")
+      .orderBy("g").collect()
+      .map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(exact == Seq((None, 2L, 2L, 8L), (Some("a"), 2L, 1L, 3L)))
+    val weighted = spark.sql("SELECT * FROM weighted_quantiles('q_null_groups', 'g', 'v', 'w')")
+      .orderBy("g").collect().map(r => (Option(r.getString(0)), r.getLong(1), r.getLong(3)))
+      .toSeq
+    // weights 1 + 3: the weighted median of the NULL group is 8, not 2
+    assert(weighted == Seq((None, 4L, 8L), (Some("a"), 2L, 1L)))
+  }
+
   test("the data-sized aggregation is partial (histogram shape, no row-level window)") {
     val df = Seq(("a", 1L), ("a", 1L), ("b", 2L)).toDF("g", "v")
     val plan = Quantiles.exactQuantiles(df, "g", "v", Seq(("p50", 1L, 2L)))

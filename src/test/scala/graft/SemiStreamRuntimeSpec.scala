@@ -12,6 +12,25 @@ import graft.streaming.{AdaptiveWindowController, CacheManager, CostRanked, Semi
 class SemiStreamRuntimeSpec extends SparkSpec {
   init()
 
+  test("stateSession carries the parent's runtime confs and sizes only its shuffle") {
+    val keys = Seq("spark.sql.session.timeZone", "spark.graft.salt.threshold")
+    val before = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+      spark.conf.set("spark.graft.salt.threshold", "123")
+      val s = SemiStreamRuntime.stateSession(spark)
+      assert(s.conf.get("spark.sql.session.timeZone") == "Asia/Kolkata")
+      assert(s.conf.get("spark.graft.salt.threshold") == "123")
+      assert(s.conf.get("spark.sql.shuffle.partitions") == "8")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    } finally {
+      before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+  }
+
   test("streaming semi-stream join accumulates to the plain join") {
     val li = Tables(spark, sfSmoke, "lineitem")
       .select(col("l_partkey").as("p_partkey"), col("l_orderkey"), col("l_quantity"))

@@ -3,6 +3,7 @@
 # without sbt (avoids the sbt server lock so benches and verifies can
 # overlap). Usage: tools/run_main.sh graft.Bench [args...]
 MAIN="$1"; shift
+REPO="$(dirname "$(cd "$(dirname "${BASH_SOURCE[0]}")" && pwd -P)")"
 ADDOPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -13,5 +14,5 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 exec java $ADDOPENS -Xmx${SPARK_DRIVER_MEM:-8g} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$REPO/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"
