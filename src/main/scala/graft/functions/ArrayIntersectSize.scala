@@ -125,10 +125,7 @@ object ArrayIntersectSize {
 
   /** Register `intersect_size` for SQL and [[intersect_size]] use. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "intersect_size",
-      exprs => ArrayIntersectSize(exprs.head, exprs(1)),
-      "built-in")
-    ()
+    Registration.registerIfAbsent(
+      spark, "intersect_size", exprs => ArrayIntersectSize(exprs.head, exprs(1)))
   }
 }

@@ -109,10 +109,7 @@ object CosineSimilarity {
 
   /** Register `cosine_sim` for SQL and [[cosine_sim]] use. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      exprs => CosineSimilarity(exprs.head, exprs(1)),
-      "built-in")
-    ()
+    Registration.registerIfAbsent(
+      spark, "cosine_sim", exprs => CosineSimilarity(exprs.head, exprs(1)))
   }
 }

@@ -76,10 +76,7 @@ object InterleaveBits {
     org.apache.spark.sql.functions.call_function("interleave_bits", a, b)
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "interleave_bits",
-      exprs => InterleaveBits(exprs.head, exprs(1)),
-      "built-in")
-    ()
+    Registration.registerIfAbsent(
+      spark, "interleave_bits", exprs => InterleaveBits(exprs.head, exprs(1)))
   }
 }

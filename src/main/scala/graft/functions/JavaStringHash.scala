@@ -50,10 +50,6 @@ object JavaStringHash {
 
   /** Register `java_hash` for SQL and [[java_hash]] use on a session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "java_hash",
-      exprs => JavaStringHash(exprs.head),
-      "built-in")
-    ()
+    Registration.registerIfAbsent(spark, "java_hash", exprs => JavaStringHash(exprs.head))
   }
 }

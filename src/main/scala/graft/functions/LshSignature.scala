@@ -118,10 +118,6 @@ object LshSignature {
 
   /** Register `lsh_signature` for SQL and [[lsh_signature]] use. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_signature",
-      builder,
-      "built-in")
-    ()
+    Registration.registerIfAbsent(spark, "lsh_signature", builder)
   }
 }

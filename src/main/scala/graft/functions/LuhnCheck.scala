@@ -85,10 +85,6 @@ object LuhnCheck {
 
   /** Register `luhn_check` for SQL use on a session. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "luhn_check",
-      exprs => LuhnCheck(exprs.head),
-      "built-in")
-    ()
+    Registration.registerIfAbsent(spark, "luhn_check", exprs => LuhnCheck(exprs.head))
   }
 }

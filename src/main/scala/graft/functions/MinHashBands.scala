@@ -118,10 +118,6 @@ object MinHashBands {
 
   /** Register `minhash_bands` for SQL and [[minhash_bands]] use. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_bands",
-      builder,
-      "built-in")
-    ()
+    Registration.registerIfAbsent(spark, "minhash_bands", builder)
   }
 }

@@ -59,10 +59,6 @@ object NfcNormalize {
     org.apache.spark.sql.functions.call_function("nfc_normalize", c)
 
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize",
-      exprs => NfcNormalize(exprs.head),
-      "built-in")
-    ()
+    Registration.registerIfAbsent(spark, "nfc_normalize", exprs => NfcNormalize(exprs.head))
   }
 }

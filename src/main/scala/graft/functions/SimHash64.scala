@@ -106,10 +106,6 @@ object SimHash64 {
 
   /** Register `simhash64` for SQL and [[simhash64]] use. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64",
-      exprs => SimHash64(exprs.head),
-      "built-in")
-    ()
+    Registration.registerIfAbsent(spark, "simhash64", exprs => SimHash64(exprs.head))
   }
 }

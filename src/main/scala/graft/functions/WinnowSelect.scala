@@ -135,10 +135,6 @@ object WinnowSelect {
 
   /** Register `winnow_select` for SQL and [[winnow_select]] use. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_select",
-      builder,
-      "built-in")
-    ()
+    Registration.registerIfAbsent(spark, "winnow_select", builder)
   }
 }

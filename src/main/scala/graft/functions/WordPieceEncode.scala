@@ -157,10 +157,6 @@ object WordPieceEncode {
 
   /** Register `wordpiece_encode` for SQL and [[wordpiece_encode]] use. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "wordpiece_encode",
-      builder,
-      "built-in")
-    ()
+    Registration.registerIfAbsent(spark, "wordpiece_encode", builder)
   }
 }

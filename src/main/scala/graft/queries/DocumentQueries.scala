@@ -335,7 +335,7 @@ object DocumentQueries {
       val toks = SimilarityJoin.tokenize(t(s, dir, "documents"), "doc_id", "text")
       val groups = SimilarityJoin.groupTable(s, toks, 0.8, 0.95)
       val sigs = SimilarityJoin.indexSignatures(toks, groups)
-      val out = java.nio.file.Files.createTempDirectory("graft-sigidx-").toString
+      val out = graft.streaming.SemiStreamRuntime.tempDir("sigidx-").toString
       sigs.write.mode("overwrite").parquet(out)
       s.read.parquet(out)
         .groupBy("sid")
@@ -681,7 +681,7 @@ object DocumentQueries {
       val emb = t(s, dir, "embeddings")
       val corpus = emb.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"))
       val (cent, asg) = SimilaritySearch.buildIvfIndex(corpus, nCells = 64)
-      val out = java.nio.file.Files.createTempDirectory("graft-ivfidx-").toString
+      val out = graft.streaming.SemiStreamRuntime.tempDir("ivfidx-").toString
       cent.write.mode("overwrite").parquet(s"$out/centroids")
       asg.write.mode("overwrite").partitionBy("cell").parquet(s"$out/assigned")
       val queries = emb.filter(col("vec_id") >= 10 && col("vec_id") < 20)
@@ -1351,8 +1351,7 @@ object DocumentQueries {
     "q174_phrase_search" -> ((s, dir) => {
       import graft.operators.KeywordSearch
       val docs = t(s, dir, "documents")
-      val idx = java.nio.file.Files
-        .createTempDirectory("graft-postings-").toString + "/idx"
+      val idx = graft.streaming.SemiStreamRuntime.tempDir("postings-").toString + "/idx"
       KeywordSearch.buildPostings(docs, "doc_id", "text")
         .repartitionByRange(col("token"))
         .sortWithinPartitions("token")

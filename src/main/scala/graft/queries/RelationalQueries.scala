@@ -549,7 +549,7 @@ object RelationalQueries {
     // CORRECTNESS row), and the asserted count ships as a compared
     // output column — the plan shape itself is hash-checked.
     "q242_bucketed_join_plan" -> ((s, dir) => {
-      val wh = java.nio.file.Files.createTempDirectory("graft-q242-wh-").toString
+      val wh = graft.streaming.SemiStreamRuntime.tempDir("q242-wh-").toString
       val tag = java.util.UUID.randomUUID().toString.replace("-", "")
       val liT = s"q242_li_$tag"
       val pT = s"q242_part_$tag"

@@ -44,7 +44,7 @@ object SeqMatchQueries {
   private def seriesAndIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     indexCache.getOrElseUpdate((s, dir), {
       val series = deltaSeries(Tables(s, dir, "events"))
-      val idxDir = java.nio.file.Files.createTempDirectory("graft-meanidx-")
+      val idxDir = graft.streaming.SemiStreamRuntime.tempDir("meanidx-")
         .resolve("idx").toString
       SubsequenceMatch.meanIndex(series)
         .repartition(col("w"))

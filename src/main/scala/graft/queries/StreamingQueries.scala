@@ -151,8 +151,7 @@ object StreamingQueries {
     "q111_kv_pointfetch_join" -> ((s, dir) => {
       import graft.sources.KeyValueStore
       val part = t(s, dir, "part").select("p_partkey", "p_brand")
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-kv-q111-").toString + "/store"
+      val root = SemiStreamRuntime.tempDir("kv-q111-").toString + "/store"
       KeyValueStore.write(part, root, "p_partkey", "p_brand", 64)
       val kvStored = KeyValueStore.read(s, root)
         .select(col("key").as("p_partkey"), col("value").as("p_brand"))
@@ -181,10 +180,7 @@ object StreamingQueries {
       val ev = Tables(s, dir, "events")
         .select("event_id", "ts", "event_type", "value")
       val staged = SemiStreamRuntime.stage(ev, "event_id", 6)
-      // statePartitions sized to the state (thousands of window-count
-      // rows), not the core count — see EventTimeWindows.runToMemory
-      EventTimeWindows.completeCounts(s, staged, ev.schema, "1 hour",
-        statePartitions = Some(8))
+      EventTimeWindows.completeCounts(s, staged, ev.schema, "1 hour")
         .orderBy("ws", "event_type")
     }),
 
@@ -194,8 +190,7 @@ object StreamingQueries {
       val ev = Tables(s, dir, "events")
         .select("event_id", "ts", "event_type", "value")
       val staged = SemiStreamRuntime.stage(ev, "event_id", 6)
-      EventTimeWindows.completeCounts(s, staged, ev.schema, "1 hour", Some("30 minutes"),
-        statePartitions = Some(8))
+      EventTimeWindows.completeCounts(s, staged, ev.schema, "1 hour", Some("30 minutes"))
         .orderBy("ws", "event_type")
     }),
 

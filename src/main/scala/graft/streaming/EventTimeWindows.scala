@@ -1,12 +1,13 @@
 package graft.streaming
 
 import java.nio.file.Path
-import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
+
+import SemiStreamRuntime.{replayToMemory, Staged}
 
 /** Event-time windowed aggregation as a REAL streaming query (SURVEY §2.7
   * — the capability the reference lacks entirely: it is processing-time
@@ -26,48 +27,6 @@ import org.apache.spark.sql.types.StructType
   */
 object EventTimeWindows {
 
-  private val nameCounter = new AtomicLong(0)
-
-  /** `statePartitions` sizes the stateful aggregation's shuffle (pinned
-    * into the checkpoint at query start): the state store pays a
-    * per-partition cost EVERY trigger (provider open/commit/snapshot), so
-    * partitions should track state SIZE, not core count — window-count
-    * state of a few thousand rows runs 2.2× faster at 8 partitions than 32
-    * (same-session A/B, sf0.1). The session's setting is restored after
-    * the stream finishes; None keeps it untouched.
-    */
-  private def runToMemory(
-      spark: SparkSession,
-      staged: Path,
-      schema: StructType,
-      outputMode: String,
-      statePartitions: Option[Int],
-      build: DataFrame => DataFrame): DataFrame = {
-    val name = s"etw_${nameCounter.incrementAndGet()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-etw-ckpt-").toString
-    // the override runs on a CLONED session (shared SparkContext, isolated
-    // SQLConf) so concurrent queries on the caller's session never see the
-    // altered parallelism, and no failure path can leave it behind
-    val sess = statePartitions.fold(spark) { n =>
-      val s = spark.newSession()
-      s.conf.set("spark.sql.shuffle.partitions", n.toString)
-      s
-    }
-    val stream = sess.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-    val q = build(stream).writeStream
-      .outputMode(outputMode)
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    sess.table(name)
-  }
-
   /** Tumbling (or sliding, if `slide` is set) windowed counts + value sums
     * per event_type, complete mode: equals the batch aggregation over all
     * staged data.
@@ -85,9 +44,8 @@ object EventTimeWindows {
       schema: StructType,
       windowDur: String,
       slide: Option[String] = None,
-      watermark: String = "1 hour",
-      statePartitions: Option[Int] = None): DataFrame =
-    runToMemory(spark, staged, schema, "complete", statePartitions, { stream =>
+      watermark: String = "1 hour"): DataFrame =
+    replayToMemory(spark, Staged(staged.toString, schema), OutputMode.Complete()) { stream =>
       val win = slide match {
         case Some(s) => window(col("ts"), windowDur, s)
         case None    => window(col("ts"), windowDur)
@@ -101,7 +59,7 @@ object EventTimeWindows {
           col("event_type"),
           col("n"),
           col("sum_value"))
-    })
+    }
 
   /** Append-mode variant: only windows the watermark has closed are in the
     * output, and events older than the watermark are dropped on arrival.
@@ -111,9 +69,8 @@ object EventTimeWindows {
       staged: Path,
       schema: StructType,
       windowDur: String,
-      watermark: String,
-      statePartitions: Option[Int] = None): DataFrame =
-    runToMemory(spark, staged, schema, "append", statePartitions, { stream =>
+      watermark: String): DataFrame =
+    replayToMemory(spark, Staged(staged.toString, schema), OutputMode.Append()) { stream =>
       stream
         .withWatermark("ts", watermark)
         .groupBy(window(col("ts"), windowDur).as("w"))
@@ -121,5 +78,5 @@ object EventTimeWindows {
         .select(
           date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("ws"),
           col("n"))
-    })
+    }
 }

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** End-to-end driver gate for the Kafka-shaped [[ReplayLogSource]]: publish
   * a bounded feed into a log directory with the producer protocol
@@ -49,9 +46,7 @@ object ReplayLogJoin {
       parts: Int = 3,
       filesPerPart: Int = 2): DataFrame = {
     val spark = feed.sparkSession
-    val log = Files.createTempDirectory("graft-replaylog-").toString
-    val outDir = Files.createTempDirectory("graft-replaylog-out-").toString
-    val ckpt = Files.createTempDirectory("graft-replaylog-ckpt-").toString
+    val log = SemiStreamRuntime.tempDir("replaylog-")
 
     // producer simulation: k-ascending CSV lines, deterministic layout
     val rows = feed
@@ -64,12 +59,12 @@ object ReplayLogJoin {
         (((v % parts) + parts) % parts).toInt == p &&
           ((k / 10) % filesPerPart + 1).toInt == f
       }.map { case (k, v) => s"$k,$v" }.toSeq
-      ReplayLogSource.append(log, p, recs) // empty file keeps seqs aligned
+      ReplayLogSource.append(log.toString, p, recs) // empty file keeps seqs aligned
     }
 
-    val query = spark.readStream
+    val stream = spark.readStream
       .format("graft.streaming.ReplayLogSource")
-      .option("path", log)
+      .option("path", log.toString)
       .load()
       .select(
         split(col("value"), ",").getItem(0).cast("long").as("k"),
@@ -77,24 +72,11 @@ object ReplayLogJoin {
         col("partition").as("log_part"),
         col("file_seq"),
         col("line").as("line_no"))
-      .writeStream
-      .foreachBatch { (b: Dataset[Row], id: Long) =>
-        b.join(stored, b("v") === stored(storedKey))
-          .drop(storedKey)
-          .repartition(1)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-
-    val out = spark.read.parquet(outDir)
-      .drop("batch")
-      .transform(graft.core.Materialize.apply)
-    Seq(log, outDir, ckpt).foreach(d =>
-      SemiStreamRuntime.deleteRecursively(Paths.get(d)))
-    out
+    val sink = new SemiStreamRuntime.BatchSink(spark)
+    SemiStreamRuntime.replayForeachBatch(spark, SemiStreamRuntime.Source(stream, Some(log))) {
+      (b, id) =>
+        sink.write(id, b.join(stored, b("v") === stored(storedKey)).drop(storedKey).repartition(1))
+    }
+    sink.result
   }
 }

@@ -1,10 +1,15 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, LinkOption, Path, StandardCopyOption}
+import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Structured Streaming driver for the semi-stream join (SURVEY S1/S2):
   * `readStream` file source → `foreachBatch` → [[CacheManager.processBatch]]
@@ -18,6 +23,13 @@ import org.apache.spark.sql.streaming.Trigger
   * (`maxFilesPerTrigger=1` + `Trigger.AvailableNow`). In production the
   * source swaps for kafka/socket with no change to the per-batch logic —
   * `foreachBatch` sees the same (DataFrame, batchId) contract.
+  *
+  * This object is also the ONE replay harness every streaming operator
+  * runs through: [[replayToMemory]] and [[replayForeachBatch]] own the
+  * lifecycle (stage → `readStream` → sink → checkpoint →
+  * `awaitTermination` → cleanup), [[BatchSink]] is the one idempotent
+  * per-batch parquet output, and every temp dir lives under one per-JVM
+  * scratch root ([[tempDir]]) that a shutdown hook removes.
   */
 object SemiStreamRuntime {
 
@@ -55,16 +67,143 @@ object SemiStreamRuntime {
     s
   }
 
+  /** What a replay reads. */
+  sealed trait Input
+
+  /** Chunk files the caller staged (e.g. with [[stageByColumn]]) and owns:
+    * read, never deleted.
+    */
+  final case class Staged(dir: String, schema: StructType) extends Input
+
+  /** `df` spooled by the harness into `n` chunk files, chunk i = the rows
+    * whose int-valued `chunk` is i (see [[stageByColumn]]); the spool is
+    * deleted once the stream stops.
+    */
+  final case class Chunked(df: DataFrame, chunk: Column, n: Int) extends Input {
+    private[SemiStreamRuntime] def spool(): Path =
+      stageByColumn(df.withColumn("__chunk", chunk), "__chunk", n)
+  }
+
+  /** Any streaming frame (a custom source); `owned` is a dir the call
+    * wrote for it, deleted once the stream stops. The frame keeps its own
+    * session.
+    */
+  final case class Source(stream: DataFrame, owned: Option[Path] = None) extends Input
+
+  /** The chunk rule of [[stage]]: hash of `key` modulo `n`. */
+  def hashChunk(key: String, n: Int): Column = pmod(xxhash64(col(key)), lit(n))
+
+  private[graft] lazy val scratchRoot: Path = {
+    val root = Files.createTempDirectory("graft-")
+    Runtime.getRuntime.addShutdownHook(new Thread(() =>
+      try deleteRecursively(root) catch { case NonFatal(_) => () }))
+    root
+  }
+
+  /** A fresh dir under the per-JVM scratch root. It lives until its
+    * creator deletes it or the JVM exits.
+    */
+  def tempDir(prefix: String): Path = Files.createTempDirectory(scratchRoot, prefix)
+
+  private val queryIds = new AtomicLong(0)
+
+  /** The one replay lifecycle. Opens `input` on `spark` one chunk file per
+    * micro-batch, starts `sink`'s query under `Trigger.AvailableNow`, waits
+    * for it to stop, then deletes what the call created: a spooled input,
+    * the checkpoint and a source's owned dir. A caller-owned `workDir`
+    * keeps the checkpoint (`workDir/ckpt`) and a [[Chunked]] spool
+    * (`workDir/input`, written once, so a resumed run sees the file list
+    * its checkpoint recorded) for crash-resume.
+    */
+  private def replay(spark: SparkSession, input: Input, workDir: Option[String])(
+      sink: DataFrame => DataStreamWriter[Row]): Unit = {
+    val created = scala.collection.mutable.ListBuffer.empty[Path]
+    def owned(p: Path): String = { created += p; p.toString }
+    try {
+      val stream = input match {
+        case Source(s, dir) => created ++= dir; s
+        case Staged(dir, schema) => read(spark, dir, schema)
+        case c: Chunked =>
+          read(spark, workDir.fold(owned(c.spool()))(w => spoolOnce(c, s"$w/input")), c.df.schema)
+      }
+      val ckpt = workDir.fold(owned(tempDir("ckpt-")))(w => s"$w/ckpt")
+      sink(stream)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    } finally created.foreach(deleteRecursively)
+  }
+
+  private def read(spark: SparkSession, dir: String, schema: StructType): DataFrame =
+    spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir)
+
+  private def spoolOnce(c: Chunked, dir: String): String = {
+    val spark = c.df.sparkSession
+    val target = new HPath(dir)
+    if (!target.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(target))
+      FsMove.into(spark, new HPath(c.spool().toString), target)
+    dir
+  }
+
+  /** Replay `input` through `build` into a memory sink on a
+    * [[stateSession]] clone and return the sink's table. The temp view is
+    * dropped before returning: the frame holds the sink itself, so it
+    * still reads, and the rows are released with the frame instead of
+    * being pinned for the session's lifetime.
+    */
+  def replayToMemory(spark: SparkSession, input: Input, mode: OutputMode)(
+      build: DataFrame => Dataset[_]): DataFrame = {
+    val sess = stateSession(spark)
+    val name = s"replay_${queryIds.incrementAndGet()}"
+    try {
+      replay(sess, input, None)(
+        build(_).toDF().writeStream.outputMode(mode).format("memory").queryName(name))
+      sess.table(name)
+    } finally {
+      sess.catalog.dropTempView(name)
+      ()
+    }
+  }
+
+  /** Replay `input` on `spark` through `perBatch(batch, batchId)`, one
+    * chunk per micro-batch. `workDir`: see [[replay]].
+    */
+  def replayForeachBatch(spark: SparkSession, input: Input, workDir: Option[String] = None)(
+      perBatch: (DataFrame, Long) => Unit): Unit =
+    replay(spark, input, workDir)(_.writeStream.foreachBatch(perBatch))
+
+  /** The batchId-keyed idempotent parquet sink: batch b's output
+    * overwrites `dir/__batch=b`, so a batch retried after a crash replaces
+    * its own output instead of appending it twice, and no write commits
+    * across the whole dir. The schema is captured at write time (an
+    * all-empty run writes no data rows, so the final read cannot rely on
+    * inference); a resumed run that rewrote nothing infers it from the
+    * files. `dir` defaults to a fresh [[tempDir]], kept until the JVM
+    * exits because [[result]] reads it lazily.
+    */
+  final class BatchSink(spark: SparkSession, val dir: String = tempDir("out-").toString) {
+    @volatile private var schema: StructType = _
+
+    def write(batchId: Long, out: DataFrame): Unit = {
+      schema = out.schema
+      out.write.mode("overwrite").parquet(s"$dir/__batch=$batchId")
+    }
+
+    /** Every batch's rows, without the `__batch` column. */
+    def result: DataFrame =
+      Option(schema).fold(spark.read)(s => spark.read.schema(s.add("__batch", LongType)))
+        .parquet(dir)
+        .drop("__batch")
+  }
+
   /** Spool `df` into `n` deterministic single-file parquet chunks under a
     * fresh temp dir, ordered chunk_00000…chunk_n; rows are assigned by
     * hash of `chunkKey` so replay order (file mtime = write order) is
     * stable across runs.
     */
   def stage(df: DataFrame, chunkKey: String, n: Int): Path =
-    stageByColumn(
-      df.withColumn("__chunk", pmod(xxhash64(col(chunkKey)), lit(n))),
-      "__chunk",
-      n)
+    stageByColumn(df.withColumn("__chunk", hashChunk(chunkKey, n)), "__chunk", n)
 
   /** Spool with EXPLICIT chunk assignment: chunk i = rows whose `chunkCol`
     * equals i (the column is dropped from the staged files). Lets tests
@@ -78,87 +217,57 @@ object SemiStreamRuntime {
     * nondeterministic (observed breaking watermark tests).
     */
   def stageByColumn(df: DataFrame, chunkCol: String, n: Int): Path = {
-    val dir = Files.createTempDirectory("graft-stream-")
-    val scratch = dir.resolve("scratch")
-    df.repartition(n, col(chunkCol))
-      .write
-      .partitionBy(chunkCol)
-      .parquet(scratch.toString)
-    (0 until n).foreach { i =>
-      val target = dir.resolve(f"chunk_$i%05d.parquet")
-      val chunkDir = scratch.resolve(s"$chunkCol=$i")
-      if (Files.isDirectory(chunkDir)) {
-        val part = Files
-          .list(chunkDir)
-          .filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .findFirst()
-          .orElseThrow(() => new IllegalStateException(s"no parquet part in $chunkDir"))
-        Files.move(part, target, StandardCopyOption.ATOMIC_MOVE)
-      } else {
-        // empty chunk: still emit a file so batch numbering stays stable
-        df.drop(chunkCol).limit(0).coalesce(1).write.parquet(target.toString + ".tmp")
-        val part = Files.list(dir.resolve(target.getFileName.toString + ".tmp"))
-          .filter(p => p.getFileName.toString.endsWith(".parquet"))
-          .findFirst().orElseThrow()
-        Files.move(part, target, StandardCopyOption.ATOMIC_MOVE)
-        deleteRecursively(dir.resolve(target.getFileName.toString + ".tmp"))
+    val dir = tempDir("stream-")
+    try {
+      val scratch = dir.resolve("scratch")
+      df.repartition(n, col(chunkCol))
+        .write
+        .partitionBy(chunkCol)
+        .parquet(scratch.toString)
+      (0 until n).foreach { i =>
+        val target = dir.resolve(f"chunk_$i%05d.parquet")
+        val chunkDir = scratch.resolve(s"$chunkCol=$i")
+        if (Files.isDirectory(chunkDir)) {
+          val part = Files
+            .list(chunkDir)
+            .filter(p => p.getFileName.toString.endsWith(".parquet"))
+            .findFirst()
+            .orElseThrow(() => new IllegalStateException(s"no parquet part in $chunkDir"))
+          Files.move(part, target, StandardCopyOption.ATOMIC_MOVE)
+        } else {
+          // empty chunk: still emit a file so batch numbering stays stable
+          df.drop(chunkCol).limit(0).coalesce(1).write.parquet(target.toString + ".tmp")
+          val part = Files.list(dir.resolve(target.getFileName.toString + ".tmp"))
+            .filter(p => p.getFileName.toString.endsWith(".parquet"))
+            .findFirst().orElseThrow()
+          Files.move(part, target, StandardCopyOption.ATOMIC_MOVE)
+          deleteRecursively(dir.resolve(target.getFileName.toString + ".tmp"))
+        }
+        Files.setLastModifiedTime(
+          target,
+          java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
       }
-      Files.setLastModifiedTime(
-        target,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
+      deleteRecursively(scratch)
+    } catch {
+      case NonFatal(e) => deleteRecursively(dir); throw e
     }
-    deleteRecursively(scratch)
     dir
   }
 
-  /** Run the full streaming semi-stream join over a staged chunk dir:
-    * one micro-batch per chunk through `manager`, outputs appended to a
-    * parquet sink. Returns the accumulated output. Bag-semantics invariant:
+  /** Run the full streaming semi-stream join over `input`: one
+    * micro-batch per chunk through `manager`, outputs appended to a
+    * [[BatchSink]]. Returns the accumulated output. Bag-semantics invariant:
     * the accumulated output equals the plain `input ⋈ stored` join no matter
     * how the stream was chunked — caching only changes WHERE rows are served
     * from, never the join result (the correctness oracle relies on this).
     */
-  def run(
-      spark: SparkSession,
-      staged: Path,
-      schema: org.apache.spark.sql.types.StructType,
-      manager: CacheManager): DataFrame = {
-    val outDir = Files.createTempDirectory("graft-stream-out-").toString
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt-").toString
-
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-
-    // batchId-keyed idempotent sink: a batch retried after a crash
-    // REPLACES its own partition instead of double-appending (the same
-    // dynamic-overwrite recipe as StreamingDedup's state writes).
-    // Schema is captured at write time: an all-empty-batches run writes
-    // no data files, so the final read cannot rely on inference.
-    @volatile var outSchema: org.apache.spark.sql.types.StructType = null
-    val perBatch: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
-      manager.processBatch(batch) { out =>
-        val withB = out.withColumn("__batch", lit(batchId))
-        outSchema = withB.schema
-        withB.write
-          .mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch")
-          .parquet(outDir)
-      }
+  def run(spark: SparkSession, input: Input, manager: CacheManager): DataFrame = {
+    val sink = new BatchSink(spark)
+    replayForeachBatch(spark, input) { (batch, batchId) =>
+      manager.processBatch(batch)(sink.write(batchId, _))
       ()
     }
-
-    val query = stream.writeStream
-      .foreachBatch(perBatch)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-
-    require(outSchema != null, "stream ran no batches — no output schema")
-    spark.read.schema(outSchema).parquet(outDir).drop("__batch")
+    sink.result
   }
 
   /** Convenience: stage `input`, seed the cache, run the stream, return the
@@ -181,19 +290,20 @@ object SemiStreamRuntime {
       windowRule: WindowRule = HillClimbRule,
       fetchOverride: Option[DataFrame => DataFrame] = None): (DataFrame, Seq[CacheManager.BatchStats]) = {
     val spark = input.sparkSession
-    val staged = stage(input, chunkKey, chunks)
     val manager =
       new CacheManager(stored, cacheSeed, key, config, checkpointEvery, policy = policy,
         windowRule = windowRule, fetchOverride = fetchOverride)
     try {
-      val out = run(spark, staged, input.schema, manager)
+      val out = run(spark, Chunked(input, hashChunk(chunkKey, chunks), chunks), manager)
       (out, manager.stats.toList)
     } finally manager.close()
   }
 
   private[streaming] def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p))
-      Files.list(p).forEach(deleteRecursively(_))
+    if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS)) {
+      val children = Files.list(p)
+      try children.forEach(deleteRecursively(_)) finally children.close()
+    }
     Files.deleteIfExists(p)
     ()
   }

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.SimilarityJoin
 
@@ -134,10 +131,6 @@ object SemiStreamSimilarityJoin {
       windowRule = windowRule, saltFactors = saltFactors)
 
     // ---- stream side ----
-    val staged = SemiStreamRuntime.stage(docs.select(idCol, textCol), idCol, chunks)
-    val outDir = Files.createTempDirectory("graft-simstream-out-").toString
-    val ckpt = Files.createTempDirectory("graft-simstream-ckpt-").toString
-
     // stored-side verify tokens: pre-partitioned by the join key and
     // persisted IN THAT LAYOUT, so every micro-batch's verify join reuses
     // the stored side's distribution and shuffles only its own candidates
@@ -149,12 +142,8 @@ object SemiStreamSimilarityJoin {
         spark.sessionState.conf.numShufflePartitions, col("y_id"))
       .persist()
 
-    // a run where EVERY batch's output is empty writes no parquet data
-    // files (dynamic overwrite skips empty partitions), so the final read
-    // needs the schema captured at write time, not inference
-    @volatile var outSchema: org.apache.spark.sql.types.StructType = null
-
-    val perBatch: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
+    val sink = new SemiStreamRuntime.BatchSink(spark)
+    val perBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
       val bToks = SimilarityJoin.tokenize(batch.toDF(), idCol, textCol)
       val probeRows = mode match {
         case SegmentMode =>
@@ -234,36 +223,20 @@ object SemiStreamSimilarityJoin {
             size(col("x_toks")) + size(col("y_toks")) - col("inter"))
           .filter(col("inter").cast("double") / col("uni") >= tau)
           .select("x_id", "y_id", "inter", "uni")
-        // batchId-keyed idempotent sink: a retried batch replaces its own
-        // partition instead of double-appending
-        val out = verified.withColumn("__batch", lit(batchId))
-        outSchema = out.schema
-        out.write
-          .mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch")
-          .parquet(outDir)
+        sink.write(batchId, verified)
       }
       ()
     }
-
-    val query = spark.readStream
-      .schema(docs.select(idCol, textCol).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-      .writeStream
-      .foreachBatch(perBatch)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    SemiStreamRuntime.replayForeachBatch(
+      spark,
+      SemiStreamRuntime.Chunked(
+        docs.select(idCol, textCol), SemiStreamRuntime.hashChunk(idCol, chunks), chunks))(perBatch)
 
     val stats = manager.stats.toList
     manager.close()
     toks.unpersist(); indexP.unpersist(); hotKeys.unpersist(); yT.unpersist()
     freqOpt.foreach(_.unpersist())
     saltFactors.foreach(_.unpersist())
-    require(outSchema != null, "stream ran no batches — no output schema")
-    Result(spark.read.schema(outSchema).parquet(outDir).drop("__batch"), stats)
+    Result(sink.result, stats)
   }
 }

@@ -2,9 +2,9 @@ package graft.streaming
 
 import java.nio.file.Path
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Keyed custom state via `mapGroupsWithState` (SURVEY §2.7's keyed-state
   * variant — the `KeyValueGroupedDataset` form of cross-batch state, the
@@ -55,41 +55,18 @@ object StatefulSessionizer {
       gapSeconds: Long,
       maxEventsPerKey: Long = Long.MaxValue): DataFrame = {
     import spark.implicits._
-    val name = s"sess_${System.nanoTime()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sess-ckpt-").toString
-
-    // state-sized shuffle partitions for the keyed-state exchange (see
-    // SemiStreamRuntime.stateSession): the memory sink registers in the
-    // clone, so every read of the result table goes through `sess`
-    val sess = SemiStreamRuntime.stateSession(spark)
-    val stream = sess.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-
-    val typed: Dataset[Evt] = stream
-      .select(
-        col("user_id"),
-        col("ts").cast("long").as("ts_us"), // seconds; scaled below
-        col("event_id"))
-      .withColumn("ts_us", col("ts_us") * 1000000L)
-      .as[Evt]
-
-    val updates = typed
-      .groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout())(
-        updateState(gapSeconds * 1000000L, maxEventsPerKey))
-
-    val q = updates.toDF().writeStream
-      .outputMode(OutputMode.Update())
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    sess.table(name)
+    SemiStreamRuntime.replayToMemory(
+      spark, SemiStreamRuntime.Staged(staged.toString, schema), OutputMode.Update()) {
+      _.select(
+          col("user_id"),
+          col("ts").cast("long").as("ts_us"), // seconds; scaled below
+          col("event_id"))
+        .withColumn("ts_us", col("ts_us") * 1000000L)
+        .as[Evt]
+        .groupByKey(_.user_id)
+        .mapGroupsWithState(GroupStateTimeout.NoTimeout())(
+          updateState(gapSeconds * 1000000L, maxEventsPerKey))
+    }
       .groupBy("user_id")
       .agg(max("n_sessions").as("n_sessions"))
   }

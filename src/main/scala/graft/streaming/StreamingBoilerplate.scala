@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming frequent-line boilerplate monitor — the incremental sibling
   * of [[graft.operators.Boilerplate.frequentLines]]: as crawl increments
@@ -67,39 +67,18 @@ object StreamingBoilerplate {
       col(idCol).cast("long").as("docId"),
       least(expr(s"(CAST($idCol AS LONG) - ${lo}L) div ${per}L"), lit(chunks - 1L))
         .cast("int").as("chunk"))
-    val staged = SemiStreamRuntime.stageByColumn(
-      projected.withColumn("__chunk", col("chunk")), "__chunk", chunks)
-
-    val name = s"bp_${System.nanoTime()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-bp-ckpt-").toString
-    // state-sized shuffle partitions for the keyed-state exchange (see
-    // SemiStreamRuntime.stateSession): the memory sink registers in the
-    // clone, so every read of the result table goes through `sess`
-    val sess = SemiStreamRuntime.stateSession(spark)
-    val stream = sess.readStream
-      .schema(projected.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-    val lines = stream
-      .select(
-        col("source"), col("docId"), col("chunk"),
-        explode(split(col("text"), java.util.regex.Pattern.quote(delim))).as("raw"))
-      .select(col("source"), trim(col("raw")).as("line"), col("docId"), col("chunk"))
-      .filter(length(col("line")) > 0)
-      .as[In]
-    val promos = lines
-      .groupByKey(r => (r.source, r.line))
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (k: (String, String), it: Iterator[In], st: GroupState[Cnt]) => fold(k, it, st)(minDocs)
-      }
-    val q = promos.toDF().writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    sess.table(name).select("batch", "source", "line", "n_docs")
+    SemiStreamRuntime.replayToMemory(
+      spark, SemiStreamRuntime.Chunked(projected, col("chunk"), chunks), OutputMode.Append()) {
+      _.select(
+          col("source"), col("docId"), col("chunk"),
+          explode(split(col("text"), java.util.regex.Pattern.quote(delim))).as("raw"))
+        .select(col("source"), trim(col("raw")).as("line"), col("docId"), col("chunk"))
+        .filter(length(col("line")) > 0)
+        .as[In]
+        .groupByKey(r => (r.source, r.line))
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+          (k: (String, String), it: Iterator[In], st: GroupState[Cnt]) => fold(k, it, st)(minDocs)
+        }
+    }.select("batch", "source", "line", "n_docs")
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming CDC apply — [[graft.operators.Cdc.applyChangelog]] kept as
   * per-key state over a micro-batch change stream, emitting the
@@ -75,32 +75,13 @@ object StreamingCdc {
       least(expr(s"(CAST($seqCol AS LONG) - ${lo}L) div ${per}L"), lit(chunks - 1L))
         .cast("int").as("chunk"))
     // chunk rides BOTH as payload (fold reads it as the batch id) and as
-    // the staging column (partitionBy consumes the latter)
-    val staged = SemiStreamRuntime.stageByColumn(
-      projected.withColumn("__chunk", col("chunk")), "__chunk", chunks)
-
-    val name = s"cdc_${System.nanoTime()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cdc-ckpt-").toString
-    // state-sized shuffle partitions for the keyed-state exchange (see
-    // SemiStreamRuntime.stateSession): the memory sink registers in the
-    // clone, so every read of the result table goes through `sess`
-    val sess = SemiStreamRuntime.stateSession(spark)
-    val stream = sess.readStream
-      .schema(projected.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-    val rows = stream.as[Chg]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fold)
-    val q = rows.toDF().writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    sess.table(name).select(
+    // the chunk assignment
+    SemiStreamRuntime.replayToMemory(
+      spark, SemiStreamRuntime.Chunked(projected, col("chunk"), chunks), OutputMode.Append()) {
+      _.as[Chg]
+        .groupByKey(_.key)
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fold)
+    }.select(
       col("key").as(keyCol), col("batch"), col("op"), col("value").as(valueCol))
   }
 

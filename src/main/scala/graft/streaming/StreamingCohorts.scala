@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming retention cohorts: [[graft.operators.Cohorts]]'s triangle
   * maintained from an event stream with ONE long of state per user (the
@@ -59,36 +59,18 @@ object StreamingCohorts {
     require(!bounds.isNullAt(0), "empty events")
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
     val per = (hi - lo) / chunks + 1
-    val staged = SemiStreamRuntime.stageByColumn(
-      projected.withColumn(
-        "__chunk",
-        least(expr(s"(__tus - ${lo}L) div ${per}L"), lit(chunks - 1L)).cast("int")),
-      "__chunk",
-      chunks)
-
-    val name = s"cohorts_${System.nanoTime()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cohort-ckpt-").toString
-    // state-sized shuffle partitions for the keyed-state exchange (see
-    // SemiStreamRuntime.stateSession): the memory sink registers in the
-    // clone, so every read of the result table goes through `sess`
-    val sess = SemiStreamRuntime.stateSession(spark)
-    val stream = sess.readStream
-      .schema(projected.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-    val acts = stream.select("user_id", "period").as[CEv]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fold)
-    val q = acts.toDF().writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    val counts = sess.table(name)
+    val acts = SemiStreamRuntime.replayToMemory(
+      spark,
+      SemiStreamRuntime.Chunked(
+        projected,
+        least(expr(s"(__tus - ${lo}L) div ${per}L"), lit(chunks - 1L)).cast("int"),
+        chunks),
+      OutputMode.Append()) {
+      _.select("user_id", "period").as[CEv]
+        .groupByKey(_.user_id)
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fold)
+    }
+    val counts = acts
       .dropDuplicates("user_id", "period") // same (user, period) can recur across batches
       .groupBy(col("cohort").as("cohort_period"), (col("period") - col("cohort")).as("offset"))
       .agg(count(lit(1)).as("n_users"))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Data-quality monitoring ON INGEST — the streaming face of
   * [[graft.operators.Constraints]]: every micro-batch reports its
@@ -75,37 +75,18 @@ object StreamingConstraints {
       // array element would blow up the Seq[Boolean] encoder at runtime
       array(flagChecks.map(fc => coalesce(fc._2.cast("boolean"), lit(false))): _*)
         .as("flags"))
-    val staged = SemiStreamRuntime.stageByColumn(
-      projected.withColumn("__chunk", col("chunk")), "__chunk", chunks)
-
-    val name = s"sconstr_${System.nanoTime()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sconstr-ckpt-").toString
-    // state-sized shuffle partitions for the keyed-state exchange (see
-    // SemiStreamRuntime.stateSession): the memory sink registers in the
-    // clone, so every read of the result table goes through `sess`
-    val sess = SemiStreamRuntime.stateSession(spark)
-    val stream = sess.readStream
-      .schema(projected.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-    val q = stream.as[Chg]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fold)
-      .toDF()
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val verdicts = SemiStreamRuntime.replayToMemory(
+      spark, SemiStreamRuntime.Chunked(projected, col("chunk"), chunks), OutputMode.Append()) {
+      _.as[Chg]
+        .groupByKey(_.key)
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fold)
+    }
 
     // bounded rollup: ≤ batches rows in, ≤ batches × checks rows out
     val aggCols = (sum("n").as("n") +:
       flagChecks.indices.map(i => sum(expr(s"flagCounts[$i]")).as(s"__c$i"))) :+
       sum("newKeys").as("__new")
-    val perBatch = sess.table(name)
+    val perBatch = verdicts
       .groupBy("batch")
       .agg(aggCols.head, aggCols.tail: _*)
     // cumulative sums via a triangular self-join over the ≤ `chunks`-row
@@ -166,13 +147,13 @@ object StreamingConstraints {
     val verdicts =
       new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Long, Long, Boolean)]()
     val seen = new java.util.concurrent.atomic.AtomicLong(0L)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-sconstr-live-").toString
+    val ckpt = SemiStreamRuntime.tempDir("sconstr-live-")
     val flagged = stream.select(
       flagChecks.map(fc =>
         coalesce(fc._2.cast("boolean"), lit(false)).cast("long").as(s"__f_${fc._1}")): _*)
     val q = flagged.writeStream
       .outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckpt)
+      .option("checkpointLocation", ckpt.toString)
       .foreachBatch { (df: DataFrame, batchId: Long) =>
         val aggs = count(lit(1)).as("__n") +:
           flagChecks.map(fc => sum(col(s"__f_${fc._1}")).as(s"__c_${fc._1}"))
@@ -194,7 +175,7 @@ object StreamingConstraints {
         Thread.sleep(50)
     } finally {
       q.stop()
-      q.awaitTermination()
+      try q.awaitTermination() finally SemiStreamRuntime.deleteRecursively(ckpt)
     }
     import spark.implicits._
     import scala.jdk.CollectionConverters._

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
 import graft.operators.CountMin
@@ -54,28 +53,17 @@ object StreamingCountMin {
     }
     val maxCk = bounds.getLong(0)
     val per = maxCk / chunks + 1
-    val staged = SemiStreamRuntime.stageByColumn(
-      projected.withColumn(
-        "__chunk",
-        least(expr(s"ck div ${per}L"), lit(chunks - 1L)).cast("int")),
-      "__chunk",
-      chunks)
-
     val grid = Array.ofDim[Long](depth, width)
     // batchId gate: foreachBatch can REPLAY a batch after a failure, and
     // grid += is not idempotent — the same discipline as the repo's
     // batchId-keyed sinks, in-memory form (a durable deployment would
     // persist (lastBatch, grid) together)
     var lastFolded = -1L
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cms-ckpt-").toString
-    val stream = spark.readStream
-      .schema(projected.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    SemiStreamRuntime.replayForeachBatch(
+      spark,
+      SemiStreamRuntime.Chunked(
+        projected, least(expr(s"ck div ${per}L"), lit(chunks - 1L)).cast("int"), chunks)) {
+      (batch, batchId) =>
         if (batchId > lastFolded) {
           // bounded collect: ≤ depth·width rows whatever the batch holds
           CountMin.sketch(batch, "item", depth, width).collect().foreach { r =>
@@ -83,10 +71,7 @@ object StreamingCountMin {
           }
           lastFolded = batchId
         }
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    }
 
     val rows = for {
       r <- 0 until depth

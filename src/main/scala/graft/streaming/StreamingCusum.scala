@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Level-shift monitoring ON INGEST — the streaming face of
   * [[graft.operators.ChangePoint]]: per-bucket totals fold into keyed
@@ -67,33 +67,12 @@ object StreamingCusum {
       least(expr(s"(CAST($seqCol AS LONG) - ${lo}L) div ${per}L"), lit(chunks - 1L))
         .cast("int").as("chunk"),
       col(valueCol).cast("long").as("x"))
-    val staged = SemiStreamRuntime.stageByColumn(
-      projected.withColumn("__chunk", col("chunk")), "__chunk", chunks)
-
-    val name = s"scusum_${System.nanoTime()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-scusum-ckpt-").toString
-    // state-sized shuffle partitions for the keyed-state exchange (see
-    // SemiStreamRuntime.stateSession): the memory sink registers in the
-    // clone, so every read of the result table goes through `sess`
-    val sess = SemiStreamRuntime.stateSession(spark)
-    val q = sess.readStream
-      .schema(projected.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-      .as[Chg]
-      .groupByKey(_.bucket)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fold)
-      .toDF()
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    val upds = sess.table(name)
+    val upds = SemiStreamRuntime.replayToMemory(
+      spark, SemiStreamRuntime.Chunked(projected, col("chunk"), chunks), OutputMode.Append()) {
+      _.as[Chg]
+        .groupByKey(_.bucket)
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fold)
+    }
     // calibration window: the first batch must carry data
     val refRow = upds.filter(col("batch") === 0)
       .agg(expr(s"($refNum * sum(dx)) div ($refDen * count(DISTINCT bucket))").as("ref"))
@@ -113,7 +92,7 @@ object StreamingCusum {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wm = Window.partitionBy("b").orderBy("bucket")
       .rowsBetween(Window.unboundedPreceding, -1)
-    val out = snap
+    snap
       .withColumn("p", sum(col("x") - col("ref")).over(wp))
       .withColumn("mb", min("p").over(wm))
       .select(
@@ -124,13 +103,5 @@ object StreamingCusum {
           .as("cusum"),
         ((col("p") - least(lit(0L), col("p"), coalesce(col("mb"), col("p"))))
           > col("h")).as("alarm"))
-      // the (batches × buckets)-bounded result materializes eagerly so the
-      // memory-sink table, checkpoint dir, and staged chunk dir can all be
-      // released NOW instead of leaking for the session on repeated calls
-      .transform(graft.core.Materialize.apply)
-    sess.catalog.dropTempView(name)
-    SemiStreamRuntime.deleteRecursively(java.nio.file.Paths.get(ckpt))
-    SemiStreamRuntime.deleteRecursively(staged)
-    out
   }
 }

@@ -1,11 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.IntegerType
 
 import graft.operators.Decay
@@ -51,10 +47,6 @@ object StreamingDecay {
     require(chunks > 0 && genSecs > 0 && horizon >= 0 && horizon <= 50 && k > 0)
     val spark = events.sparkSession
 
-    val root = Files.createTempDirectory("graft-streamdecay-").toString
-    val inputDir = s"$root/input"
-    val outDir = s"$root/out"
-
     val projected = events.select(
       col(keyCol),
       col(tsSecCol).cast("long").as("__tsec"),
@@ -65,20 +57,15 @@ object StreamingDecay {
     require(!b.isNullAt(0), "StreamingDecay.run: empty input")
     val (lo, hi) = (b.getLong(0), b.getLong(1))
     val per = (hi - lo) / chunks + 1
-    val staged = SemiStreamRuntime.stageByColumn(
-      projected.withColumn(
-        "__chunk",
-        least(expr(s"(__tsec - ${lo}L) div ${per}L"), lit(chunks - 1L)).cast("int")),
-      "__chunk",
-      chunks)
-    FsMove.into(spark, new HPath(staged.toString), new HPath(inputDir))
+    val sink = new SemiStreamRuntime.BatchSink(spark)
 
     val cntSchema = projected.select(col(keyCol), col("gen")).schema
       .add("cnt", org.apache.spark.sql.types.LongType, nullable = false)
-    val state = store(spark, s"$root/state/cnt", cntSchema, Seq(keyCol, "gen"))
+    val stateDir = SemiStreamRuntime.tempDir("streamdecay-").toString + "/cnt"
+    val state = store(spark, stateDir, cntSchema, Seq(keyCol, "gen"))
     val pbOf = (g: org.apache.spark.sql.Column) => pmod(g, lit(nBuckets)).cast(IntegerType)
 
-    val perBatch: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
+    val perBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
       if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
         state.compact(batchId)
 
@@ -102,7 +89,7 @@ object StreamingDecay {
 
       val w = Decay.generationWeight(col("gen"), asOfGen, horizon)
       val order = Seq(col("decayed").desc, col(keyCol).asc)
-      Decay.rankLimited(
+      sink.write(batchId, Decay.rankLimited(
           census
             .select(col(keyCol), col("cnt"), (w * col("cnt")).as("wc"))
             .groupBy(col(keyCol))
@@ -111,37 +98,22 @@ object StreamingDecay {
             .limit(k),
           Seq(keyCol))
         .withColumn("rank", col("rank").cast("long"))
-        .select(lit(batchId).as("batch"), col("rank"), col(keyCol), col("n_window"), col("decayed"))
-        .write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(outDir)
+        .select(
+          lit(batchId).as("batch"), col("rank"), col(keyCol), col("n_window"), col("decayed")))
 
       state.append(batchCnt.withColumn("pb", pbOf(col("gen"))), batchId)
       batchCnt.unpersist()
       ()
     }
 
-    val query = spark.readStream
-      .schema(projected.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch(perBatch)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    SemiStreamRuntime.replayForeachBatch(
+      spark,
+      SemiStreamRuntime.Chunked(
+        projected,
+        least(expr(s"(__tsec - ${lo}L) div ${per}L"), lit(chunks - 1L)).cast("int"),
+        chunks))(perBatch)
     state.close()
 
-    val outSchema = new org.apache.spark.sql.types.StructType()
-      .add("rank", org.apache.spark.sql.types.LongType)
-      .add(projected.schema(keyCol))
-      .add("n_window", org.apache.spark.sql.types.LongType)
-      .add("decayed", org.apache.spark.sql.types.LongType)
-      .add("batch", org.apache.spark.sql.types.LongType)
-    spark.read.schema(outSchema).parquet(outDir)
-      .select("batch", "rank", keyCol, "n_window", "decayed")
+    sink.result
   }
 }

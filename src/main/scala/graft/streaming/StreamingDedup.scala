@@ -1,11 +1,8 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.storage.StorageLevel
 
@@ -57,9 +54,10 @@ import graft.operators.{Dedup, Sampling, SimilarityJoin}
   * == Restart safety (exactly-once effects) ==
   *
   * Every write this job performs is keyed by the Structured Streaming
-  * `batchId` and SCOPED to its own `batch=<id>` directory (overwritten
-  * whole), so a batch that is retried after a crash REPLACES its own
-  * partitions instead of double-appending — the standard idempotent-
+  * `batchId` and SCOPED to its own batch directory (overwritten whole;
+  * the output through [[SemiStreamRuntime.BatchSink]]), so a batch that
+  * is retried after a crash REPLACES its own partitions instead of
+  * double-appending — the standard idempotent-
   * foreachBatch recipe, applied to both the output sink and the state
   * increments, without any root-wide dynamic-overwrite commit:
   *
@@ -138,7 +136,9 @@ object StreamingDedup {
     *                      ≤ min(nBuckets, batchDocs·bands) of these buckets
     * @param workDir       durable root (checkpoint + staged input + state +
     *                      output). Re-invoking with the same dir resumes an
-    *                      interrupted run. Default: fresh temp dir.
+    *                      interrupted run. Default: a fresh temp dir for
+    *                      state and output; the checkpoint and staged input
+    *                      are deleted when the stream stops.
     * @param compactEvery  fold committed state increments into consolidated
     *                      generations every this many batches (0 disables —
     *                      experiment control only)
@@ -203,29 +203,12 @@ object StreamingDedup {
     graft.functions.MinHashBands.register(spark)
     val storage = StorageLevel.MEMORY_AND_DISK
 
-    val root = workDir.getOrElse(Files.createTempDirectory("graft-streamdedup-").toString)
+    val root = workDir.getOrElse(SemiStreamRuntime.tempDir("streamdedup-").toString)
     val hfs = fs(spark, root)
-    val inputDir = s"$root/input"
     val sigDir = s"$root/state/sigs"
     val tokDir = s"$root/state/toks"
-    val outDir = s"$root/out"
-    val ckptDir = s"$root/ckpt"
-    Seq(sigDir, tokDir, outDir).foreach(d => hfs.mkdirs(new HPath(d)))
-
-    // deterministic, engine-portable batch assignment; staged once — a
-    // resumed run MUST see the same file list the checkpoint recorded
-    if (!hfs.exists(new HPath(inputDir))) {
-      val staged = SemiStreamRuntime.stageByColumn(
-        docs.select(col(idCol), col(textCol))
-          .withColumn(
-            "__chunk",
-            floor(Sampling.hashUniform(col(idCol)) * chunks).cast("int")),
-        "__chunk",
-        chunks)
-      // staging is a LOCAL temp dir; the work dir may not be (HDFS/object
-      // store) — rename fails across filesystems, so fall back to copy
-      FsMove.into(spark, new HPath(staged.toString), new HPath(inputDir))
-    }
+    val sink = new SemiStreamRuntime.BatchSink(spark, s"$root/out")
+    Seq(sigDir, tokDir).foreach(d => hfs.mkdirs(new HPath(d)))
 
     // verify-tier representation: token strings, or xxhash64 ids (the
     // state-size tier — see the hashTokens param doc)
@@ -240,7 +223,7 @@ object StreamingDedup {
     val sigState = store(spark, sigDir, sigSchema, Seq("sid", "band", "bsig"))
     val tokState = store(spark, tokDir, tokSchema, Seq("sid"))
 
-    val perBatch: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
+    val perBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
       val t0 = System.nanoTime()
 
       // fold earlier, checkpoint-committed increments (never this batch's
@@ -352,10 +335,7 @@ object StreamingDedup {
       // when dupOf is truly small, and a high-duplication batch never
       // forces an unbounded driver collect; repartition(1) (not
       // coalesce(1), which would drag the join itself through one task)
-      // keeps one decision file per batch. The write is scoped to this
-      // batch's own `batch=<id>` dir (partition value from the dir name on
-      // read), so a retry is a plain directory overwrite — no root-wide
-      // dynamic-overwrite commit
+      // keeps one decision file per batch
       // the three terminal effects are disjoint DAGs over the PERSISTED
       // batch relations, each writing its own batch-scoped directory —
       // overlap the Spark jobs (32 local threads are never saturated by
@@ -366,15 +346,14 @@ object StreamingDedup {
       // batch<batchId visibility filter drops it
       ConcurrentEffects.all(
         () =>
-          bToks.select(col("sid").as("x_id"))
-            .join(dupOf, Seq("x_id"), "left")
-            .select(
-              col("x_id").as("out_id"),
-              coalesce(col("dup_of"), lit(-1L)).as("dup_of"))
-            .repartition(1)
-            .write
-            .mode("overwrite")
-            .parquet(s"$outDir/batch=$batchId"),
+          sink.write(
+            batchId,
+            bToks.select(col("sid").as("x_id"))
+              .join(dupOf, Seq("x_id"), "left")
+              .select(
+                col("x_id").as("out_id"),
+                coalesce(col("dup_of"), lit(-1L)).as("dup_of"))
+              .repartition(1)),
         () =>
           sigState.append(bSigs.select(col("sid"), col("band"), col("bsig"), col("pb")), batchId),
         () =>
@@ -394,23 +373,22 @@ object StreamingDedup {
       }
     }
 
-    val query = spark.readStream
-      .schema(docs.select(idCol, textCol).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch(perBatch)
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    // deterministic, engine-portable batch assignment; with a workDir the
+    // chunks are spooled there once — a resumed run MUST see the same file
+    // list the checkpoint recorded
+    SemiStreamRuntime.replayForeachBatch(
+      spark,
+      SemiStreamRuntime.Chunked(
+        docs.select(col(idCol), col(textCol)),
+        floor(Sampling.hashUniform(col(idCol)) * chunks).cast("int"),
+        chunks),
+      workDir)(perBatch)
     // successful completion only (a throw above skips this): non-durable
     // backends release their JVM-global commit-log entry; a FAILED run
     // keeps it so crash-resume can read the state back through the dir key
     sigState.close()
     tokState.close()
 
-    spark.read.parquet(outDir)
-      .select(col("out_id").as("doc_id"), col("dup_of"))
+    sink.result.select(col("out_id").as("doc_id"), col("dup_of"))
   }
 }

@@ -1,11 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.storage.StorageLevel
 
@@ -59,23 +55,14 @@ object StreamingDrift {
     val storage = StorageLevel.MEMORY_AND_DISK
     val dec = "decimal(38,0)"
 
-    val root = Files.createTempDirectory("graft-streamdrift-").toString
-    val inputDir = s"$root/input"
-    val outDir = s"$root/out"
-    val staged = SemiStreamRuntime.stageByColumn(
-      docs.select(col(idCol), col(textCol))
-        .withColumn(
-          "__chunk",
-          floor(Sampling.hashUniform(col(idCol)) * chunks).cast("int")),
-      "__chunk",
-      chunks)
-    FsMove.into(spark, new HPath(staged.toString), new HPath(inputDir))
+    val sink = new SemiStreamRuntime.BatchSink(spark)
 
     import spark.implicits._
     val cntSchema = Seq.empty[(Long, Long)].toDF("h", "cnt").schema
-    val state = store(spark, s"$root/state/cnt", cntSchema, Seq("h"))
+    val stateDir = SemiStreamRuntime.tempDir("streamdrift-").toString + "/cnt"
+    val state = store(spark, stateDir, cntSchema, Seq("h"))
 
-    val perBatch: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
+    val perBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
       if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
         state.compact(batchId)
 
@@ -110,7 +97,7 @@ object StreamingDrift {
         sum(expr(s"abs(cast(cnt as $dec) * cast(nH as $dec) - cast(coalesce(ch, 0L) as $dec) * cast(nB as $dec))"))
           .as("sumIn"),
         sum(coalesce(col("ch"), lit(0L))).as("chIn"))
-      stats
+      sink.write(batchId, stats
         .select(
           lit(batchId).as("batch"),
           coalesce(col("nB"), lit(0L)).as("n_tokens"),
@@ -120,12 +107,7 @@ object StreamingDrift {
             .otherwise(expr(
               s"""cast((10000 * (sumIn + cast(nB as $dec) * cast(nH - chIn as $dec)))
                   div (cast(nB as $dec) * cast(nH as $dec)) as long)"""))
-            .as("drift_bp"))
-        .write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(outDir)
+            .as("drift_bp")))
 
       val nbRow = batchCnt.agg(coalesce(sum("cnt"), lit(0L)).as("cnt"))
         .select(lit(TotalKey).as("h"), col("cnt"))
@@ -137,24 +119,14 @@ object StreamingDrift {
       ()
     }
 
-    val query = spark.readStream
-      .schema(docs.select(idCol, textCol).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch(perBatch)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    SemiStreamRuntime.replayForeachBatch(
+      spark,
+      SemiStreamRuntime.Chunked(
+        docs.select(col(idCol), col(textCol)),
+        floor(Sampling.hashUniform(col(idCol)) * chunks).cast("int"),
+        chunks))(perBatch)
     state.close()
 
-    val outSchema = new org.apache.spark.sql.types.StructType()
-      .add("n_tokens", org.apache.spark.sql.types.LongType)
-      .add("n_distinct", org.apache.spark.sql.types.LongType)
-      .add("drift_bp", org.apache.spark.sql.types.LongType)
-      .add("batch", org.apache.spark.sql.types.LongType)
-    spark.read.schema(outSchema).parquet(outDir)
-      .select("batch", "n_tokens", "n_distinct", "drift_bp")
+    sink.result
   }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming funnel: the ordered-step conversion state machine
   * ([[graft.operators.Funnel]]) kept as per-user keyed state over a
@@ -93,40 +93,23 @@ object StreamingFunnel {
     if (bounds.isNullAt(0)) return emptyResult(spark, k)
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
     val per = (hi - lo) / chunks + 1
-    val staged = SemiStreamRuntime.stageByColumn(
-      projected.withColumn(
-        "__chunk",
-        least(expr(s"(tus - ${lo}L) div ${per}L"), lit(chunks - 1L)).cast("int")),
-      "__chunk",
-      chunks)
-
-    val name = s"funnel_${System.nanoTime()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-funnel-ckpt-").toString
-    // state-sized shuffle partitions for the keyed-state exchange (see
-    // SemiStreamRuntime.stateSession): the memory sink registers in the
-    // clone, so every read of the result table goes through `sess`
-    val sess = SemiStreamRuntime.stateSession(spark)
-    val stream = sess.readStream
-      .schema(projected.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-    val snaps = stream.as[FEv]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        advance(k, windowUs))
-    val q = snaps.toDF().writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val snaps = SemiStreamRuntime.replayToMemory(
+      spark,
+      SemiStreamRuntime.Chunked(
+        projected,
+        least(expr(s"(tus - ${lo}L) div ${per}L"), lit(chunks - 1L)).cast("int"),
+        chunks),
+      OutputMode.Append()) {
+      _.as[FEv]
+        .groupByKey(_.user_id)
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
+          advance(k, windowUs))
+    }
 
     // final snapshot per user = max reached (monotone state)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("reached").desc)
-    val last = sess.table(name)
+    val last = snaps
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
     val tCols = (1 to k).map(i => element_at(col("times"), i).as(s"t$i"))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Incremental maintenance of a JOIN view under keyed upsert/delete
   * change streams — the delta-JOIN companion to [[StreamingIvmAggregate]]
@@ -114,31 +114,12 @@ object StreamingIvmJoin {
       col(valueCol).cast("long").as("v"),
       least(expr(s"(CAST($seqCol AS LONG) - ${lo}L) div ${per}L"), lit(chunks - 1L))
         .cast("int").as("chunk"))
-    val staged = SemiStreamRuntime.stageByColumn(
-      projected.withColumn("__chunk", col("chunk")), "__chunk", chunks)
-
-    val name = s"ivmj_${System.nanoTime()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ivmj-ckpt-").toString
-    // state-sized shuffle partitions for the keyed-state exchange (see
-    // SemiStreamRuntime.stateSession): the memory sink registers in the
-    // clone, so every read of the result table goes through `sess`
-    val sess = SemiStreamRuntime.stateSession(spark)
-    val stream = sess.readStream
-      .schema(projected.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-    val rows = stream.as[Chg]
-      .groupByKey(_.jk)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fold)
-    val q = rows.toDF().writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    sess.table(name)
+    SemiStreamRuntime.replayToMemory(
+      spark, SemiStreamRuntime.Chunked(projected, col("chunk"), chunks), OutputMode.Append()) {
+      _.as[Chg]
+        .groupByKey(_.jk)
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fold)
+    }
       .groupBy("batch", "jk", "a_pk", "b_pk", "a_val", "b_val")
       .agg(sum("sign").as("sign"))
       .filter(col("sign") =!= 0L)

@@ -1,11 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.storage.StorageLevel
 
@@ -50,25 +46,16 @@ object StreamingKAnonymity {
     val spark = docs.sparkSession
     val storage = StorageLevel.MEMORY_AND_DISK
 
-    val root = Files.createTempDirectory("graft-streamkanon-").toString
-    val inputDir = s"$root/input"
-    val outDir = s"$root/out"
-    val staged = SemiStreamRuntime.stageByColumn(
-      docs.select((col(idCol) +: qiCols.map(col)): _*)
-        .withColumn(
-          "__chunk",
-          floor(Sampling.hashUniform(col(idCol)) * chunks).cast("int")),
-      "__chunk",
-      chunks)
-    FsMove.into(spark, new HPath(staged.toString), new HPath(inputDir))
+    val sink = new SemiStreamRuntime.BatchSink(spark)
 
     import spark.implicits._
     val cntSchema = Seq.empty[(Long, Long)].toDF("h", "cnt").schema
-    val state = store(spark, s"$root/state/cnt", cntSchema, Seq("h"))
+    val stateDir = SemiStreamRuntime.tempDir("streamkanon-").toString + "/cnt"
+    val state = store(spark, stateDir, cntSchema, Seq("h"))
 
     val comboHash = xxhash64(qiCols.map(col): _*)
 
-    val perBatch: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
+    val perBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
       if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
         state.compact(batchId)
 
@@ -86,20 +73,15 @@ object StreamingKAnonymity {
       val prior = state.read(batchId, pbs)
         .groupBy("h").agg(sum("cnt").as("prior"))
 
-      rows
+      sink.write(batchId, rows
         .join(batchCnt, "h")
         .join(prior, Seq("h"), "left")
         .select(
           lit(batchId).as("batch"),
-          col(idCol),
+          col(idCol).cast("long").as(idCol),
           (coalesce(col("prior"), lit(0L)) + col("cnt")).as("qi_n"))
         .withColumn("suppressed", col("qi_n") < k)
-        .select("batch", idCol, "suppressed", "qi_n")
-        .write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(outDir)
+        .select("batch", idCol, "suppressed", "qi_n"))
 
       state.append(
         batchCnt.withColumn("pb", bucketOf(nBuckets, col("h"))),
@@ -108,24 +90,14 @@ object StreamingKAnonymity {
       ()
     }
 
-    val query = spark.readStream
-      .schema(docs.select((idCol +: qiCols).map(col): _*).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch(perBatch)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    SemiStreamRuntime.replayForeachBatch(
+      spark,
+      SemiStreamRuntime.Chunked(
+        docs.select((col(idCol) +: qiCols.map(col)): _*),
+        floor(Sampling.hashUniform(col(idCol)) * chunks).cast("int"),
+        chunks))(perBatch)
     state.close()
 
-    val outSchema = new org.apache.spark.sql.types.StructType()
-      .add(idCol, org.apache.spark.sql.types.LongType)
-      .add("suppressed", org.apache.spark.sql.types.BooleanType)
-      .add("qi_n", org.apache.spark.sql.types.LongType)
-      .add("batch", org.apache.spark.sql.types.LongType)
-    spark.read.schema(outSchema).parquet(outDir)
-      .select("batch", idCol, "suppressed", "qi_n")
+    sink.result
   }
 }

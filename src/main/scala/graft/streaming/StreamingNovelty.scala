@@ -1,11 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.storage.StorageLevel
 
@@ -56,23 +52,14 @@ object StreamingNovelty {
     val spark = docs.sparkSession
     val storage = StorageLevel.MEMORY_AND_DISK
 
-    val root = Files.createTempDirectory("graft-streamnovelty-").toString
-    val inputDir = s"$root/input"
-    val outDir = s"$root/out"
-    val staged = SemiStreamRuntime.stageByColumn(
-      docs.select(col(idCol), col(textCol))
-        .withColumn(
-          "__chunk",
-          floor(Sampling.hashUniform(col(idCol)) * chunks).cast("int")),
-      "__chunk",
-      chunks)
-    FsMove.into(spark, new HPath(staged.toString), new HPath(inputDir))
+    val sink = new SemiStreamRuntime.BatchSink(spark)
 
     import spark.implicits._
     val cntSchema = Seq.empty[(Long, Long)].toDF("h", "cnt").schema
-    val state = store(spark, s"$root/state/cnt", cntSchema, Seq("h"))
+    val stateDir = SemiStreamRuntime.tempDir("streamnovelty-").toString + "/cnt"
+    val state = store(spark, stateDir, cntSchema, Seq("h"))
 
-    val perBatch: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
+    val perBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
       if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
         state.compact(batchId)
 
@@ -91,7 +78,7 @@ object StreamingNovelty {
       val pbs = batchCnt.select(bucketOf(nBuckets, col("h")).as("pb"))
         .distinct().collect().map(_.getInt(0)).toSeq
       val seen = state.read(batchId, pbs).select("h").distinct()
-      batchCnt
+      sink.write(batchId, batchCnt
         .join(seen, Seq("h"), "left_anti")
         .agg(count(lit(1)).as("nNew"))
         .crossJoin(
@@ -102,37 +89,21 @@ object StreamingNovelty {
           col("nDist").as("n_distinct"),
           col("nNew").as("n_new"),
           when(col("nDist") === 0L, 0L)
-            .otherwise(expr("(10000 * nNew) div nDist")).as("novelty_bp"))
-        .write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(outDir)
+            .otherwise(expr("(10000 * nNew) div nDist")).as("novelty_bp")))
 
       state.append(batchCnt.withColumn("pb", bucketOf(nBuckets, col("h"))), batchId)
       batchCnt.unpersist()
       ()
     }
 
-    val query = spark.readStream
-      .schema(docs.select(idCol, textCol).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch(perBatch)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    SemiStreamRuntime.replayForeachBatch(
+      spark,
+      SemiStreamRuntime.Chunked(
+        docs.select(col(idCol), col(textCol)),
+        floor(Sampling.hashUniform(col(idCol)) * chunks).cast("int"),
+        chunks))(perBatch)
     state.close()
 
-    val outSchema = new org.apache.spark.sql.types.StructType()
-      .add("n_shingles", org.apache.spark.sql.types.LongType)
-      .add("n_distinct", org.apache.spark.sql.types.LongType)
-      .add("n_new", org.apache.spark.sql.types.LongType)
-      .add("novelty_bp", org.apache.spark.sql.types.LongType)
-      .add("batch", org.apache.spark.sql.types.LongType)
-    spark.read.schema(outSchema).parquet(outDir)
-      .select("batch", "n_shingles", "n_distinct", "n_new", "novelty_bp")
+    sink.result
   }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** STREAMING sequence packing — the continuous-ingestion form of
   * [[graft.operators.Packing]]: documents arrive in micro-batches and are
@@ -79,38 +79,15 @@ object StreamingPacking {
     // chunk i+1, so mtime-ordered replay delivers each stream in id order
     val maxId = projected.agg(max("doc_id")).head().getLong(0)
     val per = maxId / chunks + 1
-    val staged = SemiStreamRuntime.stageByColumn(
-      projected.withColumn(
-        "__chunk",
-        least(expr(s"doc_id div ${per}L"), lit(chunks - 1L)).cast("int")),
-      "__chunk",
-      chunks)
-
-    val name = s"pack_${System.nanoTime()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-pack-ckpt-").toString
-    // state-sized shuffle partitions for the keyed-state exchange (see
-    // SemiStreamRuntime.stateSession): the memory sink registers in the
-    // clone, so every read of the result table goes through `sess`
-    val sess = SemiStreamRuntime.stateSession(spark)
-    val stream = sess.readStream
-      .schema(projected.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-
-    val typed: Dataset[DocIn] = stream.as[DocIn]
-    val spans = typed
-      .groupByKey(_.stream)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        pack(budget))
-
-    val q = spans.toDF().writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    sess.table(name)
+    SemiStreamRuntime.replayToMemory(
+      spark,
+      SemiStreamRuntime.Chunked(
+        projected, least(expr(s"doc_id div ${per}L"), lit(chunks - 1L)).cast("int"), chunks),
+      OutputMode.Append()) {
+      _.as[DocIn]
+        .groupByKey(_.stream)
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
+          pack(budget))
+    }
   }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming SCD type-2: the dimension-history maintenance of
   * [[graft.operators.Scd.type2History]] kept as per-key state over a
@@ -77,38 +77,20 @@ object StreamingScd {
     require(!bounds.isNullAt(0), "empty change log")
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
     val per = (hi - lo) / chunks + 1
-    val staged = SemiStreamRuntime.stageByColumn(
-      projected.withColumn(
-        "__chunk",
-        least(expr(s"(tus - ${lo}L) div ${per}L"), lit(chunks - 1L)).cast("int")),
-      "__chunk",
-      chunks)
-
-    val name = s"scd_${System.nanoTime()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-scd-ckpt-").toString
-    // state-sized shuffle partitions for the keyed-state exchange (see
-    // SemiStreamRuntime.stateSession): the memory sink registers in the
-    // clone, so every read of the result table goes through `sess`
-    val sess = SemiStreamRuntime.stateSession(spark)
-    val stream = sess.readStream
-      .schema(projected.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-    val rows = stream.as[Chg]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fold)
-    val q = rows.toDF().writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val all = SemiStreamRuntime.replayToMemory(
+      spark,
+      SemiStreamRuntime.Chunked(
+        projected,
+        least(expr(s"(tus - ${lo}L) div ${per}L"), lit(chunks - 1L)).cast("int"),
+        chunks),
+      OutputMode.Append()) {
+      _.as[Chg]
+        .groupByKey(_.key)
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fold)
+    }
 
     // closed intervals are emitted once; of the open snapshots keep the
     // LAST per key (max valid_from — the state only moves forward)
-    val all = sess.table(name)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("key").orderBy(col("valid_from").desc)
     val open = all.filter(col("is_current"))

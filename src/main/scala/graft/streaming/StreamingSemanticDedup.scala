@@ -1,11 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.storage.StorageLevel
 
@@ -64,13 +60,8 @@ object StreamingSemanticDedup {
     graft.functions.CosineSimilarity.register(spark)
     val storage = StorageLevel.MEMORY_AND_DISK
 
-    val root = workDir.getOrElse(Files.createTempDirectory("graft-semstream-").toString)
-    val hfs = new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val inputDir = s"$root/input"
-    val stateDir = s"$root/state/vecs"
-    val outDir = s"$root/out"
-    val ckptDir = s"$root/ckpt"
-    hfs.mkdirs(new HPath(outDir))
+    val root = workDir.getOrElse(SemiStreamRuntime.tempDir("semstream-").toString)
+    val sink = new SemiStreamRuntime.BatchSink(spark, s"$root/out")
 
     // offline coarse quantizer: q55's deterministic centroid seeding over
     // the corpus (the paper trains the quantizer before ingestion)
@@ -98,23 +89,10 @@ object StreamingSemanticDedup {
             struct(SimilaritySearch.cosine(col("emb"), col("c_emb")), -col("cell"))).as("cell"))
         .withColumn("pb", pmod(col("cell"), lit(nBuckets)).cast(IntegerType))
 
-    // deterministic, engine-portable arrival order; staged once so a
-    // resumed run sees the file list the checkpoint recorded
-    if (!hfs.exists(new HPath(inputDir))) {
-      val staged = SemiStreamRuntime.stageByColumn(
-        vectors.select(col("vid"), col("emb"))
-          .withColumn(
-            "__chunk",
-            floor(Sampling.hashUniform(col("vid")) * chunks).cast("int")),
-        "__chunk",
-        chunks)
-      FsMove.into(spark, new HPath(staged.toString), new HPath(inputDir))
-    }
-
     val stateSchema = assign(vectors.limit(0)).drop("pb").schema
-    val state = store(spark, stateDir, stateSchema, Seq("vid"))
+    val state = store(spark, s"$root/state/vecs", stateSchema, Seq("vid"))
 
-    val perBatch: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
+    val perBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
       if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
         state.compact(batchId)
 
@@ -146,40 +124,35 @@ object StreamingSemanticDedup {
         .agg(min("y_id").as("dup_of"))
 
       // batchId-keyed idempotent output + state increment (retry replaces)
-      assigned.select(col("vid").as("x_id"))
-        .join(dupOf, Seq("x_id"), "left")
-        .select(
-          col("x_id").as("out_id"),
-          coalesce(col("dup_of"), lit(-1L)).as("dup_of"),
-          lit(batchId).as("batch"))
-        .coalesce(1)
-        .write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(outDir)
+      sink.write(
+        batchId,
+        assigned.select(col("vid").as("x_id"))
+          .join(dupOf, Seq("x_id"), "left")
+          .select(
+            col("x_id").as("out_id"),
+            coalesce(col("dup_of"), lit(-1L)).as("dup_of"))
+          .coalesce(1))
 
       state.append(assigned.select("vid", "emb", "cell", "pb"), batchId)
       assigned.unpersist()
       ()
     }
 
-    val query = spark.readStream
-      .schema(vectors.select("vid", "emb").schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch(perBatch)
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    // deterministic, engine-portable arrival order; with a workDir the
+    // chunks are spooled there once so a resumed run sees the file list
+    // the checkpoint recorded
+    SemiStreamRuntime.replayForeachBatch(
+      spark,
+      SemiStreamRuntime.Chunked(
+        vectors.select(col("vid"), col("emb")),
+        floor(Sampling.hashUniform(col("vid")) * chunks).cast("int"),
+        chunks),
+      workDir)(perBatch)
     // successful completion only: see StreamingDedup — failed runs keep
     // their registry entry for crash-resume
     state.close()
 
     centroids.unpersist()
-    spark.read.parquet(outDir)
-      .select(col("out_id").as("vid"), col("dup_of"))
+    sink.result.select(col("out_id").as("vid"), col("dup_of"))
   }
 }

@@ -1,11 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.{Sampling, Skyline}
 
@@ -25,13 +21,15 @@ import graft.operators.{Sampling, Skyline}
   *
   * ==Crash-resume contract (round-11)==
   * The in-memory front is a cache, not the durable state: the OUTPUT
-  * partition `batch=b` IS the front as of batch b, already parquet. On
+  * rows of batch b ARE the front as of batch b, already parquet. On
   * restart (fresh process, `front = None`) the first batch b rebuilds its
-  * prior front by reading partition b−1 — which must exist, because the
+  * prior front by reading batch b−1's rows — which must exist, because the
   * checkpoint only admits batch b after b−1 committed, and b−1's write
-  * precedes its commit. Batch writes are dynamic-partition overwrites, so
-  * re-running a batch whose write landed but whose commit didn't is
-  * idempotent. Recovery I/O is front-sized, like the state itself.
+  * precedes its commit. Each batch's write overwrites its own batch dir
+  * ([[SemiStreamRuntime.BatchSink]]), so re-running a batch whose write
+  * landed but whose commit didn't is idempotent. Recovery I/O is
+  * front-sized, like the state itself: each batch's file holds one
+  * `batch` value, so parquet min/max statistics skip every other file.
   * Spec-proven by a kill-at-batch / same-root restart run equal to an
   * uninterrupted run.
   *
@@ -60,28 +58,12 @@ object StreamingSkyline {
     require(chunks > 0 && dims.nonEmpty)
     val spark = df.sparkSession
 
-    val root = resumeRoot.getOrElse(
-      Files.createTempDirectory("graft-streamsky-").toString)
-    val inputDir = s"$root/input"
-    val outDir = s"$root/out"
-    if (!new java.io.File(inputDir).exists()) {
-      val staged = SemiStreamRuntime.stageByColumn(
-        df.select((idCol +: dims).map(col): _*)
-          .withColumn(
-            "__chunk",
-            floor(Sampling.hashUniform(col(idCol)) * chunks).cast("int")),
-        "__chunk",
-        chunks)
-      FsMove.into(spark, new HPath(staged.toString), new HPath(inputDir))
-    }
-
-    val dimFields = df.select(dims.map(col): _*).schema.fields
-    val outSchema = dimFields.foldLeft(new org.apache.spark.sql.types.StructType())(_ add _)
-      .add("batch", org.apache.spark.sql.types.LongType)
+    val root = resumeRoot.getOrElse(SemiStreamRuntime.tempDir("streamsky-").toString)
+    val sink = new SemiStreamRuntime.BatchSink(spark, s"$root/out")
 
     var front: Option[DataFrame] = None
 
-    val perBatch: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
+    val perBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
       failAtBatch.filter(_ == batchId).foreach { b =>
         throw new IllegalStateException(s"injected failure at batch $b")
       }
@@ -90,7 +72,7 @@ object StreamingSkyline {
       val prior = front.orElse {
         if (batchId == 0L) None
         else Some(
-          spark.read.schema(outSchema).parquet(outDir)
+          sink.result
             .filter(col("batch") === (batchId - 1))
             .select(dims.map(col): _*))
       }
@@ -104,28 +86,18 @@ object StreamingSkyline {
       // its size is the growth curve a deployment alarms on (opt-in,
       // by-name — the count reads the fresh local checkpoint)
       StateTelemetry.record(StateTelemetry.StatePoint(
-        outDir, batchId, next.count(), -1L, 1L))
-      next.select(lit(batchId).as("batch") +: dims.map(col): _*)
-        .write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(outDir)
+        sink.dir, batchId, next.count(), -1L, 1L))
+      sink.write(batchId, next.select(lit(batchId).as("batch") +: dims.map(col): _*))
       ()
     }
 
-    val query = spark.readStream
-      .schema(df.select((idCol +: dims).map(col): _*).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch(perBatch)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-
-    spark.read.schema(outSchema).parquet(outDir)
-      .select(col("batch") +: dims.map(col): _*)
+    SemiStreamRuntime.replayForeachBatch(
+      spark,
+      SemiStreamRuntime.Chunked(
+        df.select((idCol +: dims).map(col): _*),
+        floor(Sampling.hashUniform(col(idCol)) * chunks).cast("int"),
+        chunks),
+      resumeRoot)(perBatch)
+    sink.result
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Sample-ratio-mismatch monitoring ON INGEST — the streaming face of
   * [[graft.operators.SampleRatio]]: per-arm exposure counts fold into
@@ -80,36 +80,15 @@ object StreamingSrm {
           col(armCol).cast("string")))).as("g"),
       least(expr(s"(CAST($seqCol AS LONG) - ${lo}L) div ${per}L"), lit(chunks - 1L))
         .cast("int").as("chunk"))
-    val staged = SemiStreamRuntime.stageByColumn(
-      projected.withColumn("__chunk", col("chunk")), "__chunk", chunks)
-
-    val name = s"ssrm_${System.nanoTime()}"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ssrm-ckpt-").toString
-    // state-sized shuffle partitions for the keyed-state exchange (see
-    // SemiStreamRuntime.stateSession): the memory sink registers in the
-    // clone, so every read of the result table goes through `sess`
-    val sess = SemiStreamRuntime.stateSession(spark)
-    val q = sess.readStream
-      .schema(projected.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-      .as[Exposure]
-      .groupByKey(_.g)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fold)
-      .toDF()
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-
-    val upds = sess.table(name)
+    val upds = SemiStreamRuntime.replayToMemory(
+      spark, SemiStreamRuntime.Chunked(projected, col("chunk"), chunks), OutputMode.Append()) {
+      _.as[Exposure]
+        .groupByKey(_.g)
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(fold)
+    }
     val batches = upds.select(col("batch").as("b")).distinct()
     val cd = expectA + expectB
-    val out = upds
+    upds
       .join(batches, col("batch") <= col("b"))
       .groupBy("b")
       .agg(
@@ -127,12 +106,5 @@ object StreamingSrm {
              |div (${cd}L * CAST(n_a + n_b AS DECIMAL(38,0)) * ${expectB}L)""".stripMargin)
           .as("srm_ppm"))
       .withColumn("srm_alarm", col("srm_ppm") > 10830000L)
-      // bounded (batches rows): materialize so the harness artifacts
-      // release now instead of leaking for the session
-      .transform(graft.core.Materialize.apply)
-    sess.catalog.dropTempView(name)
-    SemiStreamRuntime.deleteRecursively(java.nio.file.Paths.get(ckpt))
-    SemiStreamRuntime.deleteRecursively(staged)
-    out
   }
 }

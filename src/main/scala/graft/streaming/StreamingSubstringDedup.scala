@@ -1,11 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.IntegerType
 import org.apache.spark.storage.StorageLevel
 
@@ -53,23 +49,14 @@ object StreamingSubstringDedup {
     val spark = docs.sparkSession
     val storage = StorageLevel.MEMORY_AND_DISK
 
-    val root = Files.createTempDirectory("graft-streamspans-").toString
-    val inputDir = s"$root/input"
-    val outDir = s"$root/out"
-    val staged = SemiStreamRuntime.stageByColumn(
-      docs.select(col(idCol), col(textCol))
-        .withColumn(
-          "__chunk",
-          floor(Sampling.hashUniform(col(idCol)) * chunks).cast("int")),
-      "__chunk",
-      chunks)
-    FsMove.into(spark, new HPath(staged.toString), new HPath(inputDir))
+    val sink = new SemiStreamRuntime.BatchSink(spark)
 
     import spark.implicits._
     val cntSchema = Seq.empty[(Long, Long)].toDF("h", "cnt").schema
-    val state = store(spark, s"$root/state/cnt", cntSchema, Seq("h"))
+    val stateDir = SemiStreamRuntime.tempDir("streamspans-").toString + "/cnt"
+    val state = store(spark, stateDir, cntSchema, Seq("h"))
 
-    val perBatch: (Dataset[Row], Long) => Unit = { (batch, batchId) =>
+    val perBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
       if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
         state.compact(batchId)
 
@@ -99,7 +86,7 @@ object StreamingSubstringDedup {
         .select("h")
 
       val w = org.apache.spark.sql.expressions.Window.partitionBy("sid").orderBy("pos")
-      sh.join(hot, "h")
+      sink.write(batchId, sh.join(hot, "h")
         .withColumn("g", col("pos") - row_number().over(w))
         .groupBy(col("sid"), col("g"))
         .agg(
@@ -108,40 +95,21 @@ object StreamingSubstringDedup {
           count(lit(1)).as("n_shingles"))
         .select(
           col("sid").as("doc_id"),
-          col("start_tok"), col("end_tok"), col("n_shingles"),
-          lit(batchId).as("batch"))
-        .write
-        .mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(outDir)
+          col("start_tok"), col("end_tok"), col("n_shingles")))
 
       state.append(batchCnt.withColumn("pb", bucketOf(nBuckets, col("h"))), batchId)
       sh.unpersist(); batchCnt.unpersist()
       ()
     }
 
-    val query = spark.readStream
-      .schema(docs.select(idCol, textCol).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(inputDir)
-      .writeStream
-      .foreachBatch(perBatch)
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    SemiStreamRuntime.replayForeachBatch(
+      spark,
+      SemiStreamRuntime.Chunked(
+        docs.select(col(idCol), col(textCol)),
+        floor(Sampling.hashUniform(col(idCol)) * chunks).cast("int"),
+        chunks))(perBatch)
     state.close()
 
-    // explicit schema: an all-empty-batch run writes no data files, and
-    // the empty relation must still carry the contract columns
-    val outSchema = new org.apache.spark.sql.types.StructType()
-      .add("doc_id", org.apache.spark.sql.types.LongType)
-      .add("start_tok", org.apache.spark.sql.types.LongType)
-      .add("end_tok", org.apache.spark.sql.types.LongType)
-      .add("n_shingles", org.apache.spark.sql.types.LongType)
-      .add("batch", org.apache.spark.sql.types.LongType)
-    spark.read.schema(outSchema).parquet(outDir)
-      .select("doc_id", "start_tok", "end_tok", "n_shingles")
+    sink.result
   }
 }

@@ -37,11 +37,14 @@ class SemiStreamRuntimeSpec extends SparkSpec {
     val part = Tables(spark, sfSmoke, "part")
     val cache = part.filter(pmod(col("p_partkey"), lit(10)) < 3)
 
+    val before = replayDirs()
     val (out, stats) = SemiStreamRuntime.semiStreamJoin(
       li, part, cache,
       key = "p_partkey", chunkKey = "l_orderkey", chunks = 4,
       config = AdaptiveWindowController.Config(initialWindow = 2, warmupBatches = 1),
       checkpointEvery = 2)
+    // checkpoint and spooled chunks deleted; the output dir stays for `out`
+    assert(replayDirs() -- before == Set.empty)
 
     val plain = li.join(part, "p_partkey")
     assert(out.count() == plain.count())

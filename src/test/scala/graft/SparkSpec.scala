@@ -21,4 +21,16 @@ trait SparkSpec extends AnyFunSuite {
   val sfSmoke = "/root/testdata/sf0.001"
 
   def init(): Unit = spark.sparkContext.setLogLevel("WARN")
+
+  /** Checkpoint and spooled-input dirs under the replay harness's scratch
+    * root: a replay must delete its own before it returns or throws.
+    */
+  def replayDirs(): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    scala.util.Using.resource(
+      java.nio.file.Files.list(graft.streaming.SemiStreamRuntime.scratchRoot)) {
+      _.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith("ckpt-") || n.startsWith("stream-")).toSet
+    }
+  }
 }

@@ -65,6 +65,21 @@ class SqlSurfaceSpec extends SparkSpec {
       (tvfs -- tableFunctionNames, tableFunctionNames.toSet -- tvfs))
   }
 
+  test("a Scala-API operator call keeps the extension's function entry") {
+    val s = spark.newSession()
+    import s.implicits._
+    val id = org.apache.spark.sql.catalyst.FunctionIdentifier("intersect_size")
+    val fr = s.sessionState.functionRegistry
+    val before = fr.lookupFunction(id).get
+    val toks = SimilarityJoin.tokenize(
+      Seq((1L, "a b c d e"), (2L, "a b c d e f"), (3L, "x y z")).toDF("id", "text"), "id", "text")
+    assert(SimilarityJoin.joinSets(toks, toks, 0.8, selfJoin = true).count() == 1)
+    val after = fr.lookupFunction(id).get
+    assert(after.getClassName == "graft.functions.ArrayIntersectSize", after.getClassName)
+    assert(after.getUsage == before.getUsage && after.getUsage.contains("distinct-element"),
+      after.getUsage)
+  }
+
   test("every table function fails a wrong-arity call with an error naming it") {
     for (name <- tableFunctionNames) {
       val e = intercept[Exception](spark.sql(s"SELECT * FROM $name()"))

@@ -213,6 +213,18 @@ class StreamingDedupSpec extends StreamingDedupContract {
     else f.filter(d => d.isDirectory && d.getName.startsWith("batch="))
       .map(_.getName.stripPrefix("batch=").toLong).toSeq
   }
+
+  test("[parquet] a crash without a workDir leaves no checkpoint or spooled input behind") {
+    val docs = Tables(spark, sfSmoke, "documents")
+    val before = replayDirs()
+    val crashed = intercept[Exception] {
+      StreamingDedup.run(docs, "doc_id", "text", tau = 0.8, chunks = 2, crashAtBatch = Some(0L))
+    }
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    assert(msgs(crashed).exists(_.contains("injected crash")))
+    assert(replayDirs() -- before == Set.empty)
+  }
 }
 
 /** Delta/Iceberg-shaped transaction-log backend — the same end-to-end

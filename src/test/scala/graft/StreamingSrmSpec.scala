@@ -29,9 +29,13 @@ class StreamingSrmSpec extends SparkSpec {
     }
 
   test("the alarm frontier fires on the batch where the splitter breaks") {
-    val got = StreamingSrm.run(rows.toDF("arm", "seq"),
+    val before = replayDirs()
+    val out = StreamingSrm.run(rows.toDF("arm", "seq"),
         "arm", "seq", "a", "b", expectA = 1L, expectB = 1L, chunks = 4)
-      .orderBy("batch").as[(Int, Long, Long, Long, Long, Boolean)].collect().toSeq
+    // the replay's checkpoint and spooled chunks are gone; the frame,
+    // which holds the memory sink itself, still reads
+    assert(replayDirs() -- before == Set.empty)
+    val got = out.orderBy("batch").as[(Int, Long, Long, Long, Long, Boolean)].collect().toSeq
     assert(got == brute)
     // batches 0-1 clean; the all-'a' flood alarms from batch 2 onward
     assert(!got(0)._6 && !got(1)._6)
@@ -54,9 +58,11 @@ class StreamingSrmSpec extends SparkSpec {
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
     val bad = Seq(("x", 0L), ("a", 1L)).toDF("arm", "seq")
+    val before = replayDirs()
     val ex = intercept[Exception] {
       StreamingSrm.run(bad, "arm", "seq", "a", "b", 1L, 1L, chunks = 2)
     }
     assert(msgs(ex).exists(_.contains("arm must be")))
+    assert(replayDirs() -- before == Set.empty)
   }
 }

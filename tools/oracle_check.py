@@ -75,4 +75,7 @@ def main(out_dir: str, sf_dir: str):
 
 
 if __name__ == "__main__":
+    if len(sys.argv) != 3:
+        print("usage: oracle_check.py <verify_out_dir> <sf_dir>", file=sys.stderr)
+        sys.exit(2)
     main(sys.argv[1], sys.argv[2])
