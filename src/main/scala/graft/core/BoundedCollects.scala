@@ -59,6 +59,9 @@ object BoundedCollects {
       "surviving zone ids: ≤ nBuckets (zone grain)"),
     "graft/queries/SeqMatchQueries.scala" -> Seq(
       "one query window: len values (driver-sized by definition)"),
+    "graft/streaming/CacheManager.scala" -> Seq(
+      "one micro-batch's distinct non-NULL join keys: ≤ batch rows (key grain)",
+      "cache key counts: one row per cached key, and the cache is broadcast-able by construction"),
     "graft/streaming/DedupState.scala" -> Seq(
       "in-memory backend append: batch increment held in the JVM commit log BY DESIGN (the simulation/service stand-in backend; the parquet backend never collects)"),
     "graft/streaming/ReplayLogJoin.scala" -> Seq(

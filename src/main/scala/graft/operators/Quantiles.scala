@@ -24,22 +24,16 @@ import org.apache.spark.sql.functions._
 object Quantiles {
 
   /** Histogram rows `(group, __v, __c)` with the running count `__cum`
-    * and the group total `__n`. Totals are a |groups|-row aggregate joined
-    * back, NOT a second unordered window: the whole-partition window is
-    * another full buffered pass over the histogram at |groups|-task
-    * parallelism (guide §2.4). The join is null-safe, so a NULL group
-    * stays a group as it is for the window and the final groupBy, and it
-    * carries no broadcast hint: the planner sizes it, so a
-    * high-cardinality group column does not force a driver-side collect.
+    * and the group total `__n`, both windows over the same group
+    * partitioning: one exchange of the histogram, no join. A NULL group is
+    * a partition like any other, so it keeps its totals.
     */
-  private def withTotals(hist: DataFrame, groupCol: String): DataFrame = {
+  private def withRanks(hist: DataFrame, groupCol: String): DataFrame = {
     val w = Window.partitionBy(groupCol).orderBy("__v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val totals = hist.groupBy(col(groupCol).as("__g")).agg(sum("__c").as("__n"))
     hist
       .withColumn("__cum", sum("__c").over(w))
-      .join(totals, col(groupCol) <=> col("__g"))
-      .drop("__g")
+      .withColumn("__n", sum("__c").over(Window.partitionBy(groupCol)))
   }
 
   /** Output: (group, n, q_<name> per requested quantile), all integers.
@@ -57,7 +51,7 @@ object Quantiles {
     val hist = df
       .groupBy(col(groupCol), col(valueCol).as("__v"))
       .agg(count(lit(1)).as("__c"))
-    val ranked = withTotals(hist, groupCol)
+    val ranked = withRanks(hist, groupCol)
     val aggs = qs.map { case (name, num, den) =>
       min(when(col("__cum") >= expr(s"(${num}L * __n + ${den}L - 1L) div ${den}L"), col("__v")))
         .as(name)
@@ -101,7 +95,7 @@ object Quantiles {
           .otherwise(col(weightCol).cast("long")).as("__w0"))
       .groupBy(col(groupCol), col("__v"))
       .agg(sum("__w0").as("__c"))
-    val ranked = withTotals(hist, groupCol)
+    val ranked = withRanks(hist, groupCol)
     // __n = 0 (an all-zero-weight group) would make the ceil threshold 0
     // and '__cum >= 0' vacuously true — guard it so such a group reports
     // NULL quantiles instead of silently selecting its minimum value

@@ -13,12 +13,11 @@ import org.apache.spark.storage.StorageLevel
   * LRU touch set, `:234-241,254,283`), fetches missed keys from MongoDB with
   * executor-side `$or` queries (`:343-377`), joins and unions (`:397,607`).
   *
-  * Spark-first restatement: the cogroup splitter is one cached batch used by
-  * an `inner` join (hits) and a `left_anti` join (misses); the executor-side
-  * keyed fetch is a `left_semi` join against the stored DataFrame — Catalyst
-  * pushes the key set down to the parquet scan, which is exactly the
-  * "send only missed keys to the store" semi-join reduction, but planned
-  * (broadcast when small, shuffled when not) instead of hand-coded.
+  * Spark-first restatement: the missed keys are a key relation (a local
+  * one when [[graft.streaming.CacheManager]] splits on its driver-side key
+  * index); the keyed fetch is a `left_semi` join of the stored DataFrame
+  * against it, which Catalyst plans as the "send only missed keys to the
+  * store" semi-join reduction; [[assemble]] joins and unions.
   *
   * Scale notes (100 TB stored side): the stored relation is only ever touched
   * through `left_semi` on the key column — with a partitioned/bucketed store
@@ -42,11 +41,10 @@ object SemiStreamJoin {
   /** Result of [[joinWithStore]]: `out` is the joined batch, `fetched` is
     * what a cache manager admits for the next batch (reference `:543-567`).
     * Call `release()` once both have been consumed — the operator persists
-    * the batch (consumed by the inner AND anti join) and `fetched` (consumed
-    * by the output join AND the cache admission) so neither recomputes; each
-    * recompute of `fetched` would be a fresh stored-side scan, which at
-    * 100 TB is the whole cost of the operator (reference caches exactly
-    * these, `streaming.scala:237,400`).
+    * the batch and `fetched` so neither recomputes; each recompute of
+    * `fetched` would be a fresh stored-side scan, which at 100 TB is the
+    * whole cost of the operator (reference caches exactly these,
+    * `streaming.scala:237,400`).
     */
   final case class JoinResult(out: DataFrame, fetched: DataFrame, release: () => Unit)
 
@@ -68,48 +66,43 @@ object SemiStreamJoin {
       cache.columns.sameElements(stored.columns),
       s"cache schema ${cache.columns.mkString(",")} must equal stored schema " +
         s"${stored.columns.mkString(",")} — the cache holds verbatim stored rows")
-    joinWithFetch(
-      batch, cache, missedKeys => stored.join(missedKeys, Seq(key), "left_semi"), key,
-      saltFactors)
+    val b = batch.persist(StorageLevel.MEMORY_AND_DISK)
+    val missedKeys = b.join(cache, Seq(key), "left_anti").select(key).distinct()
+    val fetched = stored.join(missedKeys, Seq(key), "left_semi")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val out = assemble(b, cache, key, saltFactors, Some(missedKeys -> fetched))
+    JoinResult(out, fetched, () => { b.unpersist(); fetched.unpersist() })
   }
 
-  /** [[joinWithStore]] with a PLUGGABLE store fetch: `fetch` receives the
-    * distinct missed-key relation and returns the stored rows for those
-    * keys (cache-schema'd). This is the seam a remote point-lookup backend
-    * plugs into ([[graft.sources.KeyValueStore.fetchByKeys]] — the
-    * reference's executor-side `$or` fetch, `DS-Join/DS_join_step4/src/
-    * main/scala/streaming.scala:343-377`); the default backend is the
-    * Catalyst-planned semi-join above.
+  /** The one output assembly: the batch's hits against `cache` ∪ the
+    * batch rows whose key is in the missed-key relation joined with the
+    * rows fetched for them (`missed` = (missed keys, fetched rows), None
+    * when no key missed). Restricting the miss side to the missed keys
+    * means a fetch that returns extra keys cannot duplicate rows.
+    *
+    * `saltFactors` (SURVEY D4): an optional measured hot-key factor
+    * relation ([[Salting.hotKeyFactors]] shape) applied to the two INNER
+    * joins — the ones whose output is a per-key PRODUCT and therefore the
+    * ones a celebrity key funnels through a single task. None is the
+    * unsalted plan.
     */
-  /** `saltFactors` (SURVEY D4, round-13 verdict task 3): an optional
-    * measured hot-key factor relation ([[Salting.hotKeyFactors]] shape)
-    * applied to the two INNER joins — the ones whose output is a per-key
-    * PRODUCT and therefore the ones a celebrity key funnels through a
-    * single task. The hit/miss anti-split stays unsalted: its per-key work
-    * is linear in the batch rows, and salting an anti join buys nothing
-    * for that. None (the default) is byte-for-byte the unsalted plan.
-    */
-  def joinWithFetch(
+  def assemble(
       batch: DataFrame,
       cache: DataFrame,
-      fetch: DataFrame => DataFrame,
       key: String,
-      saltFactors: Option[DataFrame] = None): JoinResult = {
-    val b = batch.persist(StorageLevel.MEMORY_AND_DISK)
+      saltFactors: Option[DataFrame],
+      missed: Option[(DataFrame, DataFrame)]): DataFrame = {
     def inner(probe: DataFrame, build: DataFrame): DataFrame = saltFactors match {
       case Some(f) => Salting.adaptiveSaltedJoin(probe, build, key, f)
       case None => probe.join(build, Seq(key), "inner")
     }
-    val hits = inner(b, cache)
-    val misses = b.join(cache, Seq(key), "left_anti")
-    val missedKeys = misses.select(key).distinct()
-    val fetched = fetch(missedKeys)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    require(
-      cache.columns.sameElements(fetched.columns),
-      s"fetched schema ${fetched.columns.mkString(",")} must equal cache schema " +
-        s"${cache.columns.mkString(",")} — the cache holds verbatim stored rows")
-    val out = hits.unionByName(inner(misses, fetched))
-    JoinResult(out, fetched, () => { b.unpersist(); fetched.unpersist() })
+    val hits = inner(batch, cache)
+    missed.fold(hits) { case (keys, fetched) =>
+      require(
+        cache.columns.sameElements(fetched.columns),
+        s"fetched schema ${fetched.columns.mkString(",")} must equal cache schema " +
+          s"${cache.columns.mkString(",")} — the cache holds verbatim stored rows")
+      hits.unionByName(inner(batch.join(keys, Seq(key), "left_semi"), fetched))
+    }
   }
 }

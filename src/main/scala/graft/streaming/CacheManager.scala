@@ -1,11 +1,14 @@
 package graft.streaming
 
+import scala.collection.mutable
 import scala.collection.mutable.ListBuffer
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.SemiStreamJoin
 
@@ -34,37 +37,42 @@ final case class CostRanked(maxEntries: Int) extends EvictionPolicy
   * caching-window controller.
   *
   * Re-expresses the reference's cache/LRU machinery
-  * (`DS-Join/DS_join_step4/src/main/scala/streaming.scala`):
+  * (`DS-Join/DS_join_step4/src/main/scala/streaming.scala`), which splits
+  * one cogroup three ways per batch: hits, misses and the LRU touch set
+  * (`:234-241,421-460`). Here the three come from one driver-side pass
+  * over the batch's distinct keys against a driver-side key index:
   *
-  *   - LRU upsert (`:421-460`): per batch, every touched key's last-seen
-  *     batch id (and running hit count, for cost policies) is upserted via
-  *     ONE full-outer join; entries older than the last eviction threshold
-  *     drop out in the same pass.
+  *   - Key index: the cache's non-NULL keys, read by one collect of
+  *     `groupBy(key).count()` that also materializes the cache
+  *     (built in the first batch, refreshed on every cache update).
+  *   - LRU registers (`:421-460`): key → (last-seen batch id, hits), a
+  *     driver map upserted with the batch's keys; keys evicted by the
+  *     window leave it with their cache rows.
   *   - Eviction (`:543-587`): [[LruWindow]] drops keys with last-seen <
   *     batchId − window; [[CostRanked]] keeps the top-`maxEntries` keys by
-  *     (hits, recency). This batch's fetched rows (optionally filtered by
-  *     an admission rule, reference `DSim-Join/src/main/scala/ds_join/
-  *     DS_SimJoin_stream.scala:838`) enter the cache. A miss-free batch
-  *     leaves the cache untouched (reference `:557-559`).
+  *     (hits, recency, key). This batch's fetched rows (optionally
+  *     filtered by an admission rule, reference `DSim-Join/src/main/scala/
+  *     ds_join/DS_SimJoin_stream.scala:838`) enter the cache. A miss-free
+  *     batch leaves the cache untouched (reference `:557-559`).
   *   - Lineage truncation (`:449-451,570-573`): `localCheckpoint` every
   *     `checkpointEvery` batches — cross-batch union/anti-join state grows
   *     an unbounded plan otherwise.
   *   - Adaptive window ([[AdaptiveWindowController]], `:462-540`).
   *
   * Driver round-trips per batch are the latency floor at short trigger
-  * intervals (the reference overlapped its stages with threads), so the
-  * per-batch DAG is kept to FOUR blocking actions: the fetch count (it
-  * gates the miss/no-miss branch and feeds the controller), the joined
-  * output consume, and one materializing count per rotated state — the old
-  * expired-keys probe is folded into the eviction anti-join (an empty
-  * right side is a no-op, no count needed to branch). Fusing the two state
-  * counts into one lazy job was tried and REVERTED: the cache plan reads
-  * the new LRU, and compiling the unmaterialized LRU subtree into the
-  * bigger DAG measured 3× slower per batch. At cluster scale the
-  * state DataFrames are per-executor cached blocks, exactly like the
-  * reference's cached RDDs; the admission/eviction joins shuffle
-  * cache-sized (not stored-sized) relations, and the stored side is only
-  * ever touched through the semi-join reduction on missed keys.
+  * intervals, so the per-batch budget is: a hit batch runs the key
+  * collect (which also materializes the persisted batch) and the output
+  * consume; a miss batch adds the fetch count (its miss count feeds the
+  * controller) and the cache-update collect. Spark runs only the fetch of
+  * the missed keys, passed in as a local key relation, and the output
+  * joins; no shuffle or persisted frame tracks the LRU.
+  *
+  * Driver memory: the key index holds the cache's keys (the cache is
+  * broadcast-able by construction); under [[LruWindow]] the registers hold
+  * the keys seen within the window, under [[CostRanked]] every key seen.
+  * Keys are compared by JVM equality, so only key types where that is
+  * Spark's join equality are accepted: integral, string and date. NULL
+  * keys never join, so they never enter the index or the registers.
   */
 final class CacheManager(
     stored: DataFrame,
@@ -93,29 +101,33 @@ final class CacheManager(
     initialCache.columns.sameElements(stored.columns),
     "cache seed must have the stored relation's schema")
 
+  private val keyType = initialCache.schema(key).dataType
+  require(
+    Seq(ByteType, ShortType, IntegerType, LongType, StringType, DateType).contains(keyType),
+    s"CacheManager key `$key` is ${keyType.simpleString}: the driver key index needs a key " +
+      "whose JVM equality is Spark's join equality (integral, string or date)")
+
   private val storage = StorageLevel.MEMORY_AND_DISK
   private val spark = stored.sparkSession
+  private val fetch = fetchOverride.getOrElse(
+    (keys: DataFrame) => stored.join(keys, Seq(key), "left_semi"))
 
   private var cache: DataFrame = initialCache.persist(storage)
-  private var lru: DataFrame = spark
-    .createDataFrame(
-      spark.sparkContext.emptyRDD[Row],
-      StructType(Seq(
-        StructField(key, initialCache.schema(key).dataType),
-        StructField("last_seen", LongType),
-        StructField("hits", LongType))))
-    .persist(storage)
+  private var cachedKeys: Set[Any] = _ // built by the first batch
+  // key -> (last-seen batch id, hits)
+  private val lru = mutable.HashMap.empty[Any, (Long, Long)]
   private var ctrl = AdaptiveWindowController.initial(config)
   private var sizeState = AdaptiveWindowController.SizeHeuristicState()
   private var lastCacheCount = 0L
-  private var prevThreshold = Long.MinValue
   private var batchId = 0L
 
   val stats: ListBuffer[BatchStats] = ListBuffer.empty
 
   def currentWindow: Int = ctrl.window
   def cacheSnapshot: DataFrame = cache
-  def lruSnapshot: DataFrame = lru
+  def lruSnapshot: DataFrame = keyFrame(
+    lru.toSeq.map { case (k, (seen, hits)) => Row(k, seen, hits) },
+    StructField("last_seen", LongType), StructField("hits", LongType))
 
   /** Process one micro-batch: join it against stored-through-cache, hand the
     * joined output to `consume` (e.g. a sink write), then update LRU + cache
@@ -123,126 +135,120 @@ final class CacheManager(
     * persisted for the duration and released before returning.
     */
   def processBatch(batch: DataFrame)(consume: DataFrame => Unit): BatchStats = {
+    require(
+      batch.schema(key).dataType == keyType,
+      s"batch key `$key` is ${batch.schema(key).dataType.simpleString}, the cache's is " +
+        keyType.simpleString)
     batchId += 1
     val id = batchId
 
     val t0 = System.nanoTime()
-    val r = fetchOverride match {
-      case Some(f) => SemiStreamJoin.joinWithFetch(batch, cache, f, key, saltFactors)
-      case None => SemiStreamJoin.joinWithStore(batch, cache, stored, key, saltFactors)
-    }
-    val missedCount = r.fetched.count() // forces batch persist + split + fetch
+    if (cachedKeys == null) cachedKeys = indexCache(cache)._1
+    val b = batch.persist(storage)
+    // one job: materializes the batch and yields its distinct keys
+    val keys = b.select(key).where(col(key).isNotNull).distinct().collect().map(_.get(0))
+    val missed = keys.filterNot(cachedKeys)
+    val fetched =
+      if (missed.isEmpty) None
+      else {
+        val missedKeys = keyFrame(missed.toSeq.map(Row(_)))
+        Some(missedKeys -> fetch(missedKeys).persist(storage))
+      }
+    val missedCount = fetched.fold(0L)(_._2.count())
     val splitFetchMs = (System.nanoTime() - t0) / 1e6
-    // joinWithStore runs split and fetch in one DAG; the controller compares
-    // stage sums, and the stored-side fetch dominates whenever misses exist.
+    // the controller compares stage sums, and the stored-side fetch
+    // dominates whenever misses exist
     val (cogMs, fetchMs) =
       if (missedCount == 0) (splitFetchMs, 0.0) else (0.0, splitFetchMs)
+    val timings = AdaptiveWindowController.Timings(cogMs, fetchMs, 0)
 
-    consume(r.out)
+    consume(SemiStreamJoin.assemble(b, cache, key, saltFactors, fetched))
 
-    // --- LRU upsert (reference :421-460), one full-outer join ---
-    // Entries below the last eviction threshold left the cache then; they
-    // drop out of the LRU here (the old conditional cleanup is a no-op
-    // filter when no eviction happened — nothing sat below the threshold).
-    val touched = batch
-      .select(col(key))
-      .distinct()
-      .withColumn("t_seen", lit(id))
-    val newLru = maybeCheckpoint(
-      lru.filter(col("last_seen") >= prevThreshold)
-        .join(touched, Seq(key), "full")
-        .select(
-          col(key),
-          coalesce(col("t_seen"), col("last_seen")).as("last_seen"),
-          (coalesce(col("hits"), lit(0L)) +
-            when(col("t_seen").isNotNull, 1L).otherwise(0L)).as("hits")),
-      id)
-    // materialize BEFORE the cache update references it: the eviction plan
-    // reads the new LRU, and an unmaterialized state subtree would be
-    // recompiled and recomputed inside the (bigger) cache DAG — measured
-    // 3× slower per batch than two small sequential jobs
-    newLru.count()
-    lru.unpersist()
-    lru = newLru
+    // --- LRU upsert (reference :421-460) ---
+    keys.foreach(k => lru(k) = (id, lru.get(k).fold(0L)(_._2) + 1))
 
     // --- controller (reference :462-540, or DSim-final's :649-666) ---
     ctrl = windowRule match {
       case HillClimbRule =>
-        AdaptiveWindowController.advance(
-          ctrl,
-          config,
-          id,
-          AdaptiveWindowController.Timings(cogMs, fetchMs, 0),
-          missedCount == 0)
+        AdaptiveWindowController.advance(ctrl, config, id, timings, missedCount == 0)
       case QueryCountRule(qc) =>
-        // query_Count (`:642`) = incoming tuples this batch; batch is
-        // already persisted by the split/fetch pass, so this is a cheap
-        // second action — and the rule is opt-in
+        // query_Count (`:642`) = incoming tuples this batch; the batch is
+        // already persisted by the key collect, so this is a cheap second
+        // action — and the rule is opt-in
         AdaptiveWindowController.advanceByQueryCount(
-          ctrl, qc, id, batch.count(),
-          AdaptiveWindowController.Timings(cogMs, fetchMs, 0))
+          ctrl, qc, id, b.count(), timings)
       case FixedRule(w) =>
         // non-adaptive baseline: registers still shift (policy can be
         // swapped mid-stream), the window never moves
-        ctrl.copy(
-          window = w, saved = w,
-          prev = AdaptiveWindowController.Timings(cogMs, fetchMs, 0),
-          prev2 = ctrl.prev)
+        ctrl.copy(window = w, saved = w, prev = timings, prev2 = ctrl.prev)
       case CacheSizeRule(cfg) =>
         // myNapp_v1's frontier policy expressed in window terms: the
         // eviction threshold (id − window) IS the frontier
         sizeState = AdaptiveWindowController.advanceBySizeHeuristic(
-          sizeState, cfg, id,
-          AdaptiveWindowController.Timings(cogMs, fetchMs, 0),
-          ctrl.prev, ctrl.prev2, lastCacheCount)
+          sizeState, cfg, id, timings, ctrl.prev, ctrl.prev2, lastCacheCount)
         val w = math.max(1L, id - sizeState.frontier)
           .min(Int.MaxValue.toLong).toInt
-        ctrl.copy(
-          window = w, saved = w,
-          prev = AdaptiveWindowController.Timings(cogMs, fetchMs, 0),
-          prev2 = ctrl.prev)
+        ctrl.copy(window = w, saved = w, prev = timings, prev2 = ctrl.prev)
     }
     val threshold = id - ctrl.window
 
     // --- cache update (reference :543-587) ---
     val tc0 = System.nanoTime()
-    if (missedCount > 0) {
-      val admitted = admit(r.fetched)
+    for ((_, rows) <- fetched if missedCount > 0) {
+      val admitted = admit(rows)
       val newCache = policy match {
         case LruWindow =>
-          // the expired-keys probe is folded into the anti-join: an empty
-          // right side is a no-op, no driver count needed to branch
-          val expiredKeys = lru.filter(col("last_seen") < threshold).select(key)
-          prevThreshold = threshold
-          maybeCheckpoint(
-            cache.join(expiredKeys, Seq(key), "left_anti").unionByName(admitted),
-            id)
+          val expired = lru.collect { case (k, (seen, _)) if seen < threshold => k }.toSeq
+          lru --= expired
+          val kept =
+            if (expired.isEmpty) cache
+            else cache.join(keyFrame(expired.map(Row(_))), Seq(key), "left_anti")
+          maybeCheckpoint(kept.unionByName(admitted), id)
         case CostRanked(maxEntries) =>
-          val keep = lru
-            .orderBy(col("hits").desc, col("last_seen").desc, col(key))
-            .limit(maxEntries)
-            .select(key)
+          val keep = lru.toSeq.sorted(byCost).take(maxEntries).map(e => Row(e._1))
           maybeCheckpoint(
-            cache.unionByName(admitted).join(keep, Seq(key), "left_semi"),
+            cache.unionByName(admitted).join(keyFrame(keep), Seq(key), "left_semi"),
             id)
       }
-      lastCacheCount = newCache.count()
+      val (newKeys, rowCount) = indexCache(newCache)
+      cachedKeys = newKeys
+      lastCacheCount = rowCount
       cache.unpersist()
       cache = newCache
     }
     val cacheMs = (System.nanoTime() - tc0) / 1e6
     ctrl = AdaptiveWindowController.recordCacheTime(ctrl, cacheMs)
 
-    r.release()
+    b.unpersist()
+    fetched.foreach(_._2.unpersist())
 
     val s = BatchStats(id, missedCount, ctrl.window, cogMs, fetchMs, cacheMs)
     stats += s
     s
   }
 
-  def close(): Unit = {
-    cache.unpersist()
-    lru.unpersist()
+  def close(): Unit = cache.unpersist()
+
+  /** One job over the (persisted) cache: materializes it and returns its
+    * non-NULL key set and row count.
+    */
+  private def indexCache(df: DataFrame): (Set[Any], Long) = {
+    val counts = df.groupBy(key).count().collect()
+    (counts.iterator.map(_.get(0)).filter(_ != null).toSet, counts.map(_.getLong(1)).sum)
+  }
+
+  /** A local relation with the key column first, then `more`. */
+  private def keyFrame(rows: Seq[Row], more: StructField*): DataFrame =
+    spark.createDataFrame(rows.asJava, StructType(StructField(key, keyType) +: more))
+
+  // hits desc, last seen desc, then key ascending (Spark's order: strings
+  // compare by their UTF-8 bytes)
+  private val byCost: Ordering[(Any, (Long, Long))] = {
+    val keyOrder: Ordering[Any] =
+      if (keyType == StringType) Ordering.by(k => UTF8String.fromString(k.asInstanceOf[String]))
+      else (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b)
+    Ordering.by[(Any, (Long, Long)), (Long, Long)] { case (_, (seen, hits)) => (-hits, -seen) }
+      .orElse(Ordering.by[(Any, (Long, Long)), Any](_._1)(keyOrder))
   }
 
   /** `localCheckpoint` (eager — also persists) on cadence batches, plain

@@ -33,6 +33,10 @@ import org.apache.spark.sql.types.{LongType, StructType}
   */
 object SemiStreamRuntime {
 
+  // parent session -> (its confs when the clone was made, the clone); weak
+  // keys, so a parent no longer referenced takes its clone with it
+  private val clones = new java.util.WeakHashMap[SparkSession, (Map[String, String], SparkSession)]
+
   /** Session clone with STATE-SIZED shuffle partitions for the bounded-key
     * stateful streams (guide §2.5/§5; the q33 lesson, COVERAGE r6): the
     * state store pays a per-partition cost EVERY trigger (provider open /
@@ -53,18 +57,28 @@ object SemiStreamRuntime {
     * `spark.sql.extensions` cannot be set on a session and are skipped;
     * `spark.graft.*` keys are not SQL-registered, so `isModifiable`
     * does not vouch for them, but they are graft's own runtime settings.
+    *
+    * One clone per parent session is kept and reused while the parent's
+    * `spark.sql.*`/`spark.graft.*` confs are unchanged; a changed conf
+    * gets a fresh clone. A new session re-runs the session extensions'
+    * injections, so a clone per call would re-register every injected
+    * function on every replay.
     */
-  def stateSession(spark: SparkSession): SparkSession = {
-    val n = spark.conf.getOption("spark.graft.state.partitions")
-      .map(_.trim.toInt).filter(_ > 0).getOrElse(8)
-    val s = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      if (k.startsWith("spark.graft.") || (k.startsWith("spark.sql.") && s.conf.isModifiable(k))) {
-        s.conf.set(k, v)
-      }
+  def stateSession(spark: SparkSession): SparkSession = clones.synchronized {
+    val confs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.graft.") || k.startsWith("spark.sql.")
     }
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    s
+    Option(clones.get(spark)).collect { case (c, s) if c == confs => s }.getOrElse {
+      val n = confs.get("spark.graft.state.partitions")
+        .map(_.trim.toInt).filter(_ > 0).getOrElse(8)
+      val s = spark.newSession()
+      confs.foreach { case (k, v) =>
+        if (k.startsWith("spark.graft.") || s.conf.isModifiable(k)) s.conf.set(k, v)
+      }
+      s.conf.set("spark.sql.shuffle.partitions", n.toString)
+      clones.put(spark, (confs, s))
+      s
+    }
   }
 
   /** What a replay reads. */

@@ -31,6 +31,20 @@ class SemiStreamRuntimeSpec extends SparkSpec {
     }
   }
 
+  test("stateSession reuses its clone until a parent conf changes") {
+    val k = "spark.graft.salt.threshold"
+    val before = spark.conf.getOption(k)
+    try {
+      val a = SemiStreamRuntime.stateSession(spark)
+      assert(SemiStreamRuntime.stateSession(spark) eq a)
+      spark.conf.set(k, "77")
+      val b = SemiStreamRuntime.stateSession(spark)
+      assert(!(b eq a))
+      assert(b.conf.get(k) == "77")
+      assert(SemiStreamRuntime.stateSession(spark) eq b)
+    } finally before.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
   test("streaming semi-stream join accumulates to the plain join") {
     val li = Tables(spark, sfSmoke, "lineitem")
       .select(col("l_partkey").as("p_partkey"), col("l_orderkey"), col("l_quantity"))
