@@ -179,8 +179,8 @@ object StreamingQueries {
     "q32_stream_event_windows" -> ((s, dir) => {
       val ev = Tables(s, dir, "events")
         .select("event_id", "ts", "event_type", "value")
-      val staged = SemiStreamRuntime.stage(ev, "event_id", 6)
-      EventTimeWindows.completeCounts(s, staged, ev.schema, "1 hour")
+      EventTimeWindows.completeCounts(
+        s, SemiStreamRuntime.Chunked(ev, SemiStreamRuntime.hashChunk("event_id", 6), 6), "1 hour")
         .orderBy("ws", "event_type")
     }),
 
@@ -189,8 +189,9 @@ object StreamingQueries {
     "q33_stream_sliding_windows" -> ((s, dir) => {
       val ev = Tables(s, dir, "events")
         .select("event_id", "ts", "event_type", "value")
-      val staged = SemiStreamRuntime.stage(ev, "event_id", 6)
-      EventTimeWindows.completeCounts(s, staged, ev.schema, "1 hour", Some("30 minutes"))
+      EventTimeWindows.completeCounts(
+        s, SemiStreamRuntime.Chunked(ev, SemiStreamRuntime.hashChunk("event_id", 6), 6),
+        "1 hour", Some("30 minutes"))
         .orderBy("ws", "event_type")
     }),
 
@@ -229,16 +230,13 @@ object StreamingQueries {
         .orderBy("doc_id")
     }),
 
-    // Transaction-log state backend end-to-end (round-14, verdict task
-    // 10): q49's exact pipeline with the seen-set on the Delta/Iceberg-
-    // shaped TransactionLogDedupState (snapshot reads via log-stats file
-    // skipping, atomic commit appends, OPTIMIZE-style compaction, VACUUM
-    // replay) — decisions must be bit-identical to the directory backend,
-    // so the oracle is q49's verbatim.
+    // q49's exact pipeline (the transaction-log store is the only state
+    // store). Kept because the 246-query oracle is the fixed reference;
+    // the oracle is q49's verbatim.
     "q243_txnlog_dedup" -> ((s, dir) => {
       val docs = Tables(s, dir, "documents")
       graft.streaming.StreamingDedup.run(docs, "doc_id", "text", tau = 0.8, chunks = 4,
-        compactEvery = 2, store = graft.streaming.TransactionLogDedupState.factory)
+        compactEvery = 2)
         .orderBy("doc_id")
     }),
 
@@ -262,30 +260,25 @@ object StreamingQueries {
       finally s.conf.unset(graft.operators.Salting.ThresholdKey)
     }),
 
-    // Transaction-log backend behind the SEMANTIC dedup tier (round-14
-    // verdict task 9: certify the remaining DedupStateStore consumers on
-    // the txnlog backend): q56's exact pipeline, embedding state on
-    // TransactionLogDedupState. Backend choice must be invisible — the
-    // oracle is q56's verbatim.
+    // q56's exact pipeline (the SEMANTIC dedup tier on the only state
+    // store). Kept because the 246-query oracle is the fixed reference;
+    // the oracle is q56's verbatim.
     "q245_txnlog_semantic_dedup" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
         .select(col("vec_id").as("vid"), col("embedding").as("emb"))
       graft.streaming.StreamingSemanticDedup.run(emb, tau = 0.985, chunks = 4,
-        nCells = 64, compactEvery = 2,
-        store = graft.streaming.TransactionLogDedupState.factory)
+        nCells = 64, compactEvery = 2)
         .select(col("vid").as("vec_id"), col("dup_of"))
         .orderBy("vec_id")
     }),
 
-    // Transaction-log backend behind the SUM-fold state tier: q115's
-    // streaming substring dedup with (shingle-hash, count) increments on
-    // TransactionLogDedupState.sumFactory — compaction must SUM per key
-    // through the log's OPTIMIZE path, not keep an arbitrary row. Oracle =
-    // q115's verbatim.
+    // q115's exact pipeline (the SUM-fold state tier: (shingle-hash,
+    // count) increments, compaction SUMs per key). Kept because the
+    // 246-query oracle is the fixed reference; the oracle is q115's
+    // verbatim.
     "q246_txnlog_spans" -> ((s, dir) =>
       graft.streaming.StreamingSubstringDedup
-        .run(t(s, dir, "documents"), "doc_id", "text", k = 5, minCount = 2, chunks = 4,
-          store = graft.streaming.TransactionLogDedupState.sumFactory)
+        .run(t(s, dir, "documents"), "doc_id", "text", k = 5, minCount = 2, chunks = 4)
         .orderBy("doc_id", "start_tok")),
 
     // Streaming INCREMENTAL semantic dedup (SemDeDup's continuous-ingestion
@@ -602,9 +595,8 @@ object StreamingQueries {
   lazy val oracles: Map[String, String] = oraclesBase ++ Map(
     // q244 runs q49's pipeline with the salted-shuffle probe regime armed
     // through the session conf — bag-equal to the broadcast probe, so the
-    // oracle is q49's verbatim. q245/q246 run q56's/q115's pipelines on
-    // the transaction-log state backend — backend choice must be
-    // invisible, so each shares its directory-backend sibling's oracle.
+    // oracle is q49's verbatim. q245/q246 run q56's/q115's exact
+    // pipelines, so each shares its sibling's oracle.
     "q244_salted_dedup" -> streamDedupOracle,
     "q245_txnlog_semantic_dedup" -> oraclesBase("q56_stream_semantic_dedup"),
     "q246_txnlog_spans" -> oraclesBase("q115_stream_spans"))
@@ -955,9 +947,7 @@ object StreamingQueries {
     // arrival-order replay: chunk = ⌊md5-uniform(doc_id)·4⌋ (q46's
     // hex→uniform recipe); "seen earlier" = smaller chunk, or same chunk
     // and smaller id; dup_of = min earlier doc with exact Jaccard ≥ 0.8.
-    // q243 runs the SAME pipeline through the transaction-log state
-    // backend, so it shares this oracle verbatim: backend choice must be
-    // invisible in the decisions.
+    // q243 runs the SAME pipeline, so it shares this oracle verbatim.
     "q49_stream_dedup" -> streamDedupOracle,
     "q243_txnlog_dedup" -> streamDedupOracle,
 

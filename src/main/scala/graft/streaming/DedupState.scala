@@ -1,15 +1,12 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, FileUtil, Path => HPath}
+import org.apache.hadoop.fs.{FileUtil, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
-/** Durable keyed state for [[StreamingDedup]] — the storage contract behind
-  * the seen-set (band signatures + token sets).
-  *
-  * The interface is the part the 100-TB deployment keeps when the parquet
-  * directory layout is swapped for a transactional table (Delta/Iceberg):
+/** Durable keyed state for [[StreamingDedup]] and the other semi-stream
+  * consumers — the storage contract behind a seen-set or a count state,
+  * implemented by [[TransactionLogDedupState]]. The four operations are
+  * the ones a transactional table (Delta/Iceberg) offers:
   *
   *   - [[read]]    → a snapshot-isolated scan pruned by bucket, hiding any
   *     in-flight batch (`batch < batchId` ≙ reading the last committed
@@ -47,385 +44,19 @@ trait DedupStateStore {
 
   /** [[compact]] with a crash-injection point: `afterPublish` runs between
     * the moment the consolidated generation becomes visible and the
-    * removal of the folded sources — the widest crash window (state
-    * briefly duplicated). Part of the contract because crash-safety is a
-    * contract obligation, and the obligation is only testable if every
-    * implementation exposes the window.
+    * physical removal of the folded sources — the widest crash window
+    * (folded rows on storage twice). Part of the contract because
+    * crash-safety is a contract obligation, and the obligation is only
+    * testable if the store exposes the window.
     */
   def compact(upTo: Long, afterPublish: () => Unit): Unit
 
   /** Release every NON-DURABLE resource this store holds once its stream
-    * has COMPLETED successfully. Durable state (parquet dirs) is
-    * untouched; the in-memory backend drops its JVM-global commit-log
-    * entry — without this, every completed stream in a long-lived session
-    * (a test JVM running many suites) accretes registry state forever.
-    * Callers must NOT close after a failed run: a crash-resume reads the
-    * state back through the same dir key.
+    * has COMPLETED successfully; durable state is untouched. Callers must
+    * NOT close after a failed run: a crash-resume reads the state back
+    * through the same dir.
     */
   def close(): Unit = ()
-}
-
-/** Parquet implementation: one directory tree partitioned by
-  * `(batch, pb)`.
-  *
-  * == Layout and visibility ==
-  *
-  * Per-batch increments land under `batch=<id>/pb=<bucket>`. Compaction
-  * folds them into a consolidated GENERATION `batch=-<upTo>` — negative,
-  * so the `batch < batchId` visibility predicate keeps matching it for
-  * every later batch, while a retried batch `b` still hides exactly its
-  * own failed partitions (`batch = b ≥ 0` is never folded: only strictly
-  * earlier, checkpoint-committed batches are).
-  *
-  * == Size-tiered folding ==
-  *
-  * A compaction folds the pending increments PLUS any existing generation
-  * no larger than the bytes being folded (smallest-first). Generations
-  * therefore form a geometric-ish ladder: each row is rewritten O(log B)
-  * times over B batches — not O(B/K) as a rewrite-everything-every-K
-  * scheme would — and the live directory count stays
-  * O(compactEvery + log B) instead of O(B). This is LSM merge policy
-  * re-expressed as parquet partition folding; on a transactional table the
-  * same policy is the engine's OPTIMIZE file-size tiering.
-  *
-  * == Crash safety ==
-  *
-  * The fold is written to a sibling staging dir, then published with ONE
-  * atomic rename of `batch=-<upTo>` into the tree, then the folded source
-  * dirs are deleted. A crash…
-  *
-  *   - …mid-write leaves an invisible staging dir (cleared on retry);
-  *   - …after publish, before the deletes, leaves folded rows visible
-  *     TWICE (generation + original dirs). Duplicated state rows are
-  *     semantically harmless to the dedup pipeline — candidate pairs are
-  *     de-duplicated before verify and decisions are `min`-aggregated —
-  *     and every fold runs `dropDuplicates` over the state keys, so later
-  *     compactions converge the storage back to one copy;
-  *   - …mid-deletes: every generation carries a `_folded` manifest (written
-  *     into the staging dir, so the publish rename ships it atomically with
-  *     the data) naming exactly the source dirs it absorbed. The retry —
-  *     and every later compaction, including the nothing-pending early
-  *     return — replays any manifest entries that still exist, so the
-  *     duplicated dirs are deleted deterministically rather than waiting
-  *     for a future fold to happen to re-qualify them by size. No row is
-  *     ever lost: a manifest only ever names dirs whose content the
-  *     published generation already contains.
-  */
-final class ParquetDedupState(
-    spark: SparkSession,
-    dir: String,
-    dataSchema: StructType,
-    dedupKeys: Seq[String],
-    sumCols: Seq[String] = Seq.empty)
-  extends DedupStateStore {
-
-  require(
-    sumCols.isEmpty ||
-      dataSchema.fieldNames.toSet == (dedupKeys ++ sumCols).toSet,
-    s"sum-fold stores need schema = keys ++ sumCols: ${dataSchema.fieldNames.toSeq} vs $dedupKeys + $sumCols")
-
-  private val fullSchema = dataSchema.add("batch", LongType).add("pb", IntegerType)
-  private val root = new HPath(dir)
-  private def hfs: FileSystem =
-    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  hfs.mkdirs(root)
-
-  /** Explicit schema covers data AND partition columns: no inference pass,
-    * and an empty directory is a valid empty relation.
-    */
-  override def read(batchId: Long, buckets: Seq[Int]): DataFrame =
-    spark.read.schema(fullSchema).parquet(dir)
-      .filter(col("batch") < lit(batchId) && col("pb").isin(buckets: _*))
-
-  /** One file per (batch, pb) partition: without the repartition every
-    * shuffle partition writes its own sliver into every bucket dir — a
-    * small-file explosion that taxes each later batch's listing and read.
-    * The write is SCOPED to this batch's own `batch=<id>` directory (the
-    * `batch` partition value comes from the directory name on read, like
-    * the compacted generations'), so idempotency under batch retry is a
-    * plain directory overwrite — no root-wide dynamic-partition-overwrite
-    * commit walking every live partition per batch (measured ~40 % of the
-    * q49 append cost at sf0.1).
-    */
-  override def append(df: DataFrame, batchId: Long): Unit = {
-    df.repartition(col("pb"))
-      .write
-      .mode("overwrite")
-      .partitionBy("pb")
-      .parquet(s"$dir/batch=$batchId")
-    // state telemetry (opt-in, by-name: zero cost when disabled) — the
-    // increment count + post-append level a deployment alarms on
-    StateTelemetry.record(StateTelemetry.StatePoint(
-      dir, batchId, df.count(),
-      hfs.getContentSummary(root).getLength,
-      listBatchDirs().size.toLong))
-  }
-
-  /** The fold is written to a sibling staging dir, then published with one
-    * atomic rename; `afterPublish` is the contract's crash hook between the
-    * rename and the source-dir deletes.
-    */
-  override def compact(upTo: Long, afterPublish: () => Unit): Unit = {
-    val gen = -upTo
-    val parts = listBatchDirs()
-    val incs = parts.filter(p => p.value >= 0 && p.value < upTo)
-    if (incs.isEmpty) { replayManifests(); return } // nothing pending — but a
-    // crashed retry may still owe manifest deletes (see Crash safety)
-
-    val target = new HPath(root, s"batch=$gen")
-    val folded: Seq[BatchDir] =
-      if (hfs.exists(target)) {
-        // retry after a crash between publish and deletes: the manifest is
-        // the authoritative folded set (recomputing from the shrunken
-        // listing could under-fold and strand a source generation); a
-        // manifest-less generation (pre-manifest writer) falls back to the
-        // recomputed subset, which is always safe to delete
-        val names = readManifest(target).toSet
-        if (names.nonEmpty) parts.filter(p => names.contains(p.path.getName))
-        else incs
-      } else {
-        // smallest-first generation ladder: fold any generation no larger
-        // than what is being folded anyway
-        var foldBytes = incs.map(_.bytes).sum
-        val buf = collection.mutable.Buffer(incs: _*)
-        parts.filter(p => p.value < 0 && p.value != gen).sortBy(_.bytes).foreach { g =>
-          if (g.bytes <= foldBytes) { buf += g; foldBytes += g.bytes }
-        }
-        val staging = new HPath(s"$dir.staging$upTo")
-        if (hfs.exists(staging)) hfs.delete(staging, true) // crashed mid-write
-        val pending = spark.read.schema(fullSchema).parquet(dir)
-          .filter(col("batch").isin(buf.map(_.value).toSeq: _*))
-        // SET stores keep one row per key (a re-asserted fact folds);
-        // INCREMENT stores (sumCols) must SUM per key — keeping an
-        // arbitrary row would silently drop cross-batch count increments
-        val consolidated =
-          if (sumCols.isEmpty) pending.dropDuplicates(dedupKeys)
-          else pending
-            .groupBy((dedupKeys :+ "pb").map(col): _*) // pb = f(key): constant per key
-            .agg(
-              sum(col(sumCols.head)).cast(dataSchema(sumCols.head).dataType).as(sumCols.head),
-              sumCols.tail.map(c =>
-                sum(col(c)).cast(dataSchema(c).dataType).as(c)): _*)
-            .select(fullSchema.fieldNames.filterNot(_ == "batch").map(col).toSeq: _*)
-        consolidated
-          .withColumn("batch", lit(gen))
-          .repartition(col("pb"))
-          .write
-          .partitionBy("batch", "pb")
-          .parquet(staging.toString)
-        val written = new HPath(staging, s"batch=$gen")
-        writeManifest(written, buf.map(_.path.getName).toSeq)
-        // publish = one atomic rename (same filesystem by construction)
-        if (hfs.exists(written) && !hfs.rename(written, target))
-          throw new IllegalStateException(s"could not publish compacted generation $written -> $target")
-        hfs.delete(staging, true)
-        buf.toSeq
-      }
-    afterPublish()
-    folded.foreach(p => hfs.delete(p.path, true))
-  }
-
-  /** `_folded` sits inside the generation dir (underscore-prefixed files are
-    * invisible to Spark's file listing) and names the source dirs the
-    * generation absorbed, one per line.
-    */
-  private def writeManifest(genDir: HPath, names: Seq[String]): Unit = {
-    val out = hfs.create(new HPath(genDir, "_folded"), true)
-    try out.write(names.mkString("\n").getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readManifest(genDir: HPath): Seq[String] = {
-    val p = new HPath(genDir, "_folded")
-    if (!hfs.exists(p)) return Seq.empty
-    val in = hfs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty).toList
-    finally in.close()
-  }
-
-  /** Delete any dir still present that some generation's manifest says was
-    * folded — converges storage to one copy after a crash that interrupted
-    * a previous compaction's delete phase. Batch ids are never reused
-    * (stream batches are monotonic; only committed `batch < upTo` dirs are
-    * ever folded), so a manifest entry can never name a future increment.
-    */
-  private def replayManifests(): Unit =
-    listBatchDirs().filter(_.value < 0).foreach { g =>
-      readManifest(g.path)
-        .filter(n => n != g.path.getName)
-        .map(n => new HPath(root, n))
-        .filter(hfs.exists)
-        .foreach(p => hfs.delete(p, true))
-    }
-
-  /** Live `batch=` partition directories (listing is O(dirs) — the very
-    * quantity compaction bounds).
-    */
-  def listBatchDirs(): Seq[BatchDir] =
-    hfs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
-      .map { s: FileStatus =>
-        BatchDir(
-          s.getPath.getName.stripPrefix("batch=").toLong,
-          s.getPath,
-          hfs.getContentSummary(s.getPath).getLength)
-      }
-}
-
-final case class BatchDir(value: Long, path: HPath, bytes: Long)
-
-/** [[DedupStateStore]] on an in-process commit log — the second
-  * implementation that proves the interface carries (round-7 verdict ask):
-  * the same visibility, idempotency, generation-ladder and crash-replay
-  * semantics as [[ParquetDedupState]], with a JVM-global registry keyed by
-  * `dir` standing in for the durable service (a Redis/RocksDB-style state
-  * backend). Restart-with-the-same-workDir therefore resumes state exactly
-  * like the parquet tree does, as long as the JVM survives — which is the
-  * regime the driver-crash specs simulate (Structured Streaming restarts
-  * the QUERY, not the JVM).
-  *
-  * Every mutation is applied under the store's lock as one atomic step —
-  * the commit-log analogue of the parquet impl's atomic rename — and
-  * compaction publishes the generation (with its folded-set manifest)
-  * BEFORE the crash hook, then removes the folded sources after, so the
-  * same crash windows exist and the same replay logic converges them.
-  */
-final class InMemoryDedupState(
-    spark: SparkSession,
-    dir: String,
-    dataSchema: StructType,
-    dedupKeys: Seq[String],
-    sumCols: Seq[String] = Seq.empty)
-  extends DedupStateStore {
-
-  require(
-    sumCols.isEmpty ||
-      dataSchema.fieldNames.toSet == (dedupKeys ++ sumCols).toSet,
-    s"sum-fold stores need schema = keys ++ sumCols: ${dataSchema.fieldNames.toSeq} vs $dedupKeys + $sumCols")
-
-  private val fullSchema = dataSchema.add("batch", LongType).add("pb", IntegerType)
-  private val log = InMemoryDedupState.registry.getOrElseUpdate(dir, new InMemoryDedupState.Log)
-  private val batchIdx = fullSchema.fieldIndex("batch")
-  private val pbIdx = fullSchema.fieldIndex("pb")
-  private val keyIdx = dedupKeys.map(fullSchema.fieldIndex)
-  private val sumIdx = sumCols.map(fullSchema.fieldIndex)
-
-  override def read(batchId: Long, buckets: Seq[Int]): DataFrame = {
-    val bs = buckets.toSet
-    // the driver-side filter IS the store's index: the service analogue of
-    // partition pruning (only matching (batch, pb) segments are fetched)
-    val rows = log.synchronized {
-      log.batches.toSeq.collect {
-        case (b, rows) if b < batchId =>
-          rows.filter(r => bs.contains(r.getInt(pbIdx)))
-      }.flatten
-    }
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, math.max(1, buckets.size min 8)), fullSchema)
-  }
-
-  override def append(df: DataFrame, batchId: Long): Unit = {
-    val rows = df.withColumn("batch", lit(batchId))
-      .select(fullSchema.fieldNames.map(col).toSeq: _*)
-      .collect().toVector
-    log.synchronized { log.batches(batchId) = rows } // replace = idempotent retry
-    // no byte notion in a JVM commit log: rows are the level proxy
-    StateTelemetry.record(StateTelemetry.StatePoint(
-      dir, batchId, rows.size.toLong, -1L,
-      log.synchronized(log.batches.size.toLong)))
-  }
-
-  override def close(): Unit = InMemoryDedupState.drop(dir)
-
-  override def compact(upTo: Long, afterPublish: () => Unit): Unit = {
-    val gen = -upTo
-    val folded: Seq[Long] = log.synchronized {
-      // nothing-pending first, BEFORE the retry branch — mirrors the
-      // parquet impl exactly, so a fully-converged retry takes the same
-      // early return on both backends (and never fires the crash hook)
-      val incs = log.batches.keys.filter(b => b >= 0 && b < upTo).toSeq
-      if (incs.isEmpty) { replayManifestsLocked(); return }
-      if (log.batches.contains(gen)) {
-        // retry after a crash between publish and removal: the manifest is
-        // the authoritative folded set
-        log.manifests.getOrElse(gen, Seq.empty).filter(log.batches.contains)
-      } else {
-        // size-tiered ladder, sizes = row counts (the in-memory byte proxy)
-        var foldSize = incs.map(log.batches(_).size.toLong).sum
-        val buf = collection.mutable.Buffer(incs: _*)
-        log.batches.keys.filter(b => b < 0 && b != gen).toSeq
-          .sortBy(b => log.batches(b).size).foreach { g =>
-            val sz = log.batches(g).size.toLong
-            if (sz <= foldSize) { buf += g; foldSize += sz }
-          }
-        val genRows =
-          if (sumCols.isEmpty) {
-            val seen = collection.mutable.HashSet[Seq[Any]]()
-            buf.sorted.flatMap(log.batches(_)).flatMap { r =>
-              if (seen.add(keyIdx.map(r.get)))
-                Some(org.apache.spark.sql.Row.fromSeq(
-                  r.toSeq.updated(batchIdx, gen)))
-              else None
-            }.toVector
-          } else {
-            // INCREMENT semantics: sum the value columns per key — the
-            // set-fold would silently drop cross-batch count increments
-            val acc = collection.mutable.LinkedHashMap[Seq[Any], Array[Any]]()
-            buf.sorted.flatMap(log.batches(_)).foreach { r =>
-              val k = keyIdx.map(r.get)
-              acc.get(k) match {
-                case None => acc(k) = r.toSeq.toArray
-                case Some(prev) =>
-                  sumIdx.foreach(i =>
-                    prev(i) = prev(i).asInstanceOf[Long] + r.getLong(i))
-              }
-            }
-            acc.values.map(a =>
-              org.apache.spark.sql.Row.fromSeq(
-                a.toSeq.updated(batchIdx, gen))).toVector
-          }
-        // publish + manifest in ONE atomic step (the rename analogue)
-        log.batches(gen) = genRows
-        log.manifests(gen) = buf.toSeq
-        buf.toSeq
-      }
-    }
-    afterPublish()
-    log.synchronized { folded.foreach(log.batches.remove) }
-  }
-
-  /** Caller holds the lock. Converges storage after a crash that left a
-    * generation's folded sources unremoved (same role as the parquet
-    * impl's `replayManifests`).
-    */
-  private def replayManifestsLocked(): Unit =
-    log.manifests.foreach { case (gen, names) =>
-      names.filter(n => n != gen).foreach(log.batches.remove)
-    }
-}
-
-object InMemoryDedupState {
-  private[streaming] final class Log {
-    val batches = collection.mutable.Map[Long, Vector[org.apache.spark.sql.Row]]()
-    val manifests = collection.mutable.Map[Long, Seq[Long]]()
-  }
-  private val registry = collection.concurrent.TrieMap[String, Log]()
-
-  /** Drop a store (test hygiene between runs that reuse a dir key). */
-  def drop(dir: String): Unit = registry.remove(dir)
-
-  /** Live batch/generation ids for a dir — the spec's analogue of listing
-    * `batch=` dirs.
-    */
-  def liveBatches(dir: String): Seq[Long] =
-    registry.get(dir).map(l => l.synchronized(l.batches.keys.toSeq)).getOrElse(Seq.empty)
-
-  /** TEST HOOK: remove one batch/generation, simulating a crash that
-    * interrupted a compaction's removal loop partway (the parquet
-    * analogue is deleting a single `batch=` dir).
-    */
-  def dropBatch(dir: String, batch: Long): Unit =
-    registry.get(dir).foreach(l => l.synchronized { l.batches.remove(batch); () })
 }
 
 /** Move a staged directory into place, falling back to copy+delete when

@@ -1,18 +1,15 @@
 package graft.streaming
 
-import java.nio.file.Path
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.types.StructType
 
-import SemiStreamRuntime.{replayToMemory, Staged}
+import SemiStreamRuntime.{replayToMemory, Input}
 
 /** Event-time windowed aggregation as a REAL streaming query (SURVEY §2.7
   * — the capability the reference lacks entirely: it is processing-time
-  * only, `DS_join_step4/src/main/scala/streaming.scala:135`). Streams
-  * staged chunks through `readStream`, aggregates into
+  * only, `DS_join_step4/src/main/scala/streaming.scala:135`). Replays an
+  * [[SemiStreamRuntime.Input]] one chunk per micro-batch, aggregates into
   * tumbling/sliding event-time windows with a watermark, and returns the
   * result table.
   *
@@ -29,7 +26,7 @@ object EventTimeWindows {
 
   /** Tumbling (or sliding, if `slide` is set) windowed counts + value sums
     * per event_type, complete mode: equals the batch aggregation over all
-    * staged data.
+    * replayed data.
     *
     * ==TEST/ORACLE HARNESS ONLY — not a production path.==
     * Complete mode into a memory sink keeps EVERY window's state on the
@@ -40,12 +37,11 @@ object EventTimeWindows {
     */
   def completeCounts(
       spark: SparkSession,
-      staged: Path,
-      schema: StructType,
+      input: Input,
       windowDur: String,
       slide: Option[String] = None,
       watermark: String = "1 hour"): DataFrame =
-    replayToMemory(spark, Staged(staged.toString, schema), OutputMode.Complete()) { stream =>
+    replayToMemory(spark, input, OutputMode.Complete()) { stream =>
       val win = slide match {
         case Some(s) => window(col("ts"), windowDur, s)
         case None    => window(col("ts"), windowDur)
@@ -66,11 +62,10 @@ object EventTimeWindows {
     */
   def appendCounts(
       spark: SparkSession,
-      staged: Path,
-      schema: StructType,
+      input: Input,
       windowDur: String,
       watermark: String): DataFrame =
-    replayToMemory(spark, Staged(staged.toString, schema), OutputMode.Append()) { stream =>
+    replayToMemory(spark, input, OutputMode.Append()) { stream =>
       stream
         .withWatermark("ts", watermark)
         .groupBy(window(col("ts"), windowDur).as("w"))

@@ -42,10 +42,8 @@ object Soak {
         joinDrift <= 2.0
   }
 
-  /** The dedup half alone, for soaking an alternative state BACKEND (the
-    * round-14 verdict's txnlog ask — the join half exercises the cache
-    * runtime, not a [[DedupStateStore]], so a backend soak has no join
-    * leg). Same gates as [[Result]]'s dedup lines.
+  /** The dedup half alone (the join half exercises the cache runtime, not
+    * a [[DedupStateStore]]). Same gates as [[Result]]'s dedup lines.
     */
   final case class DedupResult(
       batches: Int,
@@ -65,28 +63,21 @@ object Soak {
     else (last.sum / last.size) / (second.sum / second.size)
   }
 
-  /** Many-batch [[StreamingDedup]] replay with state telemetry on, under
-    * any [[DedupStateStore]] backend.
-    */
-  def dedupSoak(
-      docs: DataFrame,
-      batches: Int,
-      store: StreamingDedup.StateStoreFactory = StreamingDedup.parquetStore,
-      compactEvery: Int = 4): DedupResult = {
+  /** Many-batch [[StreamingDedup]] replay with state telemetry on. */
+  def dedupSoak(docs: DataFrame, batches: Int, compactEvery: Int = 4): DedupResult = {
     val batchMs = collection.mutable.Buffer[Double]()
     StateTelemetry.enable()
     val (liveDirsMax, bytesRatio) =
       try {
         StreamingDedup.run(
           docs, "doc_id", "text", tau = 0.8, chunks = batches,
-          compactEvery = compactEvery, store = store,
+          compactEvery = compactEvery,
           onBatch = (_, ms) => { batchMs += ms.toDouble; () })
           .count()
         val points = StateTelemetry.drain()
         val dirsMax = if (points.isEmpty) 0L else points.map(_.liveDirs).max
         // sig-store byte level at the midpoint vs the end (batch-ordered)
-        val sig = points.filter(p => p.store.endsWith("sigs") && p.stateBytes >= 0)
-          .sortBy(_.batchId)
+        val sig = points.filter(_.store.endsWith("sigs")).sortBy(_.batchId)
         val ratio =
           if (sig.size < 4) 1.0
           else {

@@ -7,17 +7,19 @@ package graft.streaming
   * state a [[DedupStateStore]] (or [[StreamingSkyline]]'s running front)
   * accretes — the quantity that actually kills a long-running stream.
   *
-  * Opt-in and zero-cost when disabled: recording a point costs one
-  * increment-sized `count()` and one filesystem content summary, both
-  * skipped entirely unless [[enable]] was called (production would keep it
-  * on; the bench keeps it off so telemetry never pollutes timings).
+  * Opt-in and zero-cost when disabled: a point is built by-name, so its
+  * cost — a state store's `data/` listing behind `liveDirs` (rows and
+  * bytes come from the commit's own log stats), the skyline front's
+  * `count()` — is skipped entirely unless [[enable]] was called
+  * (production would keep it on; the bench keeps it off so telemetry
+  * never pollutes timings).
   *
   * One point per (store, batch):
   *   - `appendedRows`  — rows this batch added to the state (increment
   *     grain, the growth rate);
   *   - `stateBytes`    — total durable bytes after the append (the level;
-  *     −1 where the backend has no byte notion, e.g. in-memory);
-  *   - `liveDirs`      — live batch/generation partitions (the quantity
+  *     −1 for the skyline, whose front has no byte level);
+  *   - `liveDirs`      — live batches/generations (the quantity
   *     compaction bounds; file-count alarms catch a broken compactor).
   */
 object StateTelemetry {

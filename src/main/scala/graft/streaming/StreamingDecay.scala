@@ -42,8 +42,7 @@ object StreamingDecay {
       k: Int,
       chunks: Int = 4,
       nBuckets: Int = 64,
-      compactEvery: Int = 8,
-      store: StreamingDedup.StateStoreFactory = StreamingDedup.parquetSumStore): DataFrame = {
+      compactEvery: Int = 8): DataFrame = {
     require(chunks > 0 && genSecs > 0 && horizon >= 0 && horizon <= 50 && k > 0)
     val spark = events.sparkSession
 
@@ -62,7 +61,7 @@ object StreamingDecay {
     val cntSchema = projected.select(col(keyCol), col("gen")).schema
       .add("cnt", org.apache.spark.sql.types.LongType, nullable = false)
     val stateDir = SemiStreamRuntime.tempDir("streamdecay-").toString + "/cnt"
-    val state = store(spark, stateDir, cntSchema, Seq(keyCol, "gen"))
+    val state = TransactionLogDedupState.sumFactory(spark, stateDir, cntSchema, Seq(keyCol, "gen"))
     val pbOf = (g: org.apache.spark.sql.Column) => pmod(g, lit(nBuckets)).cast(IntegerType)
 
     val perBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>

@@ -27,13 +27,13 @@ import graft.operators.{Dedup, Sampling, SimilarityJoin}
   * change results), the seen-set here is CORRECTNESS-bearing, so the state
   * lives on storage, not in session memory:
   *
-  *   - `state/sigs`  — band signatures of every seen doc, partitioned by
-  *     `(batch, pb)` where `pb = hash(band, bsig) mod nBuckets`;
-  *   - `state/toks`  — token sets of every seen doc, partitioned by
-  *     `(batch, pb)` where `pb = hash(id) mod nBuckets`.
+  *   - `state/sigs`  — band signatures of every seen doc, clustered by
+  *     `pb = hash(band, bsig) mod nBuckets`;
+  *   - `state/toks`  — token sets of every seen doc, clustered by
+  *     `pb = hash(id) mod nBuckets`.
   *
-  * Each micro-batch appends ONLY its own increment (one write per batch,
-  * keyed by `batchId`) and probes the accumulated state with partition
+  * Each micro-batch appends ONLY its own increment (one commit per batch,
+  * keyed by `batchId`) and probes the accumulated state with bucket
   * pruning on both axes:
   *
   *   - the signature probe reads only `pb` buckets that hold some batch
@@ -41,25 +41,25 @@ import graft.operators.{Dedup, Sampling, SimilarityJoin}
   *     for a continuous ingest (B bounded, state growing without bound)
   *     the per-batch read is the matching slice of the state, not a full
   *     scan. This is the LSH-index point-lookup pattern expressed as
-  *     partition-pruned parquet reads;
+  *     bucket-pruned parquet reads;
   *   - the token fetch reads only `pb` buckets that hold a candidate id
   *     (candidates are batch-bounded), then semi-joins on the (broadcast)
   *     candidate ids — the engine's S5 keyed-fetch reduction, now against
   *     a pruned scan.
   *
-  * The pruning predicates are partition-column `isin` filters built from a
+  * The pruning predicates are `pb` `isin` filters built from a
   * driver-side collect of the DISTINCT bucket ids in the batch — bounded by
   * `nBuckets`, never data-sized.
   *
   * == Restart safety (exactly-once effects) ==
   *
   * Every write this job performs is keyed by the Structured Streaming
-  * `batchId` and SCOPED to its own batch directory (overwritten whole;
-  * the output through [[SemiStreamRuntime.BatchSink]]), so a batch that
-  * is retried after a crash REPLACES its own partitions instead of
-  * double-appending — the standard idempotent-
-  * foreachBatch recipe, applied to both the output sink and the state
-  * increments, without any root-wide dynamic-overwrite commit:
+  * `batchId` (the output overwrites its own batch directory through
+  * [[SemiStreamRuntime.BatchSink]]; a state append supersedes the same
+  * batch id's earlier commit), so a batch that is retried after a crash
+  * REPLACES its own effects instead of double-appending — the standard
+  * idempotent-foreachBatch recipe, applied to both the output sink and
+  * the state increments:
   *
   *   - probes filter `batch < batchId`, so a retrying batch never sees the
   *     partial state of its failed attempt;
@@ -67,55 +67,35 @@ import graft.operators.{Dedup, Sampling, SimilarityJoin}
   *     `workDir`, so re-invoking [[run]] with the same `workDir` resumes
   *     from the checkpoint with the state seeded back implicitly (it is
   *     read from storage every batch — there is nothing in memory to
-  *     lose). [[StreamingDedupSpec]] kills the stream mid-run AFTER the
+  *     lose). [[StreamingDedupTxnLogSpec]] kills the stream mid-run AFTER the
   *     writes of an uncommitted batch and verifies the resumed run's
   *     decisions are byte-identical to an uninterrupted one.
   *
   * == Compaction ==
   *
-  * Left alone, the state accrues one `(batch, pb)` directory pair per
-  * batch per touched bucket FOREVER — and the round-6 bucket-fan-out A/B
-  * showed listing metadata dominating small partitions. Every
-  * `compactEvery` batches the job folds committed increments
-  * (`batch < batchId` — never the current, possibly-retrying batch) into
-  * consolidated negative-id generations via [[ParquetDedupState.compact]]
-  * (size-tiered, crash-safe — see its scaladoc), so the live directory
-  * count is O(compactEvery + log batches) instead of O(batches).
+  * Left alone, the state accrues one set of small files per batch
+  * FOREVER — and the round-6 bucket-fan-out A/B showed file metadata
+  * dominating small partitions. Every `compactEvery` batches the job folds
+  * committed increments (`batch < batchId` — never the current,
+  * possibly-retrying batch) into consolidated negative-id generations via
+  * [[TransactionLogDedupState]]'s `compact` (size-tiered, crash-safe — see
+  * its scaladoc), so the live batch count is O(compactEvery + log
+  * batches) instead of O(batches).
   *
   * == At 100 TB ==
   *
-  * The state contract is [[DedupStateStore]]; the parquet directory impl
-  * maps 1:1 onto a transactional table (Delta/Iceberg) with `pb`
-  * clustering — read = snapshot scan, append = batchId-keyed transactional
-  * replace, compact = OPTIMIZE. The per-batch logic — bounded bucket touch
-  * set, batchId-keyed idempotent writes — is unchanged.
+  * The state contract is [[DedupStateStore]], and its store already has a
+  * transactional table's mechanics (snapshot reads with stats-based file
+  * skipping, batchId-keyed atomic commits, OPTIMIZE, VACUUM, log
+  * checkpoints) on a local log. At 100 TB the same contract runs on a
+  * Delta/Iceberg table with `pb` clustering; the per-batch logic — bounded
+  * bucket touch set, batchId-keyed idempotent writes — is unchanged.
   */
 object StreamingDedup {
 
-  /** Pluggable state backend: (spark, dir, dataSchema, dedupKeys) → store. */
+  /** State-store constructor: (spark, dir, dataSchema, dedupKeys) → store. */
   type StateStoreFactory =
     (SparkSession, String, org.apache.spark.sql.types.StructType, Seq[String]) => DedupStateStore
-
-  val parquetStore: StateStoreFactory =
-    (s, dir, schema, keys) => new ParquetDedupState(s, dir, schema, keys)
-
-  val inMemoryStore: StateStoreFactory =
-    (s, dir, schema, keys) => new InMemoryDedupState(s, dir, schema, keys)
-
-  /** INCREMENT-semantics variants for count states (schema = keys ++ long
-    * value columns): compaction SUMS the value columns per key instead of
-    * keeping one arbitrary row, so summed reads are compaction-invariant
-    * by construction — the contract the (h, cnt) consumers
-    * ([[StreamingSubstringDedup]], [[StreamingNovelty]],
-    * [[StreamingDrift]]) depend on.
-    */
-  val parquetSumStore: StateStoreFactory =
-    (s, dir, schema, keys) => new ParquetDedupState(
-      s, dir, schema, keys, sumCols = schema.fieldNames.filterNot(keys.contains).toSeq)
-
-  val inMemorySumStore: StateStoreFactory =
-    (s, dir, schema, keys) => new InMemoryDedupState(
-      s, dir, schema, keys, sumCols = schema.fieldNames.filterNot(keys.contains).toSeq)
 
   /** State-partition bucket of a signature or an id. */
   private def bucketOf(n: Int, cols: Column*): Column =
@@ -147,14 +127,14 @@ object StreamingDedup {
     *                      a driver crash mid-batch.
     * @param crashInCompaction TEST HOOK — crash once inside the first
     *                      compaction, after the generation is published but
-    *                      before the folded dirs are deleted (the widest
-    *                      window: state briefly duplicated).
+    *                      before the folded files are deleted (the widest
+    *                      window: folded rows on disk twice).
     * @param onBatch       timing callback (batchId, millis) for scale
     *                      experiments.
-    * @param store         state-backend factory (spark, dir, dataSchema,
-    *                      dedupKeys) — [[ParquetDedupState]] by default;
-    *                      [[InMemoryDedupState]] runs the same pipeline on
-    *                      the commit-log backend.
+    * @param store         state-store factory (spark, dir, dataSchema,
+    *                      dedupKeys) — [[TransactionLogDedupState.factory]]
+    *                      by default; a caller can wrap it (e.g. to time
+    *                      each state operation).
     * @param hashTokens    store the VERIFY tier (`state/toks`) as xxhash64
     *                      token ids (`array<bigint>`) instead of token
     *                      strings — the state-size tier for corpora whose
@@ -182,7 +162,7 @@ object StreamingDedup {
       crashAtBatch: Option[Long] = None,
       crashInCompaction: Boolean = false,
       onBatch: (Long, Long) => Unit = (_, _) => (),
-      store: StateStoreFactory = parquetStore,
+      store: StateStoreFactory = TransactionLogDedupState.factory,
       hashTokens: Boolean = false,
       // salted-shuffle probe regime (SURVEY D4; round-13 verdict task 3):
       // when > 0, the state probe joins by SHUFFLE with measured per-key
@@ -383,9 +363,8 @@ object StreamingDedup {
         floor(Sampling.hashUniform(col(idCol)) * chunks).cast("int"),
         chunks),
       workDir)(perBatch)
-    // successful completion only (a throw above skips this): non-durable
-    // backends release their JVM-global commit-log entry; a FAILED run
-    // keeps it so crash-resume can read the state back through the dir key
+    // successful completion only (a throw above skips this): a FAILED run
+    // keeps whatever crash-resume needs to read the state back
     sigState.close()
     tokState.close()
 

@@ -48,8 +48,7 @@ object StreamingDrift {
       textCol: String,
       chunks: Int = 4,
       nBuckets: Int = 64,
-      compactEvery: Int = 8,
-      store: StreamingDedup.StateStoreFactory = StreamingDedup.parquetSumStore): DataFrame = {
+      compactEvery: Int = 8): DataFrame = {
     require(chunks > 0)
     val spark = docs.sparkSession
     val storage = StorageLevel.MEMORY_AND_DISK
@@ -60,7 +59,7 @@ object StreamingDrift {
     import spark.implicits._
     val cntSchema = Seq.empty[(Long, Long)].toDF("h", "cnt").schema
     val stateDir = SemiStreamRuntime.tempDir("streamdrift-").toString + "/cnt"
-    val state = store(spark, stateDir, cntSchema, Seq("h"))
+    val state = TransactionLogDedupState.sumFactory(spark, stateDir, cntSchema, Seq("h"))
 
     val perBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
       if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)

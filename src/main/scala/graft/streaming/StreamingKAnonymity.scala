@@ -40,8 +40,7 @@ object StreamingKAnonymity {
       k: Long,
       chunks: Int = 4,
       nBuckets: Int = 64,
-      compactEvery: Int = 8,
-      store: StreamingDedup.StateStoreFactory = StreamingDedup.parquetSumStore): DataFrame = {
+      compactEvery: Int = 8): DataFrame = {
     require(chunks > 0 && qiCols.nonEmpty && k >= 1)
     val spark = docs.sparkSession
     val storage = StorageLevel.MEMORY_AND_DISK
@@ -51,7 +50,7 @@ object StreamingKAnonymity {
     import spark.implicits._
     val cntSchema = Seq.empty[(Long, Long)].toDF("h", "cnt").schema
     val stateDir = SemiStreamRuntime.tempDir("streamkanon-").toString + "/cnt"
-    val state = store(spark, stateDir, cntSchema, Seq("h"))
+    val state = TransactionLogDedupState.sumFactory(spark, stateDir, cntSchema, Seq("h"))
 
     val comboHash = xxhash64(qiCols.map(col): _*)
 

@@ -54,8 +54,7 @@ object StreamingSemanticDedup {
       nCells: Int = 64,
       nBuckets: Int = 16,
       workDir: Option[String] = None,
-      compactEvery: Int = 8,
-      store: StreamingDedup.StateStoreFactory = StreamingDedup.parquetStore): DataFrame = {
+      compactEvery: Int = 8): DataFrame = {
     val spark = vectors.sparkSession
     graft.functions.CosineSimilarity.register(spark)
     val storage = StorageLevel.MEMORY_AND_DISK
@@ -90,7 +89,7 @@ object StreamingSemanticDedup {
         .withColumn("pb", pmod(col("cell"), lit(nBuckets)).cast(IntegerType))
 
     val stateSchema = assign(vectors.limit(0)).drop("pb").schema
-    val state = store(spark, s"$root/state/vecs", stateSchema, Seq("vid"))
+    val state = TransactionLogDedupState.factory(spark, s"$root/state/vecs", stateSchema, Seq("vid"))
 
     val perBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
       if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
@@ -148,8 +147,7 @@ object StreamingSemanticDedup {
         floor(Sampling.hashUniform(col("vid")) * chunks).cast("int"),
         chunks),
       workDir)(perBatch)
-    // successful completion only: see StreamingDedup — failed runs keep
-    // their registry entry for crash-resume
+    // successful completion only: see StreamingDedup
     state.close()
 
     centroids.unpersist()

@@ -31,11 +31,9 @@ class EventTimeWindowsSpec extends SparkSpec {
       (ts(170), 1), (ts(175), 1),
       (ts(180), 2),
       (ts(15), 3))
-    val df = rows.toDF("ts", "chunk")
-    val staged = SemiStreamRuntime.stageByColumn(df, "chunk", 4)
-
     val got = EventTimeWindows
-      .appendCounts(spark, staged, df.select("ts").schema, "1 hour", "30 minutes")
+      .appendCounts(spark, SemiStreamRuntime.Chunked(rows.toDF("ts", "chunk"), col("chunk"), 4),
+        "1 hour", "30 minutes")
       .as[(String, Long)].collect().toSeq
 
     // hour-0 emitted EXACTLY once, with the on-time count only (3, not 4);
@@ -50,12 +48,13 @@ class EventTimeWindowsSpec extends SparkSpec {
     import spark.implicits._
     val rows = (0 until 100).map(i => (ts(i * 7L), i % 3))
     val df = rows.toDF("ts", "chunk")
-    val staged = SemiStreamRuntime.stageByColumn(df.withColumn("event_type", lit("e"))
-      .withColumn("value", lit(1.0)), "chunk", 3)
-    val schema = df.select("ts").withColumn("event_type", lit("e"))
-      .withColumn("value", lit(1.0)).schema
-    val got = EventTimeWindows.completeCounts(spark, staged, schema, "1 hour")
+    val events = df.withColumn("event_type", lit("e")).withColumn("value", lit(1.0))
+    // the harness spools the chunked input and deletes the spool itself
+    val before = replayDirs()
+    val got = EventTimeWindows
+      .completeCounts(spark, SemiStreamRuntime.Chunked(events, col("chunk"), 3), "1 hour")
       .select("ws", "n")
+    assert(replayDirs() == before, "the call left its spooled input or checkpoint behind")
     val expected = rows.toDF("ts", "chunk")
       .groupBy(date_format(window(col("ts"), "1 hour").getField("start"), "yyyy-MM-dd HH:mm:ss").as("ws"))
       .agg(count(lit(1)).as("n"))

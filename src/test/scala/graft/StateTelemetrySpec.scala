@@ -23,7 +23,7 @@ class StateTelemetrySpec extends SparkSpec {
       // one point per micro-batch, batch ids 0..3
       assert(pts.map(_.batchId).sorted == Seq(0L, 1L, 2L, 3L), pts.toString)
       assert(pts.forall(_.appendedRows > 0), "every batch appends state rows")
-      assert(pts.forall(_.stateBytes > 0), "parquet backend reports bytes")
+      assert(pts.forall(_.stateBytes > 0), "the state store reports bytes")
       // the level is monotone while nothing compacts (compactEvery=8 > 4)
       val byBatch = pts.sortBy(_.batchId).map(_.stateBytes)
       assert(byBatch == byBatch.sorted, s"state bytes not monotone: $byBatch")

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Decay
-import graft.streaming.{StreamingDecay, StreamingDedup}
+import graft.streaming.StreamingDecay
 
 class StreamingDecaySpec extends SparkSpec {
   init()
@@ -25,12 +24,9 @@ class StreamingDecaySpec extends SparkSpec {
       .as[(Long, Long, Long, Long)].collect().toSeq.sortBy(_._1)
   }
 
-  private def streamed(store: StreamingDedup.StateStoreFactory): DataFrame =
-    StreamingDecay.run(events, "user_id", "tsec", genSecs = 86400L,
-      horizon = 7, k = 5, chunks = 4, nBuckets = 16, compactEvery = 2, store = store)
-
   test("every batch tick equals the batch operator over its event prefix") {
-    val out = streamed(StreamingDedup.parquetSumStore)
+    val out = StreamingDecay.run(events, "user_id", "tsec", genSecs = 86400L,
+      horizon = 7, k = 5, chunks = 4, nBuckets = 16, compactEvery = 2)
     val got = out
       .select(col("batch"), col("rank"), col("user_id"), col("n_window"), col("decayed"))
       .as[(Long, Long, Long, Long, Long)].collect()
@@ -45,12 +41,6 @@ class StreamingDecaySpec extends SparkSpec {
       val upTo = if (bid == 3) hi else lo + (bid + 1) * per - 1
       assert(got(bid) == prefixTopK(upTo, 5), s"batch $bid")
     }
-  }
-
-  test("backends agree: parquet sum store == in-memory sum store") {
-    val a = streamed(StreamingDedup.parquetSumStore).orderBy("batch", "rank").collect().toSeq
-    val c = streamed(StreamingDedup.inMemorySumStore).orderBy("batch", "rank").collect().toSeq
-    assert(a == c && a.nonEmpty)
   }
 
   test("horizon pruning: only in-window generations are read back per batch") {

@@ -4,28 +4,25 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.operators.{Sampling, SimilarityJoin}
-import graft.streaming.{InMemoryDedupState, StreamingDedup}
+import graft.streaming.{StreamingDedup, TransactionLogDedupState}
 
-/** The [[graft.streaming.DedupStateStore]] CONTRACT suite: every test runs
-  * against a pluggable backend, and both implementations — the parquet
-  * directory tree and the in-memory commit log — must pass it unchanged
-  * (round-7 verdict ask: prove the interface carries). Backend-specific
-  * introspection (what dirs/segments are live, removing one to simulate a
-  * partially-completed crash cleanup) goes through [[backendLive]] /
-  * [[backendRemove]], everything else is shared.
+/** [[StreamingDedup]] end to end on its transaction-log state store:
+  * brute-force equality, compaction bounds, crash-mid-compaction and
+  * crash-mid-batch resume through the store's snapshot/commit/OPTIMIZE/
+  * VACUUM mechanics. Every variant hands the pipeline the store a
+  * different way and runs the same assertions. Physical introspection
+  * (which batches have files on disk) goes through the store's on-disk
+  * test hook.
   */
 abstract class StreamingDedupContract extends SparkSpec {
   init()
 
-  /** Backend under test. */
-  def backend: String
+  def variant: String
   def store: StreamingDedup.StateStoreFactory
+
   /** Live batch/generation ids of a state dir. */
-  def backendLive(stateDir: String): Seq[Long]
-  /** Does state survive a SUCCESSFUL run? Durable backends: yes; the
-    * in-memory commit log releases its registry entry on close().
-    */
-  def retainsStateAfterSuccess: Boolean
+  private def live(stateDir: String): Seq[Long] =
+    TransactionLogDedupState.liveBatches(stateDir)
 
   private def run(
       docs: org.apache.spark.sql.DataFrame,
@@ -63,7 +60,7 @@ abstract class StreamingDedupContract extends SparkSpec {
       .select(col("doc_id"), coalesce(col("exp_dup"), lit(-1L)).as("dup_of"))
   }
 
-  test(s"[$backend] streaming incremental dedup equals the ordered brute force at sf0.001") {
+  test(s"[$variant] streaming incremental dedup equals the ordered brute force at sf0.001") {
     val docs = Tables(spark, sfSmoke, "documents")
     val got = run(docs, chunks = 3)
     val expected = bruteDedup(docs, tau = 0.8, chunks = 3)
@@ -71,7 +68,7 @@ abstract class StreamingDedupContract extends SparkSpec {
     assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
   }
 
-  test(s"[$backend] cross-batch duplicates are found regardless of id order") {
+  test(s"[$variant] cross-batch duplicates are found regardless of id order") {
     import spark.implicits._
     // one duplicate pair + one novel doc; whatever batches MD5 assigns,
     // the later-arriving member of the pair must point at the earlier one
@@ -94,17 +91,16 @@ abstract class StreamingDedupContract extends SparkSpec {
     assert(got(30L) == -1L)
   }
 
-  test(s"[$backend] compaction bounds the live state segments and preserves decisions") {
+  test(s"[$variant] compaction bounds the live state segments and preserves decisions") {
     val docs = Tables(spark, sfSmoke, "documents")
     val workDir = java.nio.file.Files.createTempDirectory("graft-dedup-compact-").toString
     // segment census taken DURING the final batches (onBatch fires after
-    // each batch's appends): non-durable backends release their registry
-    // entry once the run completes, so a post-run listing would be empty
+    // each batch's appends)
     val liveAtEnd = collection.mutable.Map[String, Seq[Long]]()
     val got = run(docs, chunks = 8, workDir = Some(workDir), compactEvery = 2,
       onBatch = (_, _) =>
         for (state <- Seq("sigs", "toks"))
-          liveAtEnd(state) = backendLive(s"$workDir/state/$state"))
+          liveAtEnd(state) = live(s"$workDir/state/$state"))
     val expected = bruteDedup(docs, tau = 0.8, chunks = 8)
     assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
 
@@ -118,7 +114,7 @@ abstract class StreamingDedupContract extends SparkSpec {
     }
   }
 
-  test(s"[$backend] hashed-token verify tier: identical decisions, measured toks-state bytes") {
+  test(s"[$variant] hashed-token verify tier: identical decisions, measured toks-state bytes") {
     val docs = Tables(spark, sfSmoke, "documents")
     def bytesOf(dir: String): Long = {
       def walk(f: java.io.File): Long =
@@ -136,35 +132,28 @@ abstract class StreamingDedupContract extends SparkSpec {
     // tokens) and the hash-space verify flips only on an xxhash64
     // collision — so decisions must be EXACTLY equal on this corpus
     assert(plain.exceptAll(hashed).isEmpty && hashed.exceptAll(plain).isEmpty)
-    if (backend == "parquet") {
-      val (pB, hB) = (bytesOf(s"$plainDir/state/toks"), bytesOf(s"$hashDir/state/toks"))
-      val nDocs = docs.count()
-      info(f"toks state bytes/doc: plain ${pB.toDouble / nDocs}%.1f, " +
-        f"hashed ${hB.toDouble / nDocs}%.1f (ratio ${hB.toDouble / pB}%.2f)")
-      assert(hB > 0 && pB > 0)
-    }
+    val (pB, hB) = (bytesOf(s"$plainDir/state/toks/data"), bytesOf(s"$hashDir/state/toks/data"))
+    val nDocs = docs.count()
+    info(f"toks state bytes/doc: plain ${pB.toDouble / nDocs}%.1f, " +
+      f"hashed ${hB.toDouble / nDocs}%.1f (ratio ${hB.toDouble / pB}%.2f)")
+    assert(hB > 0 && pB > 0)
   }
 
-  test(s"[$backend] successful completion releases non-durable state (registry bound)") {
+  test(s"[$variant] durable state survives a successful run") {
     val docs = Tables(spark, sfSmoke, "documents").limit(60)
     val workDir = java.nio.file.Files.createTempDirectory("graft-dedup-close-").toString
     run(docs, chunks = 3, workDir = Some(workDir)).count()
-    for (state <- Seq("sigs", "toks")) {
-      val live = backendLive(s"$workDir/state/$state")
-      if (retainsStateAfterSuccess)
-        assert(live.nonEmpty, s"durable $state state vanished after success")
-      else
-        assert(live.isEmpty,
-          s"$state registry entry leaked after successful completion: $live")
-    }
+    for (state <- Seq("sigs", "toks"))
+      assert(live(s"$workDir/state/$state").nonEmpty,
+        s"durable $state state vanished after success")
   }
 
-  test(s"[$backend] crash mid-compaction (generation published, sources unremoved) resumes identically") {
+  test(s"[$variant] crash mid-compaction (generation published, sources unremoved) resumes identically") {
     val docs = Tables(spark, sfSmoke, "documents")
     val workDir = java.nio.file.Files.createTempDirectory("graft-dedup-compactcrash-").toString
 
     // crash in the widest window: the consolidated generation is visible
-    // AND the folded sources still exist (state rows duplicated)
+    // AND the folded sources still exist on disk
     val crashed = intercept[Exception] {
       run(docs, chunks = 6, workDir = Some(workDir), compactEvery = 2,
         crashInCompaction = true).count()
@@ -178,7 +167,7 @@ abstract class StreamingDedupContract extends SparkSpec {
     assert(resumed.groupBy("doc_id").count().filter(col("count") > 1).isEmpty)
   }
 
-  test(s"[$backend] mid-stream crash after an uncommitted batch's writes resumes to identical decisions") {
+  test(s"[$variant] mid-stream crash after an uncommitted batch's writes resumes to identical decisions") {
     val docs = Tables(spark, sfSmoke, "documents")
     val workDir = java.nio.file.Files.createTempDirectory("graft-dedup-restart-").toString
 
@@ -202,19 +191,12 @@ abstract class StreamingDedupContract extends SparkSpec {
   }
 }
 
-/** Parquet-directory backend (the production default). */
-class StreamingDedupSpec extends StreamingDedupContract {
-  override def backend = "parquet"
-  override def store = StreamingDedup.parquetStore
-  override def retainsStateAfterSuccess = true
-  override def backendLive(stateDir: String): Seq[Long] = {
-    val f = new java.io.File(stateDir).listFiles()
-    if (f == null) Seq.empty
-    else f.filter(d => d.isDirectory && d.getName.startsWith("batch="))
-      .map(_.getName.stripPrefix("batch=").toLong).toSeq
-  }
+/** The store a stream gets by default: one warm instance per state dir. */
+class StreamingDedupTxnLogSpec extends StreamingDedupContract {
+  override def variant = "txnlog"
+  override def store = TransactionLogDedupState.factory
 
-  test("[parquet] a crash without a workDir leaves no checkpoint or spooled input behind") {
+  test("[txnlog] a crash without a workDir leaves no checkpoint or spooled input behind") {
     val docs = Tables(spark, sfSmoke, "documents")
     val before = replayDirs()
     val crashed = intercept[Exception] {
@@ -227,24 +209,10 @@ class StreamingDedupSpec extends StreamingDedupContract {
   }
 }
 
-/** Delta/Iceberg-shaped transaction-log backend — the same end-to-end
-  * suite (brute-force equality, compaction bounds, crash-mid-compaction
-  * and crash-mid-batch resume) through snapshot/commit/OPTIMIZE/VACUUM
-  * mechanics instead of directory overwrites.
+/** Every state operation on a fresh store instance: the pipeline's
+  * decisions must not depend on a store's cached snapshot.
   */
-class StreamingDedupTxnLogSpec extends StreamingDedupContract {
-  override def backend = "txnlog"
-  override def store = graft.streaming.TransactionLogDedupState.factory
-  override def retainsStateAfterSuccess = true
-  override def backendLive(stateDir: String): Seq[Long] =
-    graft.streaming.TransactionLogDedupState.liveBatches(stateDir)
-}
-
-/** In-memory commit-log backend — the same suite, unchanged. */
-class StreamingDedupInMemorySpec extends StreamingDedupContract {
-  override def backend = "in-memory"
-  override def store = StreamingDedup.inMemoryStore
-  override def retainsStateAfterSuccess = false
-  override def backendLive(stateDir: String): Seq[Long] =
-    InMemoryDedupState.liveBatches(stateDir)
+class StreamingDedupColdStateSpec extends StreamingDedupContract {
+  override def variant = "txnlog-cold"
+  override def store = ColdReopenStore.of(TransactionLogDedupState.factory)
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.{StreamingDedup, StreamingDrift}
+import graft.streaming.StreamingDrift
 
 /** Arrival-order contract of the drift monitor: batch b's drift is the
   * exact L1 distance (bp of probability mass) vs batches < b; empty
@@ -72,16 +72,5 @@ class StreamingDriftSpec extends SparkSpec {
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(got == brute(same, 4))
     got.tail.foreach(r => assert(r._4 == 0L, got.toString))
-  }
-
-  test("in-memory state backend produces identical drift") {
-    val parq = StreamingDrift
-      .run(corpus.toDF("doc_id", "text"), "doc_id", "text", chunks = 4)
-      .orderBy("batch").as[(Long, Long, Long, Long)].collect().toSeq
-    val mem = StreamingDrift
-      .run(corpus.toDF("doc_id", "text"), "doc_id", "text", chunks = 4,
-        store = StreamingDedup.inMemorySumStore)
-      .orderBy("batch").as[(Long, Long, Long, Long)].collect().toSeq
-    assert(parq == mem && parq.nonEmpty)
   }
 }

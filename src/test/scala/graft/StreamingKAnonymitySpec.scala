@@ -1,11 +1,10 @@
 package graft
 
-import graft.streaming.{StreamingDedup, StreamingKAnonymity}
+import graft.streaming.StreamingKAnonymity
 
 /** Arrival-order contract of the streaming k-anonymity release: a row's
   * qi_n counts same-combo rows in batches ≤ its own (decision at its
-  * batch's close), suppression flips as a combo's census clears k, and
-  * both state backends agree.
+  * batch's close), and suppression flips as a combo's census clears k.
   */
 class StreamingKAnonymitySpec extends SparkSpec {
   init()
@@ -36,17 +35,12 @@ class StreamingKAnonymitySpec extends SparkSpec {
       (i.toLong, lang, src)
     }
 
-  test("per-row decisions equal the arrival-order brute force (both backends)") {
-    for (store <- Seq(
-        StreamingDedup.parquetSumStore -> "parquet",
-        StreamingDedup.inMemorySumStore -> "in-memory")) {
-      val got = StreamingKAnonymity
-        .run(corpus.toDF("doc_id", "lang", "source"), "doc_id",
-          Seq("lang", "source"), k = 5, chunks = 4, compactEvery = 2,
-          store = store._1)
-        .as[(Long, Long, Boolean, Long)].collect().toSet
-      assert(got == brute(corpus, 5, 4), s"backend=${store._2}")
-    }
+  test("per-row decisions equal the arrival-order brute force") {
+    val got = StreamingKAnonymity
+      .run(corpus.toDF("doc_id", "lang", "source"), "doc_id",
+        Seq("lang", "source"), k = 5, chunks = 4, compactEvery = 2)
+      .as[(Long, Long, Boolean, Long)].collect().toSet
+    assert(got == brute(corpus, 5, 4))
   }
 
   test("a combo below k in early batches is released once its census clears k") {

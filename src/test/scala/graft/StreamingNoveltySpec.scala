@@ -1,10 +1,10 @@
 package graft
 
-import graft.streaming.{StreamingDedup, StreamingNovelty}
+import graft.streaming.StreamingNovelty
 
 /** Arrival-order contract of the streaming novelty monitor: a batch's
   * n_new counts shingles unseen in STRICTLY earlier batches; a
-  * single-batch stream is 100% novel; both state backends agree.
+  * single-batch stream is 100% novel.
   */
 class StreamingNoveltySpec extends SparkSpec {
   init()
@@ -71,18 +71,5 @@ class StreamingNoveltySpec extends SparkSpec {
       .orderBy("batch")
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
     assert(got == brute(doubled, 5, 4))
-  }
-
-  test("in-memory state backend produces identical novelty") {
-    val parq = StreamingNovelty
-      .run(corpus.toDF("doc_id", "text"), "doc_id", "text", k = 5, chunks = 4)
-      .orderBy("batch")
-      .as[(Long, Long, Long, Long, Long)].collect().toSeq
-    val mem = StreamingNovelty
-      .run(corpus.toDF("doc_id", "text"), "doc_id", "text", k = 5, chunks = 4,
-        store = StreamingDedup.inMemorySumStore)
-      .orderBy("batch")
-      .as[(Long, Long, Long, Long, Long)].collect().toSeq
-    assert(parq == mem && parq.nonEmpty)
   }
 }

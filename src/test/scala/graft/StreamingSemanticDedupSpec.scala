@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.operators.{Sampling, SimilaritySearch}
-import graft.streaming.{StreamingDedup, StreamingSemanticDedup}
+import graft.streaming.StreamingSemanticDedup
 
 /** Streaming semantic dedup vs the ordered brute force: dup_of(x) = min
   * same-IVF-cell y seen before x (earlier MD5 batch, or same batch with
@@ -77,12 +77,5 @@ class StreamingSemanticDedupSpec extends SparkSpec {
     val expected = brute(vecs, tau = 0.985, chunks = 3, nCells = 4)
     assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
     assert(got.filter(col("dup_of") >= 0).count() >= 3)
-  }
-
-  test("in-memory state backend produces identical decisions") {
-    val got = StreamingSemanticDedup.run(emb, tau = 0.985, chunks = 3, nCells = 16,
-      compactEvery = 2, store = StreamingDedup.inMemoryStore)
-    val expected = brute(emb, tau = 0.985, chunks = 3, nCells = 16)
-    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
   }
 }

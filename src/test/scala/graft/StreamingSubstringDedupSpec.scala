@@ -4,12 +4,11 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Tables
 import graft.operators.{Sampling, SubstringDedup}
-import graft.streaming.{StreamingDedup, StreamingSubstringDedup}
+import graft.streaming.StreamingSubstringDedup
 
 /** Arrival-order contract of the streamed substring pass: each doc's
   * spans reflect shingle occurrences over batches ≤ its own; a
-  * single-batch stream equals the batch operator; both state backends
-  * agree.
+  * single-batch stream equals the batch operator.
   */
 class StreamingSubstringDedupSpec extends SparkSpec {
   init()
@@ -79,19 +78,6 @@ class StreamingSubstringDedupSpec extends SparkSpec {
       .orderBy("doc_id", "start_tok")
       .as[(Long, Long, Long, Long)].collect().toSeq
     assert(streamed == batch && batch.nonEmpty)
-  }
-
-  test("in-memory state backend produces identical spans") {
-    val pq = StreamingSubstringDedup
-      .run(corpus.toDF("doc_id", "text"), "doc_id", "text", k = 5, minCount = 2, chunks = 4)
-      .orderBy("doc_id", "start_tok")
-      .as[(Long, Long, Long, Long)].collect().toSeq
-    val mem = StreamingSubstringDedup
-      .run(corpus.toDF("doc_id", "text"), "doc_id", "text", k = 5, minCount = 2, chunks = 4,
-        store = StreamingDedup.inMemorySumStore)
-      .orderBy("doc_id", "start_tok")
-      .as[(Long, Long, Long, Long)].collect().toSeq
-    assert(pq == mem && pq.nonEmpty)
   }
 
   test("arrival order matters: a later copy is flagged, the earlier original is not") {
