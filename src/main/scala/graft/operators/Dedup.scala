@@ -101,20 +101,7 @@ object Dedup {
       rowsPerBand: Int = 3,
       maxQuadBucket: Int = 64): DataFrame = {
     val cand = lshCandidates(tokens, bands, rowsPerBand, maxQuadBucket)
-    graft.functions.ArrayIntersectSize.register(tokens.sparkSession)
-    val xT = tokens.select(col("sid").as("x_id"), col("toks").as("x_toks"))
-    val yT = tokens.select(col("sid").as("y_id"), col("toks").as("y_toks"))
-    cand
-      .join(xT, "x_id")
-      .join(yT, "y_id")
-      .withColumn(
-        "inter",
-        graft.functions.ArrayIntersectSize.intersect_size(col("x_toks"), col("y_toks")))
-      .withColumn(
-        "jacc",
-        col("inter").cast("double") /
-          (size(col("x_toks")) + size(col("y_toks")) - col("inter")))
-      .filter(col("jacc") >= tau)
+    SimilarityJoin.verify(cand, SimilarityJoin.xSide(tokens), SimilarityJoin.ySide(tokens), tau)
       .select("x_id", "y_id", "jacc")
   }
 

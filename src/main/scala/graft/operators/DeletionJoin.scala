@@ -54,7 +54,7 @@ import org.apache.spark.sql.functions._
   */
 object DeletionJoin {
 
-  private val Eps = 1e-4
+  import SimilarityJoin.{Eps, lengthWindow, matchLenHi, matchLenLo}
 
   /** Segments per group under the deletion scheme (reference `CalculateH1`):
     * `⌊(1−τ)·hi/τ⌋ + 1`.
@@ -173,8 +173,7 @@ object DeletionJoin {
       delDel: Boolean = false): DataFrame = {
     val admissible = tokens.join(
       broadcast(groups),
-      col("hi") >= ceil(col("slen") * tau - Eps) &&
-        col("lo") <= floor(col("slen") / tau + Eps))
+      col("hi") >= matchLenLo(col("slen"), tau) && col("lo") <= matchLenHi(col("slen"), tau))
     val rows = segmentRows(admissible)
 
     // candidate-count costs from the distributed frequency table:
@@ -229,7 +228,7 @@ object DeletionJoin {
     // deletions, probe deletions ⋈ index segments (del×del OFF by default —
     // see object scaladoc; `delDel = true` adds it as the reference's
     // fourth arm, `DimaJoin.scala:764-787`). `src` tags the probe-side
-    // origin (ss/sd/ds/dd) for volume diagnostics; the candidate join keys
+    // origin (ss/sd/ds/dd) for candidate-volume accounting; the candidate join keys
     // on (sig, tkind) only.
     val segVsSeg = withV.filter(col("v") >= 1)
       .select(col("sid"), col("slen"), col("sig"), lit("seg").as("tkind"),
@@ -282,14 +281,11 @@ object DeletionJoin {
         iSigs.select(col("sid").as("y_id"), col("slen").as("y_len"), col("sig"),
           col("kind").as("tkind")),
         Seq("sig", "tkind"))
-      .filter(
-        col("y_len") >= ceil(col("x_len") * tau - Eps) &&
-          col("y_len") <= floor(col("x_len") / tau + Eps) &&
-          pairFilter)
+      .filter(lengthWindow(tau) && pairFilter)
       .select("x_id", "y_id")
       .dropDuplicates("x_id", "y_id")
 
-    SimilarityJoin.verifyCandidates(candidates, probe, index, tau)
+    SimilarityJoin.verify(candidates, SimilarityJoin.xSide(probe), SimilarityJoin.ySide(index), tau)
   }
 
   /** Self-join convenience over a raw document table. */

@@ -40,8 +40,9 @@ import org.apache.spark.sql.functions._
   *     pair (the reference's compareSimilarity gate,
   *     `JaccardIndex.scala:99-109`, exists to suppress duplicate verify
   *     work; `dropDuplicates` on the pair id is the declarative form).
-  *   - Verify = exact Jaccard with built-in `array_intersect`/`size`
-  *     (codegen'd; no UDF), replacing the reference's positional-overlap
+  *   - Verify = exact Jaccard by [[verify]], the one verify every
+  *     set-similarity caller shares (batch strategies, MinHash, winnowing
+  *     and both streams), replacing the reference's positional-overlap
   *     merge count (`JaccardIndex.scala:27-97`).
   *
   * Scale notes: the only shuffles are the signature equi-join and the pair
@@ -49,6 +50,8 @@ import org.apache.spark.sql.functions._
   * reference's `SimilarityQueryPartitioner` load balancing). The frequency
   * table (`BuildSig.scala:294-301`) is exposed via [[signatureFrequencies]]
   * for cache-admission policies (reference `DS_SimJoin_stream.scala:838`).
+  * The semi-stream form, [[graft.streaming.SemiStreamSimilarityJoin]],
+  * always probes these segment signatures through its keyed cache.
   */
 object SimilarityJoin {
 
@@ -61,7 +64,7 @@ object SimilarityJoin {
     var lo = math.max(minLen, 1)
     var gid = 0
     while (lo <= maxLen) {
-      val hi = math.floor(lo / alpha + 1e-4).toInt
+      val hi = math.floor(lo / alpha + Eps).toInt
       out += ((gid, lo, hi))
       gid += 1
       lo = hi + 1
@@ -80,7 +83,17 @@ object SimilarityJoin {
     * `BuildSig.scala:57,140`): `8/0.8 = 9.999…` would otherwise floor to 9
     * and silently drop exact-boundary matches (J = τ subset pairs).
     */
-  private val Eps = 1e-4
+  private[graft] val Eps = 1e-4
+
+  /** The exact admissible length window of a set of length `len` at τ:
+    * any `y` with `J(x, y) ≥ τ` has `|y| ∈ [⌈τ·|x|⌉, ⌊|x|/τ⌋]`.
+    */
+  private[graft] def matchLenLo(len: Column, tau: Double): Column = ceil(len * tau - Eps)
+  private[graft] def matchLenHi(len: Column, tau: Double): Column = floor(len / tau + Eps)
+
+  /** Candidate-pair length prune: `y_len` inside `x_len`'s window. */
+  private[graft] def lengthWindow(tau: Double): Column =
+    col("y_len") >= matchLenLo(col("x_len"), tau) && col("y_len") <= matchLenHi(col("x_len"), tau)
 
   /** Tokenize to distinct token sets: split on single spaces, drop empties,
     * dedupe (Jaccard is over SETS). Output: (`sid`, `toks`, `slen`).
@@ -139,8 +152,7 @@ object SimilarityJoin {
     tokens
       .join(
         broadcast(groups),
-        col("hi") >= ceil(col("slen") * tau - Eps) &&
-          col("lo") <= floor(col("slen") / tau + Eps))
+        col("hi") >= matchLenLo(col("slen"), tau) && col("lo") <= matchLenHi(col("slen"), tau))
       .withColumn("seg", explode(sequence(lit(0), col("h") - 1)))
       .select(
         col("sid"),
@@ -149,7 +161,7 @@ object SimilarityJoin {
 
   /** Signature frequency table (reference `BuildSig.scala:294-301`,
     * SURVEY A2/P8): sigs occurring more than once, for admission policies
-    * and hot-key diagnostics.
+    * and hot-key inspection.
     */
   def signatureFrequencies(indexSigs: DataFrame): DataFrame =
     indexSigs.groupBy("sig").count().filter(col("count") > 1)
@@ -180,33 +192,38 @@ object SimilarityJoin {
     // (more expensive) verify — the reference's compareSimilarity gate.
     val candidates = pSigs
       .join(iSigs, "sig")
-      .filter(
-        col("y_len") >= ceil(col("x_len") * tau - Eps) &&
-          col("y_len") <= floor(col("x_len") / tau + Eps) &&
-          pairFilter)
+      .filter(lengthWindow(tau) && pairFilter)
       .select("x_id", "y_id")
       .dropDuplicates("x_id", "y_id")
 
-    verifyCandidates(candidates, probe, index, tau)
+    verify(candidates, xSide(probe), ySide(index), tau)
   }
 
-  /** Verify candidate pairs with exact Jaccard over the token sets —
-    * the reference's positional-overlap merge count
-    * (`JaccardIndex.scala:27-97`), computed by the fused
-    * [[graft.functions.ArrayIntersectSize]] codegen expression (counts the
-    * intersection without materializing it; no UDF).
+  /** A token table (`sid`, `toks`) as the verify's probe / index side. */
+  def xSide(tokens: DataFrame): DataFrame =
+    tokens.select(col("sid").as("x_id"), col("toks").as("x_toks"))
+  def ySide(tokens: DataFrame): DataFrame =
+    tokens.select(col("sid").as("y_id"), col("toks").as("y_toks"))
+
+  /** Exact-Jaccard verify of candidate pairs — the one verify behind every
+    * set-similarity caller (the three batch strategies, MinHash LSH,
+    * winnowing and both streams), replacing the reference's
+    * positional-overlap merge count (`JaccardIndex.scala:27-97`) with the
+    * fused [[graft.functions.ArrayIntersectSize]] codegen expression
+    * (counts the intersection without materializing it; no UDF).
+    *
+    * `pairs` holds DISTINCT (`x_id`, `y_id`) candidates; `xToks`
+    * (`x_id`, `x_toks`) and `yToks` (`y_id`, `y_toks`) arrive already
+    * shaped by the caller — broadcast, pre-partitioned, persisted or
+    * fetched — and the verify adds no hints or exchanges of its own, so
+    * each caller keeps its tuned layout. Keeps `inter/uni ≥ τ`.
+    * Output: (x_id, y_id, inter, uni, jacc).
     */
-  private[operators] def verifyCandidates(
-      candidates: DataFrame,
-      probe: DataFrame,
-      index: DataFrame,
-      tau: Double): DataFrame = {
-    graft.functions.ArrayIntersectSize.register(index.sparkSession)
-    val xT = probe.select(col("sid").as("x_id"), col("toks").as("x_toks"))
-    val yT = index.select(col("sid").as("y_id"), col("toks").as("y_toks"))
-    candidates
-      .join(xT, "x_id")
-      .join(yT, "y_id")
+  def verify(pairs: DataFrame, xToks: DataFrame, yToks: DataFrame, tau: Double): DataFrame = {
+    graft.functions.ArrayIntersectSize.register(pairs.sparkSession)
+    pairs
+      .join(xToks, "x_id")
+      .join(yToks, "y_id")
       .withColumn(
         "inter",
         graft.functions.ArrayIntersectSize.intersect_size(col("x_toks"), col("y_toks")))
@@ -268,7 +285,7 @@ object SimilarityJoin {
     * join actually emits. Output: (sid, slen, pos, tok).
     */
   def orderedPrefixes(ord: DataFrame, tau: Double): DataFrame = {
-    val prefixLen = (col("slen") - ceil(col("slen") * tau - Eps) + 1).cast("int")
+    val prefixLen = (col("slen") - matchLenLo(col("slen"), tau) + 1).cast("int")
     ord.select(
       col("sid"),
       col("slen"),
@@ -307,15 +324,11 @@ object SimilarityJoin {
 
     val candidates = px
       .join(iy, "tok")
-      .filter(
-        col("y_len") >= ceil(col("x_len") * tau - Eps) &&
-          col("y_len") <= floor(col("x_len") / tau + Eps) &&
-          pairFilter &&
-          posBound >= alphaReq)
+      .filter(lengthWindow(tau) && pairFilter && posBound >= alphaReq)
       .select("x_id", "y_id")
       .dropDuplicates("x_id", "y_id")
 
-    verifyCandidates(candidates, probe, index, tau)
+    verify(candidates, xSide(probe), ySide(index), tau)
   }
 
   // --------------------------------------------------------- containment
@@ -438,19 +451,12 @@ object SimilarityJoin {
     *     `Σ H(group)` over multigroup groups overlapping the admissible
     *     length window `[τ·s, s/τ]`;
     *   - `prefixEmitPerRec`: prefix tokens a record emits,
-    *     `s − ⌈τ·s⌉ + 1`;
-    *   - `avgTokenDf`: mean document frequency of a token occurrence
-    *     (total token occurrences / distinct tokens) — the prefix join's
-    *     per-emission fan-out. Diagnostics-only: NaN unless
-    *     `choose(diagnostics = true)`, because computing it costs more
-    *     than the whole rest of the chooser.
+    *     `s − ⌈τ·s⌉ + 1`.
     */
   final case class StrategyEstimate(
       strategy: Strategy,
       segEmitPerRec: Double,
-      prefixEmitPerRec: Double,
-      avgTokenDf: Double,
-      reusedIndex: Boolean)
+      prefixEmitPerRec: Double)
 
   /** Emission-ratio crossover (`segEmitPerRec / prefixEmitPerRec`) above
     * which the segment scheme's signature volume outweighs prefix's
@@ -479,56 +485,35 @@ object SimilarityJoin {
     *     τ=0.6, ratio 31.8) — the segment scheme pays `Σ H ≈ 700`
     *     signature hashes per record over long token arrays while
     *     prefix's 22 emissions/record stay candidate-light.
-    *   - **index-reuse regime** (`reusedIndex`, the q41 semi-stream
-    *     shape): segment, regardless of stats — its signatures cache by
-    *     key while prefix pays a corpus-frequency fetch per batch
-    *     (round-6 streaming A/B: 49.6/56.3 s vs 42.3/49.3 s).
+    *   - **index-reuse regime** (the q41 semi-stream shape) is not a
+    *     choice: [[graft.streaming.SemiStreamSimilarityJoin]] always
+    *     probes segment signatures, whose index caches by key (its
+    *     prefix-token mode was measured slower, 49.6/56.3 s vs 42.3/49.3 s
+    *     in the round-6 streaming A/B, and removed).
     *
     * The decision: segment unless the emission ratio crosses
     * [[SegmentEmissionRatioBound]] — the one statistic that separates
-    * every measured point. `avgTokenDf` is a pure diagnostic (it does NOT
-    * separate these corpora: both have hot vocabularies) and costs a full
-    * explode + count_distinct pass over every token occurrence — far more
-    * than the single-pass `slen` aggregate the decision needs — so it is
-    * only computed when `diagnostics = true` (NaN otherwise).
+    * every measured point.
     */
-  def choose(
-      tokens: DataFrame,
-      tau: Double,
-      alpha: Double = 0.95,
-      reusedIndex: Boolean = false,
-      diagnostics: Boolean = false): StrategyEstimate = {
-    val row = tokens
-      .agg(avg("slen"), min("slen"), max("slen"), sum("slen"))
-      .head()
+  def choose(tokens: DataFrame, tau: Double, alpha: Double = 0.95): StrategyEstimate = {
+    val row = tokens.agg(avg("slen"), min("slen"), max("slen")).head()
     if (row.isNullAt(0)) // empty corpus: nothing to join either way
-      return StrategyEstimate(PrefixStrategy, 0.0, 0.0, 0.0, reusedIndex)
+      return StrategyEstimate(PrefixStrategy, 0.0, 0.0)
     val meanLen = row.getDouble(0)
     val minLen = row.getInt(1)
     val maxLen = row.getInt(2)
-    val totalToks = row.getLong(3)
-
-    val avgDf =
-      if (!diagnostics) Double.NaN
-      else {
-        val distinctToks =
-          math.max(1L, tokens.select(explode(col("toks")).as("t")).agg(count_distinct(col("t")))
-            .head().getLong(0))
-        totalToks.toDouble / distinctToks
-      }
 
     val groups = multigroup(minLen, maxLen, alpha)
     val sLo = math.ceil(meanLen * tau - Eps)
     val sHi = math.floor(meanLen / tau + Eps)
     val overlapping = groups.filter { case (_, lo, hi) => hi >= sLo && lo <= sHi }
     val segEmit = overlapping.map { case (_, _, hi) => segmentCount(hi, tau).toDouble }.sum
-    val preEmit = meanLen - math.ceil(meanLen * tau - Eps) + 1
+    val preEmit = meanLen - sLo + 1
 
     val strategy =
-      if (reusedIndex) SegmentStrategy
-      else if (preEmit > 0 && segEmit / preEmit > SegmentEmissionRatioBound) PrefixStrategy
+      if (preEmit > 0 && segEmit / preEmit > SegmentEmissionRatioBound) PrefixStrategy
       else SegmentStrategy
-    StrategyEstimate(strategy, segEmit, preEmit, avgDf, reusedIndex)
+    StrategyEstimate(strategy, segEmit, preEmit)
   }
 
   /** Self-join that picks its strategy by [[choose]] — the cost-based

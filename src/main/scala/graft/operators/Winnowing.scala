@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: fingerprinting is a pure projection (no shuffle);
   * candidates come from a fingerprint equi-join with a mega-bucket guard
-  * (same policy as [[Dedup.lshCandidates]]); verification is the exact
-  * intersect kernel. All codegen'd built-ins, no UDFs.
+  * (same policy as [[Dedup.lshCandidates]]); verification is
+  * [[SimilarityJoin.verify]]. All codegen'd built-ins, no UDFs.
   */
 object Winnowing {
 
@@ -102,18 +102,6 @@ object Winnowing {
       maxQuadBucket: Int = Int.MaxValue): DataFrame = {
     val toks = SimilarityJoin.tokenize(docs, idCol, textCol)
     val cand = candidatePairs(fingerprints(docs, idCol, textCol, k, w), maxQuadBucket)
-    graft.functions.ArrayIntersectSize.register(docs.sparkSession)
-    val xT = toks.select(col("sid").as("x_id"), col("toks").as("x_toks"))
-    val yT = toks.select(col("sid").as("y_id"), col("toks").as("y_toks"))
-    cand
-      .join(xT, "x_id")
-      .join(yT, "y_id")
-      .withColumn(
-        "inter",
-        graft.functions.ArrayIntersectSize.intersect_size(col("x_toks"), col("y_toks")))
-      .withColumn("uni", size(col("x_toks")) + size(col("y_toks")) - col("inter"))
-      .withColumn("jacc", col("inter").cast("double") / col("uni"))
-      .filter(col("jacc") >= tau)
-      .select("x_id", "y_id", "inter", "uni", "jacc")
+    SimilarityJoin.verify(cand, SimilarityJoin.xSide(toks), SimilarityJoin.ySide(toks), tau)
   }
 }

@@ -179,7 +179,6 @@ object StreamingDedup {
     val spark = docs.sparkSession
     val saltArm = graft.operators.Salting.armed(
       spark, graft.operators.Salting.ThresholdKey, saltThreshold)
-    graft.functions.ArrayIntersectSize.register(spark)
     graft.functions.MinHashBands.register(spark)
     val storage = StorageLevel.MEMORY_AND_DISK
 
@@ -244,21 +243,12 @@ object StreamingDedup {
       // +60 % on the last batch).
       val bVToks = reprToks(bToks) // verify-tier representation of the batch
       val xSigs = bSigs.select(col("sid").as("x_id"), col("band"), col("bsig"))
-      val xB = bVToks.select(col("sid").as("x_id"), col("toks").as("x_toks"))
+      val xB = SimilarityJoin.xSide(bVToks)
 
       // callers pass DISTINCT (x_id, y_id) pairs — deduping here again
       // would re-shuffle the pair relation a second time for nothing
       def verified(cand: DataFrame, yToks: DataFrame): DataFrame =
-        cand
-          .join(xB, "x_id")
-          .join(yToks, "y_id")
-          .withColumn(
-            "inter",
-            graft.functions.ArrayIntersectSize.intersect_size(col("x_toks"), col("y_toks")))
-          .filter(
-            col("inter").cast("double") /
-              (size(col("x_toks")) + size(col("y_toks")) - col("inter")) >= tau)
-          .select("x_id", "y_id")
+        SimilarityJoin.verify(cand, xB, yToks, tau).select("x_id", "y_id")
 
       // vs earlier batches: partition-pruned bucket join (batch side
       // broadcast; `batch < batchId` hides a failed attempt's own state).
@@ -300,7 +290,7 @@ object StreamingDedup {
         .filter(col("y_id") < col("x_id"))
         .select("x_id", "y_id")
         .dropDuplicates("x_id", "y_id")
-      val yBatch = bVToks.select(col("sid").as("y_id"), col("toks").as("y_toks"))
+      val yBatch = SimilarityJoin.ySide(bVToks)
 
       val dupOf = verified(stateCand, yFetch)
         .unionByName(verified(batchCand, yBatch))

@@ -70,9 +70,9 @@ object StreamingDrift {
         .select(xxhash64(col("t")).as("h"))
         .groupBy("h").agg(count(lit(1)).as("cnt"))
         .persist(storage)
-      batchCnt.count()
 
-      // the ONLY driver-side collect: distinct probe buckets (≤ nBuckets).
+      // the ONLY driver-side collect: distinct probe buckets (≤ nBuckets);
+      // this first action also materializes the persist.
       // The TOTAL row lives in the fixed bucket 0 (pb is ours to assign),
       // so the read stays pruned: batch buckets + one.
       val pbs = (batchCnt.select(bucketOf(nBuckets, col("h")).as("pb"))

@@ -63,9 +63,9 @@ object StreamingKAnonymity {
         .persist(storage)
       val batchCnt = rows.groupBy("h").agg(count(lit(1)).as("cnt"))
         .persist(storage)
-      batchCnt.count()
 
-      // the ONLY driver-side collect: distinct probe buckets (≤ nBuckets)
+      // the ONLY driver-side collect: distinct probe buckets (≤ nBuckets);
+      // this first action also materializes both persists
       val pbs0 = batchCnt.select(bucketOf(nBuckets, col("h")).as("pb"))
         .distinct().collect().map(_.getInt(0)).toSeq
       val pbs = if (pbs0.isEmpty) Seq(0) else pbs0

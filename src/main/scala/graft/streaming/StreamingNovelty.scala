@@ -71,9 +71,9 @@ object StreamingNovelty {
           .as("h"))
         .groupBy("h").agg(count(lit(1)).as("cnt"))
         .persist(storage)
-      batchCnt.count()
 
-      // the ONLY driver-side collect: distinct probe buckets, ≤ nBuckets
+      // the ONLY driver-side collect: distinct probe buckets, ≤ nBuckets;
+      // this first action also materializes the persist
       val pbs = batchCnt.select(bucketOf(nBuckets, col("h")).as("pb"))
         .distinct().collect().map(_.getInt(0)).toSeq
       val seen = state.read(batchId, pbs).select("h").distinct()

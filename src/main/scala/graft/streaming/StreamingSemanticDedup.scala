@@ -96,8 +96,8 @@ object StreamingSemanticDedup {
         state.compact(batchId)
 
       val assigned = assign(batch.toDF()).persist(storage)
-      assigned.count()
-      // touched buckets: ≤ min(nBuckets, batch cells) values, driver-bounded
+      // touched buckets: ≤ min(nBuckets, batch cells) values, driver-bounded;
+      // this first action also materializes the persist
       val pbs = assigned.select("pb").distinct().collect().map(_.getInt(0)).toSeq
 
       val x = assigned.select(

@@ -70,10 +70,10 @@ object StreamingSubstringDedup {
             .as(Seq("pos", "shingle")))
         .select(col("sid"), col("pos").cast("long").as("pos"), xxhash64(col("shingle")).as("h"))
         .persist(storage)
-      sh.count()
 
       val batchCnt = sh.groupBy("h").agg(count(lit(1)).as("cnt")).persist(storage)
-      // the ONLY driver-side collect: distinct probe buckets, ≤ nBuckets
+      // the ONLY driver-side collect: distinct probe buckets, ≤ nBuckets;
+      // this first action also materializes both persists
       val pbs = batchCnt.select(bucketOf(nBuckets, col("h")).as("pb"))
         .distinct().collect().map(_.getInt(0)).toSeq
       // state rows are increments — sum per h (compaction-invariant read)

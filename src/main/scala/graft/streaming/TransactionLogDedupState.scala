@@ -162,21 +162,18 @@ final class TransactionLogDedupState(
     val staged = listDir(staging)(_
       .filter(p => p.getFileName.toString.endsWith(".parquet"))
       .toSeq).sortBy(_.getFileName.toString)
-    // footer reads are independent local metadata reads — do them in a
-    // bounded pool instead of one-by-one on the driver (one staged file
-    // per shuffle partition per store per batch: serially this was a
+    // footer reads are independent local metadata reads — do them on the
+    // shared footer pool instead of one-by-one on the driver (one staged
+    // file per shuffle partition per store per batch: serially this was a
     // visible slice of every append under the concurrent-effects phase)
     val rowsOf: Map[Path, Long] = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
+      import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(8, math.max(1, staged.size)))
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try Await.result(
+      implicit val ec: scala.concurrent.ExecutionContext = TransactionLogDedupState.footerPool
+      Await.result(
         Future.sequence(staged.map(p => Future(
           p -> (if (Files.size(p) == 0L) 0L else footerRows(p))))),
         Duration.Inf).toMap
-      finally pool.shutdown()
     }
     staged
       .flatMap { p =>
@@ -271,6 +268,23 @@ final class TransactionLogDedupState(
 }
 
 object TransactionLogDedupState {
+
+  /** The one JVM-wide pool for staged-file footer reads: at most 8 daemon
+    * threads, created on first use and retired when idle. Every store's
+    * appends and compactions share it, so a micro-batch creates no pool.
+    */
+  private lazy val footerPool: scala.concurrent.ExecutionContext = {
+    val pool = new java.util.concurrent.ThreadPoolExecutor(
+      8, 8, 30L, java.util.concurrent.TimeUnit.SECONDS,
+      new java.util.concurrent.LinkedBlockingQueue[Runnable](),
+      (r: Runnable) => {
+        val t = new Thread(r, "graft-txnlog-footers")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    scala.concurrent.ExecutionContext.fromExecutor(pool)
+  }
 
   def factory: StreamingDedup.StateStoreFactory =
     (s, dir, schema, keys) => new TransactionLogDedupState(s, dir, schema, keys)

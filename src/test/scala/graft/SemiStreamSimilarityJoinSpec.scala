@@ -64,24 +64,6 @@ class SemiStreamSimilarityJoinSpec extends SparkSpec {
     assert(r.stats.forall(_.window == 2), r.stats.map(_.window).mkString(","))
   }
 
-  test("prefix-mode cache (tok-keyed) accumulates to the same verified pairs") {
-    val docs = Tables(spark, sfSmoke, "documents")
-    val r = SemiStreamSimilarityJoin.run(
-      docs, "doc_id", "text", tau = 0.8, chunks = 3,
-      mode = SemiStreamSimilarityJoin.PrefixMode)
-
-    val toks = SimilarityJoin.tokenize(docs, "doc_id", "text")
-    val expected = SimilarityJoin.joinSets(toks, toks, 0.8)
-      .filter(col("x_id") =!= col("y_id"))
-      .select("x_id", "y_id")
-    val got = r.pairs.select("x_id", "y_id")
-    assert(got.count() == expected.count(),
-      s"stream=${got.count()} batch=${expected.count()}")
-    assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty)
-    // the tok-keyed cache works: later batches re-use cached inverted lists
-    assert(r.stats.size == 3 && r.stats.head.missed > 0)
-  }
-
   test("hot signatures are never admitted to the cache (frequency rule)") {
     val docs = Tables(spark, sfSmoke, "documents")
     // maxSigFrequency=1: NOTHING with >1 index row may be cached

@@ -9,9 +9,8 @@ import graft.operators.SimilarityJoin
   * the dup-dense hot-token documents corpus (candidate volume, not
   * emission count, drives cost: segment won at every τ), prefix on a
   * near-unique vocabulary (q21's shingle shape, where prefix candidates
-  * collapse to its emissions), segment whenever the index is reused
-  * across probe batches (the q41 semi-stream regime) — and the auto
-  * dispatch must return the same pairs as the strategy it picked.
+  * collapse to its emissions) — and the auto dispatch must return the
+  * same pairs as the strategy it picked.
   */
 class SimilarityStrategySpec extends SparkSpec {
   init()
@@ -34,11 +33,6 @@ class SimilarityStrategySpec extends SparkSpec {
     assert(est.strategy == SimilarityJoin.PrefixStrategy, est.toString)
     assert(est.segEmitPerRec / est.prefixEmitPerRec >
       SimilarityJoin.SegmentEmissionRatioBound, est.toString)
-  }
-
-  test("chooser picks segment when the index is reused across probe batches (q41 regime)") {
-    val est = SimilarityJoin.choose(docToks, tau = 0.8, reusedIndex = true)
-    assert(est.strategy == SimilarityJoin.SegmentStrategy, est.toString)
   }
 
   test("auto self-join output equals both underlying strategies") {
